@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from map_reduce_engine_cdps_spark.functions import text as TX
+from map_reduce_engine_cdps_spark.operators.state import fixpoint, memo, releasing
 from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table
 
 # Production MinHash/LSH constants — chosen from the measured tuning
@@ -47,8 +48,10 @@ SHINGLE_N = 3          # 3-token shingles
 
 
 def _with_shingles(docs: DataFrame) -> DataFrame:
-    tok = TX.tokens(F.col("text"))
-    return docs.withColumn("shingles", TX.shingles(tok, SHINGLE_N))
+    # Tokens as a column first: shingles() reads them 7 times, and
+    # Catalyst cannot share an inline tokenizer (it holds a lambda).
+    d = docs.withColumn("_tok", TX.tokens(F.col("text")))
+    return d.withColumn("shingles", TX.shingles(F.col("_tok"), SHINGLE_N)).drop("_tok")
 
 
 def _with_minhash_bands(docs: DataFrame) -> DataFrame:
@@ -303,17 +306,9 @@ def _lsh_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # now consumed both by minhash_lsh_pairs (jaccard >= 0.2 filter -> the
 # pair memo) and by lsh_pair_precision_eval (unfiltered histogram), and
 # a fresh instantiation re-pays the whole signature/banding codegen +
-# scan. Same keying/checkpoint discipline as _LSH_PAIRS_CACHE.
-_SCORED_PAIRS_CACHE: dict = {}
-
-
-def _lsh_scored_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SCORED_PAIRS_CACHE.get(key)
-    if df is None:
-        df = _lsh_scored_pairs(spark, sf_dir).localCheckpoint(eager=True)
-        _SCORED_PAIRS_CACHE[key] = df
-    return df
+# scan.
+_DOCS = ("documents",)
+_lsh_scored_pairs_cached = memo(_lsh_scored_pairs, _DOCS)
 
 
 def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -333,21 +328,11 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Four registry queries (ngram_jaccard_topk, near_dup_clusters,
 # edit_distance_pairs, cross_source_leakage) consume the same candidate
 # pipeline; without this memo each one re-runs the full signature +
-# banding + verification pass. Keyed per Spark application + sf_dir and
-# localCheckpointed, so a batch of registry queries (the driver gate,
-# bench.py) computes the pairs once. The checkpoint lives with the app's
-# executors — at 100 TB this becomes a persisted parquet of the pair
-# list, same shape.
-_LSH_PAIRS_CACHE: dict = {}
-
-
-def _lsh_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _LSH_PAIRS_CACHE.get(key)
-    if df is None:
-        df = minhash_lsh_pairs(spark, sf_dir).localCheckpoint(eager=True)
-        _LSH_PAIRS_CACHE[key] = df
-    return df
+# banding + verification pass, so a batch of registry queries (the
+# certification gate, bench.py) computes the pairs once. The checkpoint lives
+# with the app's executors — at 100 TB this becomes a persisted parquet
+# of the pair list, same shape.
+_lsh_pairs_cached = memo(minhash_lsh_pairs, _DOCS)
 
 
 # Shared candidate CTE tail: banded rows capped at BUCKET_CAP smallest
@@ -694,9 +679,10 @@ SELECT doc_a, doc_b AS nearest_doc, jaccard FROM ranked WHERE rn = 1
 # durable storage; the dataflow shape per round is identical.
 # ---------------------------------------------------------------------------
 
-# Truncate CC lineage every N rounds (checkpoint); persist+rotate in
-# between. Small enough that planning depth stays trivial, large enough
-# that long sessions don't pin one checkpoint per round.
+# Truncate CC lineage every N rounds (checkpoint); persist in between.
+# Small enough that planning depth stays trivial (sf10 probe, round 5:
+# a checkpoint per round pinned enough storage across repeated
+# invocations that a later broadcast build OOM'd).
 _CC_CHECKPOINT_EVERY = 5
 
 
@@ -710,97 +696,52 @@ def connected_components(
     doc_id reachable from doc_id. Factored out of near_dup_clusters so
     the convergence semantics are unit-testable on hand-built graphs.
     """
-    # Undirected: propagate both ways. Materialize once — every round
-    # reuses the edge list, and recomputing the upstream pipeline per
-    # round would dominate the loop. Partition by src BEFORE the
-    # checkpoint (localCheckpoint preserves outputPartitioning): the
-    # per-round join probes edges on src, so a pre-partitioned edge
-    # list is never re-shuffled — each round moves only the O(vertices)
-    # labels, not the O(edges) graph (at sf10: 0.5 M labels vs 53 M
-    # edge rows per round).
-    # persist (not localCheckpoint) for the loop-invariant inputs:
-    # their lineage is shallow — pairs is the checkpointed LSH memo,
-    # vertices a scan — and persist can be RELEASED deterministically
-    # at function exit, where a checkpoint's blocks wait on GC +
-    # ContextCleaner (at sf10 the edge list is ~1 GB per invocation;
-    # back-to-back invocations measurably degraded while stale
-    # checkpoints drained).
+    # Undirected: propagate both ways. Materialize once, partitioned by
+    # src: the per-round join probes edges on src, so the edge list is
+    # never re-shuffled — each round moves only the O(vertices) labels,
+    # not the O(edges) graph (at sf10: 0.5 M labels vs 53 M edge rows).
     edges = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .repartition(F.col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    labels = vertices.select(
+    labels0 = vertices.select(
         "doc_id", F.col("doc_id").alias("comp")
     ).persist(StorageLevel.MEMORY_AND_DISK)
-    # Per-round state management (sf10 probe finding, round 5): a
-    # localCheckpoint per round pins its blocks for the session — 25
-    # rounds x repeated invocations accumulated enough storage at sf10
-    # that a later broadcast build OOM'd. Rounds now persist
-    # MEMORY_AND_DISK and explicitly unpersist the previous round once
-    # the new state is materialized; a localCheckpoint every
-    # _CC_CHECKPOINT_EVERY rounds still truncates lineage so planning
-    # cost stays bounded. (At cluster scale: reliable checkpoint to
-    # durable storage instead, per the header note.)
-    prev_sum = labels.agg(F.sum("comp")).first()[0]
-    freeable: DataFrame | None = labels
-    for rnd in range(max_rounds):
-        # nbr_min and labels are both O(vertices) — corpus-sized
-        # relations that must NEVER ride a broadcast, however small the
-        # toy SF makes them look to AQE: at 100 TB a broadcast here is
-        # a driver OOM by construction. shuffle_hash pins the per-round
-        # join to a shuffle on doc_id, which co-partitions identically
-        # every round (no re-shuffle of the unchanged side's layout).
-        # labels is the build side (shuffle_hash): edges then stream
-        # through the join unsorted and unshuffled (pre-partitioned by
-        # src above) — an SMJ would re-sort the edge list every round.
-        # r13: one join per round, not two. The old shape aggregated
-        # neighbor minima and LEFT-joined them back onto labels; the
+
+    def _round(labels: DataFrame) -> DataFrame:
+        # labels is O(vertices) — corpus-sized, so it must NEVER ride a
+        # broadcast however small the toy SF makes it look to AQE (at
+        # 100 TB the broadcast build runs out of memory). As the
+        # shuffle_hash build side it lets edges stream through unsorted
+        # and unshuffled (pre-partitioned by src); an SMJ would re-sort
+        # the edge list every round. r13: one join per round — the
         # union-aggregate computes min(own label, neighbor labels) in
-        # the SAME exchange the neighbor aggregation needed anyway —
-        # algebraically identical (min over the union vs least(own,
-        # coalesce(nbr_min, own)); integers, so bit-exact), one fewer
-        # join build+probe and one fewer stage per round. The edge
-        # fan-out is still partial-aggregated map-side before the
-        # exchange (groupBy min), so the shuffle carries O(vertices),
-        # not O(edges), per round.
+        # the exchange the neighbor aggregation needs anyway (bit-exact
+        # vs the old aggregate + LEFT join back), partial-aggregated
+        # map-side, so the shuffle carries O(vertices) per round.
         propagated = edges.join(
             labels.hint("shuffle_hash"), edges.src == labels.doc_id
         ).select(F.col("dst").alias("doc_id"), "comp")
-        new_labels = (
+        return (
             propagated.unionByName(labels)
             .groupBy("doc_id")
             .agg(F.min("comp").alias("comp"))
         )
-        if (rnd + 1) % _CC_CHECKPOINT_EVERY == 0:
-            new_labels = new_labels.localCheckpoint(eager=True)
-        else:
-            new_labels = new_labels.persist(StorageLevel.MEMORY_AND_DISK)
-        # Min-propagation only ever lowers labels, so sum(comp)
-        # decreases strictly until the fixpoint — convergence detection
-        # is a single scalar aggregate per round (this also materializes
-        # the persist above before the old round is dropped).
-        new_sum = new_labels.agg(F.sum("comp")).first()[0]
-        if freeable is not None:
-            freeable.unpersist()
-        freeable = new_labels  # checkpointed rounds: unpersist is a no-op
-        labels = new_labels
-        if new_sum == prev_sum:
-            break
-        prev_sum = new_sum
-    # Exit: re-pin the result as a checkpoint and release the last loop
-    # persist. persist() entries live in the session CacheManager until
-    # explicitly unpersisted — repeated invocations in one app (the
-    # bench, the sweep, a notebook) would otherwise accumulate a cached
-    # labels table per call (measured: sf10 runs degrading 11.5 s →
-    # 28.6 s across three invocations). Checkpoint RDDs are
-    # ContextCleaner-managed: freed on GC once the result is dropped.
-    out = labels.localCheckpoint(eager=True)
-    if freeable is not None:
-        freeable.unpersist()
-    edges.unpersist()
-    return out
+
+    # Min-propagation only ever lowers labels, so sum(comp) decreases
+    # strictly until the fixpoint: convergence is one scalar aggregate
+    # per round. The result is re-pinned as a checkpoint and every loop
+    # state released (kept states once degraded repeated sf10 runs
+    # 11.5 s → 28.6 s).
+    with releasing(edges):
+        labels, _ = fixpoint(
+            labels0, _round, lambda df: df.agg(F.sum("comp")).first()[0],
+            max_rounds, checkpoint_every=_CC_CHECKPOINT_EVERY,
+        )
+        with releasing(labels):
+            return labels.localCheckpoint(eager=True)
 
 
 def connected_components_star(
@@ -827,7 +768,7 @@ def connected_components_star(
     Returns (doc_id, comp) with comp = min doc_id of the component.
     """
     # canonical direction: src > dst (self-loops dropped)
-    e = (
+    e0 = (
         pairs.select(
             F.greatest("doc_a", "doc_b").alias("src"),
             F.least("doc_a", "doc_b").alias("dst"),
@@ -844,9 +785,7 @@ def connected_components_star(
         ).first()
         return tuple(r)
 
-    prev_sig = _sig(e)
-    freeable: DataFrame = e
-    for rnd in range(max_rounds):
+    def _round(e: DataFrame) -> DataFrame:
         # large-star over the symmetric view: m(u) = min(Γ(u) ∪ {u});
         # emit (v, m(u)) for neighbors v > u
         sym = e.select("src", "dst").union(
@@ -865,7 +804,7 @@ def connected_components_star(
         # small-star on canonical edges: u's smaller neighbors and u
         # itself all re-point at m = min(Γ<(u)); u keeps an edge to m
         m_s = large.groupBy("src").agg(F.min("dst").alias("m"))
-        small = (
+        return (
             large.join(m_s.hint("shuffle_hash"), "src")
             .select(
                 F.col("dst").alias("v"), F.col("m"), F.col("src").alias("u")
@@ -885,61 +824,36 @@ def connected_components_star(
             .filter(F.col("src") != F.col("dst"))
             .distinct()
         )
-        # Unlike the propagation loop (one join per round, checkpoint
-        # every _CC_CHECKPOINT_EVERY is enough), a star round stacks a
-        # union + two joins + an explode on the previous round's plan —
-        # ~6x lineage growth per round — so persist-only rotation blows
-        # past Spark's plan-size limits within a handful of rounds.
-        # _sig() materializes each round anyway, so an eager
-        # localCheckpoint per round adds no extra job and keeps
-        # planning O(1) in round count.
-        new_e = small.localCheckpoint(eager=True)
-        sig = _sig(new_e)
-        freeable.unpersist()
-        freeable = new_e
-        e = new_e
-        if sig == prev_sig:
-            break
-        prev_sig = sig
+
+    # Checkpoint every round: a star round stacks a union + two joins +
+    # an explode on the previous plan (~6x lineage growth per round), so
+    # persisted rounds blow past Spark's plan-size limits within a few
+    # rounds, and _sig() materializes each round anyway.
+    e, _ = fixpoint(e0, _round, _sig, max_rounds, checkpoint_every=1)
     # star forest: every node's comp is its (unique) smaller neighbor;
     # vertices without edges are their own component
-    roots = e.groupBy("src").agg(F.min("dst").alias("comp")).select(
-        F.col("src").alias("doc_id"), "comp"
-    )
-    out = (
-        vertices.join(roots.hint("shuffle_hash"), "doc_id", "left")
-        .select("doc_id", F.coalesce("comp", "doc_id").alias("comp"))
-        .localCheckpoint(eager=True)
-    )
-    freeable.unpersist()
-    return out
+    with releasing(e):
+        roots = e.groupBy("src").agg(F.min("dst").alias("comp")).select(
+            F.col("src").alias("doc_id"), "comp"
+        )
+        return (
+            vertices.join(roots.hint("shuffle_hash"), "doc_id", "left")
+            .select("doc_id", F.coalesce("comp", "doc_id").alias("comp"))
+            .localCheckpoint(eager=True)
+        )
 
 
 # The CC label table is itself a multi-consumer front (near_dup_clusters'
-# own registry entry + near_dup_prune's keep-best pass), so memoize it
-# per (app, sf_dir) like the pair fronts — the labels come out of
-# connected_components already eagerly localCheckpointed, so caching the
-# DataFrame reuses that materialization instead of re-running the loop.
+# own registry entry + near_dup_prune's keep-best pass), so it is
+# memoized like the pair fronts — the labels come out of
+# connected_components already eagerly localCheckpointed, so the memo
+# reuses that materialization instead of re-running the loop.
 # WRITE-THROUGH semantics: near_dup_clusters always computes fresh and
-# refreshes the cache (it is in bench.py's frozen HEADLINE set, and a
+# refreshes the memo (it is in bench.py's frozen HEADLINE set, and a
 # read-through memo would collapse its timed passes to cache reads —
 # the artifact must keep measuring the CC loop); downstream consumers
 # (near_dup_prune) read the memo and pay only their own incremental
 # work when the labels were already built this session.
-_CC_LABELS_CACHE: dict = {}
-
-
-def _cc_labels_cached(
-    spark: SparkSession, sf_dir: str, max_rounds: int = 25
-) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir, max_rounds)
-    df = _CC_LABELS_CACHE.get(key)
-    if df is None:
-        df = _cc_labels_build(spark, sf_dir, max_rounds)
-        _CC_LABELS_CACHE[key] = df
-    return df
-
-
 def _cc_labels_build(
     spark: SparkSession, sf_dir: str, max_rounds: int
 ) -> DataFrame:
@@ -948,12 +862,19 @@ def _cc_labels_build(
     return connected_components(docs, pairs, max_rounds=max_rounds)
 
 
+_cc_labels_memo = memo(_cc_labels_build, _DOCS)
+
+
+def _cc_labels_cached(
+    spark: SparkSession, sf_dir: str, max_rounds: int = 25
+) -> DataFrame:
+    return _cc_labels_memo(spark, sf_dir, max_rounds)
+
+
 def near_dup_clusters(
     spark: SparkSession, sf_dir: str, max_rounds: int = 25
 ) -> DataFrame:
-    labels = _cc_labels_build(spark, sf_dir, max_rounds)
-    key = (spark.sparkContext.applicationId, sf_dir, max_rounds)
-    _CC_LABELS_CACHE[key] = labels  # write-through refresh
+    labels = _cc_labels_memo(spark, sf_dir, max_rounds, refresh=True)
     return labels.select(
         "doc_id",
         F.col("comp").alias("cluster_id"),
@@ -1798,9 +1719,6 @@ def _sampled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.filter(F.pmod(F.col("doc_id") * 48271, F.lit(100)) < pct)
 
 
-_RECALL_TRUTH_CACHE: dict = {}
-
-
 def _pair_expand(ns_field: str):
     """In-bucket ordered pair expansion over a sorted `members`
     array<struct<doc_id, {ns_field}>> — the shuffle-free half of the
@@ -1815,19 +1733,15 @@ def _pair_expand(ns_field: str):
     )
 
 
-def _recall_truth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _recall_truth_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled exact-Jaccard truth front (doc_a, doc_b, j ≥
-    RECALL_TRUTH_J), memoized per (app, sf_dir) like _lsh_pairs_cached:
+    RECALL_TRUTH_J), memoized like _lsh_pairs_cached:
     lsh_pair_recall_eval and lsh_band_tuning_eval consume the IDENTICAL
     truth set (same 40% sample, width-3 shingles, same threshold), so
     it builds once. Built bucket-locally — groupBy(shingle) +
     in-bucket pair expansion, one shuffle — not as a shingle
     self-join: the join formulation re-shuffles every (pair, shared-
     shingle) row and measured 45 s vs 14 s at sf1 for the same output."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _RECALL_TRUTH_CACHE.get(key)
-    if df is not None:
-        return df
     docs = _sampled_docs(spark, sf_dir)
     sh = docs.select(
         "doc_id",
@@ -1840,7 +1754,7 @@ def _recall_truth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sort_array(F.collect_list(F.struct("doc_id", "n_sh"))).alias("members"))
         .filter(F.size("members") >= 2)
     )
-    truth = (
+    return (
         buckets.select(F.explode(_pair_expand("n_sh")).alias("p"))
         .groupBy(F.col("p.da").alias("doc_a"), F.col("p.db").alias("doc_b"))
         .agg(
@@ -1858,10 +1772,10 @@ def _recall_truth_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .filter(F.col("j") >= RECALL_TRUTH_J)
         .select("doc_a", "doc_b", "j")
-        .localCheckpoint(eager=True)
     )
-    _RECALL_TRUTH_CACHE[key] = truth
-    return truth
+
+
+_recall_truth_pairs = memo(_recall_truth_build, _DOCS)
 
 
 def lsh_pair_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2030,21 +1944,12 @@ def _linkage_matched_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LINKAGE_PAIRS_CACHE: dict = {}
-
-
-def _linkage_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-(app, sf_dir) memo of the matched-pair front, like
-    _lsh_pairs_cached: the blocked join + gated levenshtein behind it
-    (~19 s / 3.1 M candidates at derived sf1) is the dominant cost of
-    BOTH consumers (customer_golden_records, blocking_overlap_eval) and
-    of the multiple passes within each."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _LINKAGE_PAIRS_CACHE.get(key)
-    if df is None:
-        df = _linkage_matched_pairs(spark, sf_dir).localCheckpoint(eager=True)
-        _LINKAGE_PAIRS_CACHE[key] = df
-    return df
+# Memo of the matched-pair front, like _lsh_pairs_cached: the blocked
+# join + gated levenshtein behind it (~19 s / 3.1 M candidates at
+# derived sf1) is the dominant cost of BOTH consumers
+# (customer_golden_records, blocking_overlap_eval) and of the multiple
+# passes within each.
+_linkage_pairs_cached = memo(_linkage_matched_pairs, ("customer",))
 
 
 def customer_golden_records(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -19,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
+from pyspark.storagelevel import StorageLevel
 
+from map_reduce_engine_cdps_spark.operators.state import fixpoint, releasing
 from map_reduce_engine_cdps_spark.sources.readers import load_table
 
 _DAMPING = 0.85
@@ -236,8 +238,8 @@ LEFT JOIN selfm USING (n_name)
 #
 # Scale shape per round: one degree aggregate (map-side combined) +
 # one semi-join filter of the edge list against survivors — the same
-# join primitives, persist/unpersist rotation, and O(|V|) iteration
-# state as connected_components (plans/dedup.py:519). Rounds are
+# join primitives, fixpoint loop (persisting every round), and O(|V|)
+# iteration state as connected_components (plans/dedup.py). Rounds are
 # capped at _KCORE_ROUNDS with a fixpoint early-exit; because every
 # round past the fixpoint is a no-op, the capped loop computes EXACTLY
 # the _KCORE_ROUNDS-times-peeled graph whether or not it exits early —
@@ -258,21 +260,18 @@ def kcore_subgraph(pairs: DataFrame, k: int, max_rounds: int = _KCORE_ROUNDS):
     (doc_id, core_degree); converged is False if the round cap hit
     before the fixpoint. Factored out for unit tests on hand-built
     graphs (mirrors connected_components' factoring)."""
-    from pyspark import StorageLevel
-
-    edges = (
+    edges0 = (
         pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
         .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
         .repartition(F.col("src"))
         .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_edges = edges.count()
-    converged = False
-    for _ in range(max_rounds):
+
+    def _peel(edges: DataFrame) -> DataFrame:
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
         # an edge survives only if BOTH endpoints keep degree ≥ k
         keep = deg.filter(F.col("deg") >= k).select("src")
-        new_edges = (
+        return (
             edges.join(keep.hint("shuffle_hash"), "src", "left_semi")
             .join(
                 keep.select(F.col("src").alias("dst")).hint("shuffle_hash"),
@@ -280,19 +279,15 @@ def kcore_subgraph(pairs: DataFrame, k: int, max_rounds: int = _KCORE_ROUNDS):
                 "left_semi",
             )
             .repartition(F.col("src"))
-            .persist(StorageLevel.MEMORY_AND_DISK)
         )
-        new_count = new_edges.count()  # materializes before the drop below
-        edges.unpersist()
-        edges, converged, n_edges = new_edges, new_count == n_edges, new_count
-        if converged:
-            break
-    survivors = (
-        edges.groupBy(F.col("src").alias("doc_id"))
-        .agg(F.count(F.lit(1)).alias("core_degree"))
-        .localCheckpoint(eager=True)
-    )
-    edges.unpersist()
+
+    edges, converged = fixpoint(edges0, _peel, DataFrame.count, max_rounds)
+    with releasing(edges):
+        survivors = (
+            edges.groupBy(F.col("src").alias("doc_id"))
+            .agg(F.count(F.lit(1)).alias("core_degree"))
+            .localCheckpoint(eager=True)
+        )
     return survivors, converged
 
 
@@ -571,11 +566,14 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     e = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
         pairs.select(F.col("doc_b"), F.col("doc_a"))
     ).localCheckpoint(eager=True)
-    labels = (
+    labels0 = (
         e.select(F.col("src").alias("v")).distinct().withColumn("lbl", F.col("v"))
     )
-    for _ in range(_LPA_ROUNDS):
-        labels = _lpa_round(e, labels).localCheckpoint(eager=True)
+    with releasing(e):
+        labels, _ = fixpoint(
+            labels0, lambda lb: _lpa_round(e, lb), None, _LPA_ROUNDS,
+            checkpoint_every=1,
+        )
     return labels.groupBy(F.col("lbl").alias("community")).agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min("v").alias("min_member"),
@@ -632,9 +630,9 @@ LABEL_PROPAGATION_COMMUNITIES_SQL = _lpa_sql
 # matches whether or not the fixpoint arrives early.
 #
 # Scale: support counting is one wedge join per round over the
-# SHRINKING edge set (bucket-cap-bounded degrees), edge state is
-# localCheckpointed per round (multi-join rounds — the plan-growth
-# rule from SCALE.md).
+# SHRINKING edge set (bucket-cap-bounded degrees); edge state is
+# persisted per round and each round's predecessor freed once its
+# successor is counted (see ktruss_edges).
 # ---------------------------------------------------------------------------
 
 KTRUSS_K = 3
@@ -674,59 +672,33 @@ def _edge_support(edges: DataFrame) -> DataFrame:
     ).groupBy("a", "b").agg(F.count(F.lit(1)).alias("support"))
 
 
-def ktruss_edges(
-    spark: SparkSession, sf_dir: str, storage_level=None
-) -> DataFrame:
-    """k-truss via iterative support-prune over the LSH dup-graph.
-
-    ``storage_level`` parameterizes the persist level of the rotating
-    edge set so tools/ktruss_sf10_ab.py can A/B levels without
-    monkey-patching pyspark.StorageLevel attributes (which would
-    otherwise silently measure the shipped level in both arms —
-    ADVICE r10). Defaults to MEMORY_AND_DISK per the isolated A/B.
-    """
-    from pyspark import StorageLevel
-
+def ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """k-truss via iterative support-prune over the LSH dup-graph."""
     from map_reduce_engine_cdps_spark.plans.dedup import _lsh_pairs_cached
 
-    level = (
-        storage_level
-        if storage_level is not None
-        else StorageLevel.MEMORY_AND_DISK
-    )
-
-    # MEMORY_AND_DISK persist/rotate (round 10, measured): the r7 OOM
-    # came from localCheckpoint blocks piling up with no deterministic
-    # release (GC'd by the ContextCleaner) — the explicit
-    # persist+count+unpersist rotate below frees each round's edge set
-    # the moment its successor is materialized, so the storage level
-    # can stay memory-first and spill only under pressure.
-    # tools/ktruss_sf10_ab.py (isolated, 48g): MEMORY_AND_DISK
-    # [206, 154, 154] s vs DISK_ONLY [635 cold, 196, 273] s at sf10 —
-    # ~25% faster warm and far tighter. The probe's 689 s worst case
-    # reproduced ISOLATED as the DISK_ONLY cold first touch (memo
-    # build + page cache + shuffle-file creation), not co-scheduling.
-    edges = (
+    # Persisted MEMORY_AND_DISK rounds (round 10, measured): the r7 OOM
+    # came from per-round checkpoint blocks waiting on GC; fixpoint frees
+    # each edge set once its successor is counted. Isolated sf10 A/B at
+    # 48g: MEMORY_AND_DISK [206, 154, 154] s vs DISK_ONLY [635 cold, 196,
+    # 273] s — ~25% faster warm and far tighter; the probe's 689 s worst
+    # case was the DISK_ONLY cold first touch, not co-scheduling.
+    edges0 = (
         _lsh_pairs_cached(spark, sf_dir)
         .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .persist(level)
+        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-    n_old = edges.count()
     need = KTRUSS_K - 2
-    for _ in range(_KTRUSS_ROUNDS):
+
+    def _prune(edges: DataFrame) -> DataFrame:
         sup = _edge_support(edges)
-        kept = (
+        return (
             edges.join(sup.hint("shuffle_hash"), ["a", "b"], "left")
             .filter(F.coalesce("support", F.lit(0)) >= need)
             .select("a", "b")
-            .persist(level)
         )
-        n_new = kept.count()
-        edges.unpersist()
-        prev_n, n_old = n_old, n_new
-        edges = kept
-        if n_new == prev_n:
-            break
+
+    # the final edge set stays persisted: the returned plan reads it
+    edges, _ = fixpoint(edges0, _prune, DataFrame.count, _KTRUSS_ROUNDS)
     return edges.join(
         _edge_support(edges).hint("shuffle_hash"), ["a", "b"]
     ).select(
@@ -894,38 +866,37 @@ def bfs_layers(
     Factored out of bfs_hops so convergence semantics are
     unit-testable on hand-built graphs (paths, cycles, disconnected
     pieces) — the connected_components treatment."""
-    labels = seeds.select("v", F.lit(0).cast("long").alias("d")).localCheckpoint(
+    labels0 = seeds.select("v", F.lit(0).cast("long").alias("d")).localCheckpoint(
         eager=True
     )
-    for _ in range(max_hops):
+
+    def _relax(labels: DataFrame) -> DataFrame:
         nbr = (
             edges.join(labels.hint("shuffle_hash"), edges.src == labels.v)
             .groupBy(F.col("dst").alias("v"))
             .agg((F.min("d") + 1).alias("nd"))
         )
-        # Eager localCheckpoint EVERY round, not persist/rotate: a BFS
-        # round stacks a join + full-outer join on the previous round's
-        # plan, and persist caches rows while Catalyst still re-walks
-        # the whole logical tree — measured 1.2 → 14.3 s/round growth
-        # by round 8 at sf0.001 with persist-only rotation, flat
-        # ~0.5 s/round checkpointed (the dbscan/star-loop plan-growth
-        # rule; state is O(reached vertices), so pinning the round
-        # checkpoints is noise).
-        labels = (
+        return (
             labels.withColumnRenamed("d", "od")
             .join(nbr.hint("shuffle_hash"), "v", "full_outer")
             .select("v", F.least(
                 F.coalesce("od", F.lit(max_hops + 1)),
                 F.coalesce("nd", F.lit(max_hops + 1)),
             ).alias("d"))
-            .localCheckpoint(eager=True)
         )
+
+    # Eager localCheckpoint EVERY round, not persist/rotate: a BFS round
+    # stacks a join + full-outer join on the previous round's plan, and
+    # persist caches rows while Catalyst still re-walks the whole logical
+    # tree — measured 1.2 → 14.3 s/round growth by round 8 at sf0.001
+    # with persist-only rotation, flat ~0.5 s/round checkpointed (the
+    # dbscan/star-loop plan-growth rule).
+    labels, _ = fixpoint(labels0, _relax, None, max_hops, checkpoint_every=1)
     return labels
 
 
 def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_engine_cdps_spark.plans.dedup import _lsh_pairs_cached
-    from pyspark import StorageLevel
 
     pairs = _lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
     e = (
@@ -938,16 +909,16 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
         eager=True
     )
     seeds = verts.orderBy("v").limit(BFS_SEEDS)
-    labels = bfs_layers(e, seeds, BFS_MAX_HOPS)
-    hist = (
-        verts.join(labels.hint("shuffle_hash"), "v", "left")
-        .select(F.coalesce("d", F.lit(-1)).alias("hops"))
-        .groupBy("hops")
-        .agg(F.count(F.lit(1)).alias("n_docs"))
-    )
-    out = hist.localCheckpoint(eager=True)
-    e.unpersist()
-    return out
+    with releasing(e, verts):
+        labels = bfs_layers(e, seeds, BFS_MAX_HOPS)
+        with releasing(labels):
+            return (
+                verts.join(labels.hint("shuffle_hash"), "v", "left")
+                .select(F.coalesce("d", F.lit(-1)).alias("hops"))
+                .groupBy("hops")
+                .agg(F.count(F.lit(1)).alias("n_docs"))
+                .localCheckpoint(eager=True)
+            )
 
 
 def _bfs_hops_sql() -> str:

@@ -14,6 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.functions import vectors as V
+from map_reduce_engine_cdps_spark.operators.state import memo
 from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table
 
 N_QUERIES = 10     # vec_id < N_QUERIES are the query vectors
@@ -1896,20 +1897,11 @@ DBSCAN_MIN_PTS = 3
 # embedding_near_dup's verified cosine pair front is consumed by its
 # own registry entry (bound to embedding_near_dup_cached below — ADVICE
 # r7 caught the entry still paying the uncached pass) AND
-# dbscan_clusters — memoized per (app, sf_dir) like the text-side
-# _lsh_pairs_cached / _linkage_pairs_cached (rule 3, SCALE.md) so a
-# batch session (driver gate, sweep) pays the LSH-bucket + Arrow-dot
+# dbscan_clusters — memoized like the text-side _lsh_pairs_cached /
+# _linkage_pairs_cached (rule 3, SCALE.md) so a batch session
+# (certification gate, sweep) pays the LSH-bucket + Arrow-dot
 # verification pass once (~5.5 s at sf1).
-_EMB_PAIRS_CACHE: dict = {}
-
-
-def _embedding_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _EMB_PAIRS_CACHE.get(key)
-    if df is None:
-        df = embedding_near_dup(spark, sf_dir).localCheckpoint(eager=True)
-        _EMB_PAIRS_CACHE[key] = df
-    return df
+_embedding_pairs_cached = memo(embedding_near_dup, ("embeddings",))
 
 
 def embedding_near_dup_cached(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -10,6 +10,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.functions import text as TX
+from map_reduce_engine_cdps_spark.operators.state import memo
 from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table
 
 
@@ -1375,27 +1376,19 @@ COSINE_MIN_SIM = 0.5
 # of the cosine pipeline consume it (document frequencies, postings
 # probe, per-doc norms). Catalyst's ReusedExchange cannot deduplicate
 # them — each branch prunes to a different column set, so the canonical
-# subtrees never match — so the exploded shingle stream is
-# localCheckpointed once per (app, sf_dir), the _lsh_pairs_cached
-# pattern (plans/dedup.py:302). At 100 TB this is the persisted
-# shingle-posting parquet every AllPairs system materializes first.
-_SHINGLE_STREAM_CACHE: dict = {}
+# subtrees never match — so the exploded shingle stream is memoized
+# once per session, the _lsh_pairs_cached pattern (plans/dedup.py). At
+# 100 TB this is the persisted shingle-posting parquet every AllPairs
+# system materializes first.
+def _shingle_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    docs = load_parallel(spark, sf_dir, "documents")
+    return docs.select(
+        "doc_id",
+        F.explode(TX.shingles(TX.clean_tokens(F.col("text")), 3)).alias("shingle"),
+    )
 
 
-def _shingle_stream_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
-    key = (spark.sparkContext.applicationId, sf_dir)
-    df = _SHINGLE_STREAM_CACHE.get(key)
-    if df is None:
-        docs = load_parallel(spark, sf_dir, "documents")
-        df = docs.select(
-            "doc_id",
-            F.explode(TX.shingles(TX.clean_tokens(F.col("text")), 3)).alias(
-                "shingle"
-            ),
-        ).persist()
-        df.count()
-        _SHINGLE_STREAM_CACHE[key] = df
-    return df
+_shingle_stream_cached = memo(_shingle_stream, ("documents",))
 
 
 def doc_shingle_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -531,6 +531,20 @@ def test_lpa_round_join_is_shuffle_hash(spark):
     assert re.search(r"ShuffledHashJoin", plan), plan[:2000]
 
 
+def test_minhash_signature_tokenizes_once(spark):
+    """The signature front tokenizes each document once: shingles()
+    reads its token input 7 times, and an inline tokenizer expression
+    (a lambda, so Catalyst cannot share it) ran split() 7 times per
+    row until the tokens became a column of their own."""
+    from map_reduce_engine_cdps_spark.plans.dedup import _with_minhash_bands
+    from map_reduce_engine_cdps_spark.sources.readers import load_table
+
+    df = _with_minhash_bands(load_table(spark, SF_DIR, "documents"))
+    df.count()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("split(") == 1, plan[:3000]
+
+
 def test_certification_window_names_all_have_oracles():
     """The driver gate = the first 50 registry names; a rows-only
     (no-oracle) name in that window burns a certification slot as a

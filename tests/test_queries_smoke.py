@@ -1438,22 +1438,30 @@ def test_cc_label_memo_semantics(spark, sf_dir):
     memo here would collapse its bench timings to cache reads — while
     near_dup_prune reads the memo; and distinct max_rounds keys must
     not cross-contaminate."""
+    from map_reduce_engine_cdps_spark.operators.state import _MEMOS
     from map_reduce_engine_cdps_spark.plans import dedup as D
 
-    key = (spark.sparkContext.applicationId, sf_dir, 25)
-    D._CC_LABELS_CACHE.pop(key, None)
+    def entry(max_rounds):
+        key = (spark.sparkContext.applicationId, D._cc_labels_build, sf_dir,
+               (max_rounds,))
+        return _MEMOS[key][1] if key in _MEMOS else None
+
+    _MEMOS.pop(
+        (spark.sparkContext.applicationId, D._cc_labels_build, sf_dir, (25,)),
+        None,
+    )
     D.near_dup_clusters(spark, sf_dir).count()
-    first = D._CC_LABELS_CACHE.get(key)
+    first = entry(25)
     assert first is not None  # write-through populated the memo
     D.near_dup_clusters(spark, sf_dir).count()
-    second = D._CC_LABELS_CACHE.get(key)
+    second = entry(25)
     assert second is not first  # recomputed + refreshed, not served from
     # consumers read the refreshed entry
     assert D._cc_labels_cached(spark, sf_dir) is second
     # a different max_rounds is a different cache line
     other = D._cc_labels_cached(spark, sf_dir, max_rounds=24)
     assert other is not second
-    assert D._CC_LABELS_CACHE.get((key[0], key[1], 24)) is other
+    assert entry(24) is other
 
 
 def test_span_sample_error_within_binomial_noise(spark, sf_dir):
@@ -1764,16 +1772,17 @@ def test_cross_dup_source_matrix_sound(spark, sf_dir):
 def test_scored_pair_memo_shared(spark, sf_dir):
     """minhash_lsh_pairs and the precision eval resolve to the SAME
     checkpointed scored front (one signature pass per app+sf)."""
+    from map_reduce_engine_cdps_spark.operators.state import _MEMOS
     from map_reduce_engine_cdps_spark.plans.dedup import (
-        _SCORED_PAIRS_CACHE,
+        _lsh_scored_pairs,
         _lsh_scored_pairs_cached,
         minhash_lsh_pairs,
     )
 
     minhash_lsh_pairs(spark, sf_dir).count()
-    key = (spark.sparkContext.applicationId, sf_dir)
-    assert key in _SCORED_PAIRS_CACHE
-    assert _lsh_scored_pairs_cached(spark, sf_dir) is _SCORED_PAIRS_CACHE[key]
+    key = (spark.sparkContext.applicationId, _lsh_scored_pairs, sf_dir, ())
+    assert key in _MEMOS
+    assert _lsh_scored_pairs_cached(spark, sf_dir) is _MEMOS[key][1]
 
 
 def test_ivf_nprobe_sweep_sound(spark, sf_dir):

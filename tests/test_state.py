@@ -1,0 +1,114 @@
+"""Session memos and fixpoint loops (operators/state.py): storage is
+released deterministically, an exception mid-loop leaves nothing
+behind, and a memo never serves rows from rewritten inputs or from a
+checkpoint whose blocks are gone."""
+
+from __future__ import annotations
+
+import shutil
+
+import pyarrow as pa
+import pyarrow.compute as pc
+import pyarrow.parquet as pq
+import pytest
+from pyspark.sql import functions as F
+
+from map_reduce_engine_cdps_spark.plans import dedup as D
+from map_reduce_engine_cdps_spark.plans import graph as G
+
+
+def _n_persisted(spark) -> int:
+    return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+
+def test_graph_loops_keep_at_most_one_persisted_rdd_per_call(spark, sf_dir):
+    """Each loop-backed query keeps only the materialization its result
+    reads; every loop state, edge list and round checkpoint is freed
+    before it returns, without waiting for GC."""
+    calls = [
+        G.label_propagation_communities,
+        G.bfs_hops,
+        G.kcore_membership,
+        G.ktruss_edges,
+        D.near_dup_clusters,
+        D.near_dup_clusters_star,
+    ]
+    for fn in calls:  # warm the memos the loops read
+        fn(spark, sf_dir)
+    for _ in range(3):
+        for fn in calls:
+            before = _n_persisted(spark)
+            fn(spark, sf_dir)
+            assert _n_persisted(spark) - before <= 1, fn.__name__
+
+
+@pytest.mark.parametrize("checkpoint_every", [None, 1])
+@pytest.mark.parametrize("fail_in", ["step", "signature"])
+def test_fixpoint_releases_state_when_round_two_raises(
+    spark, checkpoint_every, fail_in
+):
+    from map_reduce_engine_cdps_spark.operators.state import fixpoint
+
+    rounds = []
+
+    def step(df):
+        rounds.append(1)
+        if fail_in == "step" and len(rounds) == 2:
+            raise RuntimeError("step failed")
+        return df.withColumn("x", F.col("x") + 1)
+
+    def signature(df):
+        if fail_in == "signature" and len(rounds) == 2:
+            raise RuntimeError("signature failed")
+        return df.agg(F.sum("x")).first()[0]
+
+    state0 = spark.range(64).withColumn("x", F.col("id") % 7)
+    before = _n_persisted(spark)
+    with pytest.raises(RuntimeError):
+        fixpoint(state0, step, signature, 5, checkpoint_every)
+    assert len(rounds) == 2
+    assert _n_persisted(spark) == before
+
+
+def _pairs(df) -> set:
+    return {(r["doc_a"], r["doc_b"]) for r in df.collect()}
+
+
+def test_memo_rebuilds_after_input_rewrite(spark, sf_dir, tmp_path):
+    """Rewriting documents.parquet under a live session invalidates the
+    LSH pair memo: appended exact copies of five documents show up as
+    new pairs instead of the memo serving the old pair list."""
+    shutil.copy(f"{sf_dir}/documents.parquet", tmp_path)
+    path = str(tmp_path / "documents.parquet")
+    before = _pairs(D._lsh_pairs_cached(spark, str(tmp_path)))
+
+    docs = pq.read_table(path)
+    long_docs = docs.filter(pc.greater(pc.utf8_length(docs["text"]), 200)).slice(0, 5)
+    first_new = pc.max(docs["doc_id"]).as_py() + 1
+    new_ids = pa.array(
+        range(first_new, first_new + long_docs.num_rows),
+        docs.schema.field("doc_id").type,
+    )
+    copies = long_docs.set_column(
+        docs.schema.get_field_index("doc_id"), "doc_id", new_ids
+    )
+    pq.write_table(pa.concat_tables([docs, copies]), path)
+
+    after = _pairs(D._lsh_pairs_cached(spark, str(tmp_path)))
+    assert before < after
+    assert {b for _, b in after - before} >= set(new_ids.to_pylist())
+
+
+def test_memo_rebuilds_after_checkpoint_blocks_dropped(spark, sf_dir):
+    """A memo whose checkpoint blocks were dropped rebuilds once on the
+    next hit instead of failing every later consumer."""
+    pairs = D._lsh_pairs_cached(spark, sf_dir)
+    expected = _pairs(pairs)
+    n_topk = D.ngram_jaccard_topk(spark, sf_dir).count()
+    pairs._jdf.queryExecution().analyzed().rdd().unpersist(True)
+
+    assert D.ngram_jaccard_topk(spark, sf_dir).count() == n_topk
+    rebuilt = D._lsh_pairs_cached(spark, sf_dir)
+    assert rebuilt is not pairs
+    assert _pairs(rebuilt) == expected
+    assert D._lsh_pairs_cached(spark, sf_dir) is rebuilt
