@@ -226,8 +226,8 @@ def group_query_cos_kernel():
     members of ITS bucket (mask, not per-bucket groups: grouped-map
     pays ~ms of pandas overhead PER GROUP, so bucket×salt group keys
     measured 10× slower than hash-salt groups with an in-kernel
-    bucket mask at sf0.1 — receipts in tools/r13_ann_ab.py runs,
-    OPTIMIZATION_r13.md).
+    bucket mask at sf0.1 — receipts in `git show
+    cb976e8:tools/r13_ann_ab.py` runs, OPTIMIZATION_r13.md).
     """
 
     def _sims(pdf: pd.DataFrame) -> pd.DataFrame:

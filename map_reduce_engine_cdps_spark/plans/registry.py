@@ -3,6 +3,10 @@
 Single source of truth for `__spark_entry__.queries()` / `oracle_sql()`
 and for bench.py. Oracle SQL of None ⇒ non-SQL-expressible operator
 (driver records a rows-only check).
+
+A name in `_PRIORITY_ORDER` resolves by convention to `module.name`
+and `module.NAME_SQL` in the one module of `_MODULES` defining both;
+`_EXPLICIT` binds the names that deviate from the convention.
 """
 
 from __future__ import annotations
@@ -16,1189 +20,45 @@ from map_reduce_engine_cdps_spark.operators import mlpipeline
 from map_reduce_engine_cdps_spark.streaming import stateful as streaming_stateful
 from map_reduce_engine_cdps_spark.streaming import windows as streaming_windows
 from map_reduce_engine_cdps_spark.plans import (
-    analytics,
-    curation,
-    dedup,
-    graph,
-    relational,
-    semistructured,
-    similarity,
-    textops,
-    tpch,
-    workloads,
+    analytics, curation, dedup, graph, relational, semistructured, similarity,
+    textops, tpch, workloads,
 )
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
+_MODULES = (
+    relational, tpch, workloads, textops, curation, dedup, similarity, analytics,
+    graph, semistructured, binary, mlpipeline, streaming_windows, streaming_stateful,
+)
+
 # name: (callable, oracle_sql | None)
-_REGISTRY: dict[str, tuple[QueryFn, str | None]] = {
-    # --- relational core (SURVEY.md §2.3-§2.6) ---
-    "pricing_summary": (relational.pricing_summary, relational.PRICING_SUMMARY_SQL),
-    "danger_topk": (relational.danger_topk, relational.DANGER_TOPK_SQL),
-    "revenue_by_nation": (relational.revenue_by_nation, relational.REVENUE_BY_NATION_SQL),
-    "customers_with_orders": (
-        relational.customers_with_orders,
-        relational.CUSTOMERS_WITH_ORDERS_SQL,
-    ),
-    "customers_without_orders": (
-        relational.customers_without_orders,
-        relational.CUSTOMERS_WITHOUT_ORDERS_SQL,
-    ),
-    "distinct_segments": (relational.distinct_segments, relational.DISTINCT_SEGMENTS_SQL),
-    "event_type_counts": (relational.event_type_counts, relational.EVENT_TYPE_COUNTS_SQL),
-    "dedup_on_agg": (relational.dedup_on_agg, relational.DEDUP_ON_AGG_SQL),
-    "segments_per_nation": (
-        relational.segments_per_nation,
-        relational.SEGMENTS_PER_NATION_SQL,
-    ),
-    "mode_per_user_bucket": (
-        relational.mode_per_user_bucket,
-        relational.MODE_PER_USER_BUCKET_SQL,
-    ),
-    "returnflag_accuracy": (
-        relational.returnflag_accuracy,
-        relational.RETURNFLAG_ACCURACY_SQL,
-    ),
-    "label_pairs": (relational.label_pairs, relational.LABEL_PAIRS_SQL),
-    "union_slices": (relational.union_slices, relational.UNION_SLICES_SQL),
-    "top_orders": (relational.top_orders, relational.TOP_ORDERS_SQL),
-    "systematic_sample": (relational.systematic_sample, relational.SYSTEMATIC_SAMPLE_SQL),
-    "train_test_split": (relational.train_test_split, relational.TRAIN_TEST_SPLIT_SQL),
-    "rollup_counts": (relational.rollup_counts, relational.ROLLUP_COUNTS_SQL),
-    "cube_counts": (relational.cube_counts, relational.CUBE_COUNTS_SQL),
-    "grouping_sets_counts": (
-        relational.grouping_sets_counts,
-        relational.GROUPING_SETS_COUNTS_SQL,
-    ),
-    "running_order_totals": (
-        relational.running_order_totals,
-        relational.RUNNING_ORDER_TOTALS_SQL,
-    ),
-    "rolling_1h_user_value": (
-        relational.rolling_1h_user_value,
-        relational.ROLLING_1H_USER_VALUE_SQL,
-    ),
-    "quantity_percentiles": (
-        relational.quantity_percentiles,
-        relational.QUANTITY_PERCENTILES_SQL,
-    ),
-    "balance_deciles": (relational.balance_deciles, relational.BALANCE_DECILES_SQL),
-    "value_histogram": (relational.value_histogram, relational.VALUE_HISTOGRAM_SQL),
-    "quantity_price_corr": (
-        relational.quantity_price_corr,
-        relational.QUANTITY_PRICE_CORR_SQL,
-    ),
-    "geo_mean_price": (relational.geo_mean_price, relational.GEO_MEAN_PRICE_SQL),
-    "latest_event_per_user": (
-        relational.latest_event_per_user,
-        relational.LATEST_EVENT_PER_USER_SQL,
-    ),
-    "user_funnel": (relational.user_funnel, relational.USER_FUNNEL_SQL),
-    "cohort_retention": (
-        relational.cohort_retention,
-        relational.COHORT_RETENTION_SQL,
-    ),
-    "count_distinct_parts": (
-        relational.count_distinct_parts,
-        relational.COUNT_DISTINCT_PARTS_SQL,
-    ),
-    "status_pivot": (relational.status_pivot, relational.STATUS_PIVOT_SQL),
-    "status_unpivot": (relational.status_unpivot, relational.STATUS_UNPIVOT_SQL),
-    "status_pivot_multi": (
-        relational.status_pivot_multi,
-        relational.STATUS_PIVOT_MULTI_SQL,
-    ),
-    "user_session_duration": (
-        relational.user_session_duration,
-        relational.USER_SESSION_DURATION_SQL,
-    ),
-    "json_props_extract": (
-        relational.json_props_extract,
-        relational.JSON_PROPS_EXTRACT_SQL,
-    ),
-    "tumbling_window_counts": (
-        relational.tumbling_window_counts,
-        relational.TUMBLING_WINDOW_COUNTS_SQL,
-    ),
-    "user_sessions": (relational.user_sessions, relational.USER_SESSIONS_SQL),
-    "window_ranks": (relational.window_ranks, relational.WINDOW_RANKS_SQL),
-    "segment_set_ops": (relational.segment_set_ops, relational.SEGMENT_SET_OPS_SQL),
-    # --- as-of join (union+window formulation; DuckDB ASOF JOIN oracle) ---
-    "click_asof_purchase": (
-        relational.click_asof_purchase,
-        relational.CLICK_ASOF_PURCHASE_SQL,
-    ),
-    # --- SCD-1 dimension upsert (full-outer merge + coalesce) ---
-    "customer_upsert": (
-        relational.customer_upsert,
-        relational.CUSTOMER_UPSERT_SQL,
-    ),
-    # --- time-series gap filling (sequence spine + zero-fill join) ---
-    "dense_event_timeline": (
-        relational.dense_event_timeline,
-        relational.DENSE_EVENT_TIMELINE_SQL,
-    ),
-    # --- declarative constraint audit (PK/FK/domain/null checks) ---
-    "data_quality_audit": (
-        relational.data_quality_audit,
-        relational.DATA_QUALITY_AUDIT_SQL,
-    ),
-    # --- SCD-2 interval build (gaps-and-islands, one shuffle) ---
-    "order_status_runs": (
-        relational.order_status_runs,
-        relational.ORDER_STATUS_RUNS_SQL,
-    ),
-    # --- same as-of semantics via cogroup().applyInPandas(merge_asof);
-    # SAME oracle SQL → window and cogroup formulations must agree ---
-    "click_asof_cogroup": (
-        relational.click_asof_cogroup,
-        relational.CLICK_ASOF_PURCHASE_SQL,
-    ),
-    # --- bucketed range join (equi-join on time bucket, never O(n·m)) ---
-    "click_purchase_within_1h": (
-        relational.click_purchase_within_1h,
-        relational.CLICK_PURCHASE_WITHIN_1H_SQL,
-    ),
-    # --- skew mitigation (operators/skew.py): same semantics as the
-    # plain-SQL oracles, physically salted ---
-    "salted_type_stats": (
-        relational.salted_type_stats,
-        relational.SALTED_TYPE_STATS_SQL,
-    ),
-    "salted_above_type_mean": (
-        relational.salted_above_type_mean,
-        relational.SALTED_ABOVE_TYPE_MEAN_SQL,
-    ),
-    # --- sliding event-time windows (batch twin of the streaming path) ---
-    "sliding_distinct_users": (
-        relational.sliding_distinct_users,
-        relational.SLIDING_DISTINCT_USERS_SQL,
-    ),
-    "windowed_p95_value": (
-        relational.windowed_p95_value,
-        relational.WINDOWED_P95_VALUE_SQL,
-    ),
-    "sliding_window_counts": (
-        relational.sliding_window_counts,
-        relational.SLIDING_WINDOW_COUNTS_SQL,
-    ),
-    # --- deterministic per-class sampling (T42, engine-independent) ---
-    "sampled_docs_per_source": (
-        relational.sampled_docs_per_source,
-        relational.SAMPLED_DOCS_PER_SOURCE_SQL,
-    ),
-    # --- HLL++ approx distinct, self-validated against the exact count ---
-    "approx_distinct_users": (
-        relational.approx_distinct_users,
-        relational.APPROX_DISTINCT_USERS_SQL,
-    ),
-    "approx_quantile_check": (
-        relational.approx_quantile_check,
-        relational.APPROX_QUANTILE_CHECK_SQL,
-    ),
-    # --- TPC-H-shaped multi-join battery (T35-T38 extended: EXISTS→semi,
-    # scalar correlated subquery→agg+broadcast join, 4-way join top-k) ---
-    "shipping_priority": (tpch.shipping_priority, tpch.SHIPPING_PRIORITY_SQL),
-    "priority_order_counts": (
-        tpch.priority_order_counts,
-        tpch.PRIORITY_ORDER_COUNTS_SQL,
-    ),
-    "small_qty_revenue": (tpch.small_qty_revenue, tpch.SMALL_QTY_REVENUE_SQL),
-    "top_return_customers": (
-        tpch.top_return_customers,
-        tpch.TOP_RETURN_CUSTOMERS_SQL,
-    ),
-    "brand_supplier_counts": (
-        tpch.brand_supplier_counts,
-        tpch.BRAND_SUPPLIER_COUNTS_SQL,
-    ),
-    "volume_shipping": (tpch.volume_shipping, tpch.VOLUME_SHIPPING_SQL),
-    "nation_market_share": (
-        tpch.nation_market_share,
-        tpch.NATION_MARKET_SHARE_SQL,
-    ),
-    "product_type_profit": (
-        tpch.product_type_profit,
-        tpch.PRODUCT_TYPE_PROFIT_SQL,
-    ),
-    "promo_revenue_share": (
-        tpch.promo_revenue_share,
-        tpch.PROMO_REVENUE_SHARE_SQL,
-    ),
-    "large_volume_customers": (
-        tpch.large_volume_customers,
-        tpch.LARGE_VOLUME_CUSTOMERS_SQL,
-    ),
-    "disjunctive_part_revenue": (
-        tpch.disjunctive_part_revenue,
-        tpch.DISJUNCTIVE_PART_REVENUE_SQL,
-    ),
-    "waiting_suppliers": (tpch.waiting_suppliers, tpch.WAITING_SUPPLIERS_SQL),
-    "forecast_revenue": (tpch.forecast_revenue, tpch.FORECAST_REVENUE_SQL),
-    "top_revenue_supplier": (
-        tpch.top_revenue_supplier,
-        tpch.TOP_REVENUE_SUPPLIER_SQL,
-    ),
-    "idle_rich_customers": (
-        tpch.idle_rich_customers,
-        tpch.IDLE_RICH_CUSTOMERS_SQL,
-    ),
-    # --- training-data curation (quality gates + decontamination) ---
-    "quality_filter_flags": (
-        curation.quality_filter_flags,
-        curation.QUALITY_FILTER_FLAGS_SQL,
-    ),
-    "decontamination": (curation.decontamination, curation.DECONTAMINATION_SQL),
-    "token_budget_sample": (
-        curation.token_budget_sample,
-        curation.TOKEN_BUDGET_SAMPLE_SQL,
-    ),
-    "source_mixing_weights": (
-        curation.source_mixing_weights,
-        curation.SOURCE_MIXING_WEIGHTS_SQL,
-    ),
-    "doc_chunks": (curation.doc_chunks, curation.DOC_CHUNKS_SQL),
-    "cdc_chunk_stats": (curation.cdc_chunk_stats, curation.CDC_CHUNK_STATS_SQL),
-    "quantile_normalized_quality": (
-        curation.quantile_normalized_quality,
-        curation.QUANTILE_NORMALIZED_QUALITY_SQL,
-    ),
-    "submodular_coverage_sample": (
-        curation.submodular_coverage_sample,
-        curation.SUBMODULAR_COVERAGE_SAMPLE_SQL,
-    ),
-    "pack_chunks_bins": (curation.pack_chunks_bins, curation.PACK_CHUNKS_BINS_SQL),
-    "epoch_shuffle": (curation.epoch_shuffle, curation.EPOCH_SHUFFLE_SQL),
-    "pareto_orders": (relational.pareto_orders, relational.PARETO_ORDERS_SQL),
-    "bm25_scores": (textops.bm25_scores, textops.BM25_SCORES_SQL),
-    "inverted_index_stats": (
-        textops.inverted_index_stats,
-        textops.INVERTED_INDEX_STATS_SQL,
-    ),
-    "embedding_covariance": (
-        similarity.embedding_covariance,
-        similarity.EMBEDDING_COVARIANCE_SQL,
-    ),
-    "source_interleave": (curation.source_interleave, curation.SOURCE_INTERLEAVE_SQL),
-    "mad_value_outliers": (
-        analytics.mad_value_outliers,
-        analytics.MAD_VALUE_OUTLIERS_SQL,
-    ),
-    "interpolated_event_values": (
-        analytics.interpolated_event_values,
-        analytics.INTERPOLATED_EVENT_VALUES_SQL,
-    ),
-    "cms_user_event_counts": (
-        analytics.cms_user_event_counts,
-        analytics.CMS_USER_EVENT_COUNTS_SQL,
-    ),
-    "event_transition_matrix": (
-        analytics.event_transition_matrix,
-        analytics.EVENT_TRANSITION_MATRIX_SQL,
-    ),
-    # --- CSV sink + typed reader round-trip through the oracle gate ---
-    "file_provenance_stats": (
-        curation.file_provenance_stats,
-        curation.FILE_PROVENANCE_STATS_SQL,
-    ),
-    "stable_row_ids": (curation.stable_row_ids, curation.STABLE_ROW_IDS_SQL),
-    "multi_format_union": (
-        curation.multi_format_union,
-        curation.MULTI_FORMAT_UNION_SQL,
-    ),
-    "schema_drift_union": (
-        curation.schema_drift_union,
-        curation.SCHEMA_DRIFT_UNION_SQL,
-    ),
-    "csv_roundtrip_counts": (
-        curation.csv_roundtrip_counts,
-        curation.CSV_ROUNDTRIP_COUNTS_SQL,
-    ),
-    # --- cross-run incremental exact dedup (anti-join on fingerprint) ---
-    "incremental_dedup": (
-        curation.incremental_dedup,
-        curation.INCREMENTAL_DEDUP_SQL,
-    ),
-    # --- weighted priority sampling (top-k shape, no global sort) ---
-    "weighted_doc_sample": (
-        curation.weighted_doc_sample,
-        curation.WEIGHTED_DOC_SAMPLE_SQL,
-    ),
-    # --- JSONL sink + explicit-schema reader round-trip ---
-    "jsonl_roundtrip_stats": (
-        curation.jsonl_roundtrip_stats,
-        curation.JSONL_ROUNDTRIP_STATS_SQL,
-    ),
-    # --- hive-partitioned parquet sink + partition-pruned re-read ---
-    "partitioned_pruned_stats": (
-        curation.partitioned_pruned_stats,
-        curation.PARTITIONED_PRUNED_STATS_SQL,
-    ),
-    # --- ORC sink + typed re-read round-trip ---
-    "orc_roundtrip_stats": (
-        curation.orc_roundtrip_stats,
-        curation.ORC_ROUNDTRIP_STATS_SQL,
-    ),
-    # --- native session windows (F.session_window) ---
-    "session_window_counts": (
-        relational.session_window_counts,
-        relational.SESSION_WINDOW_COUNTS_SQL,
-    ),
-    # --- distribution-position windows (percent_rank/cume_dist) ---
-    "priority_price_position": (
-        relational.priority_price_position,
-        relational.PRIORITY_PRICE_POSITION_SQL,
-    ),
-    # --- period-over-period monthly revenue (12-month lag) ---
-    "monthly_revenue_yoy": (
-        relational.monthly_revenue_yoy,
-        relational.MONTHLY_REVENUE_YOY_SQL,
-    ),
-    # --- bucketed tables: co-located sort-merge join, zero exchange ---
-    "bucketed_join_stats": (
-        curation.bucketed_join_stats,
-        curation.BUCKETED_JOIN_STATS_SQL,
-    ),
-    # --- lag()-based inter-arrival gaps per user ---
-    "event_interarrival_stats": (
-        relational.event_interarrival_stats,
-        relational.EVENT_INTERARRIVAL_STATS_SQL,
-    ),
-    # --- text analysis (T10-T13 + training-data extensions) ---
-    "wordcount": (textops.wordcount, textops.WORDCOUNT_SQL),
-    "text_quality": (textops.text_quality, textops.TEXT_QUALITY_SQL),
-    "lang_id_accuracy": (textops.lang_id_accuracy, textops.LANG_ID_ACCURACY_SQL),
-    "doc_fingerprints": (textops.doc_fingerprints, textops.DOC_FINGERPRINTS_SQL),
-    "tfidf_top_terms": (textops.tfidf_top_terms, textops.TFIDF_TOP_TERMS_SQL),
-    "token_stats": (textops.token_stats, textops.TOKEN_STATS_SQL),
-    "top_bigrams": (textops.top_bigrams, textops.TOP_BIGRAMS_SQL),
-    "doc_repetition_stats": (
-        textops.doc_repetition_stats,
-        textops.DOC_REPETITION_STATS_SQL,
-    ),
-    "ngram_novelty_scores": (
-        textops.ngram_novelty_scores,
-        textops.NGRAM_NOVELTY_SCORES_SQL,
-    ),
-    "term_burstiness": (
-        textops.term_burstiness,
-        textops.TERM_BURSTINESS_SQL,
-    ),
-    # --- deduplication ---
-    "dedup_exact": (dedup.dedup_exact, dedup.DEDUP_EXACT_SQL),
-    "dedup_keep_best": (dedup.dedup_keep_best, dedup.DEDUP_KEEP_BEST_SQL),
-    "cross_source_leakage": (
-        dedup.cross_source_leakage,
-        dedup.CROSS_SOURCE_LEAKAGE_SQL,
-    ),
-    "minhash_signatures": (dedup.minhash_signatures, dedup.MINHASH_SIGNATURES_SQL),
-    "minhash_lsh_pairs": (dedup.minhash_lsh_pairs, dedup.MINHASH_LSH_PAIRS_SQL),
-    "simhash_buckets": (dedup.simhash_buckets, dedup.SIMHASH_BUCKETS_SQL),
-    "simhash_hamming_pairs": (
-        dedup.simhash_hamming_pairs,
-        dedup.SIMHASH_HAMMING_PAIRS_SQL,
-    ),
-    "ngram_jaccard_topk": (dedup.ngram_jaccard_topk, dedup.NGRAM_JACCARD_TOPK_SQL),
-    "near_dup_clusters": (dedup.near_dup_clusters, dedup.NEAR_DUP_CLUSTERS_SQL),
-    "near_dup_clusters_star": (
-        dedup.near_dup_clusters_star,
-        dedup.NEAR_DUP_CLUSTERS_STAR_SQL,
-    ),
-    # --- per-dimension embedding distribution profile ---
-    "embedding_dim_stats": (
-        similarity.embedding_dim_stats,
-        similarity.EMBEDDING_DIM_STATS_SQL,
-    ),
-    # --- per-group winsorization (percentile clipping) ---
-    "winsorized_price_stats": (
-        curation.winsorized_price_stats,
-        curation.WINSORIZED_PRICE_STATS_SQL,
-    ),
-    # --- per-source language-mix entropy profile ---
-    "source_lang_entropy": (
-        curation.source_lang_entropy,
-        curation.SOURCE_LANG_ENTROPY_SQL,
-    ),
-    # --- exact-substring (span-level) dedup ---
-    "duplicate_spans": (dedup.duplicate_spans, dedup.DUPLICATE_SPANS_SQL),
-    "edit_distance_pairs": (
-        dedup.edit_distance_pairs,
-        dedup.EDIT_DISTANCE_PAIRS_SQL,
-    ),
-    # --- similarity search ---
-    "knn_bruteforce": (similarity.knn_bruteforce, similarity.KNN_BRUTEFORCE_SQL),
-    "lsh_bucket_stats": (similarity.lsh_bucket_stats, similarity.LSH_BUCKET_STATS_SQL),
-    "lsh_ann_topk": (similarity.lsh_ann_topk, similarity.LSH_ANN_TOPK_SQL),
-    "ivf_ann_topk": (similarity.ivf_ann_topk, similarity.IVF_ANN_TOPK_SQL),
-    "label_centroid_norms": (
-        similarity.label_centroid_norms,
-        similarity.LABEL_CENTROID_NORMS_SQL,
-    ),
-    "embedding_quantize_stats": (
-        similarity.embedding_quantize_stats,
-        similarity.EMBEDDING_QUANTIZE_STATS_SQL,
-    ),
-    # --- distributed Lloyd k-means (IVF coarse-quantizer trainer):
-    # iterative fixpoint, not SQL-expressible → rows-only ---
-    "kmeans_lloyd": (similarity.kmeans_lloyd, similarity.KMEANS_LLOYD_SQL),
-    # --- compat shim: reference-style 4-hook program, same oracle as the
-    # DataFrame wordcount (proves shim ≡ SQL semantics end-to-end) ---
+_EXPLICIT: dict[str, tuple[QueryFn, str | None]] = {
+    # formulation twins sharing one oracle → both execution paths must agree
+    # (cogroup merge_asof, 4-hook shim, Python UDTF, treeReduce merge)
+    "click_asof_cogroup": (relational.click_asof_cogroup, relational.CLICK_ASOF_PURCHASE_SQL),
     "wordcount_shim": (workloads.wordcount_shim, textops.WORDCOUNT_SQL),
-    "danger_shim": (workloads.danger_shim, workloads.DANGER_SHIM_SQL),
-    # --- ML pipeline (plants workload restatement). r7: the registry
-    # entries are PROBE_ITERS-step GD probes whose unrolled DuckDB
-    # replays (kmeans_lloyd template) certify the full pipeline — pair
-    # join geometry, grouped Arrow UDF / multicast shuffle, gradient +
-    # sigmoid math, vote argmax; production n_iters=GD_ITERS stays the
-    # API, pytest-parity-covered ---
-    "one_vs_one_training": (
-        mlpipeline.one_vs_one_metrics,
-        mlpipeline.ONE_VS_ONE_GD2_SQL,
-    ),
-    "ensemble_vote_accuracy": (
-        mlpipeline.ensemble_vote_probe,
-        mlpipeline.ENSEMBLE_VOTE_GD2_SQL,
-    ),
-    "one_vs_one_shim": (
-        mlpipeline.one_vs_one_shim_probe,
-        mlpipeline.ONE_VS_ONE_GD2_SQL,
-    ),
-    # --- oracle-checkable projection of the shim's routing ledger:
-    # n_samples per pair == count(*) per label pair iff the multicast
-    # shuffle delivered exactly the right rows to the owning worker ---
-    "one_vs_one_shim_pairs": (
-        mlpipeline.one_vs_one_shim_pairs,
-        mlpipeline.ONE_VS_ONE_SHIM_PAIRS_SQL,
-    ),
-    # --- embedding near-dup (LSH-bucketed cosine pairs); bound to the
-    # memoized variant so dbscan_clusters reuses the pair front in a
-    # batch session (ADVICE r7) ---
-    "embedding_near_dup": (
-        similarity.embedding_near_dup_cached,
-        similarity.EMBEDDING_NEAR_DUP_SQL,
-    ),
-    # --- Arrow-batched pandas-UDF batch inference (T48 stand-in);
-    # python-UDF hash math — rows-only ---
-    "doc_embeddings": (binary.doc_embeddings, binary.DOC_EMBEDDINGS_SQL),
-    "audio_window_features": (binary.audio_window_features, binary.AUDIO_WINDOW_FEATURES_SQL),
-    # --- multimodal plumbing: binary column + typed metadata +
-    # mapInPandas feature extraction (deterministic fake decode) — rows-only ---
-    "media_features": (binary.media_features, binary.MEDIA_FEATURES_SQL),
-    # REAL dependency-free image decode (binary PPM) — T5 executable
-    # in-container, not just env-gated plumbing
-    "ppm_image_features": (binary.ppm_image_features, binary.PPM_IMAGE_FEATURES_SQL),
-    # REAL numpy CNN forward pass (im2col convs + pool + L2), value-certified
-    "ppm_cnn_embeddings": (binary.ppm_cnn_embeddings, binary.PPM_CNN_EMBEDDINGS_SQL),
-    # full-variability decode (gradient pixels, non-square pad, NN
-    # resize) inside the driver gate via embedded precomputed values
-    "ppm_gradient_features": (
-        binary.ppm_gradient_features,
-        binary.PPM_GRADIENT_FEATURES_SQL,
-    ),
-    # REAL multi-frame container parse (back-to-back P6 frames), value-certified
-    "ppm_video_frame_samples": (binary.ppm_video_frame_samples, binary.PPM_VIDEO_FRAME_SAMPLES_SQL),
-    "ppm_shot_boundaries": (binary.ppm_shot_boundaries, binary.PPM_SHOT_BOUNDARIES_SQL),
-    "wav_silence_segments": (binary.wav_silence_segments, binary.WAV_SILENCE_SEGMENTS_SQL),
-    # REAL RIFF/WAVE PCM-16 container decode, value-certified
-    "wav_audio_windows": (binary.wav_audio_windows, binary.WAV_AUDIO_WINDOWS_SQL),
-    "image_dhash_dedup": (binary.image_dhash_dedup, binary.IMAGE_DHASH_DEDUP_SQL),
-    # --- video frame sampling: one-to-many mapInPandas fan-out with
-    # bounded frames-per-media; decode stubbed, plumbing real — rows-only ---
-    "video_frame_samples": (binary.video_frame_samples, binary.VIDEO_FRAME_SAMPLES_SQL),
-    # --- Structured Streaming path, oracle-checked against the SAME SQL
-    # as its batch twin (streaming ≡ batch ≡ DuckDB) ---
+    "udtf_doc_chunks": (semistructured.udtf_doc_chunks, curation.DOC_CHUNKS_SQL),
+    "tree_covariance": (similarity.tree_covariance, similarity.EMBEDDING_COVARIANCE_SQL),
+    # ML pipeline: PROBE_ITERS-step GD probes whose unrolled DuckDB replays
+    # certify the full pipeline; production n_iters=GD_ITERS stays the API
+    "one_vs_one_training": (mlpipeline.one_vs_one_metrics, mlpipeline.ONE_VS_ONE_GD2_SQL),
+    "ensemble_vote_accuracy": (mlpipeline.ensemble_vote_probe, mlpipeline.ENSEMBLE_VOTE_GD2_SQL),
+    "one_vs_one_shim": (mlpipeline.one_vs_one_shim_probe, mlpipeline.ONE_VS_ONE_GD2_SQL),
+    # memoized variant, so dbscan_clusters reuses the pair front (ADVICE r7)
+    "embedding_near_dup": (similarity.embedding_near_dup_cached, similarity.EMBEDDING_NEAR_DUP_SQL),
+    # Structured Streaming twins: streaming ≡ batch ≡ DuckDB
     "streaming_window_counts": (
-        streaming_windows.streaming_window_counts,
-        relational.TUMBLING_WINDOW_COUNTS_SQL,
+        streaming_windows.streaming_window_counts, relational.TUMBLING_WINDOW_COUNTS_SQL,
     ),
     "streaming_sliding_distinct": (
-        streaming_windows.streaming_sliding_distinct,
-        relational.SLIDING_DISTINCT_USERS_SQL,
+        streaming_windows.streaming_sliding_distinct, relational.SLIDING_DISTINCT_USERS_SQL,
     ),
-    # --- custom stateful streaming op (applyInPandasWithState
-    # sessionization), oracle-checked against batch SQL sessionization ---
-    "streaming_user_sessions": (
-        streaming_stateful.streaming_user_sessions,
-        streaming_stateful.STREAMING_USER_SESSIONS_SQL,
-    ),
-    # --- streaming stateful exact-dedup (state-store dropDuplicates),
-    # oracle-checked against batch SELECT DISTINCT ---
-    "streaming_dedup_events": (
-        streaming_windows.streaming_dedup_events,
-        streaming_windows.STREAMING_DEDUP_EVENTS_SQL,
-    ),
-    # --- stream-static broadcast enrichment join + windowed agg ---
-    "streaming_segment_counts": (
-        streaming_windows.streaming_segment_counts,
-        streaming_windows.STREAMING_SEGMENT_COUNTS_SQL,
-    ),
-    # --- stream-stream watermarked interval join; same oracle as the
-    # batch bucketed range join → the two execution models must agree ---
     "streaming_click_purchase_join": (
-        streaming_windows.streaming_click_purchase_join,
-        relational.CLICK_PURCHASE_WITHIN_1H_SQL,
-    ),
-    # --- Spark 4 VariantType: parse-once binary variant + typed path
-    # extraction over the events.props JSON column ---
-    "variant_props_stats": (
-        semistructured.variant_props_stats,
-        semistructured.VARIANT_PROPS_STATS_SQL,
-    ),
-    "variant_typeof_profile": (
-        semistructured.variant_typeof_profile,
-        semistructured.VARIANT_TYPEOF_PROFILE_SQL,
-    ),
-    # --- Python UDTF lateral table functions; udtf_doc_chunks shares
-    # doc_chunks' oracle → built-in and UDTF formulations must agree ---
-    "udtf_top_tokens": (
-        semistructured.udtf_top_tokens,
-        semistructured.UDTF_TOP_TOKENS_SQL,
-    ),
-    "udtf_doc_chunks": (
-        semistructured.udtf_doc_chunks,
-        curation.DOC_CHUNKS_SQL,
-    ),
-    "udtf_doc_sentences": (
-        semistructured.udtf_doc_sentences,
-        semistructured.UDTF_DOC_SENTENCES_SQL,
-    ),
-    # --- custom Python DataSource (declared schema + its own split
-    # plan); oracle recomputes the deterministic generator in SQL ---
-    "pyds_synthetic_stats": (
-        semistructured.pyds_synthetic_stats,
-        semistructured.PYDS_SYNTHETIC_STATS_SQL,
-    ),
-    # --- TPC-H battery completion: Q5, Q12, Q13 direct; Q2/Q11/Q20
-    # adapted (no partsupp table — lineitem is the part↔supplier link) ---
-    "local_supplier_volume": (
-        tpch.local_supplier_volume,
-        tpch.LOCAL_SUPPLIER_VOLUME_SQL,
-    ),
-    "linestatus_priority_counts": (
-        tpch.linestatus_priority_counts,
-        tpch.LINESTATUS_PRIORITY_COUNTS_SQL,
-    ),
-    "customer_order_distribution": (
-        tpch.customer_order_distribution,
-        tpch.CUSTOMER_ORDER_DISTRIBUTION_SQL,
-    ),
-    "min_cost_supplier": (tpch.min_cost_supplier, tpch.MIN_COST_SUPPLIER_SQL),
-    "important_part_value": (
-        tpch.important_part_value,
-        tpch.IMPORTANT_PART_VALUE_SQL,
-    ),
-    "dominant_part_suppliers": (
-        tpch.dominant_part_suppliers,
-        tpch.DOMINANT_PART_SUPPLIERS_SQL,
-    ),
-    # --- ANN completeness metric: recall@K of the LSH path vs exact ---
-    "ann_recall_eval": (similarity.ann_recall_eval, similarity.ANN_RECALL_EVAL_SQL),
-    # --- IVF tuning curve: recall@K + candidate cost vs nprobe (r11) ---
-    "ivf_nprobe_sweep_eval": (
-        similarity.ivf_nprobe_sweep_eval,
-        similarity.IVF_NPROBE_SWEEP_EVAL_SQL,
-    ),
-    # --- mapInArrow surface: RecordBatch-native numpy compute ---
-    "arrow_norm_stats": (
-        similarity.arrow_norm_stats,
-        similarity.ARROW_NORM_STATS_SQL,
-    ),
-    # --- CCNet-style unigram-LM document quality scoring ---
-    "unigram_logprob_scores": (
-        textops.unigram_logprob_scores,
-        textops.UNIGRAM_LOGPROB_SCORES_SQL,
-    ),
-    # --- Spark 4 native XML sink + source roundtrip ---
-    "xml_roundtrip_stats": (
-        curation.xml_roundtrip_stats,
-        curation.XML_ROUNDTRIP_STATS_SQL,
-    ),
-    # --- hypertable-style minute/hour/day rollup in one grouped pass ---
-    "multi_resolution_rollup": (
-        relational.multi_resolution_rollup,
-        relational.MULTI_RESOLUTION_ROLLUP_SQL,
-    ),
-    # --- tokenizer vocab coverage / OOV rate ---
-    "vocab_coverage_stats": (
-        textops.vocab_coverage_stats,
-        textops.VOCAB_COVERAGE_STATS_SQL,
-    ),
-    # --- advanced analytics: regression aggs, moments, sketches,
-    # recursive CTE, collations, SQL variables (plans/analytics.py) ---
-    "regr_price_qty": (analytics.regr_price_qty, analytics.REGR_PRICE_QTY_SQL),
-    "quantity_moments": (
-        analytics.quantity_moments,
-        analytics.QUANTITY_MOMENTS_SQL,
-    ),
-    "hll_sketch_users": (
-        analytics.hll_sketch_users,
-        analytics.HLL_SKETCH_USERS_SQL,
-    ),
-    "monthly_gapfill_revenue": (
-        analytics.monthly_gapfill_revenue,
-        analytics.MONTHLY_GAPFILL_REVENUE_SQL,
-    ),
-    "collated_lang_counts": (
-        analytics.collated_lang_counts,
-        analytics.COLLATED_LANG_COUNTS_SQL,
-    ),
-    "sql_variable_pricey_parts": (
-        analytics.sql_variable_pricey_parts,
-        analytics.SQL_VARIABLE_PRICEY_PARTS_SQL,
-    ),
-    # Spark 4 SQL pipe syntax (|> operators) vs classic formulation
-    "listagg_status_profile": (
-        analytics.listagg_status_profile,
-        analytics.LISTAGG_STATUS_PROFILE_SQL,
-    ),
-    "try_arith_audit": (
-        analytics.try_arith_audit,
-        analytics.TRY_ARITH_AUDIT_SQL,
-    ),
-    "pipe_syntax_flag_counts": (analytics.pipe_syntax_flag_counts, analytics.PIPE_SYNTAX_FLAG_COUNTS_SQL),
-    "locf_event_values": (
-        analytics.locf_event_values,
-        analytics.LOCF_EVENT_VALUES_SQL,
-    ),
-    "lateral_top_orders": (
-        analytics.lateral_top_orders,
-        analytics.LATERAL_TOP_ORDERS_SQL,
-    ),
-    "freq_items_check": (
-        analytics.freq_items_check,
-        analytics.FREQ_ITEMS_CHECK_SQL,
-    ),
-    "order_status_map_roundtrip": (
-        analytics.order_status_map_roundtrip,
-        analytics.ORDER_STATUS_MAP_ROUNDTRIP_SQL,
-    ),
-    # --- graph analytics (engine extension; reference has none) ---
-    "nation_trade_pagerank": (
-        graph.nation_trade_pagerank,
-        graph.NATION_TRADE_PAGERANK_SQL,
-    ),
-    "trade_graph_degrees": (
-        graph.trade_graph_degrees,
-        graph.TRADE_GRAPH_DEGREES_SQL,
-    ),
-    # --- statistical tests / profiling / view maintenance ---
-    "brand_nation_chi2": (
-        analytics.brand_nation_chi2,
-        analytics.BRAND_NATION_CHI2_SQL,
-    ),
-    "lineitem_profile": (
-        analytics.lineitem_profile,
-        analytics.LINEITEM_PROFILE_SQL,
-    ),
-    "mv_revenue_maintenance": (
-        analytics.mv_revenue_maintenance,
-        analytics.MV_REVENUE_MAINTENANCE_SQL,
-    ),
-    "sentiment_scores": (textops.sentiment_scores, textops.SENTIMENT_SCORES_SQL),
-    "kwic_snippets": (textops.kwic_snippets, textops.KWIC_SNIPPETS_SQL),
-    # --- corpus statistics / distribution calibration ---
-    "zipf_fit": (textops.zipf_fit, textops.ZIPF_FIT_SQL),
-    "vocab_growth_heaps": (
-        textops.vocab_growth_heaps,
-        textops.VOCAB_GROWTH_HEAPS_SQL,
-    ),
-    "decile_value_calibration": (
-        analytics.decile_value_calibration,
-        analytics.DECILE_VALUE_CALIBRATION_SQL,
-    ),
-    "rfm_segments": (analytics.rfm_segments, analytics.RFM_SEGMENTS_SQL),
-    "table_diff": (relational.table_diff, relational.TABLE_DIFF_SQL),
-    "status_as_of": (relational.status_as_of, relational.STATUS_AS_OF_SQL),
-    "arrow_label_centroids": (
-        similarity.arrow_label_centroids,
-        similarity.ARROW_LABEL_CENTROIDS_SQL,
-    ),
-    "negative_sampling_pairs": (
-        similarity.negative_sampling_pairs,
-        similarity.NEGATIVE_SAMPLING_PAIRS_SQL,
-    ),
-    # hierarchical treeReduce merge must agree with the one-pass SQL agg
-    "tree_covariance": (
-        similarity.tree_covariance,
-        similarity.EMBEDDING_COVARIANCE_SQL,
-    ),
-    "ks_two_sample": (analytics.ks_two_sample, analytics.KS_TWO_SAMPLE_SQL),
-    "price_qty_heatmap": (
-        analytics.price_qty_heatmap,
-        analytics.PRICE_QTY_HEATMAP_SQL,
-    ),
-    "revenue_gini": (analytics.revenue_gini, analytics.REVENUE_GINI_SQL),
-    "type_pair_lift": (analytics.type_pair_lift, analytics.TYPE_PAIR_LIFT_SQL),
-    "linear_attribution": (
-        analytics.linear_attribution,
-        analytics.LINEAR_ATTRIBUTION_SQL,
-    ),
-    "active_user_metrics": (
-        analytics.active_user_metrics,
-        analytics.ACTIVE_USER_METRICS_SQL,
-    ),
-    "weighted_median_price": (
-        analytics.weighted_median_price,
-        analytics.WEIGHTED_MEDIAN_PRICE_SQL,
-    ),
-    "ltv_by_order_index": (
-        analytics.ltv_by_order_index,
-        analytics.LTV_BY_ORDER_INDEX_SQL,
-    ),
-    "customer_survival_km": (
-        analytics.customer_survival_km,
-        analytics.CUSTOMER_SURVIVAL_KM_SQL,
-    ),
-    "benford_first_digit": (
-        analytics.benford_first_digit,
-        analytics.BENFORD_FIRST_DIGIT_SQL,
-    ),
-    "mannwhitney_u": (analytics.mannwhitney_u, analytics.MANNWHITNEY_U_SQL),
-    "bitmap_distinct_users": (
-        analytics.bitmap_distinct_users,
-        analytics.BITMAP_DISTINCT_USERS_SQL,
-    ),
-    "kmv_segment_jaccard": (
-        analytics.kmv_segment_jaccard,
-        analytics.KMV_SEGMENT_JACCARD_SQL,
-    ),
-    # --- BPE tokenizer training (iterative; rows-only check like kmeans) ---
-    "bpe_merges": (textops.bpe_merges, textops.BPE_MERGES_SQL),
-    "bpe_token_compression": (textops.bpe_token_compression, textops.BPE_TOKEN_COMPRESSION_SQL),
-    # --- time-series analytics over the daily revenue series ---
-    "revenue_changepoint": (
-        analytics.revenue_changepoint,
-        analytics.REVENUE_CHANGEPOINT_SQL,
-    ),
-    "revenue_acf": (analytics.revenue_acf, analytics.REVENUE_ACF_SQL),
-    "revenue_ewma": (analytics.revenue_ewma, analytics.REVENUE_EWMA_SQL),
-    "revenue_holt": (analytics.revenue_holt, analytics.REVENUE_HOLT_SQL),
-    "holt_winters_revenue": (
-        analytics.holt_winters_revenue,
-        analytics.HOLT_WINTERS_REVENUE_SQL,
-    ),
-    "segment_nation_mi": (
-        analytics.segment_nation_mi,
-        analytics.SEGMENT_NATION_MI_SQL,
-    ),
-    "theil_sen_trend": (
-        analytics.theil_sen_trend,
-        analytics.THEIL_SEN_TREND_SQL,
-    ),
-    "ab_proportion_ztest": (
-        analytics.ab_proportion_ztest,
-        analytics.AB_PROPORTION_ZTEST_SQL,
-    ),
-    "psi_value_shift": (
-        analytics.psi_value_shift,
-        analytics.PSI_VALUE_SHIFT_SQL,
-    ),
-    "neyman_allocation": (
-        analytics.neyman_allocation,
-        analytics.NEYMAN_ALLOCATION_SQL,
-    ),
-    "key_skew_profile": (
-        analytics.key_skew_profile,
-        analytics.KEY_SKEW_PROFILE_SQL,
-    ),
-    "skew_remediation_eval": (
-        analytics.skew_remediation_eval,
-        analytics.SKEW_REMEDIATION_EVAL_SQL,
-    ),
-    "conformal_revenue_interval": (
-        analytics.conformal_revenue_interval,
-        analytics.CONFORMAL_REVENUE_INTERVAL_SQL,
-    ),
-    "copurchase_part_pairs": (
-        analytics.copurchase_part_pairs,
-        analytics.COPURCHASE_PART_PAIRS_SQL,
-    ),
-    "decayed_user_value": (
-        analytics.decayed_user_value,
-        analytics.DECAYED_USER_VALUE_SQL,
-    ),
-    "markov_next_event_accuracy": (
-        analytics.markov_next_event_accuracy,
-        analytics.MARKOV_NEXT_EVENT_ACCURACY_SQL,
-    ),
-    "twap_user_value": (
-        analytics.twap_user_value,
-        analytics.TWAP_USER_VALUE_SQL,
-    ),
-    "sax_revenue_symbols": (
-        analytics.sax_revenue_symbols,
-        analytics.SAX_REVENUE_SYMBOLS_SQL,
-    ),
-    "cusum_control_chart": (
-        analytics.cusum_control_chart,
-        analytics.CUSUM_CONTROL_CHART_SQL,
-    ),
-    "aqp_sample_accuracy": (
-        relational.aqp_sample_accuracy,
-        relational.AQP_SAMPLE_ACCURACY_SQL,
-    ),
-    "bloom_fpr_eval": (
-        relational.bloom_fpr_eval,
-        relational.BLOOM_FPR_EVAL_SQL,
-    ),
-    "zorder_layout_stats": (
-        relational.zorder_layout_stats,
-        relational.ZORDER_LAYOUT_STATS_SQL,
-    ),
-    # --- zone-map file skipping across write layouts (r11) ---
-    "compaction_plan_eval": (
-        relational.compaction_plan_eval,
-        relational.COMPACTION_PLAN_EVAL_SQL,
-    ),
-    "minmax_file_skipping_eval": (
-        relational.minmax_file_skipping_eval,
-        relational.MINMAX_FILE_SKIPPING_EVAL_SQL,
-    ),
-    "length_emd_by_source": (
-        curation.length_emd_by_source,
-        curation.LENGTH_EMD_BY_SOURCE_SQL,
-    ),
-    "dow_seasonality": (analytics.dow_seasonality, analytics.DOW_SEASONALITY_SQL),
-    "rolling_zscore_anomalies": (
-        analytics.rolling_zscore_anomalies,
-        analytics.ROLLING_ZSCORE_ANOMALIES_SQL,
-    ),
-    "revenue_topshare_curve": (
-        analytics.revenue_topshare_curve,
-        analytics.REVENUE_TOPSHARE_CURVE_SQL,
-    ),
-    "bootstrap_revenue_ci": (
-        analytics.bootstrap_revenue_ci,
-        analytics.BOOTSTRAP_REVENUE_CI_SQL,
-    ),
-    "max_concurrent_sessions": (
-        relational.max_concurrent_sessions,
-        relational.MAX_CONCURRENT_SESSIONS_SQL,
-    ),
-    "frequent_event_subsequences": (
-        relational.frequent_event_subsequences,
-        relational.FREQUENT_EVENT_SUBSEQUENCES_SQL,
-    ),
-    "quality_score_auc": (textops.quality_score_auc, textops.QUALITY_SCORE_AUC_SQL),
-    "chi2_term_selection": (
-        textops.chi2_term_selection,
-        textops.CHI2_TERM_SELECTION_SQL,
-    ),
-    "mcnemar_lang_models": (
-        textops.mcnemar_lang_models,
-        textops.MCNEMAR_LANG_MODELS_SQL,
-    ),
-    "knn_hubness_stats": (
-        similarity.knn_hubness_stats,
-        similarity.KNN_HUBNESS_STATS_SQL,
-    ),
-    "l_diversity_audit": (curation.l_diversity_audit, curation.L_DIVERSITY_AUDIT_SQL),
-    "rolling_revenue_qty_corr": (
-        analytics.rolling_revenue_qty_corr,
-        analytics.ROLLING_REVENUE_QTY_CORR_SQL,
-    ),
-    "hurst_exponent_revenue": (
-        analytics.hurst_exponent_revenue,
-        analytics.HURST_EXPONENT_REVENUE_SQL,
-    ),
-    # --- basket mining / clickstream paths ---
-    "frequent_type_pairs": (
-        analytics.frequent_type_pairs,
-        analytics.FREQUENT_TYPE_PAIRS_SQL,
-    ),
-    "top_session_paths": (
-        analytics.top_session_paths,
-        analytics.TOP_SESSION_PATHS_SQL,
-    ),
-    # --- sequence / windowed-distribution analytics ---
-    "rolling_median_value": (
-        analytics.rolling_median_value,
-        analytics.ROLLING_MEDIAN_VALUE_SQL,
-    ),
-    "event_type_trigrams": (
-        analytics.event_type_trigrams,
-        analytics.EVENT_TYPE_TRIGRAMS_SQL,
-    ),
-    "order_gap_stats": (
-        analytics.order_gap_stats,
-        analytics.ORDER_GAP_STATS_SQL,
-    ),
-    # --- privacy pass: PII regex redaction before tokenization ---
-    "pii_redaction_stats": (
-        curation.pii_redaction_stats,
-        curation.PII_REDACTION_STATS_SQL,
-    ),
-    # --- SemDeDup: cluster-bounded semantic near-dup pruning ---
-    "semdedup_prune": (
-        similarity.semdedup_prune,
-        similarity.SEMDEDUP_PRUNE_SQL,
-    ),
-    # --- CCNet perplexity head/middle/tail corpus split ---
-    "ccnet_perplexity_buckets": (
-        textops.ccnet_perplexity_buckets,
-        textops.CCNET_PERPLEXITY_BUCKETS_SQL,
-    ),
-    # --- DSIR hashed-ngram importance weights for data selection ---
-    "dsir_importance_weights": (
-        curation.dsir_importance_weights,
-        curation.DSIR_IMPORTANCE_WEIGHTS_SQL,
-    ),
-    # --- containment dedup: doc-in-doc overlap Jaccard misses ---
-    "minhash_containment": (
-        dedup.minhash_containment,
-        dedup.MINHASH_CONTAINMENT_SQL,
-    ),
-    # --- product quantization: codebook usage + reconstruction error ---
-    "pq_quantize_stats": (
-        similarity.pq_quantize_stats,
-        similarity.PQ_QUANTIZE_STATS_SQL,
-    ),
-    # --- Naive Bayes lang-ID: counting-classifier train+apply ---
-    "nb_lang_confusion": (
-        textops.nb_lang_confusion,
-        textops.NB_LANG_CONFUSION_SQL,
-    ),
-    # --- triangle census of the near-dup pair graph ---
-    "dup_graph_triangles": (
-        dedup.dup_graph_triangles,
-        dedup.DUP_GRAPH_TRIANGLES_SQL,
-    ),
-    # --- SCD-2 dimension history (versioned rows + validity intervals) ---
-    "customer_scd2_history": (
-        relational.customer_scd2_history,
-        relational.CUSTOMER_SCD2_HISTORY_SQL,
-    ),
-    # --- streaming trending top-k (windowed agg stream + sink-side rank) ---
-    "streaming_trending_topk": (
-        streaming_windows.streaming_trending_topk,
-        streaming_windows.STREAMING_TRENDING_TOPK_SQL,
-    ),
-    # --- length-bucketed batching: padding-waste vs naive batches ---
-    "length_bucket_batches": (
-        curation.length_bucket_batches,
-        curation.LENGTH_BUCKET_BATCHES_SQL,
-    ),
-    # --- k-anonymity suppression audit for aggregate release ---
-    "kanon_release_stats": (
-        curation.kanon_release_stats,
-        curation.KANON_RELEASE_STATS_SQL,
-    ),
-    # --- blocked entity resolution over structured records ---
-    "customer_record_linkage": (
-        dedup.customer_record_linkage,
-        dedup.CUSTOMER_RECORD_LINKAGE_SQL,
-    ),
-    # --- inverted-index cosine similarity join (AllPairs family) ---
-    "doc_shingle_cosine_pairs": (
-        textops.doc_shingle_cosine_pairs,
-        textops.DOC_SHINGLE_COSINE_PAIRS_SQL,
-    ),
-    # --- add-k smoothed bigram LM fluency scores ---
-    "bigram_logprob_scores": (
-        textops.bigram_logprob_scores,
-        textops.BIGRAM_LOGPROB_SCORES_SQL,
-    ),
-    # --- classical additive trend/seasonal/residual decomposition ---
-    "seasonal_decompose_revenue": (
-        analytics.seasonal_decompose_revenue,
-        analytics.SEASONAL_DECOMPOSE_REVENUE_SQL,
-    ),
-    # --- deterministic hash-based k-fold CV assignment stats ---
-    "kfold_assignments": (
-        relational.kfold_assignments,
-        relational.KFOLD_ASSIGNMENTS_SQL,
-    ),
-    # --- exact-K per-stratum reservoir (deterministic A-Res) ---
-    "reservoir_sample_per_source": (
-        relational.reservoir_sample_per_source,
-        relational.RESERVOIR_SAMPLE_PER_SOURCE_SQL,
-    ),
-    # --- distributed k-core peeling of the near-dup pair graph ---
-    "kcore_membership": (
-        graph.kcore_membership,
-        graph.KCORE_MEMBERSHIP_SQL,
-    ),
-    # --- Adamic-Adar link prediction over the near-dup pair graph ---
-    "adamic_adar_links": (
-        graph.adamic_adar_links,
-        graph.ADAMIC_ADAR_LINKS_SQL,
-    ),
-    # --- per-node clustering coefficients (clique vs chain diagnosis) ---
-    "clustering_coefficients": (
-        graph.clustering_coefficients,
-        graph.CLUSTERING_COEFFICIENTS_SQL,
-    ),
-    # --- deterministic synchronous label propagation communities ---
-    "label_propagation_communities": (
-        graph.label_propagation_communities,
-        graph.LABEL_PROPAGATION_COMMUNITIES_SQL,
-    ),
-    # --- k-truss edge membership (triangle-support peeling) ---
-    "ktruss_edges": (
-        graph.ktruss_edges,
-        graph.KTRUSS_EDGES_SQL,
-    ),
-    # --- Newman degree assortativity over the near-dup graph ---
-    "degree_assortativity": (
-        graph.degree_assortativity,
-        graph.DEGREE_ASSORTATIVITY_SQL,
-    ),
-    # --- multi-source BFS hop histogram over the near-dup graph ---
-    "bfs_hops": (graph.bfs_hops, graph.BFS_HOPS_SQL),
-    # --- LSH candidate recall vs exact-Jaccard ground truth (sampled) ---
-    "lsh_pair_recall_eval": (
-        dedup.lsh_pair_recall_eval,
-        dedup.LSH_PAIR_RECALL_EVAL_SQL,
-    ),
-    # --- banding S-curve: measured recall/volume per (bands x rows) ---
-    "lsh_band_tuning_eval": (
-        dedup.lsh_band_tuning_eval,
-        dedup.LSH_BAND_TUNING_EVAL_SQL,
-    ),
-    # --- does dedup skew the length distribution? ---
-    "dup_length_bias": (
-        dedup.dup_length_bias,
-        dedup.DUP_LENGTH_BIAS_SQL,
-    ),
-    # --- shingle-width tuning evidence ---
-    "shingle_size_sensitivity": (
-        dedup.shingle_size_sensitivity,
-        dedup.SHINGLE_SIZE_SENSITIVITY_SQL,
-    ),
-    # --- RAKE keyword extraction (stopword-segmented phrase scoring) ---
-    "rake_keyword_scores": (
-        textops.rake_keyword_scores,
-        textops.RAKE_KEYWORD_SCORES_SQL,
-    ),
-    # --- full-dim PCA spectrum (treeReduce moments + driver eigh);
-    #     rows-only: eigendecomposition is not one-query SQL. The
-    #     distributed half is certified via the eigensum==trace
-    #     identity projection below (VERDICT r6 item 2) ---
-    "pca_explained_variance": (
-        similarity.pca_explained_variance,
-        None,
-    ),
-    "pca_variance_identity": (
-        similarity.pca_variance_identity,
-        similarity.PCA_VARIANCE_IDENTITY_SQL,
-    ),
-    # --- entity-resolution survivorship: linkage pairs → CC → golden rows ---
-    "customer_golden_records": (
-        dedup.customer_golden_records,
-        dedup.CUSTOMER_GOLDEN_RECORDS_SQL,
-    ),
-    # --- JL random projection distance-preservation audit ---
-    "jl_distance_distortion": (
-        similarity.jl_distance_distortion,
-        similarity.JL_DISTANCE_DISTORTION_SQL,
-    ),
-    # --- density-based clustering over the near-dup neighbor relation ---
-    "dbscan_clusters": (
-        similarity.dbscan_clusters,
-        similarity.DBSCAN_CLUSTERS_SQL,
-    ),
-    # --- greedy k-center diversity seed selection ---
-    "kcenter_seeds": (
-        similarity.kcenter_seeds,
-        similarity.KCENTER_SEEDS_SQL,
-    ),
-    # --- sorted-neighborhood blocking (Hernandez-Stolfo) ---
-    "sorted_neighborhood_pairs": (
-        dedup.sorted_neighborhood_pairs,
-        dedup.SORTED_NEIGHBORHOOD_PAIRS_SQL,
-    ),
-    # --- grid-vs-SN blocking recall overlap ---
-    "blocking_overlap_eval": (
-        dedup.blocking_overlap_eval,
-        dedup.BLOCKING_OVERLAP_EVAL_SQL,
-    ),
-    # --- b-bit minhash sketch-compression error audit ---
-    "bbit_minhash_eval": (
-        dedup.bbit_minhash_eval,
-        dedup.BBIT_MINHASH_EVAL_SQL,
-    ),
-    # --- steady-state incremental ingest probe against the banded index ---
-    "incremental_near_dup": (
-        dedup.incremental_near_dup,
-        dedup.INCREMENTAL_NEAR_DUP_SQL,
-    ),
-    # --- pairwise source vocabulary overlap ---
-    "source_vocab_jaccard": (
-        textops.source_vocab_jaccard,
-        textops.SOURCE_VOCAB_JACCARD_SQL,
-    ),
-    # --- reciprocal-rank fusion of lexical + semantic retrieval ---
-    "rrf_fusion_topk": (
-        textops.rrf_fusion_topk,
-        textops.RRF_FUSION_TOPK_SQL,
-    ),
-    # --- WAND upper-bound pruning power for top-k retrieval ---
-    "wand_pruned_retrieval": (
-        textops.wand_pruned_retrieval,
-        textops.WAND_PRUNED_RETRIEVAL_SQL,
-    ),
-    # --- PMI-based query expansion candidates ---
-    "query_expansion_pmi": (
-        textops.query_expansion_pmi,
-        textops.QUERY_EXPANSION_PMI_SQL,
-    ),
-    # --- round-8 additions (rationed; r9 certification candidates) ---
-    # fuzzy-dedup completion: keep-best per near-dup cluster + rollup
-    "near_dup_prune": (dedup.near_dup_prune, dedup.NEAR_DUP_PRUNE_SQL),
-    # the 100 TB hash-mod-sampled span-dedup estimator
-    "duplicate_spans_sampled": (
-        dedup.duplicate_spans_sampled,
-        dedup.DUPLICATE_SPANS_SAMPLED_SQL,
-    ),
-    # top-K most shared verbatim spans, text recovered in pass 2
-    "boilerplate_span_topk": (
-        dedup.boilerplate_span_topk,
-        dedup.BOILERPLATE_SPAN_TOPK_SQL,
-    ),
-    # time-based holdout split + user-overlap leakage audit
-    "temporal_split_stats": (
-        curation.temporal_split_stats,
-        curation.TEMPORAL_SPLIT_STATS_SQL,
-    ),
-    # eval twin of duplicate_spans_sampled: measured estimator error
-    "span_sample_error_eval": (
-        dedup.span_sample_error_eval,
-        dedup.SPAN_SAMPLE_ERROR_EVAL_SQL,
-    ),
-    # t-closeness EMD audit — completes the k-anon/l-div privacy ladder
-    "t_closeness_audit": (
-        curation.t_closeness_audit,
-        curation.T_CLOSENESS_AUDIT_SQL,
-    ),
-    # graded-relevance nDCG@10 of the BM25 ranker
-    "retrieval_ndcg_eval": (
-        textops.retrieval_ndcg_eval,
-        textops.RETRIEVAL_NDCG_EVAL_SQL,
-    ),
-    # --- round-9 rationed additions (2; window positions 9-10) ---
-    # leakage-safe GROUP-level split: every user in exactly one split
-    "group_holdout_split": (
-        curation.group_holdout_split,
-        curation.GROUP_HOLDOUT_SPLIT_SQL,
-    ),
-    # similarity-ranked negatives inside the tiered md5 buckets
-    "hard_negative_mining": (
-        similarity.hard_negative_mining,
-        similarity.HARD_NEGATIVE_MINING_SQL,
-    ),
-    # --- round-10 rationed additions (2; window positions 1-2) ---
-    # the PRECISION side of the LSH eval pair: true-Jaccard histogram
-    # of the raw candidate front = the verification-cost model
-    "lsh_pair_precision_eval": (
-        dedup.lsh_pair_precision_eval,
-        dedup.LSH_PAIR_PRECISION_EVAL_SQL,
-    ),
-    # fuzzy sibling of cross_source_leakage: near-dup pair counts +
-    # mean overlap strength between source pairs
-    "cross_dup_source_matrix": (
-        dedup.cross_dup_source_matrix,
-        dedup.CROSS_DUP_SOURCE_MATRIX_SQL,
-    ),
+        streaming_windows.streaming_click_purchase_join, relational.CLICK_PURCHASE_WITHIN_1H_SQL,
+    ),
+    # eigendecomposition is not one-query SQL; the distributed half is
+    # certified by pca_variance_identity (VERDICT r6 item 2)
+    "pca_explained_variance": (similarity.pca_explained_variance, None),
 }
 
 
@@ -1558,23 +418,25 @@ _PRIORITY_ORDER = [
     "pca_explained_variance",
 ]
 
-# Set EQUALITY, not subset: round 9 silently dropped revenue_by_nation
-# and token_stats from this list during a reshuffle and the subset-only
-# assert could not notice (ADVICE r9). Every registry entry must appear
-# exactly once here so reorderings can never lose a name.
-assert set(_PRIORITY_ORDER) == set(_REGISTRY) and len(_PRIORITY_ORDER) == len(
-    set(_PRIORITY_ORDER)
-), {
-    "missing_from_order": sorted(set(_REGISTRY) - set(_PRIORITY_ORDER)),
-    "unknown_in_order": sorted(set(_PRIORITY_ORDER) - set(_REGISTRY)),
-}
-_REGISTRY = {
-    name: _REGISTRY[name]
-    for name in (
-        *_PRIORITY_ORDER,
-        *(n for n in _REGISTRY if n not in set(_PRIORITY_ORDER)),
-    )
-}
+
+def _resolve(name: str) -> tuple[QueryFn, str | None]:
+    if name in _EXPLICIT:
+        return _EXPLICIT[name]
+    sql = f"{name.upper()}_SQL"
+    hits = [m for m in _MODULES if hasattr(m, name) and hasattr(m, sql)]
+    assert len(hits) == 1, (name, [m.__name__ for m in hits])
+    return getattr(hits[0], name), getattr(hits[0], sql)
+
+
+# Each name exactly once, and no module `name`/`NAME_SQL` pair left out:
+# round 9 silently dropped two names in a reshuffle (ADVICE r9).
+_unregistered = [
+    f"{m.__name__}.{a[:-4].lower()}" for m in _MODULES for a in vars(m)
+    if a.endswith("_SQL") and a[:-4].lower() in vars(m) and a[:-4].lower() not in _PRIORITY_ORDER
+]
+assert len(set(_PRIORITY_ORDER)) == len(_PRIORITY_ORDER) and not _unregistered, _unregistered
+assert set(_EXPLICIT) <= set(_PRIORITY_ORDER), set(_EXPLICIT) - set(_PRIORITY_ORDER)
+_REGISTRY = {name: _resolve(name) for name in _PRIORITY_ORDER}
 
 
 def QUERIES() -> dict[str, QueryFn]:
@@ -1594,8 +456,3 @@ def ORACLE_SQL() -> dict[str, str]:
 
 def get_query(name: str) -> QueryFn:
     return _REGISTRY[name][0]
-
-
-def register(name: str, fn: QueryFn, sql: str | None) -> None:
-    """Extension hook used by later modules (compat shim, streaming)."""
-    _REGISTRY[name] = (fn, sql)

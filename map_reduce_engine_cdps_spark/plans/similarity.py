@@ -14,7 +14,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.functions import vectors as V
-from map_reduce_engine_cdps_spark.operators.state import memo
+from map_reduce_engine_cdps_spark.operators.state import memo, releasing
 from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table
 
 N_QUERIES = 10     # vec_id < N_QUERIES are the query vectors
@@ -191,9 +191,10 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # unchanged: the query buckets are never NULL (query embeddings are
     # non-null at every SF), so <=> and = match identical row sets.
     #
-    # Measured-and-rejected r13 alternatives (tools/r13_ann_ab.py,
-    # OPTIMIZATION_r13.md): (a) the knn grouped kernel over
-    # (bucket-masked) salt groups — each embedding crosses Python once,
+    # Measured-and-rejected r13 alternatives (`git show
+    # cb976e8:tools/r13_ann_ab.py`, OPTIMIZATION_r13.md): (a) the knn
+    # grouped kernel over (bucket-masked) salt groups — each embedding
+    # crosses Python once,
     # the 100 TB-preferred payload shape — and (b) a broadcast semi-join
     # prefilter that runs the candidate norm on query-bucket survivors
     # only. Both won at sf1 volume but cost 0.15-0.3 s of fixed
@@ -1917,11 +1918,7 @@ def dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components_star,
     )
 
-    pairs = (
-        _embedding_pairs_cached(spark, sf_dir)
-        .select("vec_a", "vec_b")
-        .persist()
-    )
+    pairs = _embedding_pairs_cached(spark, sf_dir).select("vec_a", "vec_b")
     e = pairs.select(F.col("vec_a").alias("v"), F.col("vec_b").alias("nbr")).union(
         pairs.select(F.col("vec_b"), F.col("vec_a"))
     )
@@ -1950,9 +1947,10 @@ def dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Same decision rule as customer_golden_records; measured at
     # derived sf1 on this graph (19 966 core verts / 165 119 edges):
     # 13.6 s propagation vs 7.2 s star, 0 differing labels.
-    comp = connected_components_star(
-        core.select(F.col("v").alias("doc_id")), ce
-    ).select(F.col("doc_id").alias("cv"), F.col("comp").alias("ccomp"))
+    with releasing(ce):
+        comp = connected_components_star(
+            core.select(F.col("v").alias("doc_id")), ce
+        ).select(F.col("doc_id").alias("cv"), F.col("comp").alias("ccomp"))
     border = (
         e.join(core.withColumnRenamed("v", "nbr_is_core").alias("k"),
                F.col("nbr") == F.col("k.nbr_is_core"), "left_semi")

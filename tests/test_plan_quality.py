@@ -263,7 +263,8 @@ ANN_FAMILY_ARRAY_EXCHANGE_BOUNDS = {
                             # at scale the planner shuffles instead);
                             # r13 kept the pair-join shape (grouped /
                             # semi-prefilter variants measured slower
-                            # at sf0.1, receipts in tools/r13_ann_ab)
+                            # at sf0.1, receipts in `git show
+                            # cb976e8:tools/r13_ann_ab.py`)
                             # but eqNullSafe keys now stop the bucket
                             # UDF from evaluating twice per side
     "ann_recall_eval": 1,       # LSH side broadcasts; the exact side

@@ -1,0 +1,58 @@
+"""Repository tooling: every `tools/<x>.py` the docs, the package or the
+tests name exists, and the A/B tool compares a query against a git
+revision and cleans up after itself."""
+
+from __future__ import annotations
+
+import os
+import re
+import subprocess
+import sys
+
+import pytest
+from conftest import SF_DIR
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+# `git show REV:tools/x.py` citations point into history, not the tree
+_TOOL_REF = re.compile(r"(?<![:\w/])tools/(\w+)\.py")
+
+
+def _texts():
+    yield from ("README.md", os.path.join(".claude", "skills", "verify", "SKILL.md"))
+    for top in ("map_reduce_engine_cdps_spark", "tests"):
+        for d, _, files in os.walk(os.path.join(REPO, top)):
+            yield from (os.path.join(d, f) for f in files if f.endswith((".py", ".md")))
+
+
+def test_cited_tools_exist():
+    missing = set()
+    for path in _texts():
+        with open(os.path.join(REPO, path), encoding="utf-8") as fh:
+            for name in _TOOL_REF.findall(fh.read()):
+                if not os.path.exists(os.path.join(REPO, "tools", f"{name}.py")):
+                    missing.add((os.path.relpath(path, REPO), name))
+    assert not missing
+
+
+def _worktrees() -> str:
+    return subprocess.run(
+        ["git", "-C", REPO, "worktree", "list", "--porcelain"],
+        capture_output=True, text=True, check=True,
+    ).stdout
+
+
+def test_ab_tool_reports_identical_rows_and_removes_its_worktree(tmp_path):
+    if subprocess.run(["git", "-C", REPO, "rev-parse", "HEAD"], capture_output=True).returncode:
+        pytest.skip("not a git checkout")
+    before = _worktrees()
+    env = dict(os.environ, TMPDIR=str(tmp_path))
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "tools", "ab.py"), "HEAD", "wordcount",
+         "--sf", SF_DIR, "--pairs", "1"],
+        capture_output=True, text=True, env=env, timeout=600,
+    )
+    assert r.returncode == 0, r.stdout + r.stderr[-2000:]
+    assert "wordcount: rows identical" in r.stdout
+    assert "won" in r.stdout
+    assert _worktrees() == before
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("ab-")]

@@ -1,0 +1,146 @@
+"""Interleaved A/B of registry queries: the working tree vs a git revision.
+
+Usage: python tools/ab.py REV QUERY... [--sf DIR] [--pairs N]
+
+REV is checked out with `git worktree add --detach` into a temporary
+directory, removed again on exit. Each side runs in its own long-lived
+worker process whose PYTHONPATH is its own tree, because two versions of
+the package cannot share one interpreter. For each query the sorted
+`collect()` of both sides is compared first; then N pairs of timed runs
+(construction + noop write) alternate which side goes first. Prints the
+per-side medians, the raw times and how many pairs each side won. Exits
+1 if any query's rows differ.
+"""
+
+from __future__ import annotations
+
+import argparse
+import hashlib
+import json
+import os
+import shutil
+import statistics
+import subprocess
+import sys
+import tempfile
+import time
+import traceback
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+
+def serve(sf_dir: str) -> None:
+    """Worker loop: one JSON request per stdin line, one reply per line."""
+    out = os.fdopen(os.dup(1), "w", buffering=1)
+    os.dup2(2, 1)  # keep Spark's own stdout chatter out of the replies
+    import map_reduce_engine_cdps_spark as pkg
+    from map_reduce_engine_cdps_spark.plans.registry import get_query
+    from map_reduce_engine_cdps_spark.session import get_spark
+
+    spark = get_spark(app_name="ab")
+    out.write(json.dumps({"package": os.path.abspath(pkg.__file__)}) + "\n")
+    for line in sys.stdin:
+        req = json.loads(line)
+        try:
+            t0 = time.perf_counter()
+            df = get_query(req["query"])(spark, sf_dir)
+            if req["op"] == "rows":
+                rows = sorted(repr(tuple(r)) for r in df.collect())
+                digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
+                reply = {"rows": len(rows), "digest": digest}
+            else:
+                df.write.format("noop").mode("overwrite").save()
+                reply = {"seconds": time.perf_counter() - t0}
+        except Exception:  # noqa: BLE001 - reported to the parent
+            reply = {"error": traceback.format_exc()}
+        out.write(json.dumps(reply) + "\n")
+
+
+class Side:
+    def __init__(self, label: str, tree: str, sf_dir: str) -> None:
+        self.label = label
+        env = dict(os.environ, PYTHONPATH=tree)
+        self.proc = subprocess.Popen(
+            [sys.executable, os.path.abspath(__file__), "--serve", sf_dir],
+            stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True, env=env,
+        )
+        pkg = self._read()["package"]
+        if not pkg.startswith(os.path.join(os.path.realpath(tree), "")):
+            self.proc.kill()
+            raise RuntimeError(f"{label} worker imported {pkg}, not its own tree")
+
+    def _read(self) -> dict:
+        line = self.proc.stdout.readline()
+        if not line:
+            raise RuntimeError(f"{self.label} worker exited ({self.proc.wait()})")
+        return json.loads(line)
+
+    def ask(self, op: str, query: str) -> dict:
+        self.proc.stdin.write(json.dumps({"op": op, "query": query}) + "\n")
+        self.proc.stdin.flush()
+        reply = self._read()
+        if "error" in reply:
+            raise RuntimeError(f"{self.label} {op} {query}:\n{reply['error']}")
+        return reply
+
+    def close(self) -> None:
+        self.proc.stdin.close()
+        self.proc.wait()
+
+
+def compare(query: str, sides: list[Side], pairs: int) -> bool:
+    got = [s.ask("rows", query) for s in sides]
+    if got[0] != got[1]:
+        print(f"{query}: ROWS DIFFER " + "  ".join(
+            f"{s.label} {g['rows']} rows {g['digest'][:12]}" for s, g in zip(sides, got)))
+        return False
+    print(f"{query}: rows identical ({got[0]['rows']} rows, sha256 {got[0]['digest'][:12]})")
+    times: dict[str, list[float]] = {s.label: [] for s in sides}
+    for i in range(pairs):
+        for s in sides if i % 2 == 0 else sides[::-1]:
+            times[s.label].append(s.ask("time", query)["seconds"])
+    won = {s.label: 0 for s in sides}
+    for a, b in zip(*times.values()):
+        if a != b:  # a tie counts for neither side
+            won[sides[0 if a < b else 1].label] += 1
+    for s in sides:
+        t = times[s.label]
+        print(f"  {s.label:>10}: median {statistics.median(t):.3f}s  "
+              f"won {won[s.label]}/{pairs}  {[round(x, 3) for x in t]}")
+    return True
+
+
+def main() -> int:
+    if sys.argv[1:2] == ["--serve"]:
+        serve(sys.argv[2])
+        return 0
+    ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
+    ap.add_argument("rev", help="git revision to compare the working tree against")
+    ap.add_argument("queries", nargs="+", help="registry query names")
+    sf = os.environ.get("SPARK_GRAFT_SF_DIR")
+    ap.add_argument("--sf", default=sf, required=sf is None,
+                    help="data directory (default $SPARK_GRAFT_SF_DIR)")
+    ap.add_argument("--pairs", type=int, default=10, help="timed pairs per query")
+    args = ap.parse_args()
+
+    tmp = tempfile.mkdtemp(prefix="ab-")
+    tree = os.path.join(tmp, "tree")
+    sides: list[Side] = []
+    try:
+        subprocess.run(["git", "-C", REPO, "worktree", "add", "--detach", "-q", tree, args.rev],
+                       check=True)
+        for label, root in (("working", REPO), (args.rev, tree)):
+            sides.append(Side(label, root, args.sf))
+        same = [compare(q, sides, args.pairs) for q in args.queries]
+    finally:
+        for s in sides:
+            s.close()
+        subprocess.run(["git", "-C", REPO, "worktree", "remove", "--force", tree],
+                       stderr=subprocess.DEVNULL)
+        shutil.rmtree(tmp, ignore_errors=True)
+        subprocess.run(["git", "-C", REPO, "worktree", "prune"])
+    return 0 if all(same) else 1
+
+
+if __name__ == "__main__":
+    sys.exit(main())
