@@ -1,6 +1,15 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: times registry queries at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints
 ONE JSON line with per-query wall times.
+
+Usage: python bench.py [QUERY ...]
+
+With no QUERY it times the frozen HEADLINE set and writes the complete
+JSON to BENCH_full_r{N}.json. Named queries get the same protocol
+(pre-warm, memo-build lines, interleaved passes, the derived sf1 point
+when present) but only the printed line: a subset never overwrites a
+round artifact. For an sf1 -> sf10 slope, run it twice with
+$SPARK_GRAFT_SF_DIR at each point.
 
 Methodology (BASELINE.md, revised round 5 per VERDICT r4): one warm-up
 pass over the whole suite, then >=5 INTERLEAVED timed passes — pass 1
@@ -17,11 +26,14 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import statistics
+import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+HERE = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, HERE)
 
 from map_reduce_engine_cdps_spark.plans.registry import _REGISTRY
 from map_reduce_engine_cdps_spark.session import get_spark
@@ -34,7 +46,8 @@ from map_reduce_engine_cdps_spark.session import get_spark
 # machinery, measured by their own tests.)
 # FROZEN at 27 queries as of round 1 — keep this list stable so
 # BENCH_r{N}.json totals stay comparable across rounds; new operator
-# families get their own timings via tools/, not by growing this set.
+# families get their own timings via `python bench.py QUERY...`, not by
+# growing this set.
 HEADLINE = [
     "pricing_summary",
     "danger_topk",
@@ -141,40 +154,37 @@ def measure_memo_builds(spark, sf_dir: str) -> dict[str, float]:
 
 
 def run_suite(
-    spark, sf_dir: str, runs: int = 5
+    spark, sf_dir: str, names: list[str], runs: int = 5
 ) -> tuple[dict[str, float], dict[str, float]]:
-    """Warm-up pass, then ``runs`` interleaved passes over the whole
-    HEADLINE list. Returns (per-query median, per-query IQR)."""
-    samples: dict[str, list[float]] = {}
+    """Warm-up pass, then ``runs`` interleaved passes over ``names``.
+    Returns (per-query median, per-query IQR)."""
+    samples: dict[str, list[float]] = {name: [] for name in names}
     failed: set[str] = set()
-    for name in HEADLINE:  # warm-up (plan compilation, file listing, JIT)
-        fn, _ = _REGISTRY[name]
-        try:
-            _run_once(spark, fn, sf_dir)
-            samples[name] = []
-        except Exception as e:  # noqa: BLE001
-            print(f"bench error {name}: {type(e).__name__}: {e}", file=sys.stderr)
-            failed.add(name)
-    for _ in range(runs):
-        for name in HEADLINE:
+    # pass 0 is the warm-up (plan compilation, file listing, JIT)
+    for i in range(runs + 1):
+        for name in names:
             if name in failed:
                 continue
-            fn, _ = _REGISTRY[name]
             try:
-                samples[name].append(_run_once(spark, fn, sf_dir))
+                t = _run_once(spark, _REGISTRY[name][0], sf_dir)
             except Exception as e:  # noqa: BLE001
                 print(f"bench error {name}: {type(e).__name__}: {e}", file=sys.stderr)
                 failed.add(name)
+                continue
+            if i:
+                samples[name].append(t)
     medians: dict[str, float] = {}
     iqrs: dict[str, float] = {}
-    for name in HEADLINE:
-        vals = samples.get(name, [])
+    for name, vals in samples.items():
         if name in failed or not vals:
             medians[name] = -1.0
             continue
         medians[name] = round(statistics.median(vals), 3)
-        q = statistics.quantiles(vals, n=4, method="inclusive")
-        iqrs[name] = round(q[2] - q[0], 3)
+        if len(vals) > 1:
+            q = statistics.quantiles(vals, n=4, method="inclusive")
+            iqrs[name] = round(q[2] - q[0], 3)
+        else:
+            iqrs[name] = 0.0
     return medians, iqrs
 
 
@@ -184,13 +194,16 @@ def run_suite(
 # bench). Timed separately with the noop sink (guide §1.4: computes
 # every column, discards the result), AFTER the frozen count-timed
 # suite so the 27 headline lines stay comparable across rounds.
-# Additions-only: new artifact key, never part of `value`.
+# Additions-only: new artifact key, never part of `value`. A named
+# subset keeps only the ones it selected.
 NOOP_COMPUTE = ["quality_filter_flags", "text_quality"]
 
 
-def measure_noop_compute(spark, sf_dir: str, runs: int = 3) -> dict[str, float]:
+def measure_noop_compute(
+    spark, sf_dir: str, names: list[str], runs: int = 3
+) -> dict[str, float]:
     out: dict[str, float] = {}
-    for name in NOOP_COMPUTE:
+    for name in (n for n in NOOP_COMPUTE if n in names):
         fn, _ = _REGISTRY[name]
         try:
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
@@ -210,18 +223,29 @@ def measure_noop_compute(spark, sf_dir: str, runs: int = 3) -> dict[str, float]:
 # Derived 10x replication of sf0.1 (tools/scale_data.py) for the
 # scaling-slope point in BASELINE.md's measurement plan. Only timed
 # when present and not disabled, so the driver's sf0.1 run stays fast.
-SF1_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".benchdata", "sf1")
+SF1_DIR = os.path.join(HERE, ".benchdata", "sf1")
+
+
+def _git(*args: str) -> str:
+    return subprocess.run(
+        ["git", "-C", HERE, *args], capture_output=True, text=True, check=True
+    ).stdout
 
 
 def main() -> None:
+    names = sys.argv[1:]
+    unknown = [n for n in names if n not in _REGISTRY]
+    if unknown:
+        sys.exit(f"unknown queries: {' '.join(unknown)}")
+    queries = names or HEADLINE
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     runs = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
     spark = get_spark(app_name="bench")
     prewarm(spark, sf_dir)
     memo_builds = measure_memo_builds(spark, sf_dir)
-    timings, iqrs = run_suite(spark, sf_dir, runs=runs)
-    noop_compute = measure_noop_compute(spark, sf_dir)
+    timings, iqrs = run_suite(spark, sf_dir, queries, runs=runs)
+    noop_compute = measure_noop_compute(spark, sf_dir, queries)
     total = round(sum(t for t in timings.values() if t > 0), 3)
     out = {
         "metric": "headline_query_wall_time_total",
@@ -258,23 +282,17 @@ def main() -> None:
         "context": os.environ.get("SPARK_GRAFT_BENCH_CONTEXT", "driver-window"),
     }
     try:
-        import subprocess as _sp0
-
-        out["tree_commit"] = _sp0.run(
-            ["git", "-C", os.path.dirname(os.path.abspath(__file__)),
-             "rev-parse", "--short", "HEAD"],
-            capture_output=True, text=True, check=True,
-        ).stdout.strip()
+        out["tree_commit"] = _git("rev-parse", "--short", "HEAD").strip()
     except Exception:  # pragma: no cover
         out["tree_commit"] = "unknown"
     if os.path.isdir(SF1_DIR) and not os.environ.get("SPARK_GRAFT_SKIP_SF1"):
         prewarm(spark, SF1_DIR)
         out["sf1_memo_builds"] = measure_memo_builds(spark, SF1_DIR)
-        sf1, sf1_iqr = run_suite(spark, SF1_DIR, runs=runs)
+        sf1, sf1_iqr = run_suite(spark, SF1_DIR, queries, runs=runs)
         out["sf1_queries"] = sf1
         out["sf1_queries_iqr"] = sf1_iqr
         out["sf1_value"] = round(sum(t for t in sf1.values() if t > 0), 3)
-        out["sf1_noop_compute"] = measure_noop_compute(spark, SF1_DIR)
+        out["sf1_noop_compute"] = measure_noop_compute(spark, SF1_DIR, queries)
     # The driver's BENCH_r{N}.json keeps only the last 2000 stdout
     # chars (the visible first dict is queries_iqr, not the medians —
     # VERDICT r6 item 7), so also persist the complete JSON alongside
@@ -283,33 +301,27 @@ def main() -> None:
     # the driver drops its BENCH_r{N}.json into the working tree
     # before committing, so globbing the tree mislabels a re-run
     # within the same round (ADVICE r7). Failures here must never
-    # sink the bench.
+    # sink the bench. A named subset prints its line only.
     full_name = None
-    try:
-        import re as _re
-        import subprocess as _sp
-
-        here = os.path.dirname(os.path.abspath(__file__))
-        if os.environ.get("SPARK_GRAFT_ROUND"):
-            tag = f"r{int(os.environ['SPARK_GRAFT_ROUND']):02d}"
-        else:
-            tracked = _sp.run(
-                ["git", "-C", here, "ls-files", "BENCH_r*.json"],
-                capture_output=True,
-                text=True,
-                check=True,
-            ).stdout.split()
-            rounds = [
-                int(m.group(1))
-                for f in tracked
-                if (m := _re.search(r"BENCH_r(\d+)\.json$", f))
-            ]
-            tag = f"r{max(rounds, default=0) + 1:02d}"
-        full_name = f"BENCH_full_{tag}.json"
-        with open(os.path.join(here, full_name), "w") as fh:
-            json.dump(out, fh, indent=1)
-    except Exception as e:  # pragma: no cover
-        print(f"bench full-artifact write skipped: {e}", file=sys.stderr)
+    if not names:
+        try:
+            if os.environ.get("SPARK_GRAFT_ROUND"):
+                tag = int(os.environ["SPARK_GRAFT_ROUND"])
+            else:
+                tag = 1 + max(
+                    (
+                        int(m.group(1))
+                        for f in _git("ls-files", "BENCH_r*.json").split()
+                        if (m := re.search(r"BENCH_r(\d+)\.json$", f))
+                    ),
+                    default=0,
+                )
+            full_name = f"BENCH_full_r{tag:02d}.json"
+            with open(os.path.join(HERE, full_name), "w") as fh:
+                json.dump(out, fh, indent=1)
+        except Exception as e:  # pragma: no cover
+            full_name = None
+            print(f"bench full-artifact write skipped: {e}", file=sys.stderr)
     # The driver keeps only the last 2000 stdout chars and json-parses
     # the tail; the full dict (IQRs + sf1 detail) is ~3.3k chars, so
     # printing it whole truncated the line and left BENCH_r{8,9}.json

@@ -11,8 +11,7 @@ plus a genuine numpy CNN forward pass — each DuckDB-oracle-certified
 in-container. Only compressed codecs remain env-gated (no
 Pillow/ffmpeg here): ``decode="fake"`` derives deterministic
 pseudo-features from the payload bytes so those pipelines stay
-testable end-to-end, and ``decode="real"`` raises NotImplementedError
-at the clearly marked point where the Pillow/ffmpeg call would go.
+testable end-to-end.
 """
 
 from __future__ import annotations
@@ -203,14 +202,12 @@ def extract_features(df: DataFrame, decode: str = "fake") -> DataFrame:
       - ``"pillow"``: REAL image decode — RGB / pad-to-square /
         LANCZOS 224x224 per the reference — then a pixel-grid feature
         summary. Raises a clear error if Pillow is not installed.
-      - ``"real"``: marks where the CNN forward pass goes; raises
-        NotImplementedError until an ML runtime exists.
 
     Column pruning matters at scale: only (media_id, content) cross the
     Python boundary; metadata stays JVM-side and is re-joined by the
     caller if needed.
     """
-    if decode not in ("fake", "ppm", "pillow", "real"):
+    if decode not in ("fake", "ppm", "pillow"):
         raise ValueError(f"unknown decode mode: {decode}")
     if decode == "pillow" and not pillow_available():
         raise ImportError(
@@ -220,13 +217,6 @@ def extract_features(df: DataFrame, decode: str = "fake") -> DataFrame:
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if decode == "real":
-                # >>> real implementation goes here: the model forward
-                # pass over _pillow_decode output (reference
-                # tasks/plants_classifier.py:99-113).
-                raise NotImplementedError(
-                    "real embedding inference requires an ML runtime, absent here"
-                )
             if decode == "ppm":
                 feats = [
                     _pixel_grid_features(_ppm_decode(bytes(b)))
@@ -750,23 +740,16 @@ def sample_frames(
     fake embedder; ``"ppm"`` is a REAL container parse + decode — the
     payload is a sequence of back-to-back P6 frames (own headers,
     sizes may vary), split by header walk, each sampled frame decoded
-    for real and grid-featurized; ``"real"`` marks the ffmpeg
-    seek+decode point. The Spark plumbing — pruned (media_id, content)
-    crossing the Arrow boundary, per-batch fan-out, typed frame schema —
-    is shared. Output size is bounded by max_frames per media row, so
+    for real and grid-featurized. The Spark plumbing — pruned
+    (media_id, content) crossing the Arrow boundary, per-batch fan-out,
+    typed frame schema — is shared. Output size is bounded by max_frames per media row, so
     the fan-out ratio (and downstream shuffle) is capped.
     """
-    if decode not in ("fake", "ppm", "real"):
+    if decode not in ("fake", "ppm"):
         raise ValueError(f"unknown decode mode: {decode}")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if decode == "real":
-                # >>> real implementation: ffmpeg/pyav open, seek to
-                # every_n-th frame timestamps, decode ≤max_frames frames.
-                raise NotImplementedError(
-                    "real frame decode requires ffmpeg/pyav, absent here"
-                )
             out_ids, out_idx, out_feats = [], [], []
             for mid, payload in zip(pdf["media_id"], pdf["content"]):
                 if payload is None:
@@ -995,23 +978,16 @@ def window_audio(
     ``decode`` picks the payload treatment: ``fake`` interprets the
     raw bytes as int8 PCM (deterministic, no audio libs needed);
     ``wav`` is a REAL RIFF/WAVE container parse + PCM-16 decode,
-    dependency-free and oracle-checked in-container; ``real`` marks
-    the soundfile/ffmpeg point for compressed codecs. The Spark
+    dependency-free and oracle-checked in-container. The Spark
     plumbing — pruned (media_id, content) over Arrow, bounded
     one-to-many fan-out, typed window schema — is shared, mirroring
     sample_frames.
     """
-    if decode not in ("fake", "wav", "real"):
+    if decode not in ("fake", "wav"):
         raise ValueError(f"unknown decode mode: {decode}")
 
     def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in it:
-            if decode == "real":
-                # >>> real implementation: soundfile/ffmpeg decode +
-                # resample to a fixed rate, then the same windowing.
-                raise NotImplementedError(
-                    "real audio decode requires soundfile/ffmpeg, absent here"
-                )
             ids, idxs, ns, rms, peak = [], [], [], [], []
             for mid, payload in zip(pdf["media_id"], pdf["content"]):
                 if payload is None:

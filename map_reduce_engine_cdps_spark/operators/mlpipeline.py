@@ -18,7 +18,7 @@ parallelism is per-pair tasks, not per-worker loops.
 The trainer is a self-contained numpy logistic regression (deterministic
 full-batch gradient descent) because sklearn isn't available in this
 container — swapping in sklearn's LogisticRegression is a one-line
-change inside ``_train_pair``.
+change inside ``_fit``.
 """
 
 from __future__ import annotations
@@ -54,73 +54,85 @@ GD_LR = 0.5
 PROBE_ITERS = 2
 
 
-def _make_train_pair(n_iters: int):
-    """Build the per-pair trainer UDF for a fixed iteration count.
-
-    Deterministic binary logistic regression: full-batch GD, zero init,
+def _fit(x: np.ndarray, y: np.ndarray, n_iters: int) -> tuple[np.ndarray, float]:
+    """Deterministic binary logistic regression: full-batch GD, zero init,
     fixed LR/iters → reproducible across cluster layouts (no RNG, no
-    data-order dependence beyond the vec_id pre-sort).
-    """
+    data-order dependence beyond the callers' vec_id pre-sort). Every
+    trainer — DataFrame, full-weights and compat-shim — fits here."""
+    w = np.zeros(x.shape[1])
+    b = 0.0
+    for _ in range(n_iters):
+        p = _sigmoid(x @ w + b)
+        w -= GD_LR * (x.T @ (p - y) / len(y))
+        b -= GD_LR * float(np.mean(p - y))
+    return w, b
+
+
+def _metrics_row(
+    label_a: int, label_b: int, x: np.ndarray, y: np.ndarray, w: np.ndarray, b: float
+) -> dict:
+    """One TRAIN_SCHEMA row for a fitted pair."""
+    acc = float(np.mean((_sigmoid(x @ w + b) >= 0.5) == (y == 1.0)))
+    # train_acc stays UNROUNDED: it is the exact rational
+    # correct/n, bit-identical in numpy and DuckDB (integer sum +
+    # one IEEE division) — rounding it would reintroduce the
+    # banker's-vs-half-away tie at values like 51/96 = 0.53125.
+    # ULP-boundary assumption (ADVICE r7): "correct" itself relies
+    # on every p >= 0.5 decision agreeing between numpy's BLAS dot
+    # and DuckDB's sequential list_sum — a logit within a few ulps
+    # of 0 could flip one decision and fail the hash at some SF
+    # even though the math is the same. tests/test_oracle_harness
+    # ::test_gd2_logits_clear_decision_threshold measures the
+    # minimum |logit| at the gate SFs (certified margin >> 1e-9),
+    # so a future mismatch here means the DATA moved onto the
+    # knife edge, not that the trainer or oracle regressed.
+    # + 0.0 normalizes IEEE -0.0 → 0.0 (Python round(-1e-9, 4) is
+    # -0.0; the driver's value-hash stringifies the sign).
+    return {
+        "pair_key": f"{label_a}_{label_b}",
+        "label_a": label_a,
+        "label_b": label_b,
+        "n_samples": len(y),
+        "train_acc": acc,
+        "coef_norm": round(float(np.linalg.norm(w)), 4) + 0.0,
+        "intercept": round(b, 4) + 0.0,
+    }
+
+
+def _pair_xy(pdf: pd.DataFrame) -> tuple[int, int, np.ndarray, np.ndarray]:
+    """(label_a, label_b, x, y) of one pair group, pre-sorted by vec_id."""
+    pdf = pdf.sort_values("vec_id").reset_index(drop=True)
+    label_a = int(pdf["label_a"].iloc[0])
+    label_b = int(pdf["label_b"].iloc[0])
+    x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+    y = (pdf["label"].to_numpy() == label_b).astype(np.float64)
+    return label_a, label_b, x, y
+
+
+def _make_train_pair(n_iters: int):
+    """Per-pair trainer UDF for a fixed iteration count: one metrics row."""
 
     def _train_pair(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        label_a = int(pdf["label_a"].iloc[0])
-        label_b = int(pdf["label_b"].iloc[0])
-        x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-        y = (pdf["label"].to_numpy() == label_b).astype(np.float64)
-        w = np.zeros(x.shape[1])
-        b = 0.0
-        for _ in range(n_iters):
-            p = _sigmoid(x @ w + b)
-            grad_w = x.T @ (p - y) / len(y)
-            grad_b = float(np.mean(p - y))
-            w -= GD_LR * grad_w
-            b -= GD_LR * grad_b
-        acc = float(np.mean((_sigmoid(x @ w + b) >= 0.5) == (y == 1.0)))
-        # train_acc stays UNROUNDED: it is the exact rational
-        # correct/n, bit-identical in numpy and DuckDB (integer sum +
-        # one IEEE division) — rounding it would reintroduce the
-        # banker's-vs-half-away tie at values like 51/96 = 0.53125.
-        # ULP-boundary assumption (ADVICE r7): "correct" itself relies
-        # on every p >= 0.5 decision agreeing between numpy's BLAS dot
-        # and DuckDB's sequential list_sum — a logit within a few ulps
-        # of 0 could flip one decision and fail the hash at some SF
-        # even though the math is the same. tests/test_oracle_harness
-        # ::test_gd2_logits_clear_decision_threshold measures the
-        # minimum |logit| at the gate SFs (certified margin >> 1e-9),
-        # so a future mismatch here means the DATA moved onto the
-        # knife edge, not that the trainer or oracle regressed.
-        # + 0.0 normalizes IEEE -0.0 → 0.0 (Python round(-1e-9, 4) is
-        # -0.0; the driver's value-hash stringifies the sign).
-        return pd.DataFrame(
-            [
-                {
-                    "pair_key": f"{label_a}_{label_b}",
-                    "label_a": label_a,
-                    "label_b": label_b,
-                    "n_samples": len(y),
-                    "train_acc": acc,
-                    "coef_norm": round(float(np.linalg.norm(w)), 4) + 0.0,
-                    "intercept": round(b, 4) + 0.0,
-                }
-            ]
-        )
+        label_a, label_b, x, y = _pair_xy(pdf)
+        w, b = _fit(x, y, n_iters)
+        return pd.DataFrame([_metrics_row(label_a, label_b, x, y, w, b)])
 
     return _train_pair
 
 
-_train_pair = _make_train_pair(GD_ITERS)
-
-
-def label_pairs_df(emb: DataFrame) -> DataFrame:
-    """All unordered label pairs (reference tasks/plants_classifier.py:57-63)."""
+def _pair_sided_embeddings(emb: DataFrame) -> DataFrame:
+    """Each embedding row joined to every unordered label pair it belongs
+    to (the pairs of reference tasks/plants_classifier.py:57-63). The
+    labels → pairs → exploded-side table is tiny and broadcast."""
     labels = emb.select("label").distinct()
     a, b = labels.alias("a"), labels.alias("b")
-    return (
+    sided = (
         a.crossJoin(b)
         .filter(F.col("a.label") < F.col("b.label"))
         .select(F.col("a.label").alias("label_a"), F.col("b.label").alias("label_b"))
+        .withColumn("label", F.explode(F.array(F.col("label_a"), F.col("label_b"))))
     )
+    return emb.join(F.broadcast(sided), "label")
 
 
 def train_one_vs_one(
@@ -140,12 +152,7 @@ def train_one_vs_one(
     tasks/plants_classifier.py:175-180, as a proper columnar sink).
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = label_pairs_df(emb)
-    sided = pairs.withColumn(
-        "label", F.explode(F.array(F.col("label_a"), F.col("label_b")))
-    )
-    joined = emb.join(F.broadcast(sided), "label")
-    trained = joined.groupBy("label_a", "label_b").applyInPandas(
+    trained = _pair_sided_embeddings(emb).groupBy("label_a", "label_b").applyInPandas(
         _make_train_pair(n_iters), schema=TRAIN_SCHEMA
     )
     if model_dir is not None:
@@ -184,32 +191,13 @@ FULL_TRAIN_SCHEMA = (
 
 def _make_train_pair_full(n_iters: int):
     def _train_pair_full(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id").reset_index(drop=True)
-        label_a = int(pdf["label_a"].iloc[0])
-        label_b = int(pdf["label_b"].iloc[0])
-        x = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
-        y = (pdf["label"].to_numpy() == label_b).astype(np.float64)
-        w = np.zeros(x.shape[1])
-        b = 0.0
-        for _ in range(n_iters):
-            p = _sigmoid(x @ w + b)
-            w -= GD_LR * (x.T @ (p - y) / len(y))
-            b -= GD_LR * float(np.mean(p - y))
+        label_a, label_b, x, y = _pair_xy(pdf)
+        w, b = _fit(x, y, n_iters)
         return pd.DataFrame(
-            [
-                {
-                    "label_a": label_a,
-                    "label_b": label_b,
-                    "weights": list(w),
-                    "intercept": b,
-                }
-            ]
+            [{"label_a": label_a, "label_b": label_b, "weights": list(w), "intercept": b}]
         )
 
     return _train_pair_full
-
-
-_train_pair_full = _make_train_pair_full(GD_ITERS)
 
 
 def ensemble_vote_accuracy(
@@ -221,12 +209,8 @@ def ensemble_vote_accuracy(
     `ensemble_vote_probe` (n_iters=PROBE_ITERS) so the vote replay is
     oracle-checkable; this full-strength version stays the API."""
     emb = load_table(spark, sf_dir, "embeddings")
-    pairs = label_pairs_df(emb)
-    sided = pairs.withColumn(
-        "label", F.explode(F.array(F.col("label_a"), F.col("label_b")))
-    )
     models_rows = (
-        emb.join(F.broadcast(sided), "label")
+        _pair_sided_embeddings(emb)
         .groupBy("label_a", "label_b")
         .applyInPandas(_make_train_pair_full(n_iters), schema=FULL_TRAIN_SCHEMA)
         .collect()
@@ -259,7 +243,7 @@ def ensemble_vote_accuracy(
     scored = emb.select("label", vote(F.col("embedding")).alias("pred"))
     # vote_accuracy stays UNROUNDED: exact rational correct/n,
     # bit-identical across engines (rounding would reintroduce the
-    # half-tie divergence — see _make_train_pair).
+    # half-tie divergence — see _metrics_row).
     return scored.groupBy("label").agg(
         F.count(F.lit(1)).alias("n_samples"),
         F.avg((F.col("pred") == F.col("label")).cast("double")).alias(
@@ -336,27 +320,10 @@ def one_vs_one_shim(
             rows = [(vid, vec, a) for vid, vec in by_label[a]] + [
                 (vid, vec, b) for vid, vec in by_label[b]
             ]
-            rows.sort(key=lambda t: t[0])  # the _train_pair vec_id pre-sort
+            rows.sort(key=lambda t: t[0])  # the _pair_xy vec_id pre-sort
             x = np.array([v for _, v, _ in rows], dtype=np.float64)
             y = np.array([1.0 if lab == b else 0.0 for _, _, lab in rows])
-            w_vec = np.zeros(x.shape[1])
-            bias = 0.0
-            for _ in range(n_iters):
-                p = _sigmoid(x @ w_vec + bias)
-                w_vec -= GD_LR * (x.T @ (p - y) / len(y))
-                bias -= GD_LR * float(np.mean(p - y))
-            acc = float(np.mean((_sigmoid(x @ w_vec + bias) >= 0.5) == (y == 1.0)))
-            out.append(
-                {
-                    "pair_key": f"{a}_{b}",
-                    "label_a": a,
-                    "label_b": b,
-                    "n_samples": len(y),
-                    "train_acc": acc,  # exact rational — see _make_train_pair
-                    "coef_norm": round(float(np.linalg.norm(w_vec)), 4) + 0.0,
-                    "intercept": round(bias, 4) + 0.0,
-                }
-            )
+            out.append(_metrics_row(a, b, x, y, *_fit(x, y, n_iters)))
         return out
 
     results = run_task(
@@ -368,11 +335,7 @@ def one_vs_one_shim(
         init_func=init_func,
         num_partitions=n_workers,
     ).collect()
-    return spark.createDataFrame(
-        results,
-        "pair_key string, label_a int, label_b int, n_samples long, "
-        "train_acc double, coef_norm double, intercept double",
-    )
+    return spark.createDataFrame(results, TRAIN_SCHEMA)
 
 
 def one_vs_one_shim_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:

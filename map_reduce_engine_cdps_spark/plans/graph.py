@@ -154,8 +154,10 @@ NATION_TRADE_PAGERANK_SQL = _pagerank_sql()
 def trade_graph_degrees(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-nation degree/strength profile of the trade graph, plus the
     self-trade share. All compute after the edge aggregate is O(|V|²);
-    the two marginal aggregates and the self-edge join reuse it."""
-    edges = _trade_edges(spark, sf_dir).persist()
+    the two marginal aggregates and the self-edge join reuse its shuffle
+    through exchange reuse. Never persisted: a session cache would match
+    the next call's plan and serve edges from a rewritten lineitem."""
+    edges = _trade_edges(spark, sf_dir)
     # marginal strengths summed in exact cents — the per-nation sum of
     # ~25 1e10-magnitude doubles was the intermittent knife edge.
     out = edges.groupBy(F.col("src").alias("n_name")).agg(

@@ -781,17 +781,20 @@ KMEANS_LLOYD_SQL = _kmeans_sql
 
 def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # The embedding table is scanned KMEANS_ITERS+2 times (seed pick,
-    # one assign per iteration, final assign) — cache it once instead of
-    # re-reading parquet per Lloyd round. MEMORY_AND_DISK so a 100 TB
-    # run degrades to local-disk re-read, never recompute-from-source.
-    # load_parallel before persist: assignment evaluates K interpreted
-    # 64-dim distance folds per row, and the cached partitioning IS the
-    # scan partitioning — a 2-file scan would pin every Lloyd round to
-    # 2 cores (slope sweep: 7.6-8.2 s at sf1 before, 3.3 s after).
+    # one assign per iteration, final assign) — checkpoint it once per
+    # call instead of re-reading parquet per Lloyd round (3.6 vs 3.9 s
+    # at sf0.1 without it). A localCheckpoint, not a persist: a session
+    # cache would match the next call's plan and serve seeds from a
+    # rewritten embeddings file; the blocks go when the result does.
+    # load_parallel before the checkpoint: assignment evaluates K
+    # interpreted 64-dim distance folds per row, and the checkpointed
+    # partitioning IS the scan partitioning — a 2-file scan would pin
+    # every Lloyd round to 2 cores (slope sweep: 7.6-8.2 s at sf1
+    # before, 3.3 s after).
     emb = (
         load_parallel(spark, sf_dir, "embeddings")
         .select("vec_id", "embedding")
-        .persist()
+        .localCheckpoint(eager=True)
     )
     seeds = emb.filter(F.col("vec_id") < KMEANS_K).orderBy("vec_id").collect()
     cents = [[float(x) for x in r.embedding] for r in seeds]

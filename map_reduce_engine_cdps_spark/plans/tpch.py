@@ -1085,8 +1085,8 @@ LIMIT 100
 # per-part value (mean-relative rather than Q11's fraction-of-total so
 # the predicate stays selective-but-nonempty at every scale factor). The
 # scalar subquery is a 1-row aggregate of the SAME pre-aggregated
-# per-part relation, cross-joined (broadcast) back — the heavy fact scan
-# happens exactly once.
+# per-part relation, cross-joined (broadcast) back — exchange reuse runs
+# the heavy fact scan exactly once, with nothing persisted across calls.
 # ---------------------------------------------------------------------------
 
 Q11_REGION = "AMERICA"
@@ -1120,7 +1120,6 @@ def important_part_value(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("raw_cents")
         )
     )
-    per_part = per_part.persist()
     total = per_part.agg(
         (F.avg("raw_cents") * F.lit(Q11_MEAN_MULT)).alias("threshold_cents")
     )

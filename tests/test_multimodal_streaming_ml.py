@@ -34,9 +34,10 @@ def test_media_feature_extraction_plumbing(spark):
 
 
 def test_media_real_decode_is_stubbed(spark):
+    """There is no "real" mode: it is rejected when the plan is built."""
     media = synth_media_df(spark, n=2, partitions=1)
-    with pytest.raises(Exception, match="NotImplementedError|Pillow|ffmpeg|ML runtime"):
-        extract_features(media, decode="real").collect()
+    with pytest.raises(ValueError, match="unknown decode mode"):
+        extract_features(media, decode="real")
 
 
 def _tiny_png(width: int, height: int, rgb: tuple) -> bytes:
@@ -181,8 +182,8 @@ def test_sample_frames_real_decode_raises(spark):
     )
 
     media = synth_media_df(spark, n=4, partitions=2)
-    with _pytest.raises(Exception, match="NotImplementedError|ffmpeg"):
-        sample_frames(media, decode="real").collect()
+    with _pytest.raises(ValueError, match="unknown decode mode"):
+        sample_frames(media, decode="real")
 
 
 def test_window_audio_bounded_fanout_and_features(spark):
@@ -220,8 +221,8 @@ def test_window_audio_real_decode_raises(spark):
     )
 
     media = synth_media_df(spark, n=4, partitions=2)
-    with _pytest.raises(Exception, match="NotImplementedError|soundfile|ffmpeg"):
-        window_audio(media, decode="real").collect()
+    with _pytest.raises(ValueError, match="unknown decode mode"):
+        window_audio(media, decode="real")
 
 
 def test_streaming_checkpoint_incremental_restart(spark, sf_dir, tmp_path):

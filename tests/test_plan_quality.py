@@ -655,7 +655,7 @@ def test_lsh_bucket_kernel_not_duplicated(spark):
     df.count()
     plan = df._jdf.queryExecution().executedPlan().toString()
     n = len(re.findall(r"ArrowEvalPython", plan))
-    assert n <= 3, f"expected <=3 ArrowEvalPython, found {n}:\n{plan[:2000]}"
+    assert n == 3, f"expected 3 ArrowEvalPython, found {n}:\n{plan[:2000]}"
 
 
 def test_one_vs_one_multicast_payload_is_minimal(spark):

@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 from map_reduce_engine_cdps_spark.plans import dedup as D
 from map_reduce_engine_cdps_spark.plans import graph as G
 from map_reduce_engine_cdps_spark.plans import similarity as S
+from map_reduce_engine_cdps_spark.plans import tpch as T
 
 
 def _n_persisted(spark) -> int:
@@ -100,6 +101,44 @@ def test_memo_rebuilds_after_input_rewrite(spark, sf_dir, tmp_path):
     after = _pairs(D._lsh_pairs_cached(spark, str(tmp_path)))
     assert before < after
     assert {b for _, b in after - before} >= set(new_ids.to_pylist())
+
+
+@pytest.mark.parametrize(
+    "query, table, rewrite",
+    [
+        # halving lineitem changes every trade-edge weight
+        (G.trade_graph_degrees, "lineitem", lambda t: t.slice(0, t.num_rows // 2)),
+        (T.important_part_value, "lineitem", lambda t: t.slice(0, t.num_rows // 2)),
+        # reversed vec_ids move the seed centroids (vec_id < K)
+        (
+            S.kmeans_lloyd,
+            "embeddings",
+            lambda t: t.set_column(
+                t.schema.get_field_index("vec_id"), "vec_id",
+                pc.subtract(pc.max(t["vec_id"]), t["vec_id"]),
+            ),
+        ),
+    ],
+    ids=["trade_graph_degrees", "important_part_value", "kmeans_lloyd"],
+)
+def test_query_sees_input_rewritten_in_live_session(
+    spark, sf_dir, tmp_path, query, table, rewrite
+):
+    """A query that reuses an intermediate within a call must not serve
+    it to a later call after its input file is rewritten: the live
+    session answers what a fresh computation over the new file does."""
+    live, fresh = tmp_path / "live", tmp_path / "fresh"
+    shutil.copytree(sf_dir, live, copy_function=shutil.copyfile)
+    before = sorted(query(spark, str(live)).collect())
+
+    path = str(live / f"{table}.parquet")
+    pq.write_table(rewrite(pq.read_table(path)), path)
+    after = sorted(query(spark, str(live)).collect())
+
+    shutil.copytree(live, fresh)
+    expected = sorted(query(spark, str(fresh)).collect())
+    assert expected != before
+    assert after == expected
 
 
 def test_memo_rebuilds_after_checkpoint_blocks_dropped(spark, sf_dir):

@@ -1,9 +1,12 @@
 """Repository tooling: every `tools/<x>.py` the docs, the package or the
-tests name exists, and the A/B tool compares a query against a git
-revision and cleans up after itself."""
+tests name exists, the A/B tool compares a query against a git revision
+and cleans up after itself, and bench.py times just the queries it is
+given without touching the round artifacts."""
 
 from __future__ import annotations
 
+import glob
+import json
 import os
 import re
 import subprocess
@@ -56,3 +59,25 @@ def test_ab_tool_reports_identical_rows_and_removes_its_worktree(tmp_path):
     assert "won" in r.stdout
     assert _worktrees() == before
     assert not [p for p in os.listdir(tmp_path) if p.startswith("ab-")]
+
+
+def _bench_artifacts() -> dict:
+    return {p: os.stat(p).st_mtime_ns for p in glob.glob(os.path.join(REPO, "BENCH_full_*.json"))}
+
+
+def test_bench_times_only_the_named_queries():
+    before = _bench_artifacts()
+    env = dict(os.environ, SPARK_GRAFT_SF_DIR=SF_DIR, SPARK_GRAFT_SKIP_SF1="1",
+               SPARK_GRAFT_BENCH_RUNS="1")
+    env.pop("SPARK_GRAFT_ROUND", None)
+    r = subprocess.run(
+        [sys.executable, os.path.join(REPO, "bench.py"), "wordcount"],
+        capture_output=True, text=True, env=env, timeout=900,
+    )
+    assert r.returncode == 0, r.stdout[-2000:] + r.stderr[-2000:]
+    last = json.loads(r.stdout.strip().splitlines()[-1])
+    assert list(last["queries"]) == ["wordcount"]
+    assert last["queries"]["wordcount"] > 0
+    assert last["noop_compute"] == {}
+    assert "full" not in last
+    assert _bench_artifacts() == before
