@@ -167,8 +167,3 @@ def run_task(
         return iter(reduce_func(list(grouped.items()), pid))
 
     return partitioned.mapPartitionsWithIndex(_group_reduce)
-
-
-def run_task_collect(spark: SparkSession, *args: Any, **kwargs: Any) -> list[Any]:
-    """``run_task`` + gather, mirroring the reference's result union."""
-    return run_task(spark, *args, **kwargs).collect()

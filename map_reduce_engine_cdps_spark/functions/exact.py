@@ -97,11 +97,6 @@ def sum_disc_price(
 
 # --- DuckDB oracle snippets (format with .format(c=column)) ---------------
 
-SQL_CENTS = "CAST(round({c} * 100) AS BIGINT)"
-
-# sum of exact cents, back to BIGINT (DuckDB sums BIGINT into HUGEINT)
-SQL_SUM_CENTS = "CAST(sum(CAST(round({c} * 100) AS BIGINT)) AS BIGINT)"
-
 # round(sum(money), dp) replacement
 SQL_SUM_MONEY = (
     "round(CAST(sum(CAST(round({c} * 100) AS BIGINT)) AS BIGINT)"

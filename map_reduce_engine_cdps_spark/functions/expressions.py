@@ -13,19 +13,6 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
-def tokenize(col: Column) -> Column:
-    """T10 — lowercase whitespace tokenization
-    (reference tasks/example_wordcount.py:14). Returns array<string>.
-    """
-    return F.split(F.trim(F.lower(col)), r"\s+")
-
-
-def strip_non_alnum(col: Column) -> Column:
-    """T11 — keep only alphanumeric chars
-    (reference tasks/example_wordcount.py:15)."""
-    return F.regexp_replace(col, r"[^a-zA-Z0-9]", "")
-
-
 def first_true_flag(flag_cols: list[str], otherwise: str = "None") -> Column:
     """T14 — first boolean-ish column equal to 'True' wins, else
     ``otherwise`` (reference tasks/accident_analysis.py:47-55).

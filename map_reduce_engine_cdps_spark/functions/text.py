@@ -62,15 +62,6 @@ def shingles(tok: Column, n: int = 3) -> Column:
     )
 
 
-def minhash_sig(shingle_col: Column, seed: int) -> Column:
-    """One MinHash component: lexicographic min of seeded md5 over the
-    shingle set. Null-safe: empty shingle set → null.
-    """
-    return F.array_min(
-        F.transform(shingle_col, lambda s: F.md5(F.concat(F.lit(f"{seed}|"), s)))
-    )
-
-
 def stopword_ratio(tok: Column) -> Column:
     """Fraction of tokens that are stopwords; 0.0 for empty docs."""
     stop = F.size(F.filter(tok, lambda t: t.isin(*STOPWORDS)))

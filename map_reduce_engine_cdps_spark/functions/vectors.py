@@ -14,12 +14,17 @@ from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 
+def array_sum(a: Column) -> Column:
+    """Sequential double-precision left fold ((0.0 + a[1]) + a[2]) + …,
+    elements widened to double: DuckDB ``list_sum``'s addition order, so
+    the oracle reproduces every sum bit-for-bit."""
+    return F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v.cast("double"))
+
+
 def dot(a: Column, b: Column) -> Column:
     """Sequential double-precision dot product of two float arrays."""
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+    return array_sum(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double"))
     )
 
 
@@ -27,17 +32,14 @@ def norm(a: Column) -> Column:
     return F.sqrt(dot(a, a))
 
 
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+def sq_dist(a: Column, b: Column) -> Column:
+    """Squared L2 distance: the same fold over (x - y) * (x - y)."""
 
+    def sq(x: Column, y: Column) -> Column:
+        d = x.cast("double") - y.cast("double")
+        return d * d
 
-def cosine_pre(a: Column, b: Column, na: Column, nb: Column) -> Column:
-    """``cosine`` with both norms precomputed once per ROW (below the
-    pair join) instead of re-folded once per PAIR. The doubles are
-    bit-identical — same fold, same multiply — but the interpreted
-    higher-order evaluation count in an n×k pair join drops 3×
-    (one dot instead of dot + two norms)."""
-    return dot(a, b) / (na * nb)
+    return array_sum(F.zip_with(a, b, sq))
 
 
 def _stack_fixed_dim(s: pd.Series, mask: np.ndarray) -> np.ndarray:

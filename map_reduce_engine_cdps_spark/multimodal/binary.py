@@ -26,6 +26,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from map_reduce_engine_cdps_spark.functions import vectors as V
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -327,16 +329,7 @@ def doc_embeddings(spark, sf_dir: str) -> DataFrame:
     out = docs.select("doc_id", embed(F.col("text")).alias("embedding"))
     return out.select(
         "doc_id",
-        F.round(
-            F.aggregate(
-                F.transform(
-                    F.col("embedding"), lambda x: x.cast("double") * x.cast("double")
-                ),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            4,
-        ).alias("sq_norm"),
+        F.round(V.dot(F.col("embedding"), F.col("embedding")), 4).alias("sq_norm"),
         F.size("embedding").alias("dim"),
     )
 
@@ -368,14 +361,7 @@ def media_features(spark, sf_dir: str) -> DataFrame:
         "media_id",
         "n_bytes",
         F.size("features").alias("dim"),
-        F.round(
-            F.aggregate(
-                F.transform(F.col("features"), lambda x: x.cast("double")),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            4,
-        ).alias("feat_sum"),
+        F.round(V.array_sum(F.col("features")), 4).alias("feat_sum"),
     )
 
 
@@ -517,14 +503,7 @@ def ppm_image_features(spark, sf_dir: str) -> DataFrame:
         "media_id",
         "n_bytes",
         F.size("features").alias("dim"),
-        F.round(
-            F.aggregate(
-                F.transform(F.col("features"), lambda x: x.cast("double")),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            4,
-        ).alias("feat_sum"),
+        F.round(V.array_sum(F.col("features")), 4).alias("feat_sum"),
     )
 
 
@@ -598,11 +577,7 @@ def ppm_gradient_features(spark, sf_dir: str) -> DataFrame:
         "media_id",
         "n_bytes",
         F.size("features").alias("dim"),
-        F.aggregate(
-            F.transform(F.col("features"), lambda x: x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ).alias("feat_sum"),
+        V.array_sum(F.col("features")).alias("feat_sum"),
     )
 
 
@@ -656,11 +631,7 @@ def ppm_cnn_embeddings(spark, sf_dir: str) -> DataFrame:
     return feats.select(
         "media_id",
         F.size("features").alias("dim"),
-        F.aggregate(
-            F.transform(F.col("features"), lambda x: x.cast("double")),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ).alias("feat_sum"),
+        V.array_sum(F.col("features")).alias("feat_sum"),
     )
 
 
@@ -826,14 +797,7 @@ def ppm_video_frame_samples(spark, sf_dir: str) -> DataFrame:
     return frames.select(
         "media_id",
         "frame_idx",
-        F.round(
-            F.aggregate(
-                F.transform(F.col("frame_features"), lambda x: x.cast("double")),
-                F.lit(0.0),
-                lambda acc, v: acc + v,
-            ),
-            4,
-        ).alias("feat_sum"),
+        F.round(V.array_sum(F.col("frame_features")), 4).alias("feat_sum"),
     )
 
 
@@ -1277,7 +1241,7 @@ def _md5_component_sql(i: int) -> str:
 
 def _sq_norm_sql() -> str:
     # double(x)*double(x) mirrors the Spark side's x.cast("double") *
-    # x.cast("double"); left-to-right + matches F.aggregate's fold
+    # x.cast("double"); left-to-right + matches V.dot's fold
     return " + ".join(
         f"CAST({_md5_component_sql(i)} AS DOUBLE)"
         f" * CAST({_md5_component_sql(i)} AS DOUBLE)"

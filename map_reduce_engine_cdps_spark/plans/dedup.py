@@ -692,9 +692,12 @@ def connected_components(
     """Min-label propagation over an undirected pair graph.
 
     ``vertices``: one column ``doc_id``; ``pairs``: columns
-    ``doc_a, doc_b``. Returns (doc_id, comp) where comp is the minimum
-    doc_id reachable from doc_id. Factored out of near_dup_clusters so
-    the convergence semantics are unit-testable on hand-built graphs.
+    ``doc_a, doc_b``, both endpoints in ``vertices`` (an endpoint
+    outside it would gain a label row of its own). Returns (doc_id,
+    comp) where comp is the minimum doc_id reachable from doc_id.
+    Raises RuntimeError when the labels have not converged within
+    ``max_rounds`` rounds. Factored out of near_dup_clusters so the
+    convergence semantics are unit-testable on hand-built graphs.
     """
     # Undirected: propagate both ways. Materialize once, partitioned by
     # src: the per-round join probes edges on src, so the edge list is
@@ -736,11 +739,15 @@ def connected_components(
     # state released (kept states once degraded repeated sf10 runs
     # 11.5 s → 28.6 s).
     with releasing(edges):
-        labels, _ = fixpoint(
+        labels, converged = fixpoint(
             labels0, _round, lambda df: df.agg(F.sum("comp")).first()[0],
             max_rounds, checkpoint_every=_CC_CHECKPOINT_EVERY,
         )
         with releasing(labels):
+            if not converged:
+                raise RuntimeError(
+                    f"connected_components: no fixpoint in max_rounds={max_rounds}"
+                )
             return labels.localCheckpoint(eager=True)
 
 
@@ -765,7 +772,9 @@ def connected_components_star(
     partitioning, and skew behavior as the propagation loop. Edges
     only ever re-point toward smaller labels, so (count, sum(src),
     sum(dst)) decreases monotonically and is a sound fixpoint check.
-    Returns (doc_id, comp) with comp = min doc_id of the component.
+    Returns (doc_id, comp) with comp = min doc_id of the component;
+    raises RuntimeError when the edges have not converged within
+    ``max_rounds`` rounds.
     """
     # canonical direction: src > dst (self-loops dropped)
     e0 = (
@@ -829,10 +838,14 @@ def connected_components_star(
     # an explode on the previous plan (~6x lineage growth per round), so
     # persisted rounds blow past Spark's plan-size limits within a few
     # rounds, and _sig() materializes each round anyway.
-    e, _ = fixpoint(e0, _round, _sig, max_rounds, checkpoint_every=1)
+    e, converged = fixpoint(e0, _round, _sig, max_rounds, checkpoint_every=1)
     # star forest: every node's comp is its (unique) smaller neighbor;
     # vertices without edges are their own component
     with releasing(e):
+        if not converged:
+            raise RuntimeError(
+                f"connected_components_star: no fixpoint in max_rounds={max_rounds}"
+            )
         roots = e.groupBy("src").agg(F.min("dst").alias("comp")).select(
             F.col("src").alias("doc_id"), "comp"
         )
@@ -1558,7 +1571,9 @@ LINK_MAX_BAL_DIFF_CENTS = 10_000
 _LINK_GRID_W = 2 * LINK_MAX_BAL_DIFF_CENTS
 
 
-def customer_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _link_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Each customer once per balance grid: (c_custkey, c_name,
+    c_nationkey, c_mktsegment, bal_cents, grid, bb)."""
     cust = load_table(spark, sf_dir, "customer").select(
         "c_custkey",
         "c_name",
@@ -1575,12 +1590,17 @@ def customer_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.floor((F.col("bal_cents") + off) / _LINK_GRID_W).alias("bb"),
             )
         )
-    blocked = grids[0].unionByName(grids[1])
+    return grids[0].unionByName(grids[1])
+
+
+def _link_block_join(blocked: DataFrame) -> DataFrame:
+    """Self-join of ``blocked`` (aliases a, b) on the block key with
+    a.c_custkey < b.c_custkey, each candidate pair emitted once."""
     a, b = blocked.alias("a"), blocked.alias("b")
     same_g0_bucket = F.floor(F.col("a.bal_cents") / _LINK_GRID_W) == F.floor(
         F.col("b.bal_cents") / _LINK_GRID_W
     )
-    pairs = a.join(
+    return a.join(
         b,
         (F.col("a.grid") == F.col("b.grid"))
         & (F.col("a.bb") == F.col("b.bb"))
@@ -1591,7 +1611,11 @@ def customer_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
         # emitted by the grid-0 join row only (same candidate SET as
         # dropDuplicates(ka, kb), zero extra exchange).
         & ((F.col("a.grid") == 0) | ~same_g0_bucket),
-    ).select(
+    )
+
+
+def customer_record_linkage(spark: SparkSession, sf_dir: str) -> DataFrame:
+    pairs = _link_block_join(_link_blocked(spark, sf_dir)).select(
         F.col("a.c_nationkey").alias("nationkey"),
         F.col("a.c_mktsegment").alias("mktsegment"),
         F.col("a.c_name").alias("na"),
@@ -1696,10 +1720,13 @@ _RECALL_SAMPLE_TIERS = ((100_000, RECALL_SAMPLE_PCT), (300_000, 20), (None, 10))
 _SHINGLE_TIERS = ((100_000, 20), (300_000, 10), (None, 5))
 
 
-def _tier_pct(n_docs: int, tiers) -> int:
-    for bound, pct in tiers:
-        if bound is None or n_docs <= bound:
-            return pct
+def _tier_pct(n: int, tiers) -> int:
+    """Value of the first ``(bound, value)`` tier with ``n <= bound``;
+    the last tier's bound is None (unbounded). Also picks the LSH plane
+    and bucket-char counts in plans/similarity.py."""
+    for bound, value in tiers:
+        if bound is None or n <= bound:
+            return value
     raise AssertionError("unreachable")
 
 
@@ -1882,25 +1909,9 @@ def _linkage_matched_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     every certified SF (sf1: 90), so results are exact there; past it
     the cap is an explicit recall-for-boundedness trade mirrored
     bit-for-bit in the oracles."""
-    cust = load_table(spark, sf_dir, "customer").select(
-        "c_custkey",
-        "c_name",
-        "c_nationkey",
-        "c_mktsegment",
-        F.round(F.col("c_acctbal") * 100).cast("long").alias("bal_cents"),
-    )
-    grids = []
-    for g, off in ((0, 0), (1, _LINK_GRID_W // 2)):
-        grids.append(
-            cust.select(
-                "*",
-                F.lit(g).alias("grid"),
-                F.floor((F.col("bal_cents") + off) / _LINK_GRID_W).alias("bb"),
-            )
-        )
-    blocked = grids[0].unionByName(grids[1])
     blocked = (
-        blocked.withColumn(
+        _link_blocked(spark, sf_dir)
+        .withColumn(
             "rnb",
             F.row_number().over(
                 W.partitionBy(
@@ -1911,20 +1922,8 @@ def _linkage_matched_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("rnb") <= LINK_BLOCK_CAP)
         .drop("rnb")
     )
-    a, b = blocked.alias("a"), blocked.alias("b")
-    same_g0_bucket = F.floor(F.col("a.bal_cents") / _LINK_GRID_W) == F.floor(
-        F.col("b.bal_cents") / _LINK_GRID_W
-    )
     return (
-        a.join(
-            b,
-            (F.col("a.grid") == F.col("b.grid"))
-            & (F.col("a.bb") == F.col("b.bb"))
-            & (F.col("a.c_nationkey") == F.col("b.c_nationkey"))
-            & (F.col("a.c_mktsegment") == F.col("b.c_mktsegment"))
-            & (F.col("a.c_custkey") < F.col("b.c_custkey"))
-            & ((F.col("a.grid") == 0) | ~same_g0_bucket),
-        )
+        _link_block_join(blocked)
         # Gate levenshtein under the balance predicate EXPLICITLY (the
         # funnel query's F.when trick): a flat AND leaves Catalyst free
         # to evaluate the expensive edit distance on every candidate

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.functions import vectors as V
 from map_reduce_engine_cdps_spark.operators.state import memo, releasing
+from map_reduce_engine_cdps_spark.plans.dedup import _tier_pct
 from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table
 
 N_QUERIES = 10     # vec_id < N_QUERIES are the query vectors
@@ -34,8 +35,9 @@ N_PLANES = 8
 
 
 def _cos_pre_arrow(qe, ce, qn, cn):
-    """Arrow-vectorized V.cosine_pre twin: dot_arrow over the pair plus
-    the same two scalar IEEE ops (multiply, divide) — bit-identical."""
+    """Arrow-vectorized cosine from precomputed norms: dot_arrow (the
+    V.dot twin) over the pair divided by the product of the two V.norm
+    values — the same scalar IEEE ops as the interpreted fold."""
     return V.dot_arrow()(qe, ce) / (qn * cn)
 
 
@@ -322,8 +324,8 @@ NEAR_DUP_COS = 0.3
 # therefore pair expansion per bucket — bounded. The tier table is the
 # shared contract: Spark picks from it via count(), the oracle via a
 # CASE on the same scalar count, so both engines band identically.
-NEAR_DUP_TIERS = ((4096, 8), (16384, 10), (65536, 12))
 NEAR_DUP_MAX_PLANES = 14
+NEAR_DUP_TIERS = ((4096, 8), (16384, 10), (65536, 12), (None, NEAR_DUP_MAX_PLANES))
 
 # Degenerate-bucket guard (the minhash BUCKET_CAP pattern, dedup.py:188):
 # a near-dup-DENSE corpus defeats banding — every member of an
@@ -338,13 +340,6 @@ NEAR_DUP_MAX_PLANES = 14
 EMB_BUCKET_CAP = 1024
 
 
-def _near_dup_planes(n: int) -> int:
-    for cap, p in NEAR_DUP_TIERS:
-        if n <= cap:
-            return p
-    return NEAR_DUP_MAX_PLANES
-
-
 def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # load_parallel: clustered corpora concentrate the corpus in few
     # buckets (sf1: 119 occupied of 4096, hottest 822 members → 3.7 M
@@ -353,7 +348,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2 cores. On a real cluster the 128 MB scan splits provide this
     # width for free.
     emb = load_parallel(spark, sf_dir, "embeddings")
-    planes = _near_dup_planes(emb.count())
+    planes = _tier_pct(emb.count(), NEAR_DUP_TIERS)
     d = emb.withColumn("bucket", V.lsh_bucket_arrow(planes)(F.col("embedding")))
     # NULL bucket = NULL embedding; the former join-on-bucket shape
     # could never pair them (NULL != NULL), so the grouped shape must
@@ -644,14 +639,7 @@ def embedding_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     max_abs = F.array_max(F.transform(x, F.abs))
     scale = F.greatest(max_abs / F.lit(127.0), F.lit(1e-12))
     deq = F.transform(x, lambda v: F.round(v / scale) * scale)
-    mae = (
-        F.aggregate(
-            F.zip_with(x, deq, lambda a, b: F.abs(a - b)),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        )
-        / F.size(x)
-    )
+    mae = V.array_sum(F.zip_with(x, deq, lambda a, b: F.abs(a - b))) / F.size(x)
     return emb.select(
         "vec_id",
         "label",
@@ -698,14 +686,8 @@ def _assign(emb: DataFrame, cents: list[list[float]]) -> DataFrame:
     scored = F.array(
         *[
             F.struct(
-                F.aggregate(
-                    F.zip_with(
-                        "embedding",
-                        F.array(*[F.lit(float(x)) for x in c]),
-                        lambda a, b: (a - b) * (a - b),
-                    ),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
+                V.sq_dist(
+                    F.col("embedding"), F.array(*[F.lit(float(x)) for x in c])
                 ).alias("d2"),
                 F.lit(i).alias("cid"),
             )
@@ -1282,22 +1264,15 @@ _NEG_K = 4
 # worst-case bucket occupancy ≥ ~16 so every anchor still finds
 # >= _NEG_K cross-label negatives. Shared with the oracle via CASE on
 # the same count, like NEAR_DUP_TIERS.
-_NEG_BUCKET_TIERS = ((4096, 1), (65536, 2))
 _NEG_MAX_CHARS = 3
-
-
-def _neg_bucket_chars(n: int) -> int:
-    for cap, d in _NEG_BUCKET_TIERS:
-        if n <= cap:
-            return d
-    return _NEG_MAX_CHARS
+_NEG_BUCKET_TIERS = ((4096, 1), (65536, 2), (None, _NEG_MAX_CHARS))
 
 
 def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql.window import Window as W
 
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    chars = _neg_bucket_chars(emb.count())
+    chars = _tier_pct(emb.count(), _NEG_BUCKET_TIERS)
     bucket = F.substring(F.md5(F.col("vec_id").cast("string")), 1, chars)
     anchors = emb.select(
         F.col("vec_id").alias("anchor_id"),
@@ -1368,10 +1343,12 @@ GROUP BY anchor_id, anchor_label
 # ---------------------------------------------------------------------------
 
 
-def tree_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _tree_moments(spark: SparkSession, sf_dir: str, k: int):
+    """(mean, population covariance) of the first ``k`` embedding dims:
+    per-partition numpy partials (n, Σx, Σxxᵀ) merged by treeReduce
+    depth 2, so the driver receives O(executors) k×k partials."""
     import numpy as np
 
-    k = _COV_DIMS
     emb = load_table(spark, sf_dir, "embeddings")
     proj = emb.select(
         F.array(
@@ -1393,7 +1370,14 @@ def tree_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     n, s, sp = proj.rdd.mapPartitions(partial).treeReduce(merge, depth=2)
     mean = s / n
-    cov = sp / n - np.outer(mean, mean)
+    return mean, sp / n - np.outer(mean, mean)
+
+
+def tree_covariance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+
+    k = _COV_DIMS
+    mean, cov = _tree_moments(spark, sf_dir, k)
     std = np.sqrt(np.diag(cov))
     names, vals = [], []
     for i in range(k):
@@ -1581,18 +1565,7 @@ def pq_quantize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     cb2 = cb.select("sub_id", F.col("label").alias("code"), "codeword")
     j = subs.select("vec_id", "sub_id", "subvec").join(F.broadcast(cb2), "sub_id")
-    d2 = F.round(
-        F.aggregate(
-            F.zip_with(
-                "subvec",
-                "codeword",
-                lambda a, b: (a.cast("double") - b) * (a.cast("double") - b),
-            ),
-            F.lit(0.0),
-            lambda acc, v: acc + v,
-        ),
-        6,
-    )
+    d2 = F.round(V.sq_dist(F.col("subvec"), F.col("codeword")), 6)
     scored = j.select("vec_id", "sub_id", "code", d2.alias("d2"))
     w = W.partitionBy("vec_id", "sub_id").orderBy(F.asc("d2"), F.asc("code"))
     best = scored.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1)
@@ -1660,39 +1633,10 @@ FROM best GROUP BY sub_id, code
 _PCA_DIMS = 64
 
 
-def _pca_moments(spark: SparkSession, sf_dir: str):
-    import numpy as np
-
-    k = _PCA_DIMS
-    emb = load_table(spark, sf_dir, "embeddings")
-    proj = emb.select(
-        F.array(
-            *[F.element_at("embedding", i + 1).cast("double") for i in range(k)]
-        ).alias("x")
-    )
-
-    def partial(rows):
-        n, s, sp = 0, np.zeros(k), np.zeros((k, k))
-        for r in rows:
-            v = np.asarray(r["x"], dtype=np.float64)
-            n += 1
-            s += v
-            sp += np.outer(v, v)
-        yield (n, s, sp)
-
-    def merge(a, b):
-        return (a[0] + b[0], a[1] + b[1], a[2] + b[2])
-
-    n, s, sp = proj.rdd.mapPartitions(partial).treeReduce(merge, depth=2)
-    mean = s / n
-    cov = sp / n - np.outer(mean, mean)
-    return cov
-
-
 def pca_explained_variance(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
 
-    cov = _pca_moments(spark, sf_dir)
+    _, cov = _tree_moments(spark, sf_dir, _PCA_DIMS)
     evals = np.linalg.eigvalsh(cov)[::-1]  # descending
     evals = np.maximum(evals, 0.0)  # clip numerical negatives
     total = float(evals.sum())
@@ -1718,13 +1662,13 @@ def pca_variance_identity(spark: SparkSession, sf_dir: str) -> DataFrame:
     item 2): sum of eigenvalues == trace of the covariance == sum of
     per-dimension variances — the right-hand side is plain SQL, so a
     hash-match certifies the distributed moments pipeline
-    (`_pca_moments`: treeReduce of per-partition (n, Σx, Σxxᵀ)) end to
+    (`_tree_moments`: treeReduce of per-partition (n, Σx, Σxxᵀ)) end to
     end. The eigendecomposition itself (driver-side LAPACK over the
     64×64 covariance) stays rows-only in `pca_explained_variance`;
     this identity pins everything distributed about it."""
     import numpy as np
 
-    cov = _pca_moments(spark, sf_dir)
+    _, cov = _tree_moments(spark, sf_dir, _PCA_DIMS)
     evals = np.linalg.eigvalsh(cov)  # unclipped: Σλ == trace exactly
     return spark.createDataFrame(
         [(int(_PCA_DIMS), round(float(evals.sum()), 4) + 0.0)],
@@ -1793,11 +1737,7 @@ def jl_distance_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _proj(p: int):
         sgn = F.array(*[F.lit(s) for s in _JL_SIGNS[p]])
-        return F.aggregate(
-            F.zip_with("embedding", sgn, lambda x, s: x.cast("double") * s),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        ).alias(f"pj{p}")
+        return V.dot(F.col("embedding"), sgn).alias(f"pj{p}")
 
     pr = emb.select("vec_id", "embedding", *[_proj(p) for p in range(JL_PLANES)])
     a = pr.select(
@@ -1811,12 +1751,7 @@ def jl_distance_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
         *[F.col(f"pj{p}").alias(f"pb{p}") for p in range(JL_PLANES)],
     )
     j = a.join(b, F.col("idb") == F.col("ida") + 1)
-    d2_orig = F.aggregate(
-        F.zip_with("ea", "eb", lambda x, y: (x.cast("double") - y.cast("double"))
-                   * (x.cast("double") - y.cast("double"))),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
+    d2_orig = V.sq_dist(F.col("ea"), F.col("eb"))
     d2_proj = None
     for p in range(JL_PLANES):
         term = (F.col(f"pa{p}") - F.col(f"pb{p}")) * (
@@ -2040,15 +1975,8 @@ KCENTER_K = 8
 
 
 def _d2_to_literal(seed_vec):
-    arr = F.array(*[F.lit(float(v)) for v in seed_vec])
-    return F.aggregate(
-        F.zip_with(
-            "embedding",
-            arr,
-            lambda x, s: (x.cast("double") - s) * (x.cast("double") - s),
-        ),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
+    return V.sq_dist(
+        F.col("embedding"), F.array(*[F.lit(float(v)) for v in seed_vec])
     )
 
 
@@ -2254,7 +2182,7 @@ FROM (SELECT mo.*, nn.n, s1 / CAST(nn.n AS DOUBLE) AS mu FROM mo, nn), hub
 # what contrastive and reranker training actually wants.
 #
 # Scale shape: the identical tiered md5 bucketing as
-# negative_sampling_pairs (_neg_bucket_chars — bucket count grows with
+# negative_sampling_pairs (_NEG_BUCKET_TIERS — bucket count grows with
 # the corpus, so the bucket self-join stays O(n x bucket_size), never
 # the O(n^2) all-pairs cross join a naive hard-negative miner does),
 # norms precomputed per ROW below the pair join (knn pattern), cosine
@@ -2268,7 +2196,7 @@ _HN_K = 2
 
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    chars = _neg_bucket_chars(emb.count())
+    chars = _tier_pct(emb.count(), _NEG_BUCKET_TIERS)
     bucket = F.substring(F.md5(F.col("vec_id").cast("string")), 1, chars)
     base = emb.select(
         "vec_id", "label", "embedding", bucket.alias("bucket")

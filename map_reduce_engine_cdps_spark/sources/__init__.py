@@ -1,7 +1,6 @@
 from map_reduce_engine_cdps_spark.sources.readers import (
     TABLES,
     load_table,
-    load_tables,
     read_csv_dir,
     read_image_dir,
     read_text_dir,
@@ -10,7 +9,6 @@ from map_reduce_engine_cdps_spark.sources.readers import (
 __all__ = [
     "TABLES",
     "load_table",
-    "load_tables",
     "read_csv_dir",
     "read_image_dir",
     "read_text_dir",

@@ -80,16 +80,6 @@ def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load_table(spark, sf_dir, name) for name in TABLES}
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql() queries."""
-    for name in TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
 def read_text_dir(spark: SparkSession, path: str, glob: str = "*.txt") -> DataFrame:
     """T1 — text directory scan (reference tasks/example_wordcount.py:9-13).
 

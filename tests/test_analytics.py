@@ -542,7 +542,8 @@ def test_pca_spectrum_identities(spark, sf_dir):
     import numpy as np
 
     from map_reduce_engine_cdps_spark.plans.similarity import (
-        _pca_moments,
+        _PCA_DIMS,
+        _tree_moments,
         pca_explained_variance,
     )
 
@@ -552,7 +553,7 @@ def test_pca_spectrum_identities(spark, sf_dir):
     assert all(evs[i] >= evs[i + 1] for i in range(len(evs) - 1))
     assert all(e >= 0 for e in evs)
     assert abs(rows[-1]["cumulative"] - 1.0) < 1e-6
-    cov = _pca_moments(spark, sf_dir)
+    _, cov = _tree_moments(spark, sf_dir, _PCA_DIMS)
     assert abs(sum(evs) - float(np.trace(cov))) < 1e-3
     # eigh reconstruction on the same matrix the query consumed
     w, v = np.linalg.eigh(cov)
@@ -701,14 +702,15 @@ def test_pca_variance_identity_matches_spectrum_sum(spark, sf_dir):
     import numpy as np
 
     from map_reduce_engine_cdps_spark.plans.similarity import (
-        _pca_moments,
+        _PCA_DIMS,
+        _tree_moments,
         pca_explained_variance,
         pca_variance_identity,
     )
 
     row = pca_variance_identity(spark, sf_dir).collect()[0]
     assert row["n_components"] == 64
-    cov = _pca_moments(spark, sf_dir)
+    _, cov = _tree_moments(spark, sf_dir, _PCA_DIMS)
     assert abs(row["eigenvalue_sum"] - float(np.trace(cov))) < 1e-3
     spectrum = sum(
         r["eigenvalue"] for r in pca_explained_variance(spark, sf_dir).collect()

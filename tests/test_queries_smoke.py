@@ -148,6 +148,36 @@ def test_connected_components_deep_chain_crosses_checkpoint_boundary(spark):
     assert got == {i: 0 for i in range(n)}
 
 
+@pytest.mark.parametrize(
+    "loop, rounds", [("connected_components", 3), ("connected_components_star", 1)]
+)
+def test_connected_components_round_cap_raises(spark, loop, rounds):
+    """Both CC loops stop at ``max_rounds`` short of the fixpoint on a
+    15-vertex path (min-label: 12 components after 3 rounds; star: 13
+    after 1). They must raise, naming the cap, instead of returning
+    those labels; a memo whose build raises caches nothing, and the
+    loop releases every state it persisted."""
+    import map_reduce_engine_cdps_spark.plans.dedup as D
+    from map_reduce_engine_cdps_spark.operators.state import _MEMOS, memo
+
+    n = 15
+    vertices = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "doc_a long, doc_b long"
+    )
+
+    def build(spark, sf_dir):
+        return getattr(D, loop)(vertices, pairs, max_rounds=rounds)
+
+    cached = memo(build, ())
+    jsc = spark.sparkContext._jsc.sc()
+    persisted = jsc.getPersistentRDDs().size()
+    with pytest.raises(RuntimeError, match=f"max_rounds={rounds}"):
+        cached(spark, "unused")
+    assert not [k for k in _MEMOS if k[1] is build]
+    assert jsc.getPersistentRDDs().size() <= persisted
+
+
 def test_embedding_near_dup_bucket_cap_binds(spark, tmp_path, monkeypatch):
     """Exercise the EMB_BUCKET_CAP path with the cap ACTIVE (at every
     certified SF it is inert): 40 identical vectors all land in one LSH

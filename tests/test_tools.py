@@ -1,5 +1,5 @@
 """Repository tooling: every `tools/<x>.py` the docs, the package or the
-tests name exists, the A/B tool compares a query against a git revision
+tests name exists, so does every package module README names, the A/B tool compares a query against a git revision
 and cleans up after itself, and bench.py times just the queries it is
 given without touching the round artifacts."""
 
@@ -18,6 +18,8 @@ from conftest import SF_DIR
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 # `git show REV:tools/x.py` citations point into history, not the tree
 _TOOL_REF = re.compile(r"(?<![:\w/])tools/(\w+)\.py")
+# README abbreviates the package as `m/`; history citations skip the same way
+_MODULE_REF = re.compile(r"(?<![:\w/])(?:m|map_reduce_engine_cdps_spark)/([\w/]+\.py)")
 
 
 def _texts():
@@ -35,6 +37,14 @@ def test_cited_tools_exist():
                 if not os.path.exists(os.path.join(REPO, "tools", f"{name}.py")):
                     missing.add((os.path.relpath(path, REPO), name))
     assert not missing
+
+
+def test_readme_cited_modules_exist():
+    with open(os.path.join(REPO, "README.md"), encoding="utf-8") as fh:
+        cited = set(_MODULE_REF.findall(fh.read()))
+    pkg = os.path.join(REPO, "map_reduce_engine_cdps_spark")
+    assert cited
+    assert not {p for p in cited if not os.path.exists(os.path.join(pkg, p))}
 
 
 def _worktrees() -> str:

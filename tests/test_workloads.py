@@ -8,8 +8,10 @@ from __future__ import annotations
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.compat.mapreduce import run_task
+from map_reduce_engine_cdps_spark.functions import vectors as V
 from map_reduce_engine_cdps_spark.plans.workloads import (
     acc_map,
     acc_reduce,
@@ -401,6 +403,104 @@ def test_lsh_bucket_and_norm_arrow_bitwise_equal_fold(spark, sf_dir):
         .collect()[0][0]
     )
     assert mx == 0.0
+
+
+def _inline_fold(arr):
+    return F.aggregate(arr, F.lit(0.0), lambda acc, v: acc + v)
+
+
+def _d(x):
+    return x.cast("double")
+
+
+# (shared vectors.py fold, the inline formulation it replaced), each a
+# function of (ea, eb, lit): two real embeddings and a literal double
+# array (a centroid / seed / sign row in the plans).
+_FOLD_CASES = {
+    # rrf_fusion_topk seed dot, jl_distance_distortion projections
+    "dot_literal": (
+        lambda ea, eb, lit: V.dot(ea, lit),
+        lambda ea, eb, lit: _inline_fold(
+            F.zip_with(ea, lit, lambda x, s: _d(x) * s)
+        ),
+    ),
+    # rrf_fusion_topk norm, doc_embeddings sq_norm
+    "self_dot": (
+        lambda ea, eb, lit: V.dot(ea, ea),
+        lambda ea, eb, lit: _inline_fold(
+            F.transform(ea, lambda x: _d(x) * _d(x))
+        ),
+    ),
+    # kmeans _assign
+    "sq_dist_literal": (
+        lambda ea, eb, lit: V.sq_dist(ea, lit),
+        lambda ea, eb, lit: _inline_fold(
+            F.zip_with(ea, lit, lambda a, b: (a - b) * (a - b))
+        ),
+    ),
+    # _d2_to_literal
+    "sq_dist_literal_cast": (
+        lambda ea, eb, lit: V.sq_dist(ea, lit),
+        lambda ea, eb, lit: _inline_fold(
+            F.zip_with(ea, lit, lambda x, s: (_d(x) - s) * (_d(x) - s))
+        ),
+    ),
+    # pq_quantize_stats (double codeword)
+    "sq_dist_double": (
+        lambda ea, eb, lit: V.sq_dist(ea, F.transform(eb, _d)),
+        lambda ea, eb, lit: _inline_fold(
+            F.zip_with(
+                ea, F.transform(eb, _d), lambda a, b: (_d(a) - b) * (_d(a) - b)
+            )
+        ),
+    ),
+    # jl_distance_distortion d2_orig
+    "sq_dist_pair": (
+        lambda ea, eb, lit: V.sq_dist(ea, eb),
+        lambda ea, eb, lit: _inline_fold(
+            F.zip_with(ea, eb, lambda x, y: (_d(x) - _d(y)) * (_d(x) - _d(y)))
+        ),
+    ),
+    # the multimodal feat_sum columns
+    "array_sum": (
+        lambda ea, eb, lit: V.array_sum(ea),
+        lambda ea, eb, lit: _inline_fold(F.transform(ea, _d)),
+    ),
+    # embedding_quantize_stats MAE numerator
+    "array_sum_abs_diff": (
+        lambda ea, eb, lit: V.array_sum(
+            F.zip_with(F.transform(ea, _d), lit, lambda a, b: F.abs(a - b))
+        ),
+        lambda ea, eb, lit: _inline_fold(
+            F.zip_with(F.transform(ea, _d), lit, lambda a, b: F.abs(a - b))
+        ),
+    ),
+}
+
+
+@pytest.mark.parametrize("case", sorted(_FOLD_CASES))
+def test_vector_folds_bitwise_equal_inline_formulations(spark, sf_dir, case):
+    """Each shared fold in functions/vectors.py returns the same double
+    (``==``, no tolerance) as the inline fold it replaced, on real
+    embedding pairs: same element operations, same left-to-right
+    addition order."""
+    from map_reduce_engine_cdps_spark.sources.readers import load_table
+
+    helper, inline = _FOLD_CASES[case]
+    emb = load_table(spark, sf_dir, "embeddings")
+    seed = emb.orderBy("vec_id").first()["embedding"]
+    lit = F.array(*[F.lit(float(v) * 0.5 - 0.125) for v in seed])
+    a = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea"))
+    b = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
+    pairs = a.join(b, F.col("ia") % 17 == F.col("ib") % 17).limit(5000)
+    ea, eb = F.col("ea"), F.col("eb")
+    row = pairs.select(
+        helper(ea, eb, lit).alias("h"), inline(ea, eb, lit).alias("p")
+    ).agg(
+        F.count("h").alias("n"),
+        F.sum((~F.col("h").eqNullSafe(F.col("p"))).cast("int")).alias("bad"),
+    ).first()
+    assert row["n"] > 1000 and row["bad"] == 0, row
 
 
 def test_arrow_twins_survive_empty_partitions(spark):

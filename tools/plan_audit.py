@@ -140,25 +140,6 @@ def exchange_payload_types(df) -> list[tuple[str, str, str]]:
     return out
 
 
-# Dedup-family plans must never move an array-of-string across an
-# exchange: shingle sets cross the single banded shuffle as hashed longs
-# (plans/dedup.py), and every pair row downstream is scalar-only. A
-# string-array payload reappearing here is the spill-boundary regression
-# the round-2/3 drivers measured (31.4 s vs 2.1 s at sf1, same code).
-ARRAY_STRING_EXCHANGE_BAN = [
-    "minhash_signatures",
-    "minhash_lsh_pairs",
-    "minhash_containment",
-    "ngram_jaccard_topk",
-    "near_dup_clusters",
-    "duplicate_spans",
-    "edit_distance_pairs",
-    "cross_source_leakage",
-    "dup_graph_triangles",
-    "customer_record_linkage",
-]
-
-
 # A map-side partial WindowGroupLimit with a small limit BELOW a rank
 # exchange caps the exchange payload at limit rows per key —
 # corpus×limit, not the K-fold blow-up the rank audit exists for
