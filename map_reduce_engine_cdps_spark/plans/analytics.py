@@ -21,6 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.functions import exact as EX
+from map_reduce_engine_cdps_spark.plans.relational import SESSION_GAP_S, sessionized
 from map_reduce_engine_cdps_spark.sources.readers import load_table
 
 
@@ -1197,24 +1198,15 @@ HAVING count(*) >= 3
 # ---------------------------------------------------------------------------
 # top_session_paths — clickstream path analysis: the ordered
 # event-type journey of each 30-minute session, ranked by frequency.
-# Session assembly reuses the user_sessions gaps-and-islands program
-# (same single user_id shuffle, both windows share the sort); the path
-# string is built from a sorted in-group collect — bounded by session
-# length, never a cross-partition sort.
+# Session assembly is relational.sessionized, the gaps-and-islands
+# program user_sessions runs (same single user_id shuffle, both windows
+# share the sort); the path string is built from a sorted in-group
+# collect — bounded by session length, never a cross-partition sort.
 # ---------------------------------------------------------------------------
 
 
 def top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    sess = ev.withColumn("new_sess", new_sess).withColumn(
-        "session_idx",
-        F.sum("new_sess").over(w.rowsBetween(W.unboundedPreceding, 0)),
-    )
+    sess = sessionized(load_table(spark, sf_dir, "events"))
     paths = sess.groupBy("user_id", "session_idx").agg(
         F.array_join(
             F.transform(
@@ -1232,12 +1224,12 @@ def top_session_paths(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-TOP_SESSION_PATHS_SQL = """
+TOP_SESSION_PATHS_SQL = f"""
 WITH g AS (
   SELECT user_id, event_id, ts, event_type,
          CASE WHEN lag(ts) OVER w IS NULL
                 OR epoch(date_trunc('second', ts))
-                 - epoch(date_trunc('second', lag(ts) OVER w)) > 1800
+                 - epoch(date_trunc('second', lag(ts) OVER w)) > {SESSION_GAP_S}
               THEN 1 ELSE 0 END AS new_sess
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)

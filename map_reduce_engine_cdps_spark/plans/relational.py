@@ -17,6 +17,7 @@ from pyspark.sql import functions as F
 from map_reduce_engine_cdps_spark.functions import exact as EX
 from map_reduce_engine_cdps_spark.functions import expressions as X
 from map_reduce_engine_cdps_spark.sources.readers import load_table
+from map_reduce_engine_cdps_spark.streaming.windows import windowed_aggregate
 
 
 # ---------------------------------------------------------------------------
@@ -721,23 +722,16 @@ FROM t GROUP BY 1
 
 # ---------------------------------------------------------------------------
 # tumbling_window_counts — 5-minute tumbling windows over events, expressed
-# in batch (the same transform backs the Structured Streaming wing,
-# streaming/windows.py). Window start rendered as a string so the hash is
-# timezone-representation-proof.
+# in batch (windowed_aggregate also runs the Structured Streaming twin,
+# streaming/windows.py:streaming_window_counts). Window start rendered as a
+# string so the hash is timezone-representation-proof.
 # ---------------------------------------------------------------------------
 
 def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    win = F.window("ts", "5 minutes")
-    return (
-        ev.groupBy(win.alias("win"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
+    return windowed_aggregate(
+        load_table(spark, sf_dir, "events"),
+        [F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value")],
+        "5 minutes",
     )
 
 
@@ -757,20 +751,26 @@ FROM events GROUP BY 1, 2
 # Spark reuses the sort; shuffle is one exchange on user_id.
 # ---------------------------------------------------------------------------
 
-def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
+SESSION_GAP_S = 1800
+
+
+def sessionized(ev: DataFrame) -> DataFrame:
+    """``ev`` plus ``session_idx``: per user, in (ts, event_id) order, the
+    running count of gaps longer than SESSION_GAP_S (whole seconds); the
+    first event opens session 1."""
     w = W.partitionBy("user_id").orderBy("ts", "event_id")
     gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    sess = (
-        ev.withColumn("new_sess", new_sess)
-        .withColumn(
-            "session_idx",
-            F.sum("new_sess").over(w.rowsBetween(W.unboundedPreceding, 0)),
-        )
+    new_sess = F.when(gap.isNull() | (gap > SESSION_GAP_S), 1).otherwise(0)
+    return ev.withColumn("new_sess", new_sess).withColumn(
+        "session_idx",
+        F.sum("new_sess").over(w.rowsBetween(W.unboundedPreceding, 0)),
     )
+
+
+def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
-        sess.groupBy("user_id", "session_idx")
+        sessionized(load_table(spark, sf_dir, "events"))
+        .groupBy("user_id", "session_idx")
         .agg(
             F.count(F.lit(1)).alias("n_events"),
             F.round(
@@ -780,12 +780,12 @@ def user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-USER_SESSIONS_SQL = """
+USER_SESSIONS_SQL = f"""
 WITH g AS (
   SELECT user_id, event_id, ts,
          CASE WHEN lag(ts) OVER w IS NULL
                 OR epoch(date_trunc('second', ts))
-                 - epoch(date_trunc('second', lag(ts) OVER w)) > 1800
+                 - epoch(date_trunc('second', lag(ts) OVER w)) > {SESSION_GAP_S}
               THEN 1 ELSE 0 END AS new_sess
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)
@@ -1090,17 +1090,11 @@ JOIN (SELECT * FROM events WHERE event_type = 'purchase') p
 # ---------------------------------------------------------------------------
 
 def sliding_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    win = F.window("ts", "10 minutes", "5 minutes")
-    return (
-        ev.groupBy(win.alias("win"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
+    return windowed_aggregate(
+        load_table(spark, sf_dir, "events"),
+        [F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value")],
+        "10 minutes",
+        "5 minutes",
     )
 
 
@@ -2257,16 +2251,11 @@ WHERE (max_prev IS NULL OR o_totalprice > max_prev)
 
 
 def sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    win = F.window("ts", "10 minutes", "5 minutes")
-    return (
-        ev.groupBy(win.alias("win"), F.col("event_type"))
-        .agg(F.count_distinct("user_id").alias("n_users"))
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_users",
-        )
+    return windowed_aggregate(
+        load_table(spark, sf_dir, "events"),
+        [F.count_distinct("user_id").alias("n_users")],
+        "10 minutes",
+        "5 minutes",
     )
 
 
@@ -2293,22 +2282,14 @@ FROM assigned GROUP BY 1, 2
 
 
 def windowed_p95_value(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, sf_dir, "events")
-    win = F.window("ts", "5 minutes")
-    return (
-        ev.groupBy(win.alias("win"), F.col("event_type"))
-        .agg(
+    return windowed_aggregate(
+        load_table(spark, sf_dir, "events"),
+        [
             F.count(F.lit(1)).alias("n"),
             F.round(F.expr("percentile(value, 0.5)"), 4).alias("p50"),
             F.round(F.expr("percentile(value, 0.95)"), 4).alias("p95"),
-        )
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-            "p50",
-            "p95",
-        )
+        ],
+        "5 minutes",
     )
 
 
@@ -3251,16 +3232,9 @@ FROM agg
 # ---------------------------------------------------------------------------
 
 def _session_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(user_id, session_idx, start_ts, end_ts) with the same 30-min
-    gap sessionization as user_sessions."""
-    ev = load_table(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy("ts", "event_id")
-    gap = F.unix_timestamp("ts") - F.unix_timestamp(F.lag("ts").over(w))
-    new_sess = F.when(gap.isNull() | (gap > 1800), 1).otherwise(0)
-    sess = ev.withColumn("new_sess", new_sess).withColumn(
-        "session_idx",
-        F.sum("new_sess").over(w.rowsBetween(W.unboundedPreceding, 0)),
-    )
+    """(user_id, session_idx, start_ts, end_ts) of the user_sessions
+    sessions."""
+    sess = sessionized(load_table(spark, sf_dir, "events"))
     return sess.groupBy("user_id", "session_idx").agg(
         F.min("ts").alias("start_ts"), F.max("ts").alias("end_ts")
     )
@@ -3323,12 +3297,12 @@ def max_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-MAX_CONCURRENT_SESSIONS_SQL = """
+MAX_CONCURRENT_SESSIONS_SQL = f"""
 WITH g AS (
   SELECT user_id, event_id, ts,
          CASE WHEN lag(ts) OVER w IS NULL
                 OR epoch(date_trunc('second', ts))
-                 - epoch(date_trunc('second', lag(ts) OVER w)) > 1800
+                 - epoch(date_trunc('second', lag(ts) OVER w)) > {SESSION_GAP_S}
               THEN 1 ELSE 0 END AS new_sess
   FROM events
   WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id)

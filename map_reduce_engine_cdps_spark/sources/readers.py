@@ -27,8 +27,8 @@ TABLES = (
 )
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Parquet table from a test-data scale-factor directory.
+def events_ts(df: DataFrame) -> DataFrame:
+    """Normalize ``events.ts`` — batch or stream — to TimestampType.
 
     ``events.ts`` has been written two ways by the data generator:
     parquet TIMESTAMP(NANOS) (Spark's vectorized reader rejects it —
@@ -36,7 +36,23 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     plain TIMESTAMP_NTZ. Either way the downstream contract is a
     session-tz TimestampType column whose UTC instant equals the stored
     wall-clock, so watermarks/windows/unix_micros all behave identically
-    to the DuckDB oracle (which is tz-naive).
+    to the DuckDB oracle (which is tz-naive). Expects the session confs
+    ``load_table`` sets.
+    """
+    ts_type = dict(df.dtypes).get("ts")
+    if ts_type == "bigint":
+        # integer div: `/` is double division and drifts ±1µs at ns
+        # magnitudes (53-bit mantissa); DuckDB truncates ns→µs, so must we
+        return df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
+    if ts_type == "timestamp_ntz":
+        # wall-clock-is-UTC: under the UTC session tz the NTZ→LTZ
+        # cast keeps the instant
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """Parquet table from a test-data scale-factor directory.
 
     NOTE: this mutates two session confs on the caller's SparkSession
     (nanosAsLong for the legacy-nanos parquet layout, and
@@ -48,17 +64,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
-    if name == "events":
-        ts_type = dict(df.dtypes).get("ts")
-        if ts_type == "bigint":
-            # integer div: `/` is double division and drifts ±1µs at ns
-            # magnitudes (53-bit mantissa); DuckDB truncates ns→µs, so must we
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
-        elif ts_type == "timestamp_ntz":
-            # wall-clock-is-UTC: under the UTC session tz the NTZ→LTZ
-            # cast keeps the instant
-            df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    return df
+    return events_ts(df) if name == "events" else df
 
 
 def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

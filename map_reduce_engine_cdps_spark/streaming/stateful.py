@@ -24,8 +24,14 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+
+from map_reduce_engine_cdps_spark.streaming.windows import (
+    _drain,
+    stream_events_from_parquet,
+)
 
 SESSION_GAP_US = 30 * 60 * 1_000_000
 
@@ -89,33 +95,15 @@ def stateful_user_sessions(stream: DataFrame) -> DataFrame:
     )
 
 
-def run_stateful_sessions(
-    spark: SparkSession, sf_dir: str, table: str = "stateful_sessions_out"
-) -> DataFrame:
-    from map_reduce_engine_cdps_spark.streaming.windows import (
-        stream_events_from_parquet,
-    )
-
-    stream = stream_events_from_parquet(spark, sf_dir)
-    out = stateful_user_sessions(stream)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table(table)
-
-
 def streaming_user_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry. Counts are per-user monotone, so the latest state
     emission per user is its max — collapsing multi-microbatch replays
     to the same final answer the batch SQL computes."""
-    import pyspark.sql.functions as F
-
-    sink = run_stateful_sessions(spark, sf_dir)
+    sink = _drain(
+        stateful_user_sessions(stream_events_from_parquet(spark, sf_dir)),
+        "stateful_sessions_out",
+        "update",
+    )
     return sink.groupBy("user_id").agg(
         F.max("n_sessions").alias("n_sessions"),
         F.max("n_events").alias("n_events"),

@@ -1,64 +1,70 @@
 """Structured Streaming wing (SURVEY.md §2.8/§7 step 8 — the reference
 is strictly batch; this is the declared extension).
 
-One transform, two execution modes: ``windowed_counts`` is written
-against an unbounded-compatible plan (event-time tumbling window +
-watermark), so the identical function serves the batch oracle-checked
-query (plans/relational.py:tumbling_window_counts) and a real
-``readStream`` pipeline. Tests run the stream from the same parquet via
-file-source + memory-sink and assert equality with the batch result.
+One transform, two execution modes: ``windowed_aggregate`` (event-time
+window, plus a watermark when its input is a stream) serves both the
+four batch oracle-checked window queries (plans/relational.py:tumbling_window_counts
+and three more) and four ``readStream`` pipelines here. Every stream here
+runs file source → ``_drain`` (memory sink, availableNow trigger). Tests
+assert each streaming twin equals its batch query.
 """
 
 from __future__ import annotations
 
-import os
-import tempfile
-
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from map_reduce_engine_cdps_spark.sources.readers import load_table
+from map_reduce_engine_cdps_spark.sources.readers import events_ts, load_table
+
+DRAIN_TIMEOUT_S = 120
 
 
-def windowed_counts(events: DataFrame, window: str = "5 minutes",
-                    watermark: str = "10 minutes") -> DataFrame:
-    """Tumbling event-time window counts with late-data watermark."""
-    src = events
+def windowed_aggregate(events: DataFrame, aggs: list[Column], window: str,
+                       slide: str | None = None, key: str = "event_type") -> DataFrame:
+    """``aggs`` per (event-time window, ``key``), tumbling or sliding by
+    ``slide``. A stream gets a 10-minute late-data watermark. The window
+    start is rendered as a string (the DuckDB oracles strftime the same
+    format), so the hash is timezone-representation-proof."""
     if events.isStreaming:
-        src = events.withWatermark("ts", watermark)
-    return (
-        src.groupBy(F.window("ts", window).alias("win"), F.col("event_type"))
-        .agg(F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n",
-            "sum_value",
-        )
+        events = events.withWatermark("ts", "10 minutes")
+    out = events.groupBy(F.window("ts", window, slide).alias("win"), F.col(key)).agg(*aggs)
+    return out.select(
+        F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
+        *out.columns[1:],
     )
 
 
+def _drain(out: DataFrame, name: str, mode: str) -> DataFrame:
+    """Run the stream ``out`` to completion (availableNow) into the
+    memory sink ``name`` and return the sink's contents. Raises if the
+    stream has not finished within DRAIN_TIMEOUT_S; the query is stopped
+    either way."""
+    q = (
+        out.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(mode)
+        .trigger(availableNow=True)
+        .start()
+    )
+    try:
+        if not q.awaitTermination(DRAIN_TIMEOUT_S):
+            raise RuntimeError(f"stream {name} unfinished after {DRAIN_TIMEOUT_S} s")
+    finally:
+        q.stop()
+    return out.sparkSession.table(name)
+
+
 def stream_events_from_parquet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events table (schema pinned from the
-    batch read; ts arrives as nanos → converted like the batch path)."""
+    """File-source stream over ``sf_dir``'s single-file events table (the
+    glob filter keeps the other tables out), schema pinned from the batch
+    read, ts normalized by the batch path's ``events_ts``."""
     batch = load_table(spark, sf_dir, "events")
     raw_schema = spark.read.parquet(f"{sf_dir}/events.parquet").schema
-    # The file stream source requires a *directory*; expose the single
-    # parquet file through a scratch dir of symlinks (testdata stays
-    # untouched).
-    stage = tempfile.mkdtemp(prefix="events_stream_")
-    link = os.path.join(stage, "events.parquet")
-    if not os.path.exists(link):
-        os.symlink(os.path.abspath(f"{sf_dir}/events.parquet"), link)
-    stream = spark.readStream.schema(raw_schema).parquet(stage)
-    ts_type = dict(stream.dtypes).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn(
-            "ts", F.timestamp_micros(F.expr("ts div 1000"))
-        )
-    elif ts_type == "timestamp_ntz":
-        spark.conf.set("spark.sql.session.timeZone", "UTC")
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
+    stream = events_ts(
+        spark.readStream.schema(raw_schema)
+        .option("pathGlobFilter", "events.parquet")
+        .parquet(sf_dir)
+    )
     assert stream.schema == batch.schema
     return stream
 
@@ -76,15 +82,7 @@ def streaming_dedup_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     out = stream.select("user_id", "event_type").dropDuplicates(
         ["user_id", "event_type"]
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("streaming_dedup_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table("streaming_dedup_out")
+    return _drain(out, "streaming_dedup_out", "append")
 
 
 STREAMING_DEDUP_EVENTS_SQL = """
@@ -101,36 +99,17 @@ def streaming_segment_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     only ever shuffles on the aggregate keys.
     Oracle: the identical join + bucketed agg in batch SQL.
     """
-    stream = stream_events_from_parquet(spark, sf_dir).withWatermark(
-        "ts", "10 minutes"
-    )
     cust = (
         load_table(spark, sf_dir, "customer")
         .select(F.col("c_custkey").alias("user_id"), "c_mktsegment")
     )
-    out = (
-        stream.join(F.broadcast(cust), "user_id")
-        .groupBy(F.window("ts", "15 minutes").alias("win"), F.col("c_mktsegment"))
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.sum("value"), 2).alias("sum_value"),
-        )
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "c_mktsegment",
-            "n",
-            "sum_value",
-        )
+    out = windowed_aggregate(
+        stream_events_from_parquet(spark, sf_dir).join(F.broadcast(cust), "user_id"),
+        [F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value")],
+        "15 minutes",
+        key="c_mktsegment",
     )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("streaming_segment_counts_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table("streaming_segment_counts_out")
+    return _drain(out, "streaming_segment_counts_out", "complete")
 
 
 STREAMING_SEGMENT_COUNTS_SQL = """
@@ -142,30 +121,18 @@ GROUP BY 1, 2
 """
 
 
-def run_stream_to_memory(spark: SparkSession, sf_dir: str, table: str = "stream_out",
-                         window: str = "5 minutes") -> DataFrame:
-    """Drive the streaming pipeline to completion (availableNow) into a
-    memory sink; returns the sink contents as a DataFrame."""
-    stream = stream_events_from_parquet(spark, sf_dir)
-    out = windowed_counts(stream, window=window)
-    q = (
-        out.writeStream.format("memory")
-        .queryName(table)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table(table)
-
-
 def streaming_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Registry entry: the real Structured Streaming path (file source →
     watermark → tumbling window → memory sink, availableNow trigger).
     Oracle-checked against the SAME DuckDB SQL as the batch twin
     (plans/relational.py:TUMBLING_WINDOW_COUNTS_SQL) — the streaming and
     batch plans must agree exactly."""
-    return run_stream_to_memory(spark, sf_dir, table="streaming_window_counts_out")
+    out = windowed_aggregate(
+        stream_events_from_parquet(spark, sf_dir),
+        [F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 2).alias("sum_value")],
+        "5 minutes",
+    )
+    return _drain(out, "streaming_window_counts_out", "complete")
 
 
 def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -219,15 +186,7 @@ def streaming_click_purchase_join(spark: SparkSession, sf_dir: str) -> DataFrame
             (F.unix_micros("p_ts") - F.unix_micros("c_ts")) / 1e6, 2
         ).alias("gap_s"),
     )
-    q = (
-        joined.writeStream.format("memory")
-        .queryName("streaming_cp_join_out")
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table("streaming_cp_join_out")
+    return _drain(joined, "streaming_cp_join_out", "append")
 
 
 def streaming_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -241,30 +200,13 @@ def streaming_sliding_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     the SAME DuckDB SQL as the batch twin
     (plans/relational.py:SLIDING_DISTINCT_USERS_SQL), so both
     execution models must agree window-for-window."""
-    stream = stream_events_from_parquet(spark, sf_dir).withWatermark(
-        "ts", "10 minutes"
+    out = windowed_aggregate(
+        stream_events_from_parquet(spark, sf_dir),
+        [F.size(F.collect_set("user_id")).alias("n_users")],
+        "10 minutes",
+        "5 minutes",
     )
-    out = (
-        stream.groupBy(
-            F.window("ts", "10 minutes", "5 minutes").alias("win"),
-            F.col("event_type"),
-        )
-        .agg(F.size(F.collect_set("user_id")).alias("n_users"))
-        .select(
-            F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-            "event_type",
-            "n_users",
-        )
-    )
-    q = (
-        out.writeStream.format("memory")
-        .queryName("streaming_sliding_distinct_out")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    return spark.table("streaming_sliding_distinct_out")
+    return _drain(out, "streaming_sliding_distinct_out", "complete")
 
 
 def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -279,19 +221,12 @@ def streaming_trending_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: streaming state is O(open windows × event types); the rank
     runs over the compact agg output, never the event stream.
     """
-    stream = stream_events_from_parquet(spark, sf_dir)
-    agg = windowed_counts(stream, window="1 hour", watermark="10 minutes")
-    q = (
-        agg.writeStream.format("memory")
-        .queryName("trending_topk_agg")
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
     from pyspark.sql import Window as W
 
-    sink = spark.table("trending_topk_agg")
+    agg = windowed_aggregate(
+        stream_events_from_parquet(spark, sf_dir), [F.count(F.lit(1)).alias("n")], "1 hour"
+    )
+    sink = _drain(agg, "trending_topk_agg", "complete")
     w = W.partitionBy("window_start").orderBy(F.desc("n"), F.asc("event_type"))
     return (
         sink.withColumn("rank", F.row_number().over(w))

@@ -3,8 +3,13 @@ the one-vs-one ML pipeline."""
 
 from __future__ import annotations
 
+import os
+import tempfile
+from collections import Counter
+
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.streaming.query import StreamingQuery
 
 from map_reduce_engine_cdps_spark.multimodal.binary import (
     FEATURE_DIM,
@@ -12,8 +17,11 @@ from map_reduce_engine_cdps_spark.multimodal.binary import (
     synth_media_df,
 )
 from map_reduce_engine_cdps_spark.operators.mlpipeline import train_one_vs_one
-from map_reduce_engine_cdps_spark.plans.relational import tumbling_window_counts
-from map_reduce_engine_cdps_spark.streaming.windows import run_stream_to_memory
+from map_reduce_engine_cdps_spark.plans.registry import get_query
+from map_reduce_engine_cdps_spark.streaming.windows import (
+    streaming_click_purchase_join,
+    streaming_window_counts,
+)
 
 
 def test_media_feature_extraction_plumbing(spark):
@@ -120,16 +128,41 @@ def test_media_metadata_stays_typed(spark):
     assert all(r["mime"] == "image/fake" and r["n_bytes"] > 0 for r in meta)
 
 
-def test_streaming_windowed_counts_match_batch(spark, sf_dir):
-    batch = {
-        (r["window_start"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in tumbling_window_counts(spark, sf_dir).collect()
-    }
-    streamed = {
-        (r["window_start"], r["event_type"]): (r["n"], r["sum_value"])
-        for r in run_stream_to_memory(spark, sf_dir, table="t_stream_eq").collect()
-    }
-    assert streamed == batch
+@pytest.mark.parametrize(
+    "batch_query, stream_query",
+    [
+        pytest.param(b, s, id=s)
+        for b, s in [
+            ("tumbling_window_counts", "streaming_window_counts"),
+            ("sliding_distinct_users", "streaming_sliding_distinct"),
+            ("click_purchase_within_1h", "streaming_click_purchase_join"),
+        ]
+    ],
+)
+def test_streaming_twin_matches_batch(spark, sf_dir, batch_query, stream_query):
+    """Each streaming twin shares its batch query's oracle, so the two
+    execution modes must return the same rows."""
+    batch = get_query(batch_query)(spark, sf_dir)
+    streamed = get_query(stream_query)(spark, sf_dir)
+    assert streamed.columns == batch.columns
+    rows = Counter(map(tuple, batch.collect()))
+    assert rows
+    assert Counter(map(tuple, streamed.collect())) == rows
+
+
+def test_stream_drain_raises_and_stops_on_timeout(spark, sf_dir, monkeypatch):
+    """A stream still running at the drain timeout must not hand back a
+    half-filled memory table, nor keep running."""
+    monkeypatch.setattr(StreamingQuery, "awaitTermination", lambda self, timeout=None: False)
+    with pytest.raises(RuntimeError, match="streaming_window_counts_out"):
+        streaming_window_counts(spark, sf_dir)
+    assert spark.streams.active == []
+
+
+def test_stream_reads_leave_no_temp_dirs(spark, sf_dir, tmp_path, monkeypatch):
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert streaming_click_purchase_join(spark, sf_dir).count() > 0
+    assert not [p for p in os.listdir(tmp_path) if p.startswith("events_stream_")]
 
 
 def test_one_vs_one_training(spark, sf_dir, tmp_path):

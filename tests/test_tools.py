@@ -1,10 +1,12 @@
 """Repository tooling: every `tools/<x>.py` the docs, the package or the
-tests name exists, so does every package module README names, the A/B tool compares a query against a git revision
+tests name exists, so does every package module README names, every
+`<pkgdir>/<file>.py:<name>` citation names a top-level definition, the A/B tool compares a query against a git revision
 and cleans up after itself, and bench.py times just the queries it is
 given without touching the round artifacts."""
 
 from __future__ import annotations
 
+import ast
 import glob
 import json
 import os
@@ -20,6 +22,9 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _TOOL_REF = re.compile(r"(?<![:\w/])tools/(\w+)\.py")
 # README abbreviates the package as `m/`; history citations skip the same way
 _MODULE_REF = re.compile(r"(?<![:\w/])(?:m|map_reduce_engine_cdps_spark)/([\w/]+\.py)")
+_NAME_REF = re.compile(
+    r"(?<![:\w/])(?:(?:m|map_reduce_engine_cdps_spark)/)?(\w+)/(\w+)\.py:([A-Za-z_]\w*)"
+)
 
 
 def _texts():
@@ -39,12 +44,41 @@ def test_cited_tools_exist():
     assert not missing
 
 
+def _top_level_names(path: str) -> set[str]:
+    with open(path, encoding="utf-8") as fh:
+        tree = ast.parse(fh.read())
+    names = set()
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+            names.add(node.name)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            names.update(t.id for t in targets if isinstance(t, ast.Name))
+    return names
+
+
 def test_readme_cited_modules_exist():
     with open(os.path.join(REPO, "README.md"), encoding="utf-8") as fh:
         cited = set(_MODULE_REF.findall(fh.read()))
     pkg = os.path.join(REPO, "map_reduce_engine_cdps_spark")
     assert cited
     assert not {p for p in cited if not os.path.exists(os.path.join(pkg, p))}
+    # `<pkgdir>/<file>.py:<name>` must name a top-level def, class or
+    # assignment of that module
+    pkgdirs = {d for d in os.listdir(pkg) if os.path.isdir(os.path.join(pkg, d))}
+    names, bad = {}, set()
+    for path in _texts():
+        with open(os.path.join(REPO, path), encoding="utf-8") as fh:
+            for d, f, name in _NAME_REF.findall(fh.read()):
+                if d not in pkgdirs:
+                    continue
+                mod = os.path.join(pkg, d, f"{f}.py")
+                if mod not in names:
+                    names[mod] = _top_level_names(mod) if os.path.exists(mod) else set()
+                if name not in names[mod]:
+                    bad.add((os.path.relpath(path, REPO), f"{d}/{f}.py:{name}"))
+    assert names
+    assert not bad
 
 
 def _worktrees() -> str:
