@@ -1,9 +1,12 @@
 """Vector column functions for embedding similarity (SURVEY.md §7 step 7).
 
-All math is expressed with built-in higher-order array functions
-(zip_with / aggregate / transform), evaluated JVM-side in index order —
-bit-reproducible against the DuckDB oracle's list_transform/list_sum,
-and codegen-friendly (no Python round-trip per row).
+The reference formulations (array_sum / dot / norm / sq_dist /
+lsh_bucket) are built-in higher-order array functions (zip_with /
+aggregate / transform), evaluated JVM-side in index order —
+bit-reproducible against the DuckDB oracle's list_transform/list_sum.
+Their Arrow twins and grouped kernels run the same arithmetic in numpy
+through one left-to-right fold, :func:`_fold`, and return the same
+doubles bit for bit.
 """
 
 from __future__ import annotations
@@ -42,12 +45,35 @@ def sq_dist(a: Column, b: Column) -> Column:
     return array_sum(F.zip_with(a, b, sq))
 
 
-def _stack_fixed_dim(s: pd.Series, mask: np.ndarray) -> np.ndarray:
-    """vstack the masked-in rows of an array column, with a clear error
-    for ragged inputs. The JVM twins treat a NULL array as NULL output
-    (handled by the caller's mask); a RAGGED batch has no JVM-identical
-    vectorized answer, so it is a precondition violation, not data."""
-    vals = s[mask].to_numpy()
+# Raw-cosine pre-filter margin of the grouped kernels: F.round(x, 6)
+# moves a value by at most 5e-7, so a raw cutoff lowered by this much
+# never drops a pair the exact JVM-rounded comparison would keep.
+RAW_COS_MARGIN = 1e-6
+
+
+def _fold(x: np.ndarray) -> np.ndarray:
+    """Sum over the last axis strictly left to right, ((x0 + x1) + x2) + ….
+
+    The one numpy fold of every Arrow twin and grouped kernel below, and
+    the whole of their bit-exactness contract: ``np.cumsum`` adds in
+    index order — the order of :func:`array_sum`'s ``F.aggregate`` and
+    of DuckDB ``list_sum`` — so, fed the same float64 products, it
+    returns the same doubles bit for bit (``np.sum`` adds pairwise and
+    does not). An empty last axis folds to 0.0, the fold's initial
+    value. Rounding stays JVM-side (F.round): np.round ties
+    half-to-even."""
+    if x.shape[-1] == 0:
+        return np.zeros(x.shape[:-1])
+    return np.cumsum(x, axis=-1)[..., -1]
+
+
+def _stack_fixed_dim(vals: pd.Series) -> np.ndarray:
+    """vstack an array column's (non-NULL) rows as float64, with a clear
+    error for ragged inputs. The JVM twins treat a NULL array as NULL
+    output (the caller masks those out); a RAGGED batch has no
+    JVM-identical vectorized answer, so it is a precondition violation,
+    not data."""
+    vals = vals.to_numpy()
     try:
         return np.vstack(vals).astype(np.float64)
     except ValueError as exc:
@@ -57,6 +83,26 @@ def _stack_fixed_dim(s: pd.Series, mask: np.ndarray) -> np.ndarray:
             f"batch contains dims {sorted(dims)} — use the interpreted "
             "fold (vectors.dot/norm/lsh_bucket) for ragged arrays"
         ) from exc
+
+
+def _members(pdf: pd.DataFrame) -> tuple[pd.DataFrame, np.ndarray, np.ndarray]:
+    """A group's members for the grouped kernels: rows with a non-NULL
+    embedding sorted by vec_id, their float64 matrix and their L2 norms
+    (the correctly-rounded IEEE sqrt of the fold, like :func:`norm`).
+    A NULL embedding has no cosine, so its row is dropped; the
+    embeddings table contains none."""
+    pdf = pdf[pdf["embedding"].notna()].sort_values("vec_id")
+    if pdf.empty:
+        return pdf, np.zeros((0, 0)), np.zeros(0)
+    M = _stack_fixed_dim(pdf["embedding"])
+    return pdf, M, np.sqrt(_fold(M * M))
+
+
+def _pair_cos(M: np.ndarray, nrm: np.ndarray, i, j) -> np.ndarray:
+    """Raw cosine of member pairs (i, j): the fold of the float64
+    products over the product of the norms — the same IEEE operations,
+    in the same order, as ``V.dot(a, b) / (V.norm(a) * V.norm(b))``."""
+    return _fold(M[i] * M[j]) / (nrm[i] * nrm[j])
 
 
 def _with_nulls(out: np.ndarray, mask: np.ndarray) -> pd.Series:
@@ -71,30 +117,22 @@ def dot_arrow() -> "object":
 
     Returns a pandas_udf computing the same left-fold dot product with
     numpy: products are elementwise float64 IEEE multiplies (identical
-    to the JVM's), and ``np.cumsum`` accumulates STRICTLY left-to-right
-    — the same addition order as ``F.aggregate``'s fold — so the result
-    double is bit-identical to :func:`dot` (verified exhaustively over
-    every sf0.1 LSH candidate pair: max abs diff 0.0). NULL arrays on
-    either side yield SQL NULL, matching the JVM fold; ragged batches
-    raise with a pointer at the interpreted twin. Use where the
-    interpreted higher-order fold dominates (millions of pairs); the
-    ~15 µs/pair interpreter cost drops ~3.4× via Arrow batching. Keep
-    rounding JVM-side (F.round) — np.round ties differently.
+    to the JVM's) summed by :func:`_fold`, so the result double is
+    bit-identical to :func:`dot` (verified exhaustively over every sf0.1
+    LSH candidate pair: max abs diff 0.0). NULL arrays on either side
+    yield SQL NULL, matching the JVM fold; ragged batches raise with a
+    pointer at the interpreted twin. Use where the interpreted
+    higher-order fold dominates (millions of pairs); the ~15 µs/pair
+    interpreter cost drops ~3.4× via Arrow batching.
     """
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def _dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            # np.vstack raises on an empty sequence; Arrow happily hands
-            # a zero-row batch to the UDF when a partition is empty.
-            return pd.Series([], dtype="float64")
         mask = a.notna().to_numpy() & b.notna().to_numpy()
         out = np.zeros(len(a), dtype=np.float64)
         if mask.any():
-            av = _stack_fixed_dim(a, mask)
-            bv = _stack_fixed_dim(b, mask)
-            out[mask] = np.cumsum(av * bv, axis=1)[:, -1]
+            out[mask] = _fold(_stack_fixed_dim(a[mask]) * _stack_fixed_dim(b[mask]))
         return _with_nulls(out, mask)
 
     return _dot
@@ -104,176 +142,101 @@ def norm_arrow() -> "object":
     """Arrow-vectorized twin of :func:`norm` (sqrt of the self-dot).
 
     Same bit-exactness argument as :func:`dot_arrow`: float32→float64
-    widening is exact, products are single IEEE multiplies, ``np.cumsum``
-    adds strictly left-to-right like the JVM fold, and ``np.sqrt`` /
-    ``Math.sqrt`` are both correctly-rounded IEEE sqrt. Use where norms
-    are computed per-row over a large relation inside a bigger plan —
-    the interpreted fold costs ~25 µs/row, measured dominating e.g.
-    `knn_bruteforce` wall time at the sf1 point.
+    widening is exact, products are single IEEE multiplies, :func:`_fold`
+    adds left to right like the JVM fold, and ``np.sqrt`` / ``Math.sqrt``
+    are both correctly-rounded IEEE sqrt. Use where norms are computed
+    per-row over a large relation inside a bigger plan — the interpreted
+    fold costs ~25 µs/row, measured dominating e.g. `knn_bruteforce`
+    wall time at the sf1 point.
     """
     from pyspark.sql.functions import pandas_udf
 
     @pandas_udf("double")
     def _norm(a: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="float64")
         mask = a.notna().to_numpy()
         out = np.zeros(len(a), dtype=np.float64)
         if mask.any():
-            av = _stack_fixed_dim(a, mask)
-            out[mask] = np.sqrt(np.cumsum(av * av, axis=1)[:, -1])
+            av = _stack_fixed_dim(a[mask])
+            out[mask] = np.sqrt(_fold(av * av))
         return _with_nulls(out, mask)
 
     return _norm
 
 
+# The grouped kernels below are the ``applyInPandas`` twins of the
+# norm_arrow/dot_arrow pair join: each member embedding crosses into
+# Python once per group and only scalar rows come back, where the join
+# formulation ships every candidate pair as a 2×dim-double Arrow row.
+# Their raw cosines come from _members + _pair_cos, so they are
+# bit-identical to the JVM fold (pinned by tests/test_workloads.py);
+# callers apply the authoritative F.round JVM-side.
+
+
 def bucket_pair_cos_kernel(min_raw_cos: float):
-    """Bucket-local pair-cosine kernel for ``applyInPandas`` — the
-    grouped twin of :func:`dot_arrow` for LSH-bucketed near-dup
-    pairing.
+    """Bucket-local pair-cosine kernel for LSH-bucketed near-dup pairing.
 
     Given one bucket's members (columns ``vec_id``, ``embedding``),
     expands every ordered pair (vec_a < vec_b) IN NUMPY and returns
-    (vec_a, vec_b, cos_raw). Bit-exactness is inherited from the
-    :func:`dot_arrow` argument: products are elementwise IEEE float64
-    multiplies and ``np.cumsum`` accumulates strictly left-to-right —
-    the same fold as ``F.aggregate`` and DuckDB ``list_sum`` — and
-    norms are the correctly-rounded IEEE sqrt of the same fold, so
-    ``cos_raw`` is bit-identical to the join-then-dot formulation
-    (verified pairwise over every sf1 candidate pair: 0 differing
-    rows).
+    (vec_a, vec_b, cos_raw) for the pairs with ``cos_raw >=
+    min_raw_cos`` (verified pairwise against the join-then-dot
+    formulation over every sf1 candidate pair: 0 differing rows). At
+    sf1 the join formulation moved 3.7 M pairs ≈ 4 GB of Arrow traffic;
+    this shape measured 5.8 → 2.6 s for identical output.
 
-    Why grouped instead of join+dot: the join formulation materializes
-    every candidate pair as a 2×dim-double Arrow row (sf1: 3.7 M pairs
-    ≈ 4 GB of Arrow traffic); here each vector crosses into Python
-    once and only the 3-scalar survivors come back — measured 5.8 →
-    2.6 s at sf1 for identical output.
-
-    ``min_raw_cos`` pre-filters on the RAW cosine with the caller's
-    margin; the exact threshold on the JVM-ROUNDED value must still be
-    applied by the caller (keep F.round JVM-side — np.round ties
-    half-to-even). Pairs per bucket are chunked so peak memory is
-    bounded regardless of bucket cap.
+    ``min_raw_cos`` pre-filters on the RAW cosine, lowered by the
+    caller's margin (:data:`RAW_COS_MARGIN`); the exact threshold on
+    the JVM-ROUNDED value must still be applied by the caller. Pairs
+    per bucket are scored in slabs so peak memory is bounded
+    regardless of bucket cap.
     """
 
     def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "vec_a": pd.Series([], dtype="int64"),
-                "vec_b": pd.Series([], dtype="int64"),
-                "cos_raw": pd.Series([], dtype="float64"),
-            }
-        )
-        pdf = pdf[pdf["embedding"].notna()]
-        if len(pdf) < 2:
-            return empty
-        pdf = pdf.sort_values("vec_id")
-        M = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+        pdf, M, nrm = _members(pdf)
         ids = pdf["vec_id"].to_numpy()
-        nrm = np.sqrt(np.cumsum(M * M, axis=1)[:, -1])
         ii, jj = np.triu_indices(len(ids), k=1)
-        outs = []
+        cos = np.empty(len(ii))
         chunk = 131072  # pairs per slab: ≤ 64 MB of float64 at dim 64
         for s in range(0, len(ii), chunk):
-            ic, jc = ii[s : s + chunk], jj[s : s + chunk]
-            dots = np.cumsum(M[ic] * M[jc], axis=1)[:, -1]
-            cos = dots / (nrm[ic] * nrm[jc])
-            keep = cos >= min_raw_cos
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "vec_a": ids[ic][keep],
-                        "vec_b": ids[jc][keep],
-                        "cos_raw": cos[keep],
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True) if outs else empty
+            sl = slice(s, s + chunk)
+            cos[sl] = _pair_cos(M, nrm, ii[sl], jj[sl])
+        keep = cos >= min_raw_cos
+        return pd.DataFrame(
+            {"vec_a": ids[ii[keep]], "vec_b": ids[jj[keep]], "cos_raw": cos[keep]}
+        )
 
     return _pairs
 
 
 def group_query_cos_kernel():
-    """Query-vs-members cosine kernel for ``applyInPandas`` — the
-    grouped twin of the ``norm_arrow``/``dot_arrow`` pair join for the
-    ANN top-k queries (knn_bruteforce, lsh_ann_topk).
+    """Query-vs-members cosine kernel for the exact top-k queries
+    (knn_bruteforce, knn_hubness_stats).
 
-    Given one group's rows (columns ``vec_id``, ``embedding``,
-    ``is_q`` — queries flagged True, members False), computes the raw
-    cosine of every (query × member) pair with ``query_id != cand_id``
-    IN NUMPY and returns (query_id, cand_id, cos_raw).
-
-    Bit-exactness is inherited from the :func:`dot_arrow` /
-    :func:`norm_arrow` arguments: products are elementwise IEEE float64
-    multiplies, ``np.cumsum`` accumulates strictly left-to-right (the
-    same fold as ``F.aggregate`` and DuckDB ``list_sum``), norms are the
-    correctly-rounded IEEE sqrt of the same fold, and the final
-    ``dots / (q_n * c_n)`` is the same scalar multiply + divide the JVM
-    expression performed — so ``cos_raw`` is bit-identical to the
-    join-then-dot formulation (re-verified over every sf0.1/sf1 pair at
-    the round-13 swap: 0 differing rows). The caller applies the
-    authoritative ``F.round`` JVM-side (np.round ties half-to-even) and
-    the rank window.
-
-    Why grouped instead of join+dot (guide §4, §2.3): the pair-join
-    formulation materializes every (query, candidate) pair as a
-    2×dim-double Arrow row — the corpus crosses the Python boundary
-    once PER QUERY with both embeddings attached — while here each
-    member embedding crosses exactly once per group and only 3-scalar
-    rows come back. NULL embeddings are dropped like the sibling
-    kernels (the embeddings table contains none; pinned by the oracle
-    gate at every SF).
-
-    If the group carries a ``bucket`` column, a query only pairs with
-    members of ITS bucket (mask, not per-bucket groups: grouped-map
-    pays ~ms of pandas overhead PER GROUP, so bucket×salt group keys
-    measured 10× slower than hash-salt groups with an in-kernel
-    bucket mask at sf0.1 — receipts in `git show
-    cb976e8:tools/r13_ann_ab.py` runs, OPTIMIZATION_r13.md).
+    Given one group's rows (columns ``vec_id``, ``embedding``, ``is_q``
+    — queries flagged True, members False), computes the raw cosine of
+    every (query × member) pair with ``query_id != cand_id`` IN NUMPY
+    and returns (query_id, cand_id, cos_raw) (re-verified over every
+    sf0.1/sf1 pair against the join-then-dot formulation: 0 differing
+    rows). The caller applies F.round and the rank window.
     """
 
     def _sims(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
+        pdf, M, nrm = _members(pdf)
+        ids = pdf["vec_id"].to_numpy()
+        is_q = pdf["is_q"].to_numpy(dtype=bool)
+        members = np.flatnonzero(~is_q)
+        qi, ci, cos = [members[:0]], [members[:0]], [nrm[:0]]
+        for q in np.flatnonzero(is_q):  # ≤ n_queries rows per group
+            c = members[ids[members] != ids[q]]
+            qi.append(np.full(len(c), q))
+            ci.append(c)
+            cos.append(_pair_cos(M, nrm, q, c))
+        return pd.DataFrame(
             {
-                "query_id": pd.Series([], dtype="int64"),
-                "cand_id": pd.Series([], dtype="int64"),
-                "cos_raw": pd.Series([], dtype="float64"),
+                "query_id": ids[np.concatenate(qi)],
+                "cand_id": ids[np.concatenate(ci)],
+                "cos_raw": np.concatenate(cos),
             }
         )
-        pdf = pdf[pdf["embedding"].notna()]
-        qdf = pdf[pdf["is_q"]]
-        cdf = pdf[~pdf["is_q"]]
-        if len(qdf) == 0 or len(cdf) == 0:
-            return empty
-        Q = np.vstack(qdf["embedding"].to_numpy()).astype(np.float64)
-        C = np.vstack(cdf["embedding"].to_numpy()).astype(np.float64)
-        qids = qdf["vec_id"].to_numpy()
-        cids = cdf["vec_id"].to_numpy()
-        buckets = "bucket" in pdf.columns
-        if buckets:
-            qb = qdf["bucket"].to_numpy()
-            cb = cdf["bucket"].to_numpy()
-        qn = np.sqrt(np.cumsum(Q * Q, axis=1)[:, -1])
-        cn = np.sqrt(np.cumsum(C * C, axis=1)[:, -1])
-        outs = []
-        for qi in range(len(qids)):  # ≤ N_QUERIES rows per group
-            keep = cids != qids[qi]
-            if buckets:
-                keep &= cb == qb[qi]
-            if not keep.any():
-                continue
-            dots = np.cumsum(C[keep] * Q[qi], axis=1)[:, -1]
-            cos = dots / (qn[qi] * cn[keep])
-            outs.append(
-                pd.DataFrame(
-                    {
-                        "query_id": np.full(int(keep.sum()), qids[qi]),
-                        "cand_id": cids[keep],
-                        "cos_raw": cos,
-                    }
-                )
-            )
-        return pd.concat(outs, ignore_index=True) if outs else empty
 
     return _sims
 
@@ -314,8 +277,8 @@ def lsh_bucket_arrow(n_planes: int = 8) -> "object":
     sequence/transform/aggregate lambdas per row — measured ~85 µs/row
     at 8 planes, which made bucket derivation (not the bucket join!)
     the dominant cost of every LSH-ANN query at the sf1 point. Here the
-    whole batch is one float64 elementwise product + ``np.cumsum``
-    per plane, strictly left-to-right like the JVM fold, so the
+    whole batch is one float64 elementwise product + :func:`_fold`
+    per plane, left to right like the JVM fold, so the
     projection doubles — and therefore the sign bits — are
     bit-identical (pinned on every sf0.1 vector by
     tests/test_workloads.py::test_lsh_bucket_arrow_bitwise_equals_fold).
@@ -333,12 +296,10 @@ def lsh_bucket_arrow(n_planes: int = 8) -> "object":
 
     @pandas_udf("string")
     def _bucket(a: pd.Series) -> pd.Series:
-        if len(a) == 0:
-            return pd.Series([], dtype="object")
         mask = a.notna().to_numpy()
         out = np.full(len(a), None, dtype=object)
         if mask.any():
-            E = _stack_fixed_dim(a, mask)
+            E = _stack_fixed_dim(a[mask])
             j = np.arange(E.shape[1])
             Wm = np.stack(
                 [
@@ -346,7 +307,7 @@ def lsh_bucket_arrow(n_planes: int = 8) -> "object":
                     for h in range(n_planes)
                 ]
             )
-            proj = np.cumsum(E[:, None, :] * Wm[None, :, :], axis=2)[:, :, -1]
+            proj = _fold(E[:, None, :] * Wm[None, :, :])
             bits = np.where(proj > 0, "1", "0")
             out[mask] = ["".join(r) for r in bits]
         return pd.Series(out, dtype="object")
@@ -354,61 +315,37 @@ def lsh_bucket_arrow(n_planes: int = 8) -> "object":
     return _bucket
 
 
-def bucket_hard_negative_kernel(k: int, margin: float = 1e-6):
-    """Bucket-local hard-negative miner for ``applyInPandas`` — the
-    grouped sibling of :func:`bucket_pair_cos_kernel` for
-    ``hard_negative_mining``.
+def bucket_hard_negative_kernel(k: int):
+    """Bucket-local hard-negative miner for ``hard_negative_mining``.
 
     Given one bucket's members (columns ``vec_id``, ``label``,
     ``embedding``), computes the raw cosine of every CROSS-label
-    ordered pair in numpy (same bit-exact left-to-right ``np.cumsum``
-    fold as :func:`dot_arrow`) and returns, per anchor, every candidate
-    whose raw cosine is within ``margin`` of the anchor's k-th largest
-    raw cosine. That superset provably contains the top-k by the
-    JVM-ROUNDED value: rounding moves a value by at most ``margin/2``,
-    so any candidate below ``kth_raw - margin`` has at least k
+    ordered pair and returns, per anchor, every candidate whose raw
+    cosine is within :data:`RAW_COS_MARGIN` of the anchor's k-th
+    largest raw cosine. That superset provably contains the top-k by
+    the JVM-ROUNDED value: rounding moves a value by at most half the
+    margin, so any candidate below ``kth_raw - margin`` has at least k
     candidates whose rounded value is strictly greater and can never
     rank top-k regardless of tie-breaks. The caller applies the
-    authoritative ``F.round`` + rank window on the returned rows (keep
-    rounding JVM-side — ``np.round`` ties half-to-even).
-
-    Why grouped instead of join+dot: the join formulation materializes
-    every cross-label candidate pair as a 2 x dim-double Arrow row
-    (sf1: ~1.5 M pairs); here each vector crosses into Python once and
-    only ~(k+ties) rows per anchor come back.
+    authoritative ``F.round`` + rank window on the returned rows. At
+    sf1 the join formulation moved ~1.5 M cross-label pairs; here only
+    ~(k+ties) rows per anchor come back.
     """
 
     def _mine(pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame(
-            {
-                "anchor_id": pd.Series([], dtype="int64"),
-                "anchor_label": pd.Series([], dtype="int32"),
-                "neg_id": pd.Series([], dtype="int64"),
-                "neg_label": pd.Series([], dtype="int32"),
-                "cos_raw": pd.Series([], dtype="float64"),
-            }
-        )
-        pdf = pdf[pdf["embedding"].notna()]
-        if len(pdf) < 2:
-            return empty
-        pdf = pdf.sort_values("vec_id")
-        M = np.vstack(pdf["embedding"].to_numpy()).astype(np.float64)
+        pdf, M, nrm = _members(pdf)
         ids = pdf["vec_id"].to_numpy()
         labels = pdf["label"].to_numpy()
-        nrm = np.sqrt(np.cumsum(M * M, axis=1)[:, -1])
         ii, jj = np.nonzero(labels[:, None] != labels[None, :])
-        if len(ii) == 0:
-            return empty
-        dots = np.cumsum(M[ii] * M[jj], axis=1)[:, -1]
-        cos = dots / (nrm[ii] * nrm[jj])
+        cos = _pair_cos(M, nrm, ii, jj)
         keep = np.zeros(len(ii), dtype=bool)
         order = np.lexsort((-cos, ii))  # anchor asc, cos desc
-        anchors, starts = np.unique(ii[order], return_index=True)
+        _, starts = np.unique(ii[order], return_index=True)
         bounds = np.append(starts, len(order))
         for s, e in zip(bounds[:-1], bounds[1:]):
             seg = order[s:e]
             kth = cos[seg[min(k, len(seg)) - 1]]
-            keep[seg[cos[seg] >= kth - margin]] = True
+            keep[seg[cos[seg] >= kth - RAW_COS_MARGIN]] = True
         return pd.DataFrame(
             {
                 "anchor_id": ids[ii[keep]],

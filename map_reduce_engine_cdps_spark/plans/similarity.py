@@ -10,7 +10,7 @@ so the candidate set per query is corpus/2^planes instead of the corpus.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window as W
+from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.functions import vectors as V
@@ -23,22 +23,43 @@ TOP_K = 3
 N_PLANES = 8
 
 
-# Every per-row/per-pair vector kernel in this module runs through the
-# Arrow twins (V.norm_arrow / V.lsh_bucket_arrow / V.dot_arrow): the
-# interpreted JVM higher-order folds they replace measured ~25-85 µs per
-# evaluation and dominated every ANN query's wall time at the sf1 point
-# (bucket derivation alone: ~1.7 s for 20 k vectors). The twins are
-# BIT-identical (np.cumsum reproduces the fold's left-to-right addition;
-# pinned by tests/test_workloads.py), so the DuckDB oracles — which
-# mirror the fold formulation — are unaffected. Rounding stays JVM-side
-# (F.round) per the dot_arrow contract.
+# The ANN family shares one definition of each vector-search building
+# block: _side (a scored side: id, embedding, Arrow norm), _cos (the
+# JVM-rounded Arrow cosine), _top_k (the per-query rank window),
+# _exact_topk (the grouped exact kNN) and _ivf_pairs (the IVF assign →
+# probe → pair front). Per-row and per-pair vector math runs through
+# the Arrow twins and grouped kernels of functions/vectors.py: the
+# interpreted JVM folds they replace measured ~25-85 µs per evaluation
+# and dominated every ANN query's wall time at the sf1 point. The twins
+# are BIT-identical (one left-to-right numpy fold; pinned by
+# tests/test_workloads.py), so the DuckDB oracles — which mirror the
+# fold formulation — are unaffected. Rounding stays JVM-side (F.round).
 
 
-def _cos_pre_arrow(qe, ce, qn, cn):
-    """Arrow-vectorized cosine from precomputed norms: dot_arrow (the
-    V.dot twin) over the pair divided by the product of the two V.norm
-    values — the same scalar IEEE ops as the interpreted fold."""
-    return V.dot_arrow()(qe, ce) / (qn * cn)
+def _side(emb: DataFrame, id_col: str, p: str, *extra) -> DataFrame:
+    """One side of a scored pair join: (vec_id AS id_col, embedding AS
+    <p>_emb, Arrow norm AS <p>_n, *extra)."""
+    return emb.select(
+        F.col("vec_id").alias(id_col),
+        F.col("embedding").alias(f"{p}_emb"),
+        V.norm_arrow()(F.col("embedding")).alias(f"{p}_n"),
+        *extra,
+    )
+
+
+def _cos(a: str, b: str, a_n: str, b_n: str) -> Column:
+    """Cosine of two embedding columns from precomputed norms, rounded
+    JVM-side to 6 places: the Arrow dot over the product of the norms —
+    the same scalar IEEE ops as the interpreted V.dot / V.norm fold."""
+    return F.round(V.dot_arrow()(F.col(a), F.col(b)) / (F.col(a_n) * F.col(b_n)), 6)
+
+
+def _top_k(sims: DataFrame, k: int) -> DataFrame:
+    """Each query's k best candidates by (cos_sim desc, cand_id asc) —
+    the vec_id tie-break keeps the ranking deterministic across engines
+    — with their 1-based ``rank``."""
+    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
+    return sims.withColumn("rank", F.row_number().over(w)).filter(F.col("rank") <= k)
 
 
 # ---------------------------------------------------------------------------
@@ -48,10 +69,9 @@ def _cos_pre_arrow(qe, ce, qn, cn):
 # replicated to every group, and one applyInPandas crossing scores each
 # group's members against all queries in numpy. Each member embedding
 # crosses the Python boundary ONCE; the old broadcast-cross-join shape
-# shipped the corpus once PER QUERY as pair rows carrying BOTH
+# shipped the corpus once PER QUERY as pair rows with BOTH
 # embeddings (10 queries × 2×dim doubles ≈ 20× the Arrow bytes) plus a
-# separate full-corpus norm pass. Ranking on the JVM-rounded similarity
-# with a vec_id tie-break keeps the result deterministic across engines.
+# separate full-corpus norm pass.
 # ---------------------------------------------------------------------------
 
 _GROUP_SIMS_SCHEMA = "query_id long, cand_id long, cos_raw double"
@@ -71,18 +91,12 @@ def _ann_salt_groups(emb: DataFrame) -> int:
     return max(par, emb.rdd.getNumPartitions())
 
 
-def _query_group_sims(
-    q: DataFrame, cand: DataFrame, n_groups: int, carry: list
-) -> DataFrame:
-    """Shared grouped-kernel tail: replicate the query side to every
-    salt value, union with the salted member side, and score each hash
-    group with one grouped Arrow crossing. Members get
-    g = pmod(xxhash64(vec_id)) — deterministic under task retry, unlike
-    rand() salts (guide §2.5) — queries get every value. ``carry``
-    columns (e.g. the LSH bucket) ride along as kernel payload, NOT as
-    grouping keys: per-group pandas overhead is ~ms, so fine-grained
-    (bucket, salt) keys measured 10× slower than an in-kernel bucket
-    mask at sf0.1."""
+def _query_group_sims(q: DataFrame, cand: DataFrame, n_groups: int) -> DataFrame:
+    """Replicate the query side to every salt value, union with the
+    salted member side, and score each hash group with one grouped Arrow
+    crossing. Members get g = pmod(xxhash64(vec_id)) — deterministic
+    under task retry, unlike rand() salts (guide §2.5) — queries get
+    every value."""
     spark = q.sparkSession
     salted = cand.withColumn(
         "g", F.pmod(F.xxhash64("vec_id"), F.lit(n_groups))
@@ -90,7 +104,7 @@ def _query_group_sims(
     replicated = q.crossJoin(
         F.broadcast(spark.range(n_groups).select(F.col("id").alias("g")))
     ).withColumn("is_q", F.lit(True))
-    cols = ["g", "vec_id", "embedding", "is_q", *carry]
+    cols = ["g", "vec_id", "embedding", "is_q"]
     return (
         salted.select(*cols)
         .unionByName(replicated.select(*cols))
@@ -99,20 +113,18 @@ def _query_group_sims(
     )
 
 
-def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    q = emb.filter(F.col("vec_id") < N_QUERIES).select("vec_id", "embedding")
+def _exact_topk(emb: DataFrame, n_queries: int, k: int) -> DataFrame:
+    """Exact cosine top-k of the queries ``vec_id < n_queries`` over the
+    whole corpus: ranked (query_id, cand_id, cos_sim, rank)."""
+    q = emb.filter(F.col("vec_id") < n_queries).select("vec_id", "embedding")
     sims = _query_group_sims(
-        q, emb.select("vec_id", "embedding"), _ann_salt_groups(emb), []
-    ).select(
-        "query_id", "cand_id", F.round("cos_raw", 6).alias("cos_sim")
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id", "cos_sim", "rank")
-    )
+        q, emb.select("vec_id", "embedding"), _ann_salt_groups(emb)
+    ).select("query_id", "cand_id", F.round("cos_raw", 6).alias("cos_sim"))
+    return _top_k(sims, k).select("query_id", "cand_id", "cos_sim", "rank")
+
+
+def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _exact_topk(load_table(spark, sf_dir, "embeddings"), N_QUERIES, TOP_K)
 
 
 _DUCK_COS = """
@@ -204,12 +216,8 @@ def lsh_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bench SF; at real scale the planner's size estimates replace this
     # toy-SF candidate broadcast with a shuffle join on bucket, so the
     # shape below stays sound (bucket skew is AQE skew-join territory).
-    sims = _lsh_bucket_sims(spark, sf_dir)
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("query_id", F.col("cand_id").alias("nn_id"), "cos_sim")
+    return _top_k(_lsh_bucket_sims(spark, sf_dir), 1).select(
+        "query_id", F.col("cand_id").alias("nn_id"), "cos_sim"
     )
 
 
@@ -217,34 +225,16 @@ def _lsh_bucket_sims(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucket-joined (query, candidate, cos_sim) rows — the shared
     front of lsh_ann_topk and ann_recall_eval's LSH side."""
     emb = load_table(spark, sf_dir, "embeddings")
-    norm_pd = V.norm_arrow()
     d = emb.withColumn(
         "bucket", V.lsh_bucket_arrow(N_PLANES)(F.col("embedding"))
     )
-    q = d.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm_pd(F.col("embedding")).alias("q_n"),
-        "bucket",
-    )
-    c = d.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("c_emb"),
-        norm_pd(F.col("embedding")).alias("c_n"),
-        F.col("bucket").alias("c_bucket"),
-    )
+    q = _side(d.filter(F.col("vec_id") < N_QUERIES), "query_id", "q", "bucket")
+    c = _side(d, "cand_id", "c", F.col("bucket").alias("c_bucket"))
     return (
         q.join(c, F.col("bucket").eqNullSafe(F.col("c_bucket")))
         .filter(F.col("query_id") != F.col("cand_id"))
         .select(
-            "query_id",
-            "cand_id",
-            F.round(
-                _cos_pre_arrow(
-                    F.col("q_emb"), F.col("c_emb"), F.col("q_n"), F.col("c_n")
-                ),
-                6,
-            ).alias("cos_sim"),
+            "query_id", "cand_id", _cos("q_emb", "c_emb", "q_n", "c_n").alias("cos_sim")
         )
     )
 
@@ -377,15 +367,14 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the bucket-local kernel expands pairs in numpy with the SAME
     # left-to-right cumsum fold (bit-identical — 0 differing rows over
     # every sf1 pair) and only 3-scalar rows come back, 2.6 s. The raw
-    # pre-filter margin is 1e-6: JVM rounding to 6 decimals can raise
-    # a value by at most 5e-7, so no pair that could pass the exact
-    # rounded threshold is dropped; the authoritative filter below
-    # stays on the JVM-rounded column.
+    # pre-filter is lowered by V.RAW_COS_MARGIN, so no pair that could
+    # pass the exact rounded threshold is dropped; the authoritative
+    # filter below stays on the JVM-rounded column.
     pairs = (
         d.select("bucket", "vec_id", "embedding")
         .groupBy("bucket")
         .applyInPandas(
-            V.bucket_pair_cos_kernel(NEAR_DUP_COS - 1e-6),
+            V.bucket_pair_cos_kernel(NEAR_DUP_COS - V.RAW_COS_MARGIN),
             "vec_a long, vec_b long, cos_raw double",
         )
     )
@@ -462,16 +451,11 @@ def _broadcast_centroid_lists(emb: DataFrame):
 
 
 def _nearest_lists(
-    side: DataFrame,
-    cent: DataFrame,
-    id_col: str,
-    vec_col: str,
-    n_col: str,
-    n: int,
-    keep_rank: bool = False,
+    emb: DataFrame, cent: DataFrame, id_col: str, p: str, n: int
 ) -> DataFrame:
-    """Top-n nearest inverted lists per vector (module-scope so
-    ivf_nprobe_sweep_eval shares ivf_ann_topk's exact formulation).
+    """Top-n nearest inverted lists per vector of ``emb``, ranked 1..n
+    as ``probe_rank``, with the vector's scored side
+    (``_side(emb, id_col, p)``).
 
     Round-12 shape (guide §2.4): ``(vec, norm)`` ride THROUGH the rank
     window instead of being re-attached to the winners by an
@@ -487,8 +471,8 @@ def _nearest_lists(
     nprobe (probes), so this is the same corpus×~1 payload the
     re-attach join itself moved — one less scan, one less Arrow norm
     pass, one less join, strictly. Round-12 A/B (interleaved, one
-    session, sf0.1): old 1.988 s vs carry 1.731 s median, lower in
-    7/7 passes; identical output. Oracle re-verified at
+    session, sf0.1): old 1.988 s vs ride-through 1.731 s median, lower
+    in 7/7 passes; identical output. Oracle re-verified at
     sf0.001/0.01/0.1 + derived-sf1 (round-12 receipts).
 
     NB: a min_by hash-aggregate argmin was tried for the n=1 case
@@ -500,74 +484,47 @@ def _nearest_lists(
     per-row array_sort top-n (all K sims in one Arrow crossing, no
     window at all) was also tried and reverted: the repeated
     per-row centroid payload + interpreted comparator made it
-    SLOWER (2.507 s median vs 1.988 old / 1.731 carry).
+    SLOWER (2.507 s median vs 1.988 old / 1.731 ride-through).
     """
-    scored = side.crossJoin(cent).select(
-        id_col,
-        vec_col,
-        n_col,
-        "list_id",
-        F.round(
-            _cos_pre_arrow(
-                F.col(vec_col), F.col("centroid"), F.col(n_col), F.col("cent_n")
-            ),
-            6,
-        ).alias("c_sim"),
+    vec, nrm = f"{p}_emb", f"{p}_n"
+    scored = _side(emb, id_col, p).crossJoin(cent).select(
+        id_col, vec, nrm, "list_id", _cos(vec, "centroid", nrm, "cent_n").alias("c_sim")
     )
     w = W.partitionBy(id_col).orderBy(F.desc("c_sim"), F.asc("list_id"))
-    extra = [F.col("rn").alias("probe_rank")] if keep_rank else []
     return (
         scored.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") <= n)
-        .select(id_col, "list_id", *extra, vec_col, n_col)
+        .select(id_col, "list_id", F.col("rn").alias("probe_rank"), vec, nrm)
+    )
+
+
+def _ivf_pairs(emb: DataFrame, nprobe: int) -> DataFrame:
+    """The IVF front shared by ivf_ann_topk and ivf_nprobe_sweep_eval:
+    every corpus vector is assigned to its nearest list, every query
+    probes its ``nprobe`` nearest lists, and each (query, candidate)
+    pair sharing a probed list is scored once: (query_id, cand_id,
+    probe_rank, cos_sim)."""
+    cent = _broadcast_centroid_lists(emb)
+    assign = _nearest_lists(emb, cent, "cand_id", "c", 1)
+    probes = _nearest_lists(
+        emb.filter(F.col("vec_id") < N_QUERIES), cent, "query_id", "q", nprobe
+    )
+    return (
+        probes.join(assign.drop("probe_rank"), "list_id")
+        .filter(F.col("query_id") != F.col("cand_id"))
+        .select(
+            "query_id",
+            "cand_id",
+            "probe_rank",
+            _cos("q_emb", "c_emb", "q_n", "c_n").alias("cos_sim"),
+        )
     )
 
 
 def ivf_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = _broadcast_centroid_lists(emb)
-    norm_pd = V.norm_arrow()
-
-    def nearest_lists(
-        side: DataFrame, id_col: str, vec_col: str, n_col: str, n: int
-    ) -> DataFrame:
-        return _nearest_lists(side, cent, id_col, vec_col, n_col, n)
-
-    assign = nearest_lists(
-        emb.select(
-            F.col("vec_id").alias("cand_id"),
-            F.col("embedding").alias("c_emb"),
-            norm_pd(F.col("embedding")).alias("c_n"),
-        ),
-        "cand_id", "c_emb", "c_n", 1,
-    )
-    probes = nearest_lists(
-        emb.filter(F.col("vec_id") < N_QUERIES).select(
-            F.col("vec_id").alias("query_id"),
-            F.col("embedding").alias("q_emb"),
-            norm_pd(F.col("embedding")).alias("q_n"),
-        ),
-        "query_id", "q_emb", "q_n", NPROBE,
-    )
-    sims = (
-        probes.join(assign, "list_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(
-                _cos_pre_arrow(
-                    F.col("q_emb"), F.col("c_emb"), F.col("q_n"), F.col("c_n")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= TOP_K)
-        .select("query_id", "cand_id", "cos_sim", "rank")
+    return _top_k(_ivf_pairs(emb, NPROBE), TOP_K).select(
+        "query_id", "cand_id", "cos_sim", "rank"
     )
 
 
@@ -866,11 +823,8 @@ def ann_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # r13: shares lsh_ann_topk's sims front (eqNullSafe bucket keys —
     # one corpus bucket/norm pass instead of the duplicated pass the
     # inferred isnotnull(bucket) caused here too, guide §4.4).
-    sims = _lsh_bucket_sims(spark, sf_dir)
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
     lshk = (
-        sims.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") <= TOP_K)
+        _top_k(_lsh_bucket_sims(spark, sf_dir), TOP_K)
         .select("query_id", "cand_id")
         .withColumn("hit", F.lit(1))
     )
@@ -942,39 +896,7 @@ _NPROBE_SWEEP = (1, 2, 4)
 
 
 def ivf_nprobe_sweep_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    emb = load_table(spark, sf_dir, "embeddings")
-    cent = _broadcast_centroid_lists(emb)
-    norm_pd = V.norm_arrow()
-    cand_side = emb.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("c_emb"),
-        norm_pd(F.col("embedding")).alias("c_n"),
-    )
-    query_side = emb.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm_pd(F.col("embedding")).alias("q_n"),
-    )
-    assign = _nearest_lists(cand_side, cent, "cand_id", "c_emb", "c_n", 1)
-    probes = _nearest_lists(
-        query_side, cent, "query_id", "q_emb", "q_n",
-        max(_NPROBE_SWEEP), keep_rank=True,
-    )
-    pairs = (
-        probes.join(assign, "list_id")
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            "probe_rank",
-            F.round(
-                _cos_pre_arrow(
-                    F.col("q_emb"), F.col("c_emb"), F.col("q_n"), F.col("c_n")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
+    pairs = _ivf_pairs(load_table(spark, sf_dir, "embeddings"), max(_NPROBE_SWEEP))
     sweep = F.broadcast(
         spark.createDataFrame([(n,) for n in _NPROBE_SWEEP], "nprobe int")
     )
@@ -1268,12 +1190,16 @@ _NEG_MAX_CHARS = 3
 _NEG_BUCKET_TIERS = ((4096, 1), (65536, 2), (None, _NEG_MAX_CHARS))
 
 
-def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
-    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
+def _neg_bucket(emb: DataFrame) -> Column:
+    """Tiered md5 bucket of vec_id: the first _NEG_BUCKET_TIERS hex
+    chars for the corpus count (shared with hard_negative_mining)."""
     chars = _tier_pct(emb.count(), _NEG_BUCKET_TIERS)
-    bucket = F.substring(F.md5(F.col("vec_id").cast("string")), 1, chars)
+    return F.substring(F.md5(F.col("vec_id").cast("string")), 1, chars)
+
+
+def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
+    bucket = _neg_bucket(emb)
     anchors = emb.select(
         F.col("vec_id").alias("anchor_id"),
         F.col("label").alias("anchor_label"),
@@ -1417,25 +1343,14 @@ SEMDEDUP_TAU = 0.3
 
 def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    cent = F.broadcast(
-        _centroids(emb).select(
-            F.col("label").alias("cluster_id"),
-            "centroid",
-            V.norm(F.col("centroid")).alias("cent_n"),
-        )
-    )
+    cent = _broadcast_centroid_lists(emb).withColumnRenamed("list_id", "cluster_id")
     embn = emb.withColumn("nrm", V.norm_arrow()(F.col("embedding")))
     scored = embn.crossJoin(cent).select(
         "vec_id",
         "embedding",
         "nrm",
         "cluster_id",
-        F.round(
-            _cos_pre_arrow(
-                F.col("embedding"), F.col("centroid"), F.col("nrm"), F.col("cent_n")
-            ),
-            6,
-        ).alias("c_sim"),
+        _cos("embedding", "centroid", "nrm", "cent_n").alias("c_sim"),
     )
     # same hash-aggregate argmin as ivf_ann_topk's assignment (min_by
     # on the (-sim, cluster_id) tie-broken key) — no corpus × K sort.
@@ -1465,15 +1380,7 @@ def semdedup_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select(
             F.col("b.vec_id").alias("vec_id"),
-            F.round(
-                _cos_pre_arrow(
-                    F.col("a.embedding"),
-                    F.col("b.embedding"),
-                    F.col("a.nrm"),
-                    F.col("b.nrm"),
-                ),
-                6,
-            ).alias("pair_sim"),
+            _cos("a.embedding", "b.embedding", "a.nrm", "b.nrm").alias("pair_sim"),
         )
         .filter(F.col("pair_sim") >= SEMDEDUP_TAU)
         .select("vec_id")
@@ -2058,37 +1965,12 @@ HUB_K = 10
 
 
 def knn_hubness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hubness of the exact kNN graph from the HUB_QUERIES probe set,
+    whose edges come from knn_bruteforce's grouped exact top-k. A query
+    or candidate with a NULL embedding has no cosine and is skipped
+    there, so it contributes no edge (the fixtures contain none)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    norm_pd = V.norm_arrow()
-    q = emb.filter(F.col("vec_id") < HUB_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("embedding").alias("q_emb"),
-        norm_pd(F.col("embedding")).alias("q_n"),
-    )
-    c = emb.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("embedding").alias("c_emb"),
-        norm_pd(F.col("embedding")).alias("c_n"),
-    )
-    sims = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.round(
-                _cos_pre_arrow(
-                    F.col("q_emb"), F.col("c_emb"), F.col("q_n"), F.col("c_n")
-                ),
-                6,
-            ).alias("cos_sim"),
-        )
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc("cand_id"))
-    edges = sims.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= HUB_K
-    )
+    edges = _exact_topk(emb, HUB_QUERIES, HUB_K)
     # indeg feeds both the moment aggregate and the hub filter: left
     # lazy, the O(32·n) similarity fan-out runs twice. Materialize the
     # O(32·k) in-degree table once.
@@ -2196,10 +2078,8 @@ _HN_K = 2
 
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
-    chars = _tier_pct(emb.count(), _NEG_BUCKET_TIERS)
-    bucket = F.substring(F.md5(F.col("vec_id").cast("string")), 1, chars)
     base = emb.select(
-        "vec_id", "label", "embedding", bucket.alias("bucket")
+        "vec_id", "label", "embedding", _neg_bucket(emb).alias("bucket")
     ).filter(F.col("embedding").isNotNull())
     # Grouped bucket kernel (the embedding_near_dup pattern): the
     # join+dot formulation materialized every cross-label candidate
@@ -2207,9 +2087,9 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # here each vector crosses into Python once per bucket and only a
     # provable superset of the rounded top-k (~k+ties rows per anchor)
     # comes back. The authoritative round + rank stays JVM-side on the
-    # returned rows — the kernel's raw-cosine cutoff (kth_raw - 1e-6)
-    # guarantees no candidate that could rank top-k after F.round(.,6)
-    # is dropped (see bucket_hard_negative_kernel).
+    # returned rows — the kernel's raw-cosine cutoff (kth_raw -
+    # V.RAW_COS_MARGIN) guarantees no candidate that could rank top-k
+    # after F.round(.,6) is dropped (see bucket_hard_negative_kernel).
     cands = base.groupBy("bucket").applyInPandas(
         V.bucket_hard_negative_kernel(_HN_K),
         "anchor_id long, anchor_label int, neg_id long, "

@@ -292,6 +292,9 @@ ANN_FAMILY_ARRAY_EXCHANGE_BOUNDS = {
     "semdedup_prune": 3,        # min_by partial-agg structs: one row
                             # per group after map-side combine (x2
                             # argmin exchanges) + one plain join
+    "knn_hubness_stats": 1,     # its edges are knn_bruteforce's grouped
+                            # exact top-k, so it inherits that one
+                            # salt-group crossing
 }
 
 

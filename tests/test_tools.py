@@ -100,6 +100,8 @@ def test_ab_tool_reports_identical_rows_and_removes_its_worktree(tmp_path):
     )
     assert r.returncode == 0, r.stdout + r.stderr[-2000:]
     assert "wordcount: rows identical" in r.stdout
+    line = next(x for x in r.stdout.splitlines() if x.startswith("wordcount: "))
+    assert line.endswith(", plan identical"), line
     assert "won" in r.stdout
     assert _worktrees() == before
     assert not [p for p in os.listdir(tmp_path) if p.startswith("ab-")]

@@ -369,6 +369,77 @@ def test_dot_arrow_bitwise_equals_fold(spark, sf_dir):
     assert mx == 0.0
 
 
+# name -> (kernel factory, input columns, output schema, the output's
+# pair columns), for running each grouped kernel over real embeddings.
+_GROUPED_KERNELS = {
+    "bucket_pair_cos": (
+        lambda: V.bucket_pair_cos_kernel(-2.0),
+        ["vec_id", "embedding"],
+        "vec_a long, vec_b long, cos_raw double",
+        ("vec_a", "vec_b"),
+    ),
+    "group_query_cos": (
+        V.group_query_cos_kernel,
+        ["vec_id", "embedding", "vec_id < 10 AS is_q"],
+        "query_id long, cand_id long, cos_raw double",
+        ("query_id", "cand_id"),
+    ),
+    "bucket_hard_negative": (
+        lambda: V.bucket_hard_negative_kernel(10**6),
+        ["vec_id", "label", "embedding"],
+        "anchor_id long, anchor_label int, neg_id long, neg_label int, cos_raw double",
+        ("anchor_id", "neg_id"),
+    ),
+}
+
+
+@pytest.mark.parametrize("name", sorted(_GROUPED_KERNELS))
+def test_grouped_kernels_bitwise_equal_fold(spark, sf_dir, name):
+    """Every raw cosine a grouped kernel returns must equal the JVM
+    fold's V.dot(a, b) / (V.norm(a) * V.norm(b)) on the same pair, bit
+    for bit: the oracles mirror the fold, and callers round JVM-side."""
+    from map_reduce_engine_cdps_spark.sources.readers import load_table
+
+    kernel, cols, schema, (a, b) = _GROUPED_KERNELS[name]
+    emb = load_table(spark, sf_dir, "embeddings")
+    got = (
+        emb.selectExpr(*cols)
+        .groupBy((F.col("vec_id") % 4).alias("g"))
+        .applyInPandas(kernel(), schema)
+        .select(F.col(a).alias("ia"), F.col(b).alias("ib"), "cos_raw")
+    )
+    ea = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea"))
+    eb = emb.select(F.col("vec_id").alias("ib"), F.col("embedding").alias("eb"))
+    fold = V.dot(F.col("ea"), F.col("eb")) / (
+        V.norm(F.col("ea")) * V.norm(F.col("eb"))
+    )
+    pairs = got.join(ea, "ia").join(eb, "ib")
+    n_pairs = pairs.count()
+    n_diff = pairs.filter(~F.col("cos_raw").eqNullSafe(fold)).count()
+    assert n_pairs == got.count() > 0
+    assert n_diff == 0, f"{name}: {n_diff} of {n_pairs} cosines differ from the fold"
+
+
+@pytest.mark.parametrize("name", sorted(_GROUPED_KERNELS))
+def test_grouped_kernels_reject_ragged_groups(name):
+    """A ragged group has no JVM-identical vectorized answer: every
+    grouped kernel raises _stack_fixed_dim's error, like dot_arrow and
+    norm_arrow, instead of numpy's bare vstack error."""
+    import numpy as np
+    import pandas as pd
+
+    pdf = pd.DataFrame(
+        {
+            "vec_id": np.array([1, 2], dtype="int64"),
+            "label": np.array([0, 1], dtype="int32"),
+            "embedding": [np.ones(3, dtype=np.float32), np.ones(4, dtype=np.float32)],
+            "is_q": [True, False],
+        }
+    )
+    with pytest.raises(ValueError, match="fixed-dimension"):
+        _GROUPED_KERNELS[name][0]()(pdf)
+
+
 def test_lsh_bucket_and_norm_arrow_bitwise_equal_fold(spark, sf_dir):
     """lsh_bucket_arrow / norm_arrow must be BIT-identical to the JVM
     interpreted formulations on every real embedding (the cumsum

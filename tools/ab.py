@@ -8,8 +8,12 @@ worker process whose PYTHONPATH is its own tree, because two versions of
 the package cannot share one interpreter. For each query the sorted
 `collect()` of both sides is compared first; then N pairs of timed runs
 (construction + noop write) alternate which side goes first. Prints the
-per-side medians, the raw times and how many pairs each side won. Exits
-1 if any query's rows differ.
+per-side medians, the raw times and how many pairs each side won. Each
+query's line also says whether the two optimized logical plans are
+identical once expression ids (`#123`, `#123L`) and lambda-variable
+numbers (`x_7#`) are normalized. Exits 1 if any query's rows differ; a
+plan difference alone does not fail the run, since a perf change alters
+plans on purpose.
 """
 
 from __future__ import annotations
@@ -18,6 +22,7 @@ import argparse
 import hashlib
 import json
 import os
+import re
 import shutil
 import statistics
 import subprocess
@@ -29,6 +34,15 @@ import traceback
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def plan_digest(df) -> str:
+    """sha256 of the optimized logical plan with expression ids and
+    lambda-variable numbers normalized (both are session counters)."""
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    plan = re.sub(r"#\d+L?", "#", plan)
+    plan = re.sub(r"\b(lambda \w+?)_\d+#", r"\1_#", plan)
+    return hashlib.sha256(plan.encode()).hexdigest()
+
+
 def serve(sf_dir: str) -> None:
     """Worker loop: one JSON request per stdin line, one reply per line."""
     out = os.fdopen(os.dup(1), "w", buffering=1)
@@ -38,7 +52,16 @@ def serve(sf_dir: str) -> None:
     from map_reduce_engine_cdps_spark.session import get_spark
 
     spark = get_spark(app_name="ab")
-    out.write(json.dumps({"package": os.path.abspath(pkg.__file__)}) + "\n")
+
+    def imported(_):
+        import map_reduce_engine_cdps_spark as p
+        return os.path.abspath(p.__file__)
+
+    # UDFs resolve module-level helpers by import in the Python workers,
+    # so they must import the same tree as this process does
+    workers = spark.sparkContext.parallelize([0], 1).map(imported).first()
+    out.write(json.dumps({"package": os.path.abspath(pkg.__file__),
+                          "worker_package": workers}) + "\n")
     for line in sys.stdin:
         req = json.loads(line)
         try:
@@ -47,7 +70,7 @@ def serve(sf_dir: str) -> None:
             if req["op"] == "rows":
                 rows = sorted(repr(tuple(r)) for r in df.collect())
                 digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
-                reply = {"rows": len(rows), "digest": digest}
+                reply = {"rows": len(rows), "digest": digest, "plan": plan_digest(df)}
             else:
                 df.write.format("noop").mode("overwrite").save()
                 reply = {"seconds": time.perf_counter() - t0}
@@ -60,14 +83,16 @@ class Side:
     def __init__(self, label: str, tree: str, sf_dir: str) -> None:
         self.label = label
         env = dict(os.environ, PYTHONPATH=tree)
+        # cwd=tree: Spark's Python workers run `python -m`, which puts
+        # their working directory ahead of PYTHONPATH on sys.path
         self.proc = subprocess.Popen(
             [sys.executable, os.path.abspath(__file__), "--serve", sf_dir],
-            stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True, env=env,
+            stdin=subprocess.PIPE, stdout=subprocess.PIPE, text=True, env=env, cwd=tree,
         )
-        pkg = self._read()["package"]
-        if not pkg.startswith(os.path.join(os.path.realpath(tree), "")):
-            self.proc.kill()
-            raise RuntimeError(f"{label} worker imported {pkg}, not its own tree")
+        for pkg in self._read().values():
+            if not pkg.startswith(os.path.join(os.path.realpath(tree), "")):
+                self.proc.kill()
+                raise RuntimeError(f"{label} worker imported {pkg}, not its own tree")
 
     def _read(self) -> dict:
         line = self.proc.stdout.readline()
@@ -90,11 +115,14 @@ class Side:
 
 def compare(query: str, sides: list[Side], pairs: int) -> bool:
     got = [s.ask("rows", query) for s in sides]
-    if got[0] != got[1]:
+    plan = "plan identical" if got[0]["plan"] == got[1]["plan"] else "plan differs"
+    if got[0]["digest"] != got[1]["digest"]:
         print(f"{query}: ROWS DIFFER " + "  ".join(
-            f"{s.label} {g['rows']} rows {g['digest'][:12]}" for s, g in zip(sides, got)))
+            f"{s.label} {g['rows']} rows {g['digest'][:12]}" for s, g in zip(sides, got))
+            + f", {plan}")
         return False
-    print(f"{query}: rows identical ({got[0]['rows']} rows, sha256 {got[0]['digest'][:12]})")
+    print(f"{query}: rows identical ({got[0]['rows']} rows, sha256 {got[0]['digest'][:12]}),"
+          f" {plan}")
     times: dict[str, list[float]] = {s.label: [] for s in sides}
     for i in range(pairs):
         for s in sides if i % 2 == 0 else sides[::-1]:
