@@ -998,6 +998,29 @@ JOIN documents db ON db.doc_id = doc_b
 SPAN_W = 10
 
 
+def _span_windows(docs: DataFrame, *keys: str) -> DataFrame:
+    """(doc_id, keys…, whash): one row per positional SPAN_W-token
+    window hash of `docs.text`."""
+    return docs.select(
+        "doc_id",
+        *keys,
+        F.explode(TX.window_hashes(TX.tokens(F.col("text")), SPAN_W)).alias("whash"),
+    )
+
+
+def _span_groups(wins: DataFrame) -> DataFrame:
+    """(whash, sc, nd) per window hash: its per-(source, doc)
+    occurrence counts as (source, cnt) structs, and its distinct-doc
+    count."""
+    per = wins.groupBy("whash", "source", "doc_id").agg(
+        F.count(F.lit(1)).alias("cnt")
+    )
+    return per.groupBy("whash").agg(
+        F.collect_list(F.struct("source", "cnt")).alias("sc"),
+        F.countDistinct("doc_id").alias("nd"),
+    )
+
+
 def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Single-pass span-dedup stats.
 
@@ -1013,13 +1036,7 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     A pathologically hot boilerplate window means you want the
     hash-mod sampling estimate described above anyway.
     """
-    docs = load_parallel(spark, sf_dir, "documents")
-    wins = docs.select(
-        "doc_id",
-        F.explode(TX.window_hashes(TX.tokens(F.col("text")), SPAN_W)).alias(
-            "whash"
-        ),
-    )
+    wins = _span_windows(load_parallel(spark, sf_dir, "documents"))
     per = wins.groupBy("whash", "doc_id").agg(F.count(F.lit(1)).alias("cnt"))
     g = per.groupBy("whash").agg(
         F.collect_list(F.struct("doc_id", "cnt")).alias("dc")
@@ -1191,21 +1208,8 @@ SPAN_SAMPLE_NIBBLE = "0"  # keep md5-prefix matches: 1/16 of windows
 
 
 def duplicate_spans_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_parallel(spark, sf_dir, "documents")
-    wins = docs.select(
-        "doc_id",
-        "source",
-        F.explode(TX.window_hashes(TX.tokens(F.col("text")), SPAN_W)).alias(
-            "whash"
-        ),
-    ).filter(F.substring("whash", 1, 1) == SPAN_SAMPLE_NIBBLE)
-    per = wins.groupBy("whash", "source", "doc_id").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    g = per.groupBy("whash").agg(
-        F.collect_list(F.struct("source", "cnt")).alias("sc"),
-        F.countDistinct("doc_id").alias("nd"),
-    )
+    wins = _span_windows(load_parallel(spark, sf_dir, "documents"), "source")
+    g = _span_groups(wins.filter(F.substring("whash", 1, 1) == SPAN_SAMPLE_NIBBLE))
     ex = g.select(F.explode("sc").alias("p"), (F.col("nd") >= 2).alias("dup"))
     return (
         ex.groupBy(F.col("p.source").alias("source"))
@@ -1267,21 +1271,8 @@ GROUP BY source ORDER BY source
 
 
 def span_sample_error_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_parallel(spark, sf_dir, "documents")
-    wins = docs.select(
-        "doc_id",
-        "source",
-        F.explode(TX.window_hashes(TX.tokens(F.col("text")), SPAN_W)).alias(
-            "whash"
-        ),
-    )
-    per = wins.groupBy("whash", "source", "doc_id").agg(
-        F.count(F.lit(1)).alias("cnt")
-    )
-    g = per.groupBy("whash").agg(
-        F.collect_list(F.struct("source", "cnt")).alias("sc"),
-        F.countDistinct("doc_id").alias("nd"),
-    )
+    wins = _span_windows(load_parallel(spark, sf_dir, "documents"), "source")
+    g = _span_groups(wins)
     ex = g.select(
         F.explode("sc").alias("p"),
         (F.col("nd") >= 2).alias("dup"),
@@ -1377,12 +1368,9 @@ TOP_SPANS_K = 20
 
 def boilerplate_span_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_parallel(spark, sf_dir, "documents")
-    toks = TX.tokens(F.col("text"))
-    wins = docs.select(
-        "doc_id", F.explode(TX.window_hashes(toks, SPAN_W)).alias("whash")
-    )
     top = (
-        wins.groupBy("whash")
+        _span_windows(docs)
+        .groupBy("whash")
         .agg(
             F.countDistinct("doc_id").alias("n_docs"),
             F.count(F.lit(1)).alias("n_occurrences"),
@@ -1400,7 +1388,9 @@ def boilerplate_span_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     exemplars = sorted({r["exemplar"] for r in top})
     spans = (
         docs.filter(F.col("doc_id").isin(exemplars))
-        .select(F.explode(TX.pos_ngrams(toks, SPAN_W)).alias("span"))
+        .select(
+            F.explode(TX.pos_ngrams(TX.tokens(F.col("text")), SPAN_W)).alias("span")
+        )
         .withColumn("whash", F.md5("span"))
         .join(F.broadcast(top_df), "whash")
         .select("whash", "span", "n_docs", "n_occurrences")

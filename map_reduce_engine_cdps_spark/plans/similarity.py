@@ -1971,29 +1971,21 @@ def knn_hubness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     there, so it contributes no edge (the fixtures contain none)."""
     emb = load_table(spark, sf_dir, "embeddings")
     edges = _exact_topk(emb, HUB_QUERIES, HUB_K)
-    # indeg feeds both the moment aggregate and the hub filter: left
-    # lazy, the O(32·n) similarity fan-out runs twice. Materialize the
-    # O(32·k) in-degree table once.
-    indeg = (
-        edges.groupBy("cand_id")
-        .agg(F.count(F.lit(1)).alias("indeg"))
-        .localCheckpoint(eager=True)
-    )
+    indeg = edges.groupBy("cand_id").agg(F.count(F.lit(1)).alias("indeg"))
     n_row = emb.agg(F.count(F.lit(1)).alias("n"))
-    moments = indeg.agg(
+    # one aggregate over the in-degree table, so the kNN front runs once;
+    # n_row on the outer side keeps n when there are no edges
+    moments = indeg.crossJoin(F.broadcast(n_row)).agg(
         F.max("indeg").alias("max_indeg"),
         F.count(F.lit(1)).alias("touched"),
         F.sum("indeg").alias("s1"),
         F.sum(F.col("indeg") * F.col("indeg")).alias("s2"),
         F.sum(F.col("indeg") * F.col("indeg") * F.col("indeg")).alias("s3"),
+        F.count_if(F.col("indeg") * F.col("n") > 2 * HUB_QUERIES * HUB_K).alias(
+            "hub_cnt"
+        ),
     )
-    j = moments.crossJoin(F.broadcast(n_row))
-    nq_k = HUB_QUERIES * HUB_K
-    hubs = (
-        indeg.crossJoin(F.broadcast(n_row))
-        .filter(F.col("indeg") * F.col("n") > 2 * nq_k)
-        .agg(F.count(F.lit(1)).alias("hub_cnt"))
-    )
+    j = n_row.crossJoin(moments)
     # sqrt is correctly rounded (IEEE); pow(x, 1.5/3) is not guaranteed
     # bit-identical across libms — so the skew uses only * / sqrt.
     mu = F.col("s1") / F.col("n").cast("double")
@@ -2003,7 +1995,7 @@ def knn_hubness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         - 3.0 * mu * F.col("s2") / F.col("n").cast("double")
         + 2.0 * mu * mu * mu
     )
-    return j.crossJoin(F.broadcast(hubs)).select(
+    return j.select(
         F.lit(HUB_QUERIES).alias("n_queries"),
         F.lit(HUB_K).alias("k"),
         F.col("n").alias("n_corpus"),

@@ -16,6 +16,39 @@ from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_tab
 
 
 # ---------------------------------------------------------------------------
+# Term statistics — the composable pieces every text query below is built
+# from: the clean-token word stream, the corpus word count and its top-k
+# cut, per-document term frequency and document frequency.
+# ---------------------------------------------------------------------------
+
+def _words(docs: DataFrame, *keys: str) -> DataFrame:
+    """(keys…, word): one row per clean token of `docs.text`."""
+    return docs.select(*keys, F.explode(TX.clean_tokens(F.col("text"))).alias("word"))
+
+
+def _word_counts(words: DataFrame) -> DataFrame:
+    """(word, cnt): occurrences of each word in a word stream."""
+    return words.groupBy("word").agg(F.count(F.lit(1)).alias("cnt"))
+
+
+def _top_words(counts: DataFrame, k: int) -> DataFrame:
+    """The k rows of a (word, cnt) table with the highest cnt, ties
+    broken on the word so the cut is engine-independent."""
+    return counts.orderBy(F.desc("cnt"), F.asc("word")).limit(k)
+
+
+def _tf(words: DataFrame) -> DataFrame:
+    """(doc_id, word, tf): occurrences of each word in each document."""
+    return words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
+
+
+def _df(tf: DataFrame) -> DataFrame:
+    """(word, df): the number of documents containing each word, from a
+    frame with one row per (doc_id, word), such as `_tf`'s."""
+    return tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
+
+
+# ---------------------------------------------------------------------------
 # wordcount — the reference's hello query (tasks/example_wordcount.py:9-35),
 # Spark-native: explode+groupBy gets map-side partial aggregation for free —
 # the headline win over the reference, which ships one (word,1) JSON message
@@ -23,12 +56,7 @@ from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_tab
 # ---------------------------------------------------------------------------
 
 def wordcount(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_parallel(spark, sf_dir, "documents")
-    return (
-        docs.select(F.explode(TX.clean_tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    return _word_counts(_words(load_parallel(spark, sf_dir, "documents")))
 
 
 WORDCOUNT_SQL = """
@@ -197,9 +225,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # rejected). Interleaved A/B, one session, 5 passes, identical
     # output: sf0.1 1.345 -> 1.112 s median, sf1 1.825 -> 1.565 s.
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.repartition("doc_id").select(
-        "doc_id", F.explode(TX.clean_tokens(F.col("text"))).alias("word")
-    )
+    toks = _words(docs.repartition("doc_id"), "doc_id")
     # Fault-tolerance caveat (ADVICE r12): localCheckpoint stores the
     # tf blocks executor-locally and TRUNCATES lineage — on a cluster,
     # losing an executor fails the job instead of recomputing, and the
@@ -209,12 +235,8 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager): the first consumer materializes it; per-invocation, so
     # nothing crosses bench runs; if session storage growth ever shows
     # up across many invocations, switch to persist()+unpersist.
-    tf = (
-        toks.groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=False)
-    )
-    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
+    tf = _tf(toks).localCheckpoint(eager=False)
+    dfreq = _df(tf)
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     scored = (
         tf.join(F.broadcast(dfreq), "word")
@@ -423,24 +445,27 @@ FROM g
 # shuffle-free; here the full vocab is small enough to broadcast as-is.
 # ---------------------------------------------------------------------------
 
-def unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(TX.clean_tokens(F.col("text"))).alias("word")
-    )
-    freq = toks.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-    total = freq.agg(F.sum("c").alias("t"))
+def _unigram_scored(spark: SparkSession, sf_dir: str, *keys: str) -> DataFrame:
+    """(doc_id, keys…, n_tokens, avg_neg_logp): each document's mean
+    −log p of its tokens under the corpus unigram model."""
+    toks = _words(load_parallel(spark, sf_dir, "documents"), "doc_id", *keys)
+    freq = _word_counts(toks)
+    total = freq.agg(F.sum("cnt").alias("t"))
     logp = freq.crossJoin(F.broadcast(total)).select(
-        "word", (-F.log(F.col("c") / F.col("t"))).alias("neg_logp")
+        "word", (-F.log(F.col("cnt") / F.col("t"))).alias("neg_logp")
     )
     return (
         toks.join(F.broadcast(logp), "word")
-        .groupBy("doc_id")
+        .groupBy("doc_id", *keys)
         .agg(
             F.count(F.lit(1)).alias("n_tokens"),
             F.round(F.avg("neg_logp"), 4).alias("avg_neg_logp"),
         )
     )
+
+
+def unigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _unigram_scored(spark, sf_dir)
 
 
 UNIGRAM_LOGPROB_SCORES_SQL = """
@@ -480,15 +505,9 @@ VOCAB_SIZE = 30
 
 
 def vocab_coverage_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
-        "lang", F.explode(TX.clean_tokens(F.col("text"))).alias("word")
-    )
+    toks = _words(load_parallel(spark, sf_dir, "documents"), "lang")
     vocab = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("c"))
-        .orderBy(F.desc("c"), F.asc("word"))
-        .limit(VOCAB_SIZE)
+        _top_words(_word_counts(toks), VOCAB_SIZE)
         .select("word")
         .withColumn("in_vocab", F.lit(1))
     )
@@ -553,21 +572,13 @@ def _bm25_scored(spark: SparkSession, sf_dir: str) -> DataFrame:
     hitting the 3-term max-cf query — the spine bm25_scores ranks and
     retrieval_ndcg_eval grades."""
     docs = load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(TX.clean_tokens(F.col("text"))).alias("word")
-    )
-    tf = toks.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
+    toks = _words(docs, "doc_id")
+    tf = _tf(toks)
     doclen = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
-    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
+    dfreq = _df(tf)
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
     avgdl = doclen.agg(F.avg("dl").alias("avgdl"))
-    query = (
-        toks.groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cf"))
-        .orderBy(F.desc("cf"), F.asc("word"))
-        .limit(3)
-        .select("word")
-    )
+    query = _top_words(_word_counts(toks), 3).select("word")
     k1, b = F.lit(_BM25_K1), F.lit(_BM25_B)
     idf = F.log(
         (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
@@ -637,11 +648,7 @@ ORDER BY bm25 DESC, doc_id ASC LIMIT 20
 # ---------------------------------------------------------------------------
 
 def inverted_index_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(TX.clean_tokens(F.col("text"))).alias("word")
-    )
-    per_doc = toks.groupBy("word", "doc_id").agg(F.count(F.lit(1)).alias("tf"))
+    per_doc = _tf(_words(load_parallel(spark, sf_dir, "documents"), "doc_id"))
     return per_doc.groupBy("word").agg(
         F.count(F.lit(1)).alias("df"),
         F.sum("tf").alias("cf"),
@@ -688,14 +695,7 @@ _BPE_MERGES = 8
 
 def _bpe_word_freqs(spark: SparkSession, sf_dir: str, top_v: int) -> DataFrame:
     docs = load_parallel(spark, sf_dir, "documents")
-    return (
-        docs.select(F.explode(TX.clean_tokens(F.col("text"))).alias("word"))
-        .filter(F.length("word") > 0)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .orderBy(F.desc("cnt"), F.asc("word"))
-        .limit(top_v)
-    )
+    return _top_words(_word_counts(_words(docs)), top_v)
 
 
 def _bpe_train(word_freqs: list[tuple[str, int]], n_merges: int):
@@ -843,13 +843,7 @@ def bpe_token_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
     frequency-weighted — the distributed application path): symbols per
     word before vs after, corpus-weighted. The merge list is broadcast;
     the word table never leaves the executors."""
-    full = (
-        load_parallel(spark, sf_dir, "documents")
-        .select(F.explode(TX.clean_tokens(F.col("text"))).alias("word"))
-        .filter(F.length("word") > 0)
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    full = _word_counts(_words(load_parallel(spark, sf_dir, "documents")))
     freqs = [
         (r["word"], r["cnt"])
         for r in _bpe_word_freqs(spark, sf_dir, _BPE_VOCAB).collect()
@@ -905,12 +899,7 @@ def bpe_token_compression(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def zipf_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_parallel(spark, sf_dir, "documents")
-    wc = (
-        docs.select(F.explode(TX.clean_tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-    )
+    wc = _word_counts(_words(load_parallel(spark, sf_dir, "documents")))
     w = W.orderBy(F.desc("cnt"), F.asc("word"))
     ranked = wc.withColumn("rnk", F.row_number().over(w))
     return ranked.agg(
@@ -954,7 +943,7 @@ def vocab_growth_heaps(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds = docs.agg(
         F.min("doc_id").alias("lo"), (F.max("doc_id") - F.min("doc_id") + 1).alias("span")
     )
-    toks = docs.select("doc_id", F.explode(TX.clean_tokens(F.col("text"))).alias("word"))
+    toks = _words(docs, "doc_id")
     bucket = lambda c: F.floor((F.col(c) - F.col("lo")) * 10 / F.col("span")).cast("int")
 
     tok_buckets = (
@@ -1147,23 +1136,7 @@ GROUP BY context ORDER BY n DESC, context ASC LIMIT 20
 # ---------------------------------------------------------------------------
 
 def ccnet_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", F.explode(TX.clean_tokens(F.col("text"))).alias("word")
-    )
-    freq = toks.groupBy("word").agg(F.count(F.lit(1)).alias("c"))
-    total = freq.agg(F.sum("c").alias("t"))
-    logp = freq.crossJoin(F.broadcast(total)).select(
-        "word", (-F.log(F.col("c") / F.col("t"))).alias("neg_logp")
-    )
-    scored = (
-        toks.join(F.broadcast(logp), "word")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_tokens"),
-            F.round(F.avg("neg_logp"), 4).alias("avg_neg_logp"),
-        )
-    )
+    scored = _unigram_scored(spark, sf_dir, "lang")
     w = W.partitionBy("lang").orderBy(F.asc("avg_neg_logp"), F.asc("doc_id"))
     bucketed = scored.withColumn(
         "bucket",
@@ -1238,9 +1211,7 @@ NB_FOLDS = 5
 
 def nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", "lang", F.explode(TX.clean_tokens(F.col("text"))).alias("word")
-    )
+    toks = _words(docs, "doc_id", "lang")
     train = toks.filter(F.col("doc_id") % NB_FOLDS != NB_TEST_FOLD)
     test = toks.filter(F.col("doc_id") % NB_FOLDS == NB_TEST_FOLD)
 
@@ -1527,10 +1498,7 @@ def bigram_logprob_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         c2.groupBy(F.substring_index("bigram", " ", 1).alias("w1"))
         .agg(F.sum("c2").alias("c1"))
     )
-    vocab = (
-        docs.select(F.explode(TX.clean_tokens(F.col("text"))).alias("w"))
-        .agg(F.countDistinct("w").alias("v"))
-    )
+    vocab = _words(docs).agg(F.countDistinct("word").alias("v"))
     lm = (
         c2.withColumn("w1", F.substring_index("bigram", " ", 1))
         .join(c1, "w1")
@@ -1888,8 +1856,6 @@ RRF_K = 60
 
 
 def rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
     from map_reduce_engine_cdps_spark.multimodal.binary import text_embedder_udf
 
     lex = bm25_scores(spark, sf_dir)
@@ -2013,9 +1979,6 @@ def _wand_contrib_scores(
     """(per-(doc, term) contributions, per-doc scores) for the WAND
     eval — `scores` is the frame the k-th-score global window ranks."""
     docs = load_parallel(spark, sf_dir, "documents")
-    toks = docs.select(
-        "doc_id", F.explode(TX.clean_tokens(F.col("text"))).alias("word")
-    )
     # One tokenize+groupBy pass feeds EVERYTHING downstream: df, cf and
     # the query terms all derive from tf (cf == Σ tf per word — no
     # second corpus tokenize), and tf is eager-localCheckpointed
@@ -2024,20 +1987,12 @@ def _wand_contrib_scores(
     # (multi-consumer rule, SCALE.md r6 rule 8). The materialized frame
     # is the (doc, term, tf) posting list — the object an inverted
     # index build materializes anyway.
-    tf = (
-        toks.groupBy("doc_id", "word")
-        .agg(F.count(F.lit(1)).alias("tf"))
-        .localCheckpoint(eager=True)
-    )
+    tf = _tf(_words(docs, "doc_id")).localCheckpoint(eager=True)
     n_docs = docs.count()
-    dfreq = tf.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    query = (
-        tf.groupBy("word")
-        .agg(F.sum("tf").alias("cf"))
-        .orderBy(F.desc("cf"), F.asc("word"))
-        .limit(3)
-        .select("word")
-    )
+    dfreq = _df(tf)
+    query = _top_words(
+        tf.groupBy("word").agg(F.sum("tf").alias("cnt")), 3
+    ).select("word")
     contrib = (
         tf.join(F.broadcast(query), "word")
         .join(F.broadcast(dfreq.join(F.broadcast(query), "word")), "word")
@@ -2058,8 +2013,6 @@ def _wand_contrib_scores(
 
 
 def wand_pruned_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     contrib, scores = _wand_contrib_scores(spark, sf_dir)
     wk = W.orderBy(F.desc("score"), F.asc("doc_id"))
     # one driver round-trip for both the k-th score and the top-k mass
@@ -2156,10 +2109,7 @@ GROUP BY s_k, topk_mass
 def term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_parallel(spark, sf_dir, "documents")
     n_docs = docs.count()
-    toks = docs.select(
-        "doc_id", F.explode(TX.tokens(F.col("text"))).alias("word")
-    )
-    tf = toks.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("tf"))
+    tf = _tf(docs.select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("word")))
     stats = tf.groupBy("word").agg(
         F.count(F.lit(1)).alias("df"),
         F.sum("tf").alias("cf"),
@@ -2215,29 +2165,14 @@ _QE_MIN_DF = 5
 
 
 def query_expansion_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql.window import Window as W
-
     docs = load_parallel(spark, sf_dir, "documents")
     n_docs = docs.count()
     # Eager-checkpoint the distinct doc-term frame: FOUR consumers
     # (dfreq, the query-term probe, and both sides of the co-occurrence
     # join) otherwise re-plan the tokenize+distinct subtree each.
-    dt = (
-        docs.select(
-            "doc_id", F.explode(TX.clean_tokens(F.col("text"))).alias("word")
-        )
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    dfreq = dt.groupBy("word").agg(F.count(F.lit(1)).alias("df"))
-    query = (
-        docs.select(F.explode(TX.clean_tokens(F.col("text"))).alias("word"))
-        .groupBy("word")
-        .agg(F.count(F.lit(1)).alias("cf"))
-        .orderBy(F.desc("cf"), F.asc("word"))
-        .limit(3)
-        .select(F.col("word").alias("q"))
-    )
+    dt = _words(docs, "doc_id").distinct().localCheckpoint(eager=True)
+    dfreq = _df(dt)
+    query = _top_words(_word_counts(_words(docs)), 3).select(F.col("word").alias("q"))
     qd = dt.join(F.broadcast(query), dt.word == F.col("q")).select(
         "doc_id", "q"
     )

@@ -14,6 +14,9 @@ engine-representation drift:
    through Spark AND DuckDB with the blessed aggregate patterns
    (CAST(sum AS BIGINT), round(avg, k), count) produce identical
    normalized multisets.
+4. The text and span queries built on the shared term statistics match
+   their oracles on a corpus that also holds NULL, empty and
+   punctuation-only documents.
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ from hypothesis import strategies as st
 
 sys.path.insert(0, "/root/repo")
 
-from tools.oracle_check import df_multiset, lint_types, norm_cell
+from tools.oracle_check import compare, df_multiset, lint_types, norm_cell, oracle_con
 
 
 def test_norm_cell_is_type_sensitive():
@@ -250,3 +253,55 @@ def test_gd2_logits_clear_decision_threshold(sf):
     # guard sits at 1e-8 so it trips only if the data genuinely
     # approaches the knife edge, not on per-SF margin wobble.
     assert min_margin > 1e-8, min_margin
+
+
+# Every query built on plans/textops.py's word stream, word count, tf/df
+# and unigram scorer, on plans/dedup.py's span-window stream, plus
+# knn_hubness_stats.
+TERM_STAT_QUERIES = [
+    "wordcount", "tfidf_top_terms", "unigram_logprob_scores",
+    "ccnet_perplexity_buckets", "vocab_coverage_stats", "bm25_scores",
+    "retrieval_ndcg_eval", "rrf_fusion_topk", "inverted_index_stats",
+    "bpe_merges", "bpe_token_compression", "zipf_fit", "vocab_growth_heaps",
+    "nb_lang_confusion", "bigram_logprob_scores", "wand_pruned_retrieval",
+    "term_burstiness", "query_expansion_pmi", "duplicate_spans",
+    "duplicate_spans_sampled", "span_sample_error_eval",
+    "boilerplate_span_topk", "knn_hubness_stats",
+]
+
+
+def test_term_statistics_match_oracle_on_degenerate_text(spark, sf_dir, tmp_path):
+    """Documents whose text has no clean token (NULL, '' and
+    punctuation only) add no word, tf, df or span window on either
+    engine, so every oracle compare still holds."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from map_reduce_engine_cdps_spark.sources.readers import TABLES
+
+    for t in TABLES:
+        shutil.copy(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    docs = pq.read_table(tmp_path / "documents.parquet")
+    first = max(docs.column("doc_id").to_pylist()) + 1
+    texts = [None, "", "!!! ..."]
+    extra = pa.table(
+        {
+            "doc_id": [first + i for i in range(len(texts))],
+            "text": texts,
+            "lang": ["en"] * len(texts),
+            "source": ["src0"] * len(texts),
+            "n_chars": [None if x is None else len(x) for x in texts],
+        },
+        schema=docs.schema,
+    )
+    pq.write_table(pa.concat_tables([docs, extra]), tmp_path / "documents.parquet")
+
+    con = oracle_con(str(tmp_path))
+    failed = {}
+    for name in TERM_STAT_QUERIES:
+        _, problems = compare(spark, con, name, str(tmp_path))
+        if problems:
+            failed[name] = problems
+    assert not failed, failed

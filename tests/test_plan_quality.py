@@ -342,6 +342,36 @@ def test_ann_embedding_shuffle_crossings_bounded(spark):
         spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
+def _jobs_run_by(spark, build) -> int:
+    """Number of Spark jobs that `build()` runs."""
+    sc = spark.sparkContext
+
+    def job_ids() -> set:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        return set(sc.statusTracker().getJobIdsForGroup())
+
+    before = job_ids()
+    build()
+    return len(job_ids() - before)
+
+
+def test_knn_hubness_front_is_in_the_plan(spark):
+    """knn_hubness_stats keeps its kNN front in the plan it returns: no
+    checkpoint (an RDD scan) hides the front from the crossings gate
+    above, and building the DataFrame runs no Spark job beyond the
+    parquet schema read of its one table."""
+    from map_reduce_engine_cdps_spark.sources.readers import load_table
+
+    query = _REGISTRY["knn_hubness_stats"][0]
+    assert _jobs_run_by(spark, lambda: query(spark, SF_DIR)) == _jobs_run_by(
+        spark, lambda: load_table(spark, SF_DIR, "embeddings")
+    )
+    df = query(spark, SF_DIR)
+    df.count()
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "ExistingRDD" not in plan, plan[:2000]
+
+
 MULTIMODAL_FAMILY = [
     # every registry query whose input is the binary media column
     # (documents-derived payloads or .benchmedia fixtures)

@@ -95,13 +95,16 @@ def test_ab_tool_reports_identical_rows_and_removes_its_worktree(tmp_path):
     env = dict(os.environ, TMPDIR=str(tmp_path))
     r = subprocess.run(
         [sys.executable, os.path.join(REPO, "tools", "ab.py"), "HEAD", "wordcount",
-         "--sf", SF_DIR, "--pairs", "1"],
+         "tfidf_top_terms", "--sf", SF_DIR, "--pairs", "1"],
         capture_output=True, text=True, env=env, timeout=600,
     )
     assert r.returncode == 0, r.stdout + r.stderr[-2000:]
     assert "wordcount: rows identical" in r.stdout
     line = next(x for x in r.stdout.splitlines() if x.startswith("wordcount: "))
     assert line.endswith(", plan identical"), line
+    # tfidf_top_terms reads its checkpointed tf table: the digest stops there
+    line = next(x for x in r.stdout.splitlines() if x.startswith("tfidf_top_terms: "))
+    assert line.endswith(", plan identical above an RDD scan"), line
     assert "won" in r.stdout
     assert _worktrees() == before
     assert not [p for p in os.listdir(tmp_path) if p.startswith("ab-")]

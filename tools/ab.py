@@ -11,9 +11,12 @@ the package cannot share one interpreter. For each query the sorted
 per-side medians, the raw times and how many pairs each side won. Each
 query's line also says whether the two optimized logical plans are
 identical once expression ids (`#123`, `#123L`) and lambda-variable
-numbers (`x_7#`) are normalized. Exits 1 if any query's rows differ; a
-plan difference alone does not fail the run, since a perf change alters
-plans on purpose.
+numbers (`x_7#`) are normalized. When either plan reads an RDD (a
+`localCheckpoint`, or rows created in Python), the digest cannot see
+below it, and an identical digest is reported as `plan identical above
+an RDD scan`. Exits 1 if any query's rows differ; a plan difference
+alone does not fail the run, since a perf change alters plans on
+purpose.
 """
 
 from __future__ import annotations
@@ -34,13 +37,14 @@ import traceback
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
-def plan_digest(df) -> str:
+def plan_digest(df) -> tuple[str, bool]:
     """sha256 of the optimized logical plan with expression ids and
-    lambda-variable numbers normalized (both are session counters)."""
+    lambda-variable numbers normalized (both are session counters), and
+    whether the plan has a LogicalRDD leaf, whose lineage it hides."""
     plan = df._jdf.queryExecution().optimizedPlan().toString()
     plan = re.sub(r"#\d+L?", "#", plan)
     plan = re.sub(r"\b(lambda \w+?)_\d+#", r"\1_#", plan)
-    return hashlib.sha256(plan.encode()).hexdigest()
+    return hashlib.sha256(plan.encode()).hexdigest(), "LogicalRDD" in plan
 
 
 def serve(sf_dir: str) -> None:
@@ -70,7 +74,8 @@ def serve(sf_dir: str) -> None:
             if req["op"] == "rows":
                 rows = sorted(repr(tuple(r)) for r in df.collect())
                 digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
-                reply = {"rows": len(rows), "digest": digest, "plan": plan_digest(df)}
+                plan, rdd = plan_digest(df)
+                reply = {"rows": len(rows), "digest": digest, "plan": plan, "rdd": rdd}
             else:
                 df.write.format("noop").mode("overwrite").save()
                 reply = {"seconds": time.perf_counter() - t0}
@@ -115,7 +120,10 @@ class Side:
 
 def compare(query: str, sides: list[Side], pairs: int) -> bool:
     got = [s.ask("rows", query) for s in sides]
-    plan = "plan identical" if got[0]["plan"] == got[1]["plan"] else "plan differs"
+    plan = "plan differs"
+    if got[0]["plan"] == got[1]["plan"]:
+        rdd = any(g["rdd"] for g in got)
+        plan = "plan identical above an RDD scan" if rdd else "plan identical"
     if got[0]["digest"] != got[1]["digest"]:
         print(f"{query}: ROWS DIFFER " + "  ".join(
             f"{s.label} {g['rows']} rows {g['digest'][:12]}" for s, g in zip(sides, got))

@@ -80,62 +80,74 @@ def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
     spark = get_spark()
+    con = oracle_con(sf_dir)
+    failures = []
+    for name, (_, sql) in _REGISTRY.items():
+        if only and name not in only:
+            continue
+        t0 = time.time()
+        n, problems = compare(spark, con, name, sf_dir)
+        if problems:
+            print(f"FAIL {name}: " + "; ".join(problems))
+            failures.append(name)
+        elif sql is None:
+            print(f"ok   {name}: rows-only ({n} rows, {time.time()-t0:.1f}s)")
+            if n == 0:
+                print(f"     WARN {name}: 0 rows")
+        else:
+            print(f"ok   {name}: {n} rows match ({time.time()-t0:.1f}s)")
+            if n == 0:
+                print(f"     WARN {name}: 0 rows on both sides")
+    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
+    return 1 if failures else 0
+
+
+def oracle_con(sf_dir: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table of `sf_dir`."""
     con = duckdb.connect()
     for t in TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM '{sf_dir}/{t}.parquet'"
         )
-    failures = []
-    for name, (fn, sql) in _REGISTRY.items():
-        if only and name not in only:
-            continue
-        if callable(sql):  # lazily built oracle (see registry.ORACLE_SQL)
-            sql = sql()
-        t0 = time.time()
-        try:
-            sdf = fn(spark, sf_dir)
-            s_cols = sdf.columns
-            s_rows = [tuple(r) for r in sdf.collect()]
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: spark error: {type(e).__name__}: {e}")
-            failures.append(name)
-            continue
-        if sql is None:
-            print(f"ok   {name}: rows-only ({len(s_rows)} rows, {time.time()-t0:.1f}s)")
-            if len(s_rows) == 0:
-                print(f"     WARN {name}: 0 rows")
-            continue
-        try:
-            rel = con.sql(sql)
-            d_cols = rel.columns
-            d_types = [str(t) for t in rel.types]
-            d_rows = rel.fetchall()
-        except Exception as e:  # noqa: BLE001
-            print(f"FAIL {name}: duckdb error: {type(e).__name__}: {e}")
-            failures.append(name)
-            continue
-        problems = []
-        bad_types = lint_types(d_cols, d_types)
-        if bad_types:
-            problems.append(f"oracle result type Spark can't emit: {bad_types}")
-        if len(s_rows) != len(d_rows):
-            problems.append(f"rowcount spark={len(s_rows)} duckdb={len(d_rows)}")
-        if sorted(s_cols) != sorted(d_cols):
-            problems.append(f"cols spark={sorted(s_cols)} duckdb={sorted(d_cols)}")
-        if not problems:
-            ms, md = df_multiset(s_cols, s_rows), df_multiset(d_cols, d_rows)
-            if ms != md:
-                diff = [(a, b) for a, b in zip(ms, md) if a != b][:3]
-                problems.append(f"values differ, first diffs: {diff}")
-        if problems:
-            print(f"FAIL {name}: " + "; ".join(problems))
-            failures.append(name)
-        else:
-            print(f"ok   {name}: {len(s_rows)} rows match ({time.time()-t0:.1f}s)")
-            if len(s_rows) == 0:
-                print(f"     WARN {name}: 0 rows on both sides")
-    print(f"\n{len(failures)} failures" + (f": {failures}" if failures else ""))
-    return 1 if failures else 0
+    return con
+
+
+def compare(spark, con, name: str, sf_dir: str) -> tuple[int, list[str]]:
+    """Run one registered query through Spark and its DuckDB oracle:
+    (Spark row count, problems). A query without oracle SQL only has to
+    run in Spark."""
+    fn, sql = _REGISTRY[name]
+    if callable(sql):  # lazily built oracle (see registry.ORACLE_SQL)
+        sql = sql()
+    try:
+        sdf = fn(spark, sf_dir)
+        s_cols = sdf.columns
+        s_rows = [tuple(r) for r in sdf.collect()]
+    except Exception as e:  # noqa: BLE001
+        return 0, [f"spark error: {type(e).__name__}: {e}"]
+    if sql is None:
+        return len(s_rows), []
+    try:
+        rel = con.sql(sql)
+        d_cols = rel.columns
+        d_types = [str(t) for t in rel.types]
+        d_rows = rel.fetchall()
+    except Exception as e:  # noqa: BLE001
+        return len(s_rows), [f"duckdb error: {type(e).__name__}: {e}"]
+    problems = []
+    bad_types = lint_types(d_cols, d_types)
+    if bad_types:
+        problems.append(f"oracle result type Spark can't emit: {bad_types}")
+    if len(s_rows) != len(d_rows):
+        problems.append(f"rowcount spark={len(s_rows)} duckdb={len(d_rows)}")
+    if sorted(s_cols) != sorted(d_cols):
+        problems.append(f"cols spark={sorted(s_cols)} duckdb={sorted(d_cols)}")
+    if not problems:
+        ms, md = df_multiset(s_cols, s_rows), df_multiset(d_cols, d_rows)
+        if ms != md:
+            diff = [(a, b) for a, b in zip(ms, md) if a != b][:3]
+            problems.append(f"values differ, first diffs: {diff}")
+    return len(s_rows), problems
 
 
 if __name__ == "__main__":
