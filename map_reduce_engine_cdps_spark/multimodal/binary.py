@@ -18,11 +18,11 @@ from __future__ import annotations
 
 import functools
 import hashlib
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -192,10 +192,47 @@ def _pixel_grid_features(arr: np.ndarray) -> np.ndarray:
     return (grid / 255.0).flatten().astype(np.float32)
 
 
+def _payload_map(
+    df: DataFrame, schema: T.StructType, rows: Callable[[bytes], list], null_rows: list
+) -> DataFrame:
+    """The one shape of a multimodal operator: (media_id, content) cross
+    into Python in Arrow batches, ``rows(payload)`` turns one payload's
+    bytes into a list of row tails, and each tail is prefixed with its
+    media_id and typed by ``schema``. A NULL payload emits ``null_rows``.
+
+    Column pruning matters at scale: only (media_id, content) cross the
+    Python boundary; metadata stays JVM-side and is re-joined by the
+    caller if needed."""
+
+    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in it:
+            out = [
+                (mid, *tail)
+                for mid, b in zip(pdf["media_id"], pdf["content"])
+                for tail in (null_rows if b is None else rows(bytes(b)))
+            ]
+            yield pd.DataFrame(out, columns=schema.fieldNames())
+
+    return df.select("media_id", "content").mapInPandas(batches, schema=schema)
+
+
+def _features(df: DataFrame, featurize: Callable[[bytes], np.ndarray]) -> DataFrame:
+    """One FEATURES_SCHEMA row per media row: (n_bytes, featurize(bytes)),
+    or (0, NULL) for a NULL payload."""
+    return _payload_map(df, FEATURES_SCHEMA, lambda b: [(len(b), featurize(b))], [(0, None)])
+
+
+_DECODERS = {
+    "fake": _fake_decode_features,
+    "ppm": lambda b: _pixel_grid_features(_ppm_decode(b)),
+    "pillow": lambda b: _pixel_grid_features(_pillow_decode(b)),
+}
+
+
 def extract_features(df: DataFrame, decode: str = "fake") -> DataFrame:
     """content → feature vector via Arrow-batched mapInPandas.
 
-    ``decode`` picks the per-batch payload treatment:
+    ``decode`` picks the payload treatment:
       - ``"fake"``: deterministic md5 pseudo-features (no media libs).
       - ``"ppm"``: REAL image decode for binary PPM (P6) payloads —
         dependency-free (raw RGB behind a text header), so it executes
@@ -204,49 +241,15 @@ def extract_features(df: DataFrame, decode: str = "fake") -> DataFrame:
       - ``"pillow"``: REAL image decode — RGB / pad-to-square /
         LANCZOS 224x224 per the reference — then a pixel-grid feature
         summary. Raises a clear error if Pillow is not installed.
-
-    Column pruning matters at scale: only (media_id, content) cross the
-    Python boundary; metadata stays JVM-side and is re-joined by the
-    caller if needed.
     """
-    if decode not in ("fake", "ppm", "pillow"):
+    if decode not in _DECODERS:
         raise ValueError(f"unknown decode mode: {decode}")
     if decode == "pillow" and not pillow_available():
         raise ImportError(
             "decode='pillow' requires Pillow (pip install Pillow); "
             "use decode='fake' for the deterministic stand-in"
         )
-
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            if decode == "ppm":
-                feats = [
-                    _pixel_grid_features(_ppm_decode(bytes(b)))
-                    if b is not None
-                    else None
-                    for b in pdf["content"]
-                ]
-            elif decode == "pillow":
-                feats = [
-                    _pixel_grid_features(_pillow_decode(bytes(b)))
-                    if b is not None
-                    else None
-                    for b in pdf["content"]
-                ]
-            else:
-                feats = [
-                    _fake_decode_features(bytes(b)) if b is not None else None
-                    for b in pdf["content"]
-                ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": [len(bytes(b)) if b is not None else 0 for b in pdf["content"]],
-                    "features": feats,
-                }
-            )
-
-    return df.select("media_id", "content").mapInPandas(batches, schema=FEATURES_SCHEMA)
+    return _features(df, _DECODERS[decode])
 
 
 def synth_media_df(spark, n: int = 64, partitions: int = 4) -> DataFrame:
@@ -431,52 +434,57 @@ CNN_INPUT_SIDE = 16  # decode-resize target for the CNN registry query
 
 
 def cnn_embeddings(df: DataFrame, input_side: int = CNN_INPUT_SIDE) -> DataFrame:
-    """content (binary PPM) → real CNN embedding via Arrow mapInPandas
-    with the per-executor weight singleton. Same boundary discipline as
-    extract_features: only (media_id, content) cross into Python."""
+    """content (binary PPM) → real CNN embedding via the payload map
+    with the per-executor weight singleton."""
+    size = (input_side, input_side)
+    return _features(df, lambda b: _cnn_forward(_ppm_decode(b, size=size)).astype(np.float32))
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        size = (input_side, input_side)
-        for pdf in it:
-            feats = [
-                _cnn_forward(_ppm_decode(bytes(b), size=size)).astype(np.float32)
-                if b is not None
-                else None
-                for b in pdf["content"]
-            ]
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "n_bytes": [
-                        len(bytes(b)) if b is not None else 0 for b in pdf["content"]
-                    ],
-                    "features": feats,
-                }
-            )
 
-    return df.select("media_id", "content").mapInPandas(batches, schema=FEATURES_SCHEMA)
+def _ppm_text(w: Column, h: Column, pixels: Column) -> Column:
+    """A binary PPM (P6) payload built with JVM expressions: the header
+    of a ``w`` x ``h`` image, then ``pixels``, its w*h*3 raw RGB bytes
+    as chars of code points 0..96 (ASCII-safe, so :func:`_media`'s
+    ISO-8859-1 encode is the identity byte map)."""
+    return F.concat(
+        F.lit("P6\n"), w.cast("string"), F.lit(" "), h.cast("string"), F.lit("\n255\n"), pixels
+    )
+
+
+def _const_pixels(value: str, n: str) -> Column:
+    """``n`` bytes of the constant pixel value ``value`` (SQL exprs)."""
+    return F.expr(f"repeat(char(cast({value} as int)), {n})")
+
+
+def _media(docs: DataFrame, text: Column) -> DataFrame:
+    """(media_id, content) per document: doc_id and the ISO-8859-1
+    bytes of ``text``."""
+    return docs.select(
+        F.col("doc_id").alias("media_id"),
+        F.encode(text, "ISO-8859-1").alias("content"),
+    )
 
 
 def _const_ppm_media(docs: DataFrame) -> DataFrame:
     """Deterministic constant-color SQUARE binary PPM payload per
-    document, built with pure JVM expressions: side 8..16 px
-    (doc_id % 9 + 8), pixel value 0..96 (doc_id * 37 % 97 — ASCII-safe
-    so the ISO-8859-1 encode is the identity byte map)."""
+    document: side 8..16 px (doc_id % 9 + 8), pixel value 0..96
+    (doc_id * 37 % 97)."""
     side = (F.col("doc_id") % 9 + 8).cast("int")
-    header = F.concat(
-        F.lit("P6\n"),
-        side.cast("string"),
-        F.lit(" "),
-        side.cast("string"),
-        F.lit("\n255\n"),
-    )
-    pixels = F.expr(
-        "repeat(char(cast(doc_id * 37 % 97 as int)), "
-        "cast((doc_id % 9 + 8) * (doc_id % 9 + 8) * 3 as int))"
-    )
-    return docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.concat(header, pixels), "ISO-8859-1").alias("content"),
+    n = "cast((doc_id % 9 + 8) * (doc_id % 9 + 8) * 3 as int)"
+    pixels = _const_pixels("doc_id * 37 % 97", n)
+    return _media(docs, _ppm_text(side, side, pixels))
+
+
+def _const_ppm_frames(n_frames: Column, values: list) -> Column:
+    """A video payload: the first ``n_frames`` of len(``values``)
+    back-to-back 8x8 constant-color P6 frames, frame f of pixel value
+    ``values[f]`` (an SQL expr)."""
+    eight = F.lit(8)
+    return F.concat(
+        *(
+            F.when(F.lit(f) < n_frames, _ppm_text(eight, eight, _const_pixels(v, "192")))
+            .otherwise(F.lit(""))
+            for f, v in enumerate(values)
+        )
     )
 
 
@@ -538,22 +546,12 @@ def _gradient_ppm_media(docs: DataFrame) -> DataFrame:
         (F.floor(r / 7) + 5).cast("int").alias("h"),
         ((r * 11) % 97).cast("int").alias("base"),
     )
+    pixels = F.expr(
+        "array_join(transform(sequence(0, w * h * 3 - 1), i -> char((base + i) % 97)), '')"
+    )
     return staged.select(
         "media_id",
-        F.encode(
-            F.concat(
-                F.lit("P6\n"),
-                F.col("w").cast("string"),
-                F.lit(" "),
-                F.col("h").cast("string"),
-                F.lit("\n255\n"),
-                F.expr(
-                    "array_join(transform(sequence(0, w * h * 3 - 1), "
-                    "i -> char((base + i) % 97)), '')"
-                ),
-            ),
-            "ISO-8859-1",
-        ).alias("content"),
+        F.encode(_ppm_text(F.col("w"), F.col("h"), pixels), "ISO-8859-1").alias("content"),
     )
 
 
@@ -719,51 +717,20 @@ def sample_frames(
     if decode not in ("fake", "ppm"):
         raise ValueError(f"unknown decode mode: {decode}")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids, out_idx, out_feats = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                if payload is None:
-                    continue
-                data = bytes(payload)
-                if decode == "ppm":
-                    frames = _ppm_split(data)
-                    taken = 0
-                    for f in range(0, len(frames), every_n):
-                        if taken >= max_frames:
-                            break
-                        out_ids.append(mid)
-                        out_idx.append(f)
-                        out_feats.append(
-                            # native resolution: grid features are
-                            # resolution-agnostic and a fixed 224^2
-                            # upscale of small frames was measured as
-                            # pure allocation cost (5.2x sf1 slope)
-                            _pixel_grid_features(
-                                _ppm_decode(frames[f], size=None)
-                            )
-                        )
-                        taken += 1
-                    continue
-                n_frames = max(len(data) // FRAME_BYTES, 1)
-                taken = 0
-                for f in range(0, n_frames, every_n):
-                    if taken >= max_frames:
-                        break
-                    chunk = data[f * FRAME_BYTES : (f + 1) * FRAME_BYTES]
-                    out_ids.append(mid)
-                    out_idx.append(f)
-                    out_feats.append(_fake_decode_features(chunk))
-                    taken += 1
-            yield pd.DataFrame(
-                {
-                    "media_id": out_ids,
-                    "frame_idx": pd.array(out_idx, dtype="int32"),
-                    "frame_features": out_feats,
-                }
-            )
+    def frames(data: bytes) -> list:
+        if decode == "ppm":
+            chunks = _ppm_split(data)
+            # native resolution: grid features are resolution-agnostic
+            # and a fixed 224^2 upscale of small frames was measured as
+            # pure allocation cost (5.2x sf1 slope)
+            featurize = lambda c: _pixel_grid_features(_ppm_decode(c, size=None))
+        else:
+            n = max(len(data) // FRAME_BYTES, 1)
+            chunks = [data[f * FRAME_BYTES : (f + 1) * FRAME_BYTES] for f in range(n)]
+            featurize = _fake_decode_features
+        return [(f, featurize(chunks[f])) for f in range(0, len(chunks), every_n)[:max_frames]]
 
-    return df.select("media_id", "content").mapInPandas(batches, schema=FRAME_SCHEMA)
+    return _payload_map(df, FRAME_SCHEMA, frames, [])
 
 
 def ppm_video_frame_samples(spark, sf_dir: str) -> DataFrame:
@@ -779,20 +746,8 @@ def ppm_video_frame_samples(spark, sf_dir: str) -> DataFrame:
     from map_reduce_engine_cdps_spark.sources.readers import load_parallel
 
     docs = load_parallel(spark, sf_dir, "documents").select("doc_id")
-    n_frames = F.col("doc_id") % 5 + 1
-    parts = []
-    for f in range(5):
-        frame = F.concat(
-            F.lit("P6\n8 8\n255\n"),
-            F.expr(
-                f"repeat(char(cast((doc_id * 37 + {f} * 11) % 97 as int)), 192)"
-            ),
-        )
-        parts.append(F.when(F.lit(f) < n_frames, frame).otherwise(F.lit("")))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.concat(*parts), "ISO-8859-1").alias("content"),
-    )
+    values = [f"(doc_id * 37 + {f} * 11) % 97" for f in range(5)]
+    media = _media(docs, _const_ppm_frames(F.col("doc_id") % 5 + 1, values))
     frames = sample_frames(media, every_n=2, max_frames=4, decode="ppm")
     return frames.select(
         "media_id",
@@ -950,39 +905,19 @@ def window_audio(
     if decode not in ("fake", "wav"):
         raise ValueError(f"unknown decode mode: {decode}")
 
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, idxs, ns, rms, peak = [], [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                if payload is None:
-                    continue
-                if decode == "wav":
-                    pcm = _wav_decode(bytes(payload))
-                else:
-                    pcm = np.frombuffer(bytes(payload), dtype=np.int8).astype(
-                        np.float64
-                    ) / 128.0
-                n_win = max((len(pcm) + window_samples - 1) // window_samples, 1)
-                for w in range(min(n_win, max_windows)):
-                    chunk = pcm[w * window_samples : (w + 1) * window_samples]
-                    if len(chunk) == 0:
-                        continue
-                    ids.append(mid)
-                    idxs.append(w)
-                    ns.append(len(chunk))
-                    rms.append(float(np.sqrt(np.mean(chunk * chunk))))
-                    peak.append(float(np.max(np.abs(chunk))))
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "window_idx": pd.array(idxs, dtype="int32"),
-                    "n_samples": pd.array(ns, dtype="int32"),
-                    "rms": rms,
-                    "peak": peak,
-                }
-            )
+    def windows(data: bytes) -> list:
+        if decode == "wav":
+            pcm = _wav_decode(data)
+        else:
+            pcm = np.frombuffer(data, dtype=np.int8).astype(np.float64) / 128.0
+        n_win = min(-(-len(pcm) // window_samples), max_windows)
+        chunks = (pcm[w * window_samples : (w + 1) * window_samples] for w in range(n_win))
+        return [
+            (w, len(c), float(np.sqrt(np.mean(c * c))), float(np.max(np.abs(c))))
+            for w, c in enumerate(chunks)
+        ]
 
-    return df.select("media_id", "content").mapInPandas(batches, schema=AUDIO_SCHEMA)
+    return _payload_map(df, AUDIO_SCHEMA, windows, [])
 
 
 def audio_window_features(spark, sf_dir: str) -> DataFrame:
@@ -1012,6 +947,26 @@ def _le_chars_sql(val_sql: str, nbytes: int) -> str:
     return "concat(" + ", ".join(parts) + ")"
 
 
+def _pcm16_sql(v: str) -> str:
+    """The two little-endian chars of a 16-bit sample ``v`` in [0, 65536)."""
+    return f"concat(char(cast(({v}) % 256 as int)), char(cast(({v}) div 256 as int)))"
+
+
+def _wav_text(n: str, *pcm: Column) -> Column:
+    """A canonical RIFF/WAVE payload built with JVM expressions: the
+    44-byte mono PCM-16 header for ``n`` samples (an SQL expr), then
+    ``pcm``, the samples' 2n chars; ISO-8859-1 encoded by :func:`_media`."""
+    le = _le_chars_sql
+    header = (
+        f"concat('RIFF', {le(f'36 + ({n}) * 2', 4)}, 'WAVE', 'fmt ', {le('16', 4)}, "
+        f"{le('1', 2)}, {le('1', 2)}, "  # PCM, mono
+        f"{le('16000', 4)}, {le('32000', 4)}, "  # sample rate, byte rate
+        f"{le('2', 2)}, {le('16', 2)}, "  # block align, bits
+        f"'data', {le(f'({n}) * 2', 4)})"
+    )
+    return F.concat(F.expr(header), *pcm)
+
+
 def wav_audio_windows(spark, sf_dir: str) -> DataFrame:
     """Registry entry: REAL audio-container decode, value-certified.
     JVM expressions build a canonical 44-byte RIFF/WAVE PCM-16 header
@@ -1028,36 +983,8 @@ def wav_audio_windows(spark, sf_dir: str) -> DataFrame:
     n = "doc_id % 150 + 50"  # samples
     # v = (doc_id*13)%2048 - 1024 ∈ [-1024, 1023]; two's-complement
     # 16-bit representation u = pmod(v, 65536)
-    u = "pmod((doc_id * 13) % 2048 - 1024, 65536)"
-    sample = f"concat(char(cast(({u}) % 256 as int)), char(cast(({u}) div 256 as int)))"
-    header = (
-        "concat('RIFF', "
-        + _le_chars_sql(f"36 + ({n}) * 2", 4)
-        + ", 'WAVE', 'fmt ', "
-        + _le_chars_sql("16", 4)
-        + ", "
-        + _le_chars_sql("1", 2)      # PCM
-        + ", "
-        + _le_chars_sql("1", 2)      # mono
-        + ", "
-        + _le_chars_sql("16000", 4)  # sample rate
-        + ", "
-        + _le_chars_sql("32000", 4)  # byte rate
-        + ", "
-        + _le_chars_sql("2", 2)      # block align
-        + ", "
-        + _le_chars_sql("16", 2)     # bits
-        + ", 'data', "
-        + _le_chars_sql(f"({n}) * 2", 4)
-        + ")"
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(
-            F.expr(f"concat({header}, repeat({sample}, cast({n} as int)))"),
-            "ISO-8859-1",
-        ).alias("content"),
-    )
+    sample = _pcm16_sql("pmod((doc_id * 13) % 2048 - 1024, 65536)")
+    media = _media(docs, _wav_text(n, F.expr(f"repeat({sample}, cast({n} as int))")))
     wins = window_audio(media, decode="wav")
     return wins.select(
         "media_id",
@@ -1385,54 +1312,26 @@ SHOT_SCHEMA = T.StructType(
 
 
 def detect_shot_boundaries(df: DataFrame) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            out_ids, out_idx, out_diff = [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                if payload is None:
-                    continue
-                frames = _ppm_split(bytes(payload))
-                prev = None
-                for f, raw in enumerate(frames):
-                    cur = _ppm_decode(raw, size=None).astype(np.int64)
-                    if prev is not None and prev.shape == cur.shape:
-                        d = float(np.abs(cur - prev).mean())
-                        if d >= SHOT_DIFF_MIN:
-                            out_ids.append(mid)
-                            out_idx.append(f)
-                            out_diff.append(round(d, 4))
-                    prev = cur
-            yield pd.DataFrame(
-                {
-                    "media_id": out_ids,
-                    "frame_idx": pd.array(out_idx, dtype="int32"),
-                    "mean_diff": pd.array(out_diff, dtype="float64"),
-                }
-            )
+    def cuts(data: bytes) -> list:
+        out, prev = [], None
+        for f, raw in enumerate(_ppm_split(data)):
+            cur = _ppm_decode(raw, size=None).astype(np.int64)
+            if prev is not None and prev.shape == cur.shape:
+                d = float(np.abs(cur - prev).mean())
+                if d >= SHOT_DIFF_MIN:
+                    out.append((f, round(d, 4)))
+            prev = cur
+        return out
 
-    return df.select("media_id", "content").mapInPandas(batches, schema=SHOT_SCHEMA)
+    return _payload_map(df, SHOT_SCHEMA, cuts, [])
 
 
 def ppm_shot_boundaries(spark, sf_dir: str) -> DataFrame:
     from map_reduce_engine_cdps_spark.sources.readers import load_parallel
 
     docs = load_parallel(spark, sf_dir, "documents").select("doc_id")
-    n_frames = F.col("doc_id") % 4 + 4
-    parts = []
-    for f in range(7):
-        frame = F.concat(
-            F.lit("P6\n8 8\n255\n"),
-            F.expr(
-                f"repeat(char(cast((doc_id * 37 + {(f // 3) * 53}) % 97"
-                " as int)), 192)"
-            ),
-        )
-        parts.append(F.when(F.lit(f) < n_frames, frame).otherwise(F.lit("")))
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(F.concat(*parts), "ISO-8859-1").alias("content"),
-    )
-    return detect_shot_boundaries(media)
+    values = [f"(doc_id * 37 + {(f // 3) * 53}) % 97" for f in range(7)]
+    return detect_shot_boundaries(_media(docs, _const_ppm_frames(F.col("doc_id") % 4 + 4, values)))
 
 
 PPM_SHOT_BOUNDARIES_SQL = f"""
@@ -1479,41 +1378,18 @@ SILENCE_SCHEMA = T.StructType(
 
 
 def silence_segments(df: DataFrame) -> DataFrame:
-    def batches(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            ids, nw_l, ns_l, seg_l = [], [], [], []
-            for mid, payload in zip(pdf["media_id"], pdf["content"]):
-                if payload is None:
-                    continue
-                # _wav_decode already normalizes int16 → [-1, 1) floats
-                samples = _wav_decode(bytes(payload)).astype(np.float64)
-                nw = len(samples) // _SIL_WIN
-                silent = []
-                for w in range(nw):
-                    win = samples[w * _SIL_WIN : (w + 1) * _SIL_WIN]
-                    rms = float(np.sqrt(np.mean(win * win)))
-                    silent.append(rms < SILENCE_RMS)
-                n_seg = sum(
-                    1
-                    for w in range(nw)
-                    if silent[w] and (w == 0 or not silent[w - 1])
-                )
-                ids.append(mid)
-                nw_l.append(nw)
-                ns_l.append(sum(silent))
-                seg_l.append(n_seg)
-            yield pd.DataFrame(
-                {
-                    "media_id": ids,
-                    "n_windows": pd.array(nw_l, dtype="int32"),
-                    "n_silent": pd.array(ns_l, dtype="int32"),
-                    "n_segments": pd.array(seg_l, dtype="int32"),
-                }
-            )
+    def segments(data: bytes) -> list:
+        # _wav_decode already normalizes int16 → [-1, 1) floats
+        samples = _wav_decode(data)
+        nw = len(samples) // _SIL_WIN
+        silent = []
+        for w in range(nw):
+            win = samples[w * _SIL_WIN : (w + 1) * _SIL_WIN]
+            silent.append(float(np.sqrt(np.mean(win * win))) < SILENCE_RMS)
+        n_seg = sum(s and not p for p, s in zip([False, *silent], silent))
+        return [(nw, sum(silent), n_seg)]
 
-    return df.select("media_id", "content").mapInPandas(
-        batches, schema=SILENCE_SCHEMA
-    )
+    return _payload_map(df, SILENCE_SCHEMA, segments, [])
 
 
 def wav_silence_segments(spark, sf_dir: str) -> DataFrame:
@@ -1521,48 +1397,16 @@ def wav_silence_segments(spark, sf_dir: str) -> DataFrame:
 
     docs = load_parallel(spark, sf_dir, "documents").select("doc_id")
     n_blocks = "doc_id % 5 + 3"            # 3..7 windows of 20 samples
-    n = f"(({n_blocks}) * {_SIL_WIN})"
     blocks = []
     for w in range(7):
         v = f"(CASE WHEN ({w} + doc_id) % 4 < 2 THEN 5 ELSE (doc_id * 13) % 1500 + 200 END)"
-        pair = (
-            f"concat(char(cast(({v}) % 256 as int)),"
-            f" char(cast(({v}) div 256 as int)))"
-        )
         blocks.append(
             F.expr(
-                f"CASE WHEN {w} < ({n_blocks}) THEN repeat({pair}, {_SIL_WIN})"
+                f"CASE WHEN {w} < ({n_blocks}) THEN repeat({_pcm16_sql(v)}, {_SIL_WIN})"
                 " ELSE '' END"
             )
         )
-    header = (
-        "concat('RIFF', "
-        + _le_chars_sql(f"36 + {n} * 2", 4)
-        + ", 'WAVE', 'fmt ', "
-        + _le_chars_sql("16", 4)
-        + ", "
-        + _le_chars_sql("1", 2)
-        + ", "
-        + _le_chars_sql("1", 2)
-        + ", "
-        + _le_chars_sql("16000", 4)
-        + ", "
-        + _le_chars_sql("32000", 4)
-        + ", "
-        + _le_chars_sql("2", 2)
-        + ", "
-        + _le_chars_sql("16", 2)
-        + ", 'data', "
-        + _le_chars_sql(f"{n} * 2", 4)
-        + ")"
-    )
-    media = docs.select(
-        F.col("doc_id").alias("media_id"),
-        F.encode(
-            F.concat(F.expr(header), *blocks), "ISO-8859-1"
-        ).alias("content"),
-    )
-    return silence_segments(media)
+    return silence_segments(_media(docs, _wav_text(f"({n_blocks}) * {_SIL_WIN}", *blocks)))
 
 
 WAV_SILENCE_SEGMENTS_SQL = """

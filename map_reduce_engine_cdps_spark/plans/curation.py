@@ -14,6 +14,9 @@ it broadcasts (benchmark suites are MBs, the corpus is the big side).
 
 from __future__ import annotations
 
+import tempfile
+
+from pyspark import SparkFiles
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -31,6 +34,13 @@ MAX_TOKENS = 2000
 MIN_MEAN_LEN = 2.0
 MAX_MEAN_LEN = 10.0
 MAX_TOP_TOKEN_RATIO = 0.25
+
+
+def _scratch_dir(prefix: str) -> str:
+    """A new dir for files a query writes and its DataFrame reads lazily:
+    under the driver's SparkFiles root, which Spark deletes when the
+    session stops, so the files live exactly as long as the session."""
+    return tempfile.mkdtemp(prefix=prefix, dir=SparkFiles.getRootDirectory())
 
 
 def quality_filter_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -290,14 +300,12 @@ FROM c
 # ---------------------------------------------------------------------------
 
 def csv_roundtrip_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     from map_reduce_engine_cdps_spark.sources.readers import read_csv_dir
 
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    out = tempfile.mkdtemp(prefix="csv_roundtrip_")
+    out = _scratch_dir("csv_roundtrip_")
     (
         docs.write.mode("overwrite")
         .option("header", "true")
@@ -486,12 +494,10 @@ WHERE fp NOT IN (SELECT fp FROM existing)
 # ---------------------------------------------------------------------------
 
 def jsonl_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "source", "n_chars"
     )
-    out = tempfile.mkdtemp(prefix="jsonl_roundtrip_")
+    out = _scratch_dir("jsonl_roundtrip_")
     docs.write.mode("overwrite").json(out)
     back = spark.read.schema(
         "doc_id bigint, lang string, source string, n_chars bigint"
@@ -561,12 +567,10 @@ LIMIT {SAMPLE_K}
 # ---------------------------------------------------------------------------
 
 def partitioned_pruned_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     ev = load_table(spark, sf_dir, "events").select(
         "event_id", "user_id", "event_type", "value"
     )
-    out = tempfile.mkdtemp(prefix="part_events_")
+    out = _scratch_dir("part_events_")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(out)
     clicks = spark.read.parquet(out).filter(F.col("event_type") == "click")
     return clicks.groupBy((F.col("user_id") % 10).alias("user_bucket")).agg(
@@ -594,12 +598,10 @@ GROUP BY user_id % 10
 # ---------------------------------------------------------------------------
 
 def orc_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     ords = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
-    out = tempfile.mkdtemp(prefix="orc_roundtrip_")
+    out = _scratch_dir("orc_roundtrip_")
     ords.write.mode("overwrite").orc(out)
     back = spark.read.orc(out)
     return back.groupBy("o_orderstatus", "o_orderpriority").agg(
@@ -639,15 +641,13 @@ N_BUCKETS = 8
 
 
 def bucketed_join_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_extendedprice", "l_discount"
     )
     ords = load_table(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus"
     )
-    base = tempfile.mkdtemp(prefix="bucketed_join_")
+    base = _scratch_dir("bucketed_join_")
     for name, df, key in (
         ("bucketed_lineitem", li, "l_orderkey"),
         ("bucketed_orders", ords, "o_orderkey"),
@@ -823,12 +823,10 @@ ORDER BY l.l_returnflag
 # ---------------------------------------------------------------------------
 
 def xml_roundtrip_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    out = tempfile.mkdtemp(prefix="xml_roundtrip_")
+    out = _scratch_dir("xml_roundtrip_")
     (
         docs.write.mode("overwrite")
         .format("xml")
@@ -999,12 +997,10 @@ SELECT rank, doc_id, source, round(vtime, 6) AS vtime FROM (
 
 
 def schema_drift_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "lang", "n_chars"
     )
-    out = tempfile.mkdtemp(prefix="schema_drift_")
+    out = _scratch_dir("schema_drift_")
     v1 = docs.filter(F.col("doc_id") % 2 == 0).withColumn("batch", F.lit(1))
     v2 = (
         docs.filter(F.col("doc_id") % 2 == 1)
@@ -1050,10 +1046,8 @@ FROM v GROUP BY batch
 
 
 def file_provenance_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    out = tempfile.mkdtemp(prefix="provenance_")
+    out = _scratch_dir("provenance_")
     (
         docs.repartition("lang")
         .write.mode("overwrite")
@@ -1091,10 +1085,8 @@ FROM documents GROUP BY lang
 
 
 def multi_format_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import tempfile
-
     docs = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    base = tempfile.mkdtemp(prefix="multifmt_")
+    base = _scratch_dir("multifmt_")
     slice_of = lambda r: docs.filter(F.col("doc_id") % 3 == r)
     slice_of(0).write.mode("overwrite").parquet(f"{base}/p")
     slice_of(1).write.mode("overwrite").option("header", True).csv(f"{base}/c")

@@ -9,9 +9,14 @@ filters down to the scan.
 
 from __future__ import annotations
 
+import json
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from map_reduce_engine_cdps_spark.operators.state import _stamp
 
 TABLES = (
     "region",
@@ -63,8 +68,48 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    if os.path.isfile(path):
+        df = spark.read.schema(_footer_schema(spark, path, _stamp(sf_dir, (name,)))).parquet(path)
+    else:  # a directory layout: Spark infers schema and partitions
+        df = spark.read.parquet(path)
     return events_ts(df) if name == "events" else df
+
+
+# Session confs ParquetToSparkSchemaConverter reads.
+_CONVERTER_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.caseSensitive",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+# (path, file stamp, converter confs) -> StructType
+_SCHEMAS: dict = {}
+
+
+def _footer_schema(spark: SparkSession, path: str, stamp: tuple) -> T.StructType:
+    """The Spark schema of one parquet file, read on the driver from its
+    footer through the converter Spark's own inference uses — no
+    schema-inference job. Memoized per file stamp and converter confs,
+    so a rewritten file is read again."""
+    confs = tuple(spark.conf.get(k) for k in _CONVERTER_CONFS)
+    key = (path, stamp, confs)
+    if key not in _SCHEMAS:
+        jvm, jss = spark._jvm, spark._jsparkSession
+        pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+        hpath = jvm.org.apache.hadoop.fs.Path(path)
+        meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+            jss.sessionState().newHadoopConf(),
+            hpath,
+            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
+        )
+        schema = pq.ParquetFileFormat.readSchemaFromFooter(
+            jvm.org.apache.parquet.hadoop.Footer(hpath, meta),
+            pq.ParquetToSparkSchemaConverter(jss.sessionState().conf()),
+        )
+        _SCHEMAS[key] = T.StructType.fromJson(json.loads(schema.json()))
+    return _SCHEMAS[key]
 
 
 def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

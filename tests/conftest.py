@@ -5,12 +5,13 @@ import sys
 
 import pytest
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 # Executor python workers must be able to unpickle functions defined in
 # test modules → put repo + tests on their import path before the JVM
 # (and thus the python workers) start.
-os.environ["PYTHONPATH"] = (
-    "/root/repo:/root/repo/tests:" + os.environ.get("PYTHONPATH", "")
+os.environ["PYTHONPATH"] = os.pathsep.join(
+    [REPO, os.path.join(REPO, "tests"), os.environ.get("PYTHONPATH", "")]
 )
 
 from map_reduce_engine_cdps_spark.session import get_spark

@@ -988,3 +988,108 @@ def test_ensemble_vote_probe_beats_baseline_and_is_deterministic(spark, sf_dir):
         for r in ensemble_vote_probe(spark, sf_dir).collect()
     }
     assert all(again[r["label"]] == r["vote_accuracy"] for r in rows)
+
+
+def _wav_payload(samples) -> bytes:
+    """Canonical 44-byte-header mono PCM-16 RIFF/WAVE payload."""
+    import struct
+
+    import numpy as np
+
+    data = np.asarray(samples, dtype="<i2").tobytes()
+    fmt = struct.pack("<HHIIHH", 1, 1, 16000, 32000, 2, 16)
+    return (
+        b"RIFF" + struct.pack("<I", 36 + len(data)) + b"WAVE"
+        + b"fmt " + struct.pack("<I", 16) + fmt
+        + b"data" + struct.pack("<I", len(data)) + data
+    )
+
+
+def _payload_cases():
+    import numpy as np
+
+    from map_reduce_engine_cdps_spark.multimodal import binary as B
+
+    image = B.ppm_encode(np.arange(72).reshape(4, 6, 3) * 3)
+    video = b"".join(B.ppm_encode(np.full((4, 4, 3), v)) for v in (10, 10, 90))
+    audio = _wav_payload([5] * 40 + [3000] * 20 + [5] * 40)
+    raw = bytes(range(150))
+    bad_ppm, bad_wav = "not a binary PPM", "not a RIFF/WAVE"
+    # (operator, normal payload, rows of [NULL, normal], rows of the
+    # empty payload or the error it raises); arrays pinned by their sum
+    return {
+        "extract_features-fake": (
+            lambda df: B.extract_features(df, decode="fake"), raw,
+            [(1, 0, None), (3, 150, 8.890196)], [(2, 0, 8.317647)],
+        ),
+        "extract_features-ppm": (
+            lambda df: B.extract_features(df, decode="ppm"), image,
+            [(1, 0, None), (3, 83, 9.80631)], bad_ppm,
+        ),
+        "cnn_embeddings": (
+            B.cnn_embeddings, image,
+            [(1, 0, None), (3, 83, 2.754749)], bad_ppm,
+        ),
+        "sample_frames-fake": (
+            B.sample_frames, raw,
+            [(3, 0, 8.682353)], [(2, 0, 8.317647)],
+        ),
+        "sample_frames-ppm": (
+            lambda df: B.sample_frames(df, decode="ppm"), video,
+            [(3, 0, 0.627451), (3, 2, 5.647059)], [],
+        ),
+        "window_audio-fake": (
+            B.window_audio, raw,
+            [(3, 0, 64, 0.28529, 0.492188), (3, 1, 64, 0.759924, 0.992188),
+             (3, 2, 22, 0.919306, 1.0)], [],
+        ),
+        "window_audio-wav": (
+            lambda df: B.window_audio(df, decode="wav"), audio,
+            [(3, 0, 64, 0.05118, 0.091553), (3, 1, 36, 0.000153, 0.000153)],
+            bad_wav,
+        ),
+        "detect_shot_boundaries": (
+            B.detect_shot_boundaries, video, [(3, 2, 80.0)], [],
+        ),
+        "silence_segments": (
+            B.silence_segments, audio, [(3, 5, 4, 2)], bad_wav,
+        ),
+    }
+
+
+@pytest.mark.parametrize("case", sorted(_payload_cases()))
+def test_payload_operators_null_empty_and_normal_rows(spark, case):
+    """The NULL-payload contract of every (media_id, content) operator:
+    a one-to-one operator emits n_bytes 0 and NULL features, a
+    one-to-many operator emits nothing; an empty payload is decoded
+    like any other (or raises the decoder's error)."""
+    op, normal, rows, empty = _payload_cases()[case]
+
+    def collect(pairs):
+        df = spark.createDataFrame(pairs, "media_id long, content binary")
+        return sorted(
+            tuple(
+                round(sum(v), 6) if isinstance(v, list)
+                else round(v, 6) if isinstance(v, float) else v
+                for v in r
+            )
+            for r in op(df.coalesce(1)).collect()
+        )
+
+    null, blank, full = (1, None), (2, bytearray()), (3, bytearray(normal))
+    if isinstance(empty, str):
+        assert collect([null, full]) == rows
+        with pytest.raises(Exception, match=empty):
+            collect([blank])
+    else:
+        assert collect([null, blank, full]) == sorted(rows + empty)
+
+
+@pytest.mark.parametrize("case", sorted(_payload_cases()))
+def test_payload_operators_accept_an_all_null_batch(spark, case):
+    """A batch in which no payload yields a row still returns a typed
+    frame: a one-to-many operator with an array column used to fail
+    in Arrow on the untyped empty columns."""
+    op, _normal, rows, _empty = _payload_cases()[case]
+    df = spark.createDataFrame([(1, None)], "media_id long, content binary")
+    assert [tuple(r) for r in op(df).collect()] == [r for r in rows if r[0] == 1]

@@ -21,6 +21,7 @@ engine-representation drift:
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
@@ -30,7 +31,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from tools.oracle_check import compare, df_multiset, lint_types, norm_cell, oracle_con
 

@@ -372,6 +372,20 @@ def test_knn_hubness_front_is_in_the_plan(spark):
     assert "ExistingRDD" not in plan, plan[:2000]
 
 
+
+def test_load_table_runs_no_spark_job(spark, tmp_path):
+    """load_table reads the parquet schema on the driver: building a
+    table's DataFrame runs no schema-inference job, on the first read of
+    a file (a fresh copy) or a later one."""
+    import shutil
+
+    from map_reduce_engine_cdps_spark.sources.readers import TABLES, load_table
+
+    sf = str(tmp_path / "sf")
+    shutil.copytree(SF_DIR, sf)
+    for name in TABLES + TABLES:
+        assert _jobs_run_by(spark, lambda: load_table(spark, sf, name)) == 0, name
+
 MULTIMODAL_FAMILY = [
     # every registry query whose input is the binary media column
     # (documents-derived payloads or .benchmedia fixtures)

@@ -5,7 +5,12 @@ filters push down, aggregates partial-aggregate)."""
 from __future__ import annotations
 
 import os
+import tempfile
 
+import pyarrow as pa
+import pyarrow.parquet as pq
+import pytest
+from conftest import SF_DIR
 from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.operators.metrics import run_with_metrics
@@ -14,6 +19,9 @@ from map_reduce_engine_cdps_spark.plans.relational import (
     revenue_by_nation,
 )
 from map_reduce_engine_cdps_spark.sources.readers import (
+    TABLES,
+    events_ts,
+    load_table,
     read_csv_dir,
     read_image_dir,
     read_text_dir,
@@ -36,6 +44,45 @@ def test_read_text_dir(spark, tmp_path):
         "second line",
         "third",
     ]
+
+
+@pytest.mark.parametrize("sf", ["sf0.001", "sf0.01", "sf0.1"])
+def test_load_table_schema_equals_inferred_schema(spark, sf):
+    """load_table reads each schema from the parquet footer on the
+    driver; it must equal what Spark's schema inference returns."""
+    sf_dir = os.path.join(os.path.dirname(SF_DIR), sf)
+    for name in TABLES:
+        inferred = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        if name == "events":
+            inferred = events_ts(inferred)
+        assert load_table(spark, sf_dir, name).schema == inferred.schema, name
+
+
+def test_load_table_rereads_a_rewritten_schema(spark, tmp_path):
+    path = str(tmp_path / "region.parquet")
+    pq.write_table(pa.table({"r_regionkey": [0, 1]}), path)
+    assert load_table(spark, str(tmp_path), "region").columns == ["r_regionkey"]
+    pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
+    df = load_table(spark, str(tmp_path), "region")
+    assert sorted(df.collect()) == [(0, "A"), (1, "B")]
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "csv_roundtrip_counts", "jsonl_roundtrip_stats", "partitioned_pruned_stats",
+        "orc_roundtrip_stats", "bucketed_join_stats", "xml_roundtrip_stats",
+        "schema_drift_union", "file_provenance_stats", "multi_format_union",
+    ],
+)
+def test_roundtrip_queries_leave_no_temp_dirs(spark, sf_dir, tmp_path, monkeypatch, name):
+    """A query that writes files and reads them back keeps them in a
+    scratch dir the session deletes when it stops, not in $TMPDIR."""
+    from map_reduce_engine_cdps_spark.plans import curation
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path))
+    assert getattr(curation, name)(spark, sf_dir).count() > 0
+    assert os.listdir(tmp_path) == []
 
 
 def test_read_csv_dynamic_and_typed(spark, tmp_path):

@@ -81,6 +81,21 @@ def test_readme_cited_modules_exist():
     assert not bad
 
 
+
+def test_no_source_hard_codes_the_checkout_path():
+    """Code finds the repository from its own file, so a second checkout
+    (a clone of a parent revision for an A/B) imports its own tree."""
+    files = [os.path.join(REPO, "bench.py")]
+    for top in ("map_reduce_engine_cdps_spark", "tools", "tests"):
+        for d, _, fs in os.walk(os.path.join(REPO, top)):
+            files += [os.path.join(d, f) for f in fs if f.endswith(".py")]
+    hits = []
+    for path in files:
+        with open(path, encoding="utf-8") as fh:
+            if REPO in fh.read():
+                hits.append(os.path.relpath(path, REPO))
+    assert not hits
+
 def _worktrees() -> str:
     return subprocess.run(
         ["git", "-C", REPO, "worktree", "list", "--porcelain"],

@@ -16,10 +16,11 @@ cannot emit (HUGEINT, DECIMAL, ...). Run:
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import duckdb
 

@@ -14,9 +14,10 @@ summaries for eyeball review.
 from __future__ import annotations
 
 import re
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from map_reduce_engine_cdps_spark.plans.registry import _REGISTRY
 from map_reduce_engine_cdps_spark.session import get_spark

@@ -6,10 +6,12 @@ Run: python tools/plan_snapshots.py   (rewrites PLANS.md)
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from map_reduce_engine_cdps_spark.plans.registry import _REGISTRY
 from map_reduce_engine_cdps_spark.session import get_spark
@@ -302,7 +304,7 @@ def main() -> None:
         # keep the operator tree + details compact: drop codegen ids noise
         plan = re.sub(r"\n{3,}", "\n\n", plan.strip())
         out += [f"## {name}", "", why, "", "```", plan, "```", ""]
-    with open("/root/repo/PLANS.md", "w") as f:
+    with open(os.path.join(REPO, "PLANS.md"), "w") as f:
         f.write("\n".join(out))
     print(f"wrote PLANS.md with {len(SNAPSHOTS)} snapshots")
 

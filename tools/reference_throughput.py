@@ -21,10 +21,11 @@ from __future__ import annotations
 
 import json
 import statistics
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from map_reduce_engine_cdps_spark.compat.mapreduce import simulate_locally
 from map_reduce_engine_cdps_spark.plans.registry import _REGISTRY

@@ -35,7 +35,8 @@ SRC = "/root/testdata/sf0.1"
 
 def main() -> None:
     k = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    out = sys.argv[2] if len(sys.argv) > 2 else "/root/repo/.benchdata/sf1"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    out = sys.argv[2] if len(sys.argv) > 2 else os.path.join(repo, ".benchdata", "sf1")
     os.makedirs(out, exist_ok=True)
     con = duckdb.connect()
     con.execute(f"SET threads={os.cpu_count() or 8}")
