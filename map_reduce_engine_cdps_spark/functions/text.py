@@ -2,8 +2,11 @@
 SimHash, quality stats (SURVEY.md §7 step 7 / training-data extensions).
 
 Everything stays JVM-side (built-in higher-order functions — transform /
-filter / aggregate over arrays), so the hot path is codegen'd and
-shuffle payloads are the derived values, never raw Python objects.
+filter / aggregate over arrays), so no Python worker runs and shuffle
+payloads are the derived values, never raw Python objects. The
+higher-order functions are not codegen'd: in Spark 4.1 `ArrayTransform`,
+`ArrayFilter` and `ArrayAggregate` implement `CodegenFallback`, so each
+lambda is interpreted once per array element.
 
 Hash design note: signatures are built from md5 hex strings (seeded by
 concatenation) rather than xxhash64, so the DuckDB oracle can compute

@@ -8,15 +8,16 @@ worker process whose PYTHONPATH is its own tree, because two versions of
 the package cannot share one interpreter. For each query the sorted
 `collect()` of both sides is compared first; then N pairs of timed runs
 (construction + noop write) alternate which side goes first. Prints the
-per-side medians, the raw times and how many pairs each side won. Each
-query's line also says whether the two optimized logical plans are
-identical once expression ids (`#123`, `#123L`) and lambda-variable
-numbers (`x_7#`) are normalized. When either plan reads an RDD (a
-`localCheckpoint`, or rows created in Python), the digest cannot see
-below it, and an identical digest is reported as `plan identical above
-an RDD scan`. Exits 1 if any query's rows differ; a plan difference
-alone does not fail the run, since a perf change alters plans on
-purpose.
+per-side medians of the total and of construction alone (`build`, the
+query function's own time before the write starts), the raw totals and
+how many pairs each side won. Each query's line also says whether the
+two optimized logical plans are identical once expression ids (`#123`,
+`#123L`) and lambda-variable numbers (`x_7#`) are normalized. When
+either plan reads an RDD (a `localCheckpoint`, or rows created in
+Python), the digest cannot see below it, and an identical digest is
+reported as `plan identical above an RDD scan`. Exits 1 if any query's
+rows differ; a plan difference alone does not fail the run, since a
+perf change alters plans on purpose.
 """
 
 from __future__ import annotations
@@ -77,8 +78,9 @@ def serve(sf_dir: str) -> None:
                 plan, rdd = plan_digest(df)
                 reply = {"rows": len(rows), "digest": digest, "plan": plan, "rdd": rdd}
             else:
+                built = time.perf_counter()
                 df.write.format("noop").mode("overwrite").save()
-                reply = {"seconds": time.perf_counter() - t0}
+                reply = {"build": built - t0, "seconds": time.perf_counter() - t0}
         except Exception:  # noqa: BLE001 - reported to the parent
             reply = {"error": traceback.format_exc()}
         out.write(json.dumps(reply) + "\n")
@@ -132,9 +134,12 @@ def compare(query: str, sides: list[Side], pairs: int) -> bool:
     print(f"{query}: rows identical ({got[0]['rows']} rows, sha256 {got[0]['digest'][:12]}),"
           f" {plan}")
     times: dict[str, list[float]] = {s.label: [] for s in sides}
+    builds: dict[str, list[float]] = {s.label: [] for s in sides}
     for i in range(pairs):
         for s in sides if i % 2 == 0 else sides[::-1]:
-            times[s.label].append(s.ask("time", query)["seconds"])
+            reply = s.ask("time", query)
+            times[s.label].append(reply["seconds"])
+            builds[s.label].append(reply["build"])
     won = {s.label: 0 for s in sides}
     for a, b in zip(*times.values()):
         if a != b:  # a tie counts for neither side
@@ -142,6 +147,7 @@ def compare(query: str, sides: list[Side], pairs: int) -> bool:
     for s in sides:
         t = times[s.label]
         print(f"  {s.label:>10}: median {statistics.median(t):.3f}s  "
+              f"build {statistics.median(builds[s.label]):.3f}s  "
               f"won {won[s.label]}/{pairs}  {[round(x, 3) for x in t]}")
     return True
 
