@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.plans import analytics
+from tools import plan_inspect as P
 
 
 def test_quantity_moments_builtins_agree(spark, sf_dir):
@@ -134,7 +135,7 @@ def test_lateral_top_orders_at_most_two_per_customer(spark, sf_dir):
     )
     assert over == 0
     # decorrelated plan: no nested-loop/cartesian join anywhere
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = P.physical(df)
     assert "NestedLoop" not in plan and "Cartesian" not in plan
 
 

@@ -3,6 +3,12 @@ checks interactively, locked into CI for a fast representative subset
 (sf0.001 so the whole module adds ~15 s). Catches regressions like a
 dimension join silently degrading to sort-merge-with-shuffle or a filter
 no longer reaching the scan.
+
+Every plan is read through `tools/plan_inspect.py` (`P`): the
+`P.physical` / `P.executed` strings, the exchange payload helpers and
+the `P.nodes` walker, with `P.aqe_off` for plans built without adaptive
+execution. `_plan` runs the query, then reads the plan Spark chose
+before execution (`count()` runs a separate aggregate).
 """
 
 from __future__ import annotations
@@ -12,14 +18,16 @@ import re
 import pytest
 
 from map_reduce_engine_cdps_spark.plans.registry import _REGISTRY
+from tools import plan_inspect as P
 
 SF_DIR = "/root/testdata/sf0.001"
 
 
-def _plan(spark, name: str) -> str:
-    df = _REGISTRY[name][0](spark, SF_DIR)
+def _plan(spark, query) -> str:
+    """Run a registry query (by name) or a DataFrame, then read its plan."""
+    df = _REGISTRY[query][0](spark, SF_DIR) if isinstance(query, str) else query
     df.count()
-    return df._jdf.queryExecution().executedPlan().toString()
+    return P.physical(df)
 
 
 @pytest.mark.parametrize(
@@ -100,10 +108,7 @@ def test_runtime_bloom_filter_join_pruning(spark):
         "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold": "100MB",
         "spark.sql.autoBroadcastJoinThreshold": "-1",
     }
-    saved = {k: spark.conf.get(k) for k in tuned}
-    for k, v in tuned.items():
-        spark.conf.set(k, v)
-    try:
+    with P.conf(spark, tuned):
         li = load_table(spark, SF_DIR, "lineitem").select(
             "l_orderkey", "l_quantity"
         )
@@ -113,13 +118,9 @@ def test_runtime_bloom_filter_join_pruning(spark):
             .select("o_orderkey")
         )
         j = li.join(ords, li.l_orderkey == ords.o_orderkey).select("l_quantity")
-        j.collect()
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "bloom_filter_agg" in plan, plan[:2000]
-        assert "might_contain" in plan.lower() or "bloomFilter" in plan
-    finally:
-        for k, v in saved.items():
-            spark.conf.set(k, v)
+        plan = P.executed(j)
+    assert "bloom_filter_agg" in plan, plan[:2000]
+    assert "might_contain" in plan.lower() or "bloomFilter" in plan
 
 
 def test_dynamic_partition_pruning(spark, tmp_path):
@@ -149,7 +150,7 @@ def test_dynamic_partition_pruning(spark, tmp_path):
         .agg(F.count(F.lit(1)).alias("n"))
     )
     rows = {r["event_type"]: r["n"] for r in j.collect()}
-    plan = j._jdf.queryExecution().executedPlan().toString()
+    plan = P.physical(j)
     assert "dynamicpruningexpression" in plan, plan[:2000]
     # semantics: only the two kept partitions survive
     expect = {
@@ -182,8 +183,7 @@ def test_dynamic_partition_pruning_engages(spark, sf_dir, tmp_path):
         )
         .agg(F.round(F.sum("l_extendedprice"), 2).alias("rev"))
     )
-    j.collect()
-    plan = j._jdf.queryExecution().executedPlan().toString()
+    plan = P.executed(j)
     assert "dynamicpruningexpression" in plan.lower(), plan[:1500]
 
 
@@ -212,17 +212,11 @@ def test_dedup_exchanges_carry_no_string_arrays(spark):
     pair row downstream is scalar-only (plans/dedup.py). This is the
     regression gate for the round-2/3 spill-boundary instability
     (driver sf1: 31.4 s vs 2.1 s on identical code)."""
-    from tools.plan_audit import string_array_exchanges
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with P.aqe_off(spark):
         for name in DEDUP_FAMILY:
             df = _REGISTRY[name][0](spark, SF_DIR)
-            bad = string_array_exchanges(df)
+            bad = P.string_array_exchanges(df)
             assert not bad, f"{name}: string-array shuffle payload {bad}"
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def test_lsh_pair_exchanges_are_scalar_only(spark):
@@ -230,21 +224,15 @@ def test_lsh_pair_exchanges_are_scalar_only(spark):
     the single banded exchange (the only one allowed to carry ANY array
     — hashed-long shingle sets), the pair-dedup exchange must carry only
     scalar columns."""
-    from tools.plan_audit import exchange_payload_types
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with P.aqe_off(spark):
         df = _REGISTRY["minhash_lsh_pairs"][0](spark, SF_DIR)
-        payloads = exchange_payload_types(df)
-        array_cols = [t for t in payloads if t[2].startswith("array<")]
-        # exactly one exchange may carry arrays: the banded shuffle,
-        # whose shingle payload is array<bigint>
-        assert all(t[2] == "array<bigint>" for t in array_cols), array_cols
-        nodes_with_arrays = {t[0] + t[1] for t in array_cols}
-        assert len({t[1] for t in array_cols}) <= 1, nodes_with_arrays
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+        payloads = P.exchange_payload_types(df)
+    array_cols = [t for t in payloads if t[2].startswith("array<")]
+    # exactly one exchange may carry arrays: the banded shuffle,
+    # whose shingle payload is array<bigint>
+    assert all(t[2] == "array<bigint>" for t in array_cols), array_cols
+    nodes_with_arrays = {t[0] + t[1] for t in array_cols}
+    assert len({t[1] for t in array_cols}) <= 1, nodes_with_arrays
 
 
 ANN_FAMILY_ARRAY_EXCHANGE_BOUNDS = {
@@ -308,19 +296,13 @@ def test_ann_rank_exchanges_are_scalar_only(spark):
     bucket shuffle the pairing self-join needs anyway — a corpus-x1
     payload, not the K-multiplied shape this gate exists for — and the
     crossings-bound test pins that exchange count at 1."""
-    from tools.plan_audit import rank_window_array_exchanges
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with P.aqe_off(spark):
         for name in ANN_FAMILY_ARRAY_EXCHANGE_BOUNDS:
             if name == "embedding_near_dup":
                 continue
             df = _REGISTRY[name][0](spark, SF_DIR)
-            bad = rank_window_array_exchanges(df)
+            bad = P.rank_window_array_exchanges(df)
             assert not bad, f"{name}: array payload on a rank-window shuffle {bad}"
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def test_ann_embedding_shuffle_crossings_bounded(spark):
@@ -329,17 +311,11 @@ def test_ann_embedding_shuffle_crossings_bounded(spark):
     broadcast IS the intended shape). A new crossing appearing here
     means a join/window reshuffle started moving vectors it didn't
     need to."""
-    from tools.plan_audit import shuffle_array_exchange_count
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with P.aqe_off(spark):
         for name, bound in ANN_FAMILY_ARRAY_EXCHANGE_BOUNDS.items():
             df = _REGISTRY[name][0](spark, SF_DIR)
-            n = shuffle_array_exchange_count(df)
+            n = P.shuffle_array_exchange_count(df)
             assert n <= bound, f"{name}: {n} array shuffle crossings > {bound}"
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def _jobs_run_by(spark, build) -> int:
@@ -366,9 +342,7 @@ def test_knn_hubness_front_is_in_the_plan(spark):
     assert _jobs_run_by(spark, lambda: query(spark, SF_DIR)) == _jobs_run_by(
         spark, lambda: load_table(spark, SF_DIR, "embeddings")
     )
-    df = query(spark, SF_DIR)
-    df.count()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(spark, "knn_hubness_stats")
     assert "ExistingRDD" not in plan, plan[:2000]
 
 
@@ -410,17 +384,11 @@ def test_multimodal_exchanges_carry_no_binary(spark):
     megabyte rows being hashed, sorted, and spilled per shuffle write —
     the multimodal analogue of the dedup string-array ban that caused
     the round-2/3 sf1 instability."""
-    from tools.plan_audit import binary_shuffle_exchanges
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with P.aqe_off(spark):
         for name in MULTIMODAL_FAMILY:
             df = _REGISTRY[name][0](spark, SF_DIR)
-            bad = binary_shuffle_exchanges(df)
+            bad = P.binary_shuffle_exchanges(df)
             assert not bad, f"{name}: binary shuffle payload {bad}"
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def test_eval_global_windows_are_row_bounded(spark):
@@ -574,8 +542,7 @@ def test_lpa_round_join_is_shuffle_hash(spark):
         "lbl", F.col("v")
     )
     df = _lpa_round(e, labels)
-    df.count()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(spark, df)
     assert re.search(r"ShuffledHashJoin", plan), plan[:2000]
 
 
@@ -588,8 +555,7 @@ def test_minhash_signature_tokenizes_once(spark):
     from map_reduce_engine_cdps_spark.sources.readers import load_table
 
     df = _with_minhash_bands(load_table(spark, SF_DIR, "documents"))
-    df.count()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(spark, df)
     assert plan.count("split(") == 1, plan[:3000]
 
 
@@ -617,8 +583,7 @@ def test_simhash_tokenizes_once(spark):
     from map_reduce_engine_cdps_spark.plans.dedup import _simhash_per_doc
 
     df = _simhash_per_doc(spark, SF_DIR)
-    df.count()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(spark, df)
     n_gen = len(re.findall(r"\bGenerate explode", plan))
     assert n_gen == 1, f"expected 1 tokenize Generate, found {n_gen}:\n{plan[:2000]}"
 
@@ -629,9 +594,7 @@ def test_tfidf_tf_is_checkpointed(spark):
     both the dfreq branch and the join probe side). The checkpoint
     truncates lineage, so the final plan must NOT contain a tokenize
     Generate — the tf rows come from the checkpointed RDD scan."""
-    df = _REGISTRY["tfidf_top_terms"][0](spark, SF_DIR)
-    df.count()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(spark, "tfidf_top_terms")
     assert "Generate explode" not in plan, plan[:2000]
     assert "ExistingRDD" in plan or "Scan ExistingRDD" in plan, plan[:2000]
 
@@ -642,18 +605,12 @@ def test_ivf_rank_exchange_is_wgl_bounded(spark):
     vector first (plan_audit's WGL exemption). If the partial WGL ever
     disappears (optimizer regression / shape change), the exemption
     must stop applying and the scalar-only audit must flag the plan."""
-    from tools.plan_audit import rank_window_array_exchanges
-
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with P.aqe_off(spark):
         df = _REGISTRY["ivf_ann_topk"][0](spark, SF_DIR)
         # the audit returns [] — arrays present but WGL-bounded
-        assert rank_window_array_exchanges(df) == []
-        plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "WindowGroupLimit" in plan and "Partial" in plan, plan[:2000]
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+        assert P.rank_window_array_exchanges(df) == []
+        plan = P.physical(df)
+    assert "WindowGroupLimit" in plan and "Partial" in plan, plan[:2000]
 
 
 # --- round-13 optimization shape pins (OPTIMIZATION_r13.md) ---
@@ -669,10 +626,9 @@ def test_wgl_bound_covers_nprobe_sweep():
         NPROBE,
         _NPROBE_SWEEP,
     )
-    from tools.plan_audit import WGL_BOUND
 
-    assert max(_NPROBE_SWEEP) <= WGL_BOUND
-    assert NPROBE <= WGL_BOUND
+    assert max(_NPROBE_SWEEP) <= P.WGL_BOUND
+    assert NPROBE <= P.WGL_BOUND
 
 
 def test_knn_grouped_kernel_single_crossing(spark):
@@ -682,9 +638,7 @@ def test_knn_grouped_kernel_single_crossing(spark):
     once per query with BOTH embeddings on every pair row, plus a
     full-corpus norm pass). An ArrowEvalPython reappearing here means
     the pair-join shape is back."""
-    df = _REGISTRY["knn_bruteforce"][0](spark, SF_DIR)
-    df.count()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(spark, "knn_bruteforce")
     assert "FlatMapGroupsInPandas" in plan, plan[:2000]
     assert "ArrowEvalPython" not in plan, plan[:2000]
 
@@ -698,9 +652,7 @@ def test_lsh_bucket_kernel_not_duplicated(spark):
     norm+bucket — Spark merges adjacent independent UDFs — and the
     pair dot); a 4th means the inferred-null-filter duplication is
     back."""
-    df = _REGISTRY["lsh_ann_topk"][0](spark, SF_DIR)
-    df.count()
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = _plan(spark, "lsh_ann_topk")
     n = len(re.findall(r"ArrowEvalPython", plan))
     assert n == 3, f"expected 3 ArrowEvalPython, found {n}:\n{plan[:2000]}"
 
@@ -711,25 +663,9 @@ def test_one_vs_one_multicast_payload_is_minimal(spark):
     columns — label_a/label_b (pair key), label, vec_id, embedding.
     Any extra attribute here is multiplied K-1 times per embedding row
     by the multicast."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
+    with P.aqe_off(spark):
         df = _REGISTRY["one_vs_one_training"][0](spark, SF_DIR)
-        plan = df._jdf.queryExecution().executedPlan()
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-
-    def find_fmg(node):
-        if "FlatMapGroupsInPandas" in node.nodeName():
-            return node
-        ch = node.children()
-        for i in range(ch.size()):
-            r = find_fmg(ch.apply(i))
-            if r is not None:
-                return r
-        return None
-
-    fmg = find_fmg(plan)
+        fmg = next((n for n in P.nodes(df) if "FlatMapGroupsInPandas" in n.nodeName()), None)
     assert fmg is not None
     child = fmg.children().apply(0)
     attrs = child.output()

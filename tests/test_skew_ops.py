@@ -9,6 +9,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.operators.skew import salted_agg, salted_join
+from tools import plan_inspect as P
 
 
 def _skewed_df(spark):
@@ -99,10 +100,7 @@ def test_aqe_skew_join_split_engages(spark):
         "spark.sql.adaptive.skewJoin.skewedPartitionFactor": "2",
         "spark.sql.adaptive.coalescePartitions.enabled": "false",
     }
-    saved = {k: spark.conf.get(k, None) for k in tuned}
-    for k, v in tuned.items():
-        spark.conf.set(k, v)
-    try:
+    with P.conf(spark, tuned):
         left = spark.range(0, 200_000).select(
             (F.col("id") % 1000 * (F.col("id") % 1000 > 900).cast("bigint"))
             .alias("k")  # >90% of rows land on k=0
@@ -114,11 +112,5 @@ def test_aqe_skew_join_split_engages(spark):
         # finalizes — count() compiles a separate query execution
         j = left.join(right, "k").select("k")
         assert len(j.collect()) == 200_000
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "skew=true" in plan, plan[:2000]
-    finally:
-        for k, v in saved.items():
-            if v is None:
-                spark.conf.unset(k)
-            else:
-                spark.conf.set(k, v)
+        plan = P.physical(j)
+    assert "skew=true" in plan, plan[:2000]

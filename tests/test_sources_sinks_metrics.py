@@ -30,6 +30,7 @@ from map_reduce_engine_cdps_spark.sources.writers import (
     filter_rewrite_csv,
     write_partitioned,
 )
+from tools import plan_inspect as P
 
 
 def test_read_text_dir(spark, tmp_path):
@@ -121,9 +122,10 @@ def test_write_partitioned_and_prune(spark, sf_dir, tmp_path):
     write_partitioned(ev, out, ["event_type"])
     assert any(p.startswith("event_type=") for p in os.listdir(out))
     back = spark.read.parquet(out).filter(F.col("event_type") == "click")
-    # partition pruning: the scan should only touch the click directory
-    assert "event_type=click" in back._jdf.queryExecution().executedPlan().toString() or \
-        back.count() == ev.filter(F.col("event_type") == "click").count()
+    # partition pruning: the predicate reaches the scan as a partition filter
+    (scan,) = P.census(back)["scans"]
+    assert any("event_type" in f and "click" in f for f in scan["partition_filters"]), scan
+    assert back.count() == ev.filter(F.col("event_type") == "click").count()
 
 
 def test_filter_rewrite_csv(spark, tmp_path):
@@ -148,12 +150,8 @@ def test_run_with_metrics(spark, sf_dir):
 # --- plan-shape regressions: the .explain contract -----------------------
 
 
-def _plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
 def test_revenue_joins_are_broadcast(spark, sf_dir):
-    plan = _plan(revenue_by_nation(spark, sf_dir))
+    plan = P.physical(revenue_by_nation(spark, sf_dir))
     assert "BroadcastHashJoin" in plan
     # the big fact table must not be nested-loop joined
     assert "CartesianProduct" not in plan
@@ -161,17 +159,14 @@ def test_revenue_joins_are_broadcast(spark, sf_dir):
 
 def test_pricing_summary_pushes_filter_and_partial_aggs(spark, sf_dir):
     df = pricing_summary(spark, sf_dir)
-    plan = _plan(df)
-    assert "HashAggregate" in plan  # partial+final hash aggregation
-    optimized = df._jdf.queryExecution().optimizedPlan().toString()
-    # the shipdate predicate must sit at (or under) the scan, pushed
-    # out of the aggregate
-    assert "PushedFilters" in _plan(df) or "l_shipdate" in optimized
+    assert "HashAggregate" in P.physical(df)  # partial+final hash aggregation
+    # the shipdate predicate must reach the scan, pushed out of the aggregate
+    (scan,) = P.census(df)["scans"]
+    assert any("l_shipdate" in f for f in scan["pushed"]), scan
 
 
 def test_scan_prunes_columns(spark, sf_dir):
-    df = pricing_summary(spark, sf_dir)
-    plan = _plan(df)
+    plan = P.physical(pricing_summary(spark, sf_dir))
     # ReadSchema must not include unused lineitem columns such as l_tax
     read_schema = [ln for ln in plan.splitlines() if "ReadSchema" in ln]
     assert read_schema and "l_tax" not in read_schema[0]
@@ -204,7 +199,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
             .groupBy("o_custkey")
             .count()
         )
-        plan = joined._jdf.queryExecution().executedPlan().toString()
+        plan = P.physical(joined)
         n_exchanges = plan.count("Exchange hashpartitioning")
         # one exchange allowed for the final groupBy on o_custkey;
         # the join itself must not reshuffle either bucketed side

@@ -1,8 +1,9 @@
 """Repository tooling: every `tools/<x>.py` the docs, the package or the
 tests name exists, so does every package module README names, every
 `<pkgdir>/<file>.py:<name>` citation names a top-level definition, the A/B tool compares a query against a git revision
-and cleans up after itself, and bench.py times just the queries it is
-given without touching the round artifacts."""
+and cleans up after itself, bench.py times just the queries it is
+given without touching the round artifacts, and the plan inspector's
+census and normalized plans hold on a small plan."""
 
 from __future__ import annotations
 
@@ -14,6 +15,7 @@ import re
 import subprocess
 import sys
 
+import pandas as pd
 import pytest
 from conftest import SF_DIR
 
@@ -28,7 +30,8 @@ _NAME_REF = re.compile(
 
 
 def _texts():
-    yield from ("README.md", os.path.join(".claude", "skills", "verify", "SKILL.md"))
+    yield from ("README.md", "SCALE.md", "PLANS.md",
+                os.path.join(".claude", "skills", "verify", "SKILL.md"))
     for top in ("map_reduce_engine_cdps_spark", "tests"):
         for d, _, files in os.walk(os.path.join(REPO, top)):
             yield from (os.path.join(d, f) for f in files if f.endswith((".py", ".md")))
@@ -148,3 +151,35 @@ def test_bench_times_only_the_named_queries():
     assert last["noop_compute"] == {}
     assert "full" not in last
     assert _bench_artifacts() == before
+
+
+def test_plan_inspector_census_and_normalized_plans(spark, tmp_path):
+    """The census counts what a small plan reads, moves and runs; two
+    builds of one registry query (whose plan names a fresh scratch dir on
+    every build) print one normalized plan and digest."""
+    from pyspark.sql import functions as F
+
+    from map_reduce_engine_cdps_spark.plans.registry import get_query
+    from tools import plan_inspect as P
+
+    path = str(tmp_path / "facts.parquet")
+    spark.range(100).withColumn("k", F.col("id") % 5).write.parquet(path)
+    dim = spark.range(5).withColumnRenamed("id", "k").localCheckpoint()
+
+    @F.pandas_udf("long")
+    def plus_one(s: pd.Series) -> pd.Series:
+        return s + 1
+
+    df = (spark.read.parquet(path).filter(F.col("id") > 10)
+          .join(F.broadcast(dim), "k").select(plus_one("id")))
+    c = P.census(df)
+    (scan,) = c["scans"]
+    assert (scan["table"], scan["width"]) == ("facts", 2) and "GreaterThan(id,10)" in scan["pushed"]
+    assert (c["joins"], c["python"], c["rdd_scans"]) == (["BroadcastHashJoin"], ["ArrowEvalPython"], 1)
+    assert c["exchanges"] == [("BroadcastExchange", "k", "bigint")]
+
+    a, b = (get_query("bucketed_join_stats")(spark, SF_DIR) for _ in range(2))
+    assert P.formatted(a) == P.formatted(b)
+    assert "userFiles-*/bucketed_join_*/" in P.formatted(a)
+    assert not re.search(r"#\d|plan_id=\d", P.formatted(a))
+    assert P.digest(a) == P.digest(b)

@@ -11,8 +11,9 @@ the package cannot share one interpreter. For each query the sorted
 per-side medians of the total and of construction alone (`build`, the
 query function's own time before the write starts), the raw totals and
 how many pairs each side won. Each query's line also says whether the
-two optimized logical plans are identical once expression ids (`#123`,
-`#123L`) and lambda-variable numbers (`x_7#`) are normalized. When
+two optimized logical plans are identical once `plan_inspect.normalize`
+has replaced expression ids (`#123`, `#123L`), lambda-variable numbers
+(`x_7#`) and the other session counters. When
 either plan reads an RDD (a `localCheckpoint`, or rows created in
 Python), the digest cannot see below it, and an identical digest is
 reported as `plan identical above an RDD scan`. Exits 1 if any query's
@@ -26,7 +27,6 @@ import argparse
 import hashlib
 import json
 import os
-import re
 import shutil
 import statistics
 import subprocess
@@ -35,17 +35,11 @@ import tempfile
 import time
 import traceback
 
+# by its bare name: the REV worker runs this file with the REV tree on
+# PYTHONPATH and as cwd, and the REV may predate the module
+import plan_inspect
+
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def plan_digest(df) -> tuple[str, bool]:
-    """sha256 of the optimized logical plan with expression ids and
-    lambda-variable numbers normalized (both are session counters), and
-    whether the plan has a LogicalRDD leaf, whose lineage it hides."""
-    plan = df._jdf.queryExecution().optimizedPlan().toString()
-    plan = re.sub(r"#\d+L?", "#", plan)
-    plan = re.sub(r"\b(lambda \w+?)_\d+#", r"\1_#", plan)
-    return hashlib.sha256(plan.encode()).hexdigest(), "LogicalRDD" in plan
 
 
 def serve(sf_dir: str) -> None:
@@ -75,7 +69,7 @@ def serve(sf_dir: str) -> None:
             if req["op"] == "rows":
                 rows = sorted(repr(tuple(r)) for r in df.collect())
                 digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
-                plan, rdd = plan_digest(df)
+                plan, rdd = plan_inspect.digest(df)
                 reply = {"rows": len(rows), "digest": digest, "plan": plan, "rdd": rdd}
             else:
                 built = time.perf_counter()

@@ -4,23 +4,36 @@ pushdown into the parquet scans, no cartesian products, top-k as
 TakeOrderedAndProject (never a global Sort + Limit of the full input).
 
 Run: python tools/plan_audit.py [query ...]   (default: audited set)
+     python tools/plan_audit.py census [threshold]
+Both read `plan_inspect.census` at $SPARK_GRAFT_SF_DIR (else sf0.01).
 
-This is a development feedback tool, not a test gate: AQE can legally
-change join strategies at runtime, so we audit the *initial* plan for
-structural mistakes (cartesian, missed pushdown) and print join/scan
-summaries for eyeball review.
+The audit is a development feedback tool, not a test gate: AQE can
+legally change join strategies at runtime, so it audits the plan chosen
+before execution for structural mistakes (cartesian, missed pushdown)
+and prints each query's joins and scan read-schema widths for review.
+
+`census` is the candidate-finder for SCALE.md rule 11 (checkpoint a
+shared subtree only when the materialized frame is small — measure
+first): it prints every registry query whose plan scans one FACT table
+>= threshold (default 4) times. A repeated scan is only a CANDIDATE:
+ReusedExchange/ReusedSubquery dedupe many at runtime, and a codegen'd
+re-evaluation can be cheaper than a fat materialization. Exit code 0.
 """
 
 from __future__ import annotations
 
-import re
+import collections
 import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import plan_inspect
 from map_reduce_engine_cdps_spark.plans.registry import _REGISTRY
 from map_reduce_engine_cdps_spark.session import get_spark
+
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
+FACTS = ("lineitem", "orders", "documents", "events", "embeddings")
 
 # query → expectations. "broadcast": minimum number of broadcast joins in
 # the initial plan; "no_cartesian": fail on CartesianProduct /
@@ -118,185 +131,51 @@ AUDITS: dict[str, dict] = {
 }
 
 
-def exchange_payload_types(df) -> list[tuple[str, str, str]]:
-    """(node, column, type) for every output attribute of every Exchange
-    in the df's physical plan — the shuffle payload schema. Walk with AQE
-    disabled at plan-build time: the non-adaptive tree exposes plain
-    children() all the way down (AdaptiveSparkPlanExec hides stages).
-    """
-    out: list[tuple[str, str, str]] = []
-
-    def walk(node) -> None:
-        name = node.nodeName()
-        if "Exchange" in name:
-            attrs = node.output()
-            for i in range(attrs.size()):
-                a = attrs.apply(i)
-                out.append((name, a.name(), a.dataType().catalogString()))
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(ch.apply(i))
-
-    walk(df._jdf.queryExecution().executedPlan())
-    return out
-
-
-# A map-side partial WindowGroupLimit with a small limit BELOW a rank
-# exchange caps the exchange payload at limit rows per key —
-# corpus×limit, not the K-fold blow-up the rank audit exists for
-# (round 12: the IVF rank exchanges carry (vec, norm) through the
-# window so the winners need no re-attach join; legal only because the
-# partial WGL prunes to n ≤ WGL_BOUND rows per vector first).
-# Module-level so tests can assert the coupling max(_NPROBE_SWEEP) <=
-# WGL_BOUND explicitly (ADVICE r12): raising NPROBE past the bound
-# flips plans from exempt to flagged (the intended ratchet), while
-# raising WGL_BOUND widens the exemption for every future plan and
-# must be a deliberate, reviewed change.
-WGL_BOUND = 8
-
-
-def rank_window_array_exchanges(df) -> list[tuple[str, str, str]]:
-    """Array-typed payload columns of any Exchange inserted FOR a
-    Window's partitioning — i.e. embeddings riding a rank/argmin
-    shuffle. In bucketed-ANN shapes that exchange moves K scored rows
-    per vector, so an array payload there is K x the corpus: the ANN
-    analogue of the dedup string-array ban (VERDICT r4 item 8). Only an
-    Exchange reached from a Window through the window's own machinery
-    (Sort / WindowGroupLimit / codegen wrappers) counts — an exchange
-    behind a Project/Join/PythonEval belongs to that operator (e.g. a
-    probe join, charged to the crossing bound instead), and a map-side
-    partial WindowGroupLimit legitimately sits right above such
-    nodes."""
-    out: list[tuple[str, str, str]] = []
-    PASS_THROUGH = ("Sort", "WindowGroupLimit", "WholeStageCodegen",
-                    "InputAdapter", "ColumnarToRow")
-
-    def _partial_wgl_below(node) -> bool:
-        """True if a Partial WindowGroupLimit with limit <= WGL_BOUND
-        sits directly below (through pass-through wrappers) — i.e. the
-        exchange's per-key payload is pruned map-side before the
-        shuffle."""
-        name = node.nodeName()
-        if name == "WindowGroupLimit":
-            try:
-                return (node.mode().toString() == "Partial"
-                        and int(node.limit()) <= WGL_BOUND)
-            except Exception:  # noqa: BLE001 — conservative: not bounded
-                return False
-        if not any(name.startswith(pfx) for pfx in PASS_THROUGH):
-            return False
-        ch = node.children()
-        return any(_partial_wgl_below(ch.apply(i)) for i in range(ch.size()))
-
-    def rank_exchange(node, acc) -> None:
-        name = node.nodeName()
-        if name == "Exchange":
-            ch = node.children()
-            if any(_partial_wgl_below(ch.apply(i)) for i in range(ch.size())):
-                return
-            attrs = node.output()
-            for i in range(attrs.size()):
-                a = attrs.apply(i)
-                t = a.dataType().catalogString()
-                if t.startswith("array<"):
-                    acc.append((name, a.name(), t))
-            return
-        if not any(name.startswith(pfx) for pfx in PASS_THROUGH):
-            return  # the exchange below belongs to this operator
-        ch = node.children()
-        for i in range(ch.size()):
-            rank_exchange(ch.apply(i), acc)
-
-    def walk(node) -> None:
-        if node.nodeName() == "Window":
-            ch = node.children()
-            for i in range(ch.size()):
-                rank_exchange(ch.apply(i), out)
-        ch = node.children()
-        for i in range(ch.size()):
-            walk(ch.apply(i))
-
-    walk(df._jdf.queryExecution().executedPlan())
-    return out
-
-
-def shuffle_array_exchange_count(df) -> int:
-    """Number of (node, column) shuffle-Exchange array payload attrs —
-    BroadcastExchange and ReusedExchange excluded (broadcasting a small
-    side or reusing an exchange is the intended scale shape)."""
-    return len(
-        [
-            t
-            for t in exchange_payload_types(df)
-            if t[0] == "Exchange" and "array<" in t[2]
-        ]
-    )
-
-
-def binary_shuffle_exchanges(df) -> list[tuple[str, str, str]]:
-    """Shuffle-Exchange payload columns of binary type — raw media
-    payloads riding a shuffle. The multimodal family's contract is
-    scan -> Arrow decode (mapInPandas) -> scalar features, so media
-    bytes should reach the Python boundary without ever crossing an
-    Exchange: a binary shuffle payload means megabyte rows are being
-    hashed/sorted/spilled per shuffle write, the multimodal analogue
-    of the dedup string-array ban. BroadcastExchange excluded."""
-    return [
-        t
-        for t in exchange_payload_types(df)
-        if t[0] == "Exchange" and t[2] == "binary"
-    ]
-
-
-def string_array_exchanges(df) -> list[tuple[str, str, str]]:
-    """Exchange payload columns whose type embeds an array of strings."""
-    return [
-        t
-        for t in exchange_payload_types(df)
-        if re.search(r"array<[^>]*string", t[2])
-    ]
-
-
 def audit(name: str, sf_dir: str) -> list[str]:
     spark = get_spark(app_name="plan_audit")
-    fn, _ = _REGISTRY[name]
-    df = fn(spark, sf_dir)
-    df.count()  # execute so AQE finalizes join strategies / codegen
-    plan = df._jdf.queryExecution().executedPlan().toString()
+    c = plan_inspect.census(_REGISTRY[name][0](spark, sf_dir))
     problems: list[str] = []
     exp = AUDITS.get(name, {})
-    n_bhj = len(re.findall(r"BroadcastHashJoin", plan))
+    n_bhj = c["joins"].count("BroadcastHashJoin")
     if exp.get("broadcast") and n_bhj < exp["broadcast"]:
         problems.append(f"expected ≥{exp['broadcast']} BroadcastHashJoin, saw {n_bhj}")
-    if exp.get("no_cartesian") and re.search(
-        r"CartesianProduct|BroadcastNestedLoopJoin", plan
-    ):
+    if exp.get("no_cartesian") and {"CartesianProduct", "BroadcastNestedLoopJoin"} & set(c["joins"]):
         problems.append("cartesian / nested-loop join in plan")
-    if exp.get("topk") and "TakeOrderedAndProject" not in plan:
+    if exp.get("topk") and "TakeOrderedAndProject" not in c["nodes"]:
         problems.append("top-k did not compile to TakeOrderedAndProject")
-    if exp.get("pushed") and "PushedFilters: []" in plan and "PushedFilters: [" in plan:
+    if exp.get("pushed") and any(not s["pushed"] for s in c["scans"]):
         # every scan with a candidate filter should push something down
         problems.append("a scan pushed no filters")
-    joins = re.findall(
-        r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|CartesianProduct|"
-        r"BroadcastNestedLoopJoin)",
-        plan,
-    )
-    scans = re.findall(r"ReadSchema: (\S+)", plan)
-    print(
-        f"{name}: joins={joins or '-'} "
-        f"scan_widths={[s.count(',') + 1 for s in scans] or '-'}"
-    )
+    print(f"{name}: joins={c['joins'] or '-'} "
+          f"scan_widths={[s['width'] for s in c['scans']] or '-'}")
     return problems
 
 
+def fact_scan_census(sf_dir: str, threshold: int) -> None:
+    spark = get_spark(app_name="plan_audit")
+    n_flagged = 0
+    for name, (fn, _) in _REGISTRY.items():
+        try:
+            scans = plan_inspect.census(fn(spark, sf_dir))["scans"]
+        except Exception as e:  # noqa: BLE001
+            print(f"{name}: ERROR {type(e).__name__}: {e}")
+            continue
+        counts = collections.Counter(s["table"] for s in scans if s["table"] in FACTS)
+        heavy = {t: k for t, k in counts.items() if k >= threshold}
+        if heavy:
+            n_flagged += 1
+            print(f"{name}: {heavy}")
+    print(f"{n_flagged} queries scan a fact table >= {threshold}x "
+          "(candidates, not defects — A/B before changing; rule 11)")
+
+
 def main() -> int:
-    sf_dir = "/root/testdata/sf0.01"
-    names = sys.argv[1:] or list(AUDITS)
+    if sys.argv[1:2] == ["census"]:
+        fact_scan_census(SF_DIR, int(sys.argv[2]) if len(sys.argv) > 2 else 4)
+        return 0
     failures = 0
-    for name in names:
-        problems = audit(name, sf_dir)
-        for p in problems:
+    for name in sys.argv[1:] or list(AUDITS):
+        for p in audit(name, SF_DIR):
             failures += 1
             print(f"  PROBLEM {name}: {p}")
     print(f"{failures} plan problems")

@@ -1,7 +1,8 @@
 """Generate PLANS.md: formatted physical plans for the headline queries,
 each annotated with why the plan is the one we designed for at scale.
 
-Run: python tools/plan_snapshots.py   (rewrites PLANS.md)
+Run: python tools/plan_snapshots.py   (rewrites PLANS.md; plans are
+normalized, so runs at one shuffle-partition count write the same bytes)
 """
 
 from __future__ import annotations
@@ -13,6 +14,7 @@ import sys
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import plan_inspect
 from map_reduce_engine_cdps_spark.plans.registry import _REGISTRY
 from map_reduce_engine_cdps_spark.session import get_spark
 
@@ -286,22 +288,22 @@ SNAPSHOTS: dict[str, str] = {
 
 def main() -> None:
     spark = get_spark(app_name="plan_snapshots")
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
     out = [
         "# PLANS — captured physical plans for the headline queries",
         "",
-        f"Generated by `tools/plan_snapshots.py` at sf_dir={SF_DIR} "
+        f"Generated by `tools/plan_snapshots.py` at sf_dir={SF_DIR} with "
+        f"spark.sql.shuffle.partitions={partitions} "
         "(plans are scale-invariant in shape; AQE may re-plan exchanges "
         "at runtime). Each section: the scale argument, then the "
-        "formatted plan that evidences it.",
+        "formatted plan that evidences it, with expression ids, plan ids "
+        "and scratch paths normalized.",
         "",
     ]
     for name, why in SNAPSHOTS.items():
         fn, _ = _REGISTRY[name]
-        df = fn(spark, SF_DIR)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
-        # keep the operator tree + details compact: drop codegen ids noise
+        plan = plan_inspect.formatted(fn(spark, SF_DIR))
+        # keep the operator tree + details compact
         plan = re.sub(r"\n{3,}", "\n\n", plan.strip())
         out += [f"## {name}", "", why, "", "```", plan, "```", ""]
     with open(os.path.join(REPO, "PLANS.md"), "w") as f:
