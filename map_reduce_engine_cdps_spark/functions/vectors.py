@@ -7,14 +7,23 @@ bit-reproducible against the DuckDB oracle's list_transform/list_sum.
 Their Arrow twins and grouped kernels run the same arithmetic in numpy
 through one left-to-right fold, :func:`_fold`, and return the same
 doubles bit for bit.
+
+The twins and kernels never touch pandas: Arrow columns become numpy
+arrays through :func:`_arrow_to_numpy` and numpy results become Arrow
+arrays through :func:`_numpy_to_arrow`, both reading and writing the
+Arrow buffers directly. In pyarrow 16.1 ``pa.array(ndarray)``,
+``pa.table(dict)``, ``Array.to_numpy()`` and ``np.asarray(array)``
+each import pandas, so none of them appears here; a Python worker that
+runs only these kernels never loads it.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, StringType
 
 
 def array_sum(a: Column) -> Column:
@@ -67,35 +76,114 @@ def _fold(x: np.ndarray) -> np.ndarray:
     return np.cumsum(x, axis=-1)[..., -1]
 
 
-def _stack_fixed_dim(vals: pd.Series) -> np.ndarray:
-    """vstack an array column's (non-NULL) rows as float64, with a clear
-    error for ragged inputs. The JVM twins treat a NULL array as NULL
-    output (the caller masks those out); a RAGGED batch has no
-    JVM-identical vectorized answer, so it is a precondition violation,
-    not data."""
-    vals = vals.to_numpy()
-    try:
-        return np.vstack(vals).astype(np.float64)
-    except ValueError as exc:
-        dims = {len(v) for v in vals}
+# Arrow type name (str(pa.DataType), pa.type_for_alias) → numpy dtype,
+# for the fixed-width types the bridge reads and writes in place.
+_NP = {
+    "int32": np.int32,
+    "int64": np.int64,
+    "float": np.float32,
+    "double": np.float64,
+}
+
+
+def _bits(buf: pa.Buffer, offset: int, n: int) -> np.ndarray:
+    """Slots offset … offset+n of an LSB-first Arrow bitmap, as bools."""
+    raw = np.frombuffer(buf, np.uint8)[offset // 8 : (offset + n + 7) // 8]
+    return np.unpackbits(raw, bitorder="little")[offset % 8 : offset % 8 + n].view(bool)
+
+
+def _arrow_to_numpy(col: pa.Array | pa.ChunkedArray) -> tuple[np.ndarray, np.ndarray]:
+    """An Arrow column as (values, validity), read from its buffers.
+
+    A fixed-width column gives its n values, viewed in place (booleans
+    are unpacked). A list column gives an (n, dim) float64 matrix — a
+    view of the child values when they are float64 and no row is NULL —
+    with all-zero rows where the list is NULL; an element-level NULL
+    reads as NaN. ``validity`` is True for the non-NULL rows. Slice
+    offsets of the array and of its child, and 32- or 64-bit list
+    offsets, are honoured. A list column whose non-NULL rows differ in
+    length raises: a ragged batch has no JVM-identical vectorized
+    answer, so it is a precondition violation, not data."""
+    is_list = pa.types.is_list(col.type) or pa.types.is_large_list(col.type)
+    if len(col) == 0:  # a zero-row column may have no buffers, or no chunks
+        if is_list:
+            return np.zeros((0, 0)), np.zeros(0, bool)
+        dtype = bool if pa.types.is_boolean(col.type) else _NP[str(col.type)]
+        return np.zeros(0, dtype), np.zeros(0, bool)
+    if isinstance(col, pa.ChunkedArray):
+        col = col.chunk(0) if col.num_chunks == 1 else col.combine_chunks()
+    n, off, bufs = len(col), col.offset, col.buffers()
+    valid = _bits(bufs[0], off, n) if col.null_count else np.ones(n, bool)
+    if pa.types.is_boolean(col.type):
+        return _bits(bufs[1], off, n), valid
+    if not is_list:
+        return np.frombuffer(bufs[1], _NP[str(col.type)], count=off + n)[off:], valid
+    offsets = np.frombuffer(
+        bufs[1], np.int64 if pa.types.is_large_list(col.type) else np.int32, count=off + n + 1
+    )[off:]
+    data, ok = _arrow_to_numpy(col.values)
+    if col.values.null_count:
+        data = np.where(ok, data, np.nan)
+    lens = np.diff(offsets)[valid]
+    dim = int(lens[0]) if len(lens) else 0
+    if (lens != dim).any():
         raise ValueError(
             "Arrow vector kernels require fixed-dimension embeddings; "
-            f"batch contains dims {sorted(dims)} — use the interpreted "
-            "fold (vectors.dot/norm/lsh_bucket) for ragged arrays"
-        ) from exc
+            f"batch contains dims {sorted(set(lens.tolist()))} — use the "
+            "interpreted fold (vectors.dot/norm/lsh_bucket) for ragged arrays"
+        )
+    if valid.all():
+        M = data[offsets[0] : offsets[-1]].reshape(n, dim)
+    else:
+        M = np.zeros((n, dim), data.dtype)
+        rows = np.flatnonzero(valid)
+        M[rows] = data[offsets[rows][:, None] + np.arange(dim)]
+    return M.astype(np.float64, copy=False), valid
 
 
-def _members(pdf: pd.DataFrame) -> tuple[pd.DataFrame, np.ndarray, np.ndarray]:
-    """A group's members for the grouped kernels: rows with a non-NULL
-    embedding sorted by vec_id, their float64 matrix and their L2 norms
-    (the correctly-rounded IEEE sqrt of the fold, like :func:`norm`).
-    A NULL embedding has no cosine, so its row is dropped; the
-    embeddings table contains none."""
-    pdf = pdf[pdf["embedding"].notna()].sort_values("vec_id")
-    if pdf.empty:
-        return pdf, np.zeros((0, 0)), np.zeros(0)
-    M = _stack_fixed_dim(pdf["embedding"])
-    return pdf, M, np.sqrt(_fold(M * M))
+def _numpy_to_arrow(
+    values: np.ndarray, type_name: str, valid: np.ndarray | None = None
+) -> pa.Array:
+    """numpy values (+ validity) as an Arrow array of ``type_name``,
+    built with ``pa.Array.from_buffers`` around the numpy memory.
+
+    A fixed-width type takes n values; ``"string"`` takes an (n, width)
+    uint8 matrix of ASCII characters, one fixed-width string per row.
+    Rows where ``valid`` is False are SQL NULL (matching the JVM folds
+    on NULL input), not NaN."""
+    n = len(values)
+    bitmap, nulls = None, 0
+    if valid is not None and not valid.all():
+        bitmap = pa.py_buffer(np.packbits(valid, bitorder="little"))
+        nulls = n - int(np.count_nonzero(valid))
+    if type_name == "string":
+        lens = np.full(n, values.shape[1], np.int32)
+        if bitmap is not None:
+            lens[~valid] = 0
+            values = values[valid]
+        offsets = np.zeros(n + 1, np.int32)
+        np.cumsum(lens, out=offsets[1:])
+        data = [pa.py_buffer(offsets), pa.py_buffer(np.ascontiguousarray(values, np.uint8))]
+    else:
+        data = [pa.py_buffer(np.ascontiguousarray(values, _NP[type_name]))]
+    return pa.Array.from_buffers(
+        pa.type_for_alias(type_name), n, [bitmap, *data], null_count=nulls
+    )
+
+
+def _member_matrix(table: pa.Table, *cols: str) -> tuple[np.ndarray, np.ndarray, list]:
+    """A group's members for the grouped kernels: the rows with a
+    non-NULL embedding sorted by vec_id, as their float64 matrix, their
+    L2 norms (the correctly-rounded IEEE sqrt of the fold, like
+    :func:`norm`) and the numpy values of ``cols`` in the same order. A
+    NULL embedding has no cosine, so its row is dropped; the embeddings
+    table contains none."""
+    M, valid = _arrow_to_numpy(table.column("embedding"))
+    ids = _arrow_to_numpy(table.column("vec_id"))[0]
+    order = np.flatnonzero(valid)
+    order = order[np.argsort(ids[order], kind="stable")]
+    M = M[order]
+    return M, np.sqrt(_fold(M * M)), [_arrow_to_numpy(table.column(c))[0][order] for c in cols]
 
 
 def _pair_cos(M: np.ndarray, nrm: np.ndarray, i, j) -> np.ndarray:
@@ -105,17 +193,10 @@ def _pair_cos(M: np.ndarray, nrm: np.ndarray, i, j) -> np.ndarray:
     return _fold(M[i] * M[j]) / (nrm[i] * nrm[j])
 
 
-def _with_nulls(out: np.ndarray, mask: np.ndarray) -> pd.Series:
-    """float64 results + validity mask → Arrow-nullable Float64 series,
-    so masked-out rows surface as SQL NULL (matching the JVM folds on
-    NULL input), not NaN."""
-    return pd.Series(pd.array(out, dtype="Float64")).mask(~pd.Series(mask), pd.NA)
-
-
 def dot_arrow() -> "object":
     """Arrow-vectorized twin of :func:`dot` for HIGH-VOLUME pair joins.
 
-    Returns a pandas_udf computing the same left-fold dot product with
+    Returns an arrow_udf computing the same left-fold dot product with
     numpy: products are elementwise float64 IEEE multiplies (identical
     to the JVM's) summed by :func:`_fold`, so the result double is
     bit-identical to :func:`dot` (verified exhaustively over every sf0.1
@@ -125,15 +206,17 @@ def dot_arrow() -> "object":
     higher-order fold dominates (millions of pairs); the ~15 µs/pair
     interpreter cost drops ~3.4× via Arrow batching.
     """
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf("double")
-    def _dot(a: pd.Series, b: pd.Series) -> pd.Series:
-        mask = a.notna().to_numpy() & b.notna().to_numpy()
-        out = np.zeros(len(a), dtype=np.float64)
-        if mask.any():
-            out[mask] = _fold(_stack_fixed_dim(a[mask]) * _stack_fixed_dim(b[mask]))
-        return _with_nulls(out, mask)
+    @arrow_udf(DoubleType())
+    def _dot(a: pa.Array, b: pa.Array) -> pa.Array:
+        A, va = _arrow_to_numpy(a)
+        B, vb = _arrow_to_numpy(b)
+        valid = va & vb
+        # an all-NULL side reads as an (n, 0) matrix, which does not
+        # broadcast against the other side's (n, dim)
+        out = _fold(A * B) if valid.any() else np.zeros(len(a))
+        return _numpy_to_arrow(out, "double", valid)
 
     return _dot
 
@@ -149,27 +232,24 @@ def norm_arrow() -> "object":
     fold costs ~25 µs/row, measured dominating e.g. `knn_bruteforce`
     wall time at the sf1 point.
     """
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf("double")
-    def _norm(a: pd.Series) -> pd.Series:
-        mask = a.notna().to_numpy()
-        out = np.zeros(len(a), dtype=np.float64)
-        if mask.any():
-            av = _stack_fixed_dim(a[mask])
-            out[mask] = np.sqrt(_fold(av * av))
-        return _with_nulls(out, mask)
+    @arrow_udf(DoubleType())
+    def _norm(a: pa.Array) -> pa.Array:
+        A, valid = _arrow_to_numpy(a)
+        return _numpy_to_arrow(np.sqrt(_fold(A * A)), "double", valid)
 
     return _norm
 
 
-# The grouped kernels below are the ``applyInPandas`` twins of the
+# The grouped kernels below are the ``applyInArrow`` twins of the
 # norm_arrow/dot_arrow pair join: each member embedding crosses into
 # Python once per group and only scalar rows come back, where the join
 # formulation ships every candidate pair as a 2×dim-double Arrow row.
-# Their raw cosines come from _members + _pair_cos, so they are
-# bit-identical to the JVM fold (pinned by tests/test_workloads.py);
-# callers apply the authoritative F.round JVM-side.
+# Each takes and returns a pa.Table. Their raw cosines come from
+# _member_matrix + _pair_cos, so they are bit-identical to the JVM fold
+# (pinned by tests/test_workloads.py); callers apply the authoritative
+# F.round JVM-side.
 
 
 def bucket_pair_cos_kernel(min_raw_cos: float):
@@ -190,9 +270,8 @@ def bucket_pair_cos_kernel(min_raw_cos: float):
     regardless of bucket cap.
     """
 
-    def _pairs(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, M, nrm = _members(pdf)
-        ids = pdf["vec_id"].to_numpy()
+    def _pairs(table: pa.Table) -> pa.Table:
+        M, nrm, (ids,) = _member_matrix(table, "vec_id")
         ii, jj = np.triu_indices(len(ids), k=1)
         cos = np.empty(len(ii))
         chunk = 131072  # pairs per slab: ≤ 64 MB of float64 at dim 64
@@ -200,8 +279,13 @@ def bucket_pair_cos_kernel(min_raw_cos: float):
             sl = slice(s, s + chunk)
             cos[sl] = _pair_cos(M, nrm, ii[sl], jj[sl])
         keep = cos >= min_raw_cos
-        return pd.DataFrame(
-            {"vec_a": ids[ii[keep]], "vec_b": ids[jj[keep]], "cos_raw": cos[keep]}
+        return pa.Table.from_arrays(
+            [
+                _numpy_to_arrow(ids[ii[keep]], "int64"),
+                _numpy_to_arrow(ids[jj[keep]], "int64"),
+                _numpy_to_arrow(cos[keep], "double"),
+            ],
+            ["vec_a", "vec_b", "cos_raw"],
         )
 
     return _pairs
@@ -219,10 +303,8 @@ def group_query_cos_kernel():
     rows). The caller applies F.round and the rank window.
     """
 
-    def _sims(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, M, nrm = _members(pdf)
-        ids = pdf["vec_id"].to_numpy()
-        is_q = pdf["is_q"].to_numpy(dtype=bool)
+    def _sims(table: pa.Table) -> pa.Table:
+        M, nrm, (ids, is_q) = _member_matrix(table, "vec_id", "is_q")
         members = np.flatnonzero(~is_q)
         qi, ci, cos = [members[:0]], [members[:0]], [nrm[:0]]
         for q in np.flatnonzero(is_q):  # ≤ n_queries rows per group
@@ -230,12 +312,13 @@ def group_query_cos_kernel():
             qi.append(np.full(len(c), q))
             ci.append(c)
             cos.append(_pair_cos(M, nrm, q, c))
-        return pd.DataFrame(
-            {
-                "query_id": ids[np.concatenate(qi)],
-                "cand_id": ids[np.concatenate(ci)],
-                "cos_raw": np.concatenate(cos),
-            }
+        return pa.Table.from_arrays(
+            [
+                _numpy_to_arrow(ids[np.concatenate(qi)], "int64"),
+                _numpy_to_arrow(ids[np.concatenate(ci)], "int64"),
+                _numpy_to_arrow(np.concatenate(cos), "double"),
+            ],
+            ["query_id", "cand_id", "cos_raw"],
         )
 
     return _sims
@@ -292,25 +375,18 @@ def lsh_bucket_arrow(n_planes: int = 8) -> "object":
     bit-parity pin covers non-null input, which is all the embeddings
     table contains.
     """
-    from pyspark.sql.functions import pandas_udf
+    from pyspark.sql.functions import arrow_udf
 
-    @pandas_udf("string")
-    def _bucket(a: pd.Series) -> pd.Series:
-        mask = a.notna().to_numpy()
-        out = np.full(len(a), None, dtype=object)
-        if mask.any():
-            E = _stack_fixed_dim(a[mask])
-            j = np.arange(E.shape[1])
-            Wm = np.stack(
-                [
-                    (((h * 31 + j * 17) % 7) - 3).astype(np.float64)
-                    for h in range(n_planes)
-                ]
-            )
-            proj = _fold(E[:, None, :] * Wm[None, :, :])
-            bits = np.where(proj > 0, "1", "0")
-            out[mask] = ["".join(r) for r in bits]
-        return pd.Series(out, dtype="object")
+    @arrow_udf(StringType())
+    def _bucket(a: pa.Array) -> pa.Array:
+        E, valid = _arrow_to_numpy(a)
+        j = np.arange(E.shape[1])
+        Wm = np.stack(
+            [(((h * 31 + j * 17) % 7) - 3).astype(np.float64) for h in range(n_planes)]
+        )
+        proj = _fold(E[:, None, :] * Wm[None, :, :])
+        bits = np.where(proj > 0, ord("1"), ord("0")).astype(np.uint8)
+        return _numpy_to_arrow(bits, "string", valid)
 
     return _bucket
 
@@ -332,10 +408,8 @@ def bucket_hard_negative_kernel(k: int):
     ~(k+ties) rows per anchor come back.
     """
 
-    def _mine(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf, M, nrm = _members(pdf)
-        ids = pdf["vec_id"].to_numpy()
-        labels = pdf["label"].to_numpy()
+    def _mine(table: pa.Table) -> pa.Table:
+        M, nrm, (ids, labels) = _member_matrix(table, "vec_id", "label")
         ii, jj = np.nonzero(labels[:, None] != labels[None, :])
         cos = _pair_cos(M, nrm, ii, jj)
         keep = np.zeros(len(ii), dtype=bool)
@@ -346,14 +420,15 @@ def bucket_hard_negative_kernel(k: int):
             seg = order[s:e]
             kth = cos[seg[min(k, len(seg)) - 1]]
             keep[seg[cos[seg] >= kth - RAW_COS_MARGIN]] = True
-        return pd.DataFrame(
-            {
-                "anchor_id": ids[ii[keep]],
-                "anchor_label": labels[ii[keep]],
-                "neg_id": ids[jj[keep]],
-                "neg_label": labels[jj[keep]],
-                "cos_raw": cos[keep],
-            }
+        return pa.Table.from_arrays(
+            [
+                _numpy_to_arrow(ids[ii[keep]], "int64"),
+                _numpy_to_arrow(labels[ii[keep]], "int32"),
+                _numpy_to_arrow(ids[jj[keep]], "int64"),
+                _numpy_to_arrow(labels[jj[keep]], "int32"),
+                _numpy_to_arrow(cos[keep], "double"),
+            ],
+            ["anchor_id", "anchor_label", "neg_id", "neg_label", "cos_raw"],
         )
 
     return _mine

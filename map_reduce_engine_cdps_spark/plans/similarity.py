@@ -66,7 +66,7 @@ def _top_k(sims: DataFrame, k: int) -> DataFrame:
 # knn_bruteforce — exact cosine top-k per query, computed with the
 # grouped query-vs-members kernel (round 13; guide §4/§2.3): the corpus
 # is salted into deterministic hash groups, the (tiny) query set is
-# replicated to every group, and one applyInPandas crossing scores each
+# replicated to every group, and one applyInArrow crossing scores each
 # group's members against all queries in numpy. Each member embedding
 # crosses the Python boundary ONCE; the old broadcast-cross-join shape
 # shipped the corpus once PER QUERY as pair rows with BOTH
@@ -83,10 +83,10 @@ def _ann_salt_groups(emb: DataFrame) -> int:
     cluster the scan-split count grows with the data (~128 MB splits),
     so a group's members are bounded at ~one split of embeddings
     regardless of scale — grouped-map materializes a whole group in
-    pandas, so group size, not group count, is the memory bound. Group
-    COUNT stays low at toy SF, which matters the other way: grouped-map
-    pays ~ms of pandas overhead per group (measured, receipts in
-    OPTIMIZATION_r13.md)."""
+    one Arrow table, so group size, not group count, is the memory
+    bound. Group COUNT stays low at toy SF, which matters the other
+    way: grouped-map pays a fixed per-group overhead (measured at ~ms
+    per group under applyInPandas, receipts in OPTIMIZATION_r13.md)."""
     par = emb.sparkSession.sparkContext.defaultParallelism
     return max(par, emb.rdd.getNumPartitions())
 
@@ -109,7 +109,7 @@ def _query_group_sims(q: DataFrame, cand: DataFrame, n_groups: int) -> DataFrame
         salted.select(*cols)
         .unionByName(replicated.select(*cols))
         .groupBy("g")
-        .applyInPandas(V.group_query_cos_kernel(), _GROUP_SIMS_SCHEMA)
+        .applyInArrow(V.group_query_cos_kernel(), _GROUP_SIMS_SCHEMA)
     )
 
 
@@ -346,7 +346,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = d.filter(F.col("bucket").isNotNull())
     # Bucket cap computed ON the pairing partitioning: the rank window
     # partitions by bucket — exactly the layout the grouped kernel
-    # below needs — so Window + Filter preserve it and applyInPandas
+    # below needs — so Window + Filter preserve it and applyInArrow
     # adds NO new exchange. Embeddings cross a shuffle exactly once
     # (plan-gated at bound 1 + load_parallel's local-mode repartition).
     # This rank exchange carries the corpus x1, not the K-multiplied
@@ -373,7 +373,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = (
         d.select("bucket", "vec_id", "embedding")
         .groupBy("bucket")
-        .applyInPandas(
+        .applyInArrow(
             V.bucket_pair_cos_kernel(NEAR_DUP_COS - V.RAW_COS_MARGIN),
             "vec_a long, vec_b long, cos_raw double",
         )
@@ -1000,9 +1000,10 @@ GROUP BY w.nprobe ORDER BY w.nprobe
 
 # ---------------------------------------------------------------------------
 # arrow_norm_stats — mapInArrow surface: per-batch pyarrow/numpy compute
-# over the embedding column without pandas conversion overhead (the
-# lowest-overhead Python escape hatch — RecordBatch in, RecordBatch
-# out). Per-label aggregation of L2 norms afterwards is plain DataFrame.
+# over the embedding column without pandas (the lowest-overhead Python
+# escape hatch — RecordBatch in, RecordBatch out; the columns cross
+# through vectors.py's Arrow↔numpy bridge, which never imports pandas).
+# Per-label aggregation of L2 norms afterwards is plain DataFrame.
 # At 100 TB the batch shape is the contract: O(batch) peak memory per
 # task, no per-row Python calls, zero-copy Arrow buffers both ways.
 # ---------------------------------------------------------------------------
@@ -1014,16 +1015,14 @@ def arrow_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         import numpy as np
 
         for batch in batches:
-            labels = batch.column("label")
-            embs = batch.column("embedding")
-            # list<float> → (n, dim) ndarray; rows are fixed-length here,
-            # guaranteed by the embeddings table contract (FIXTURES.md)
-            flat = np.asarray(embs.flatten(), dtype=np.float64)
-            n = len(batch)
-            dim = flat.size // n if n else 0
-            l2 = np.sqrt((flat.reshape(n, dim) ** 2).sum(axis=1)) if n else flat
+            # (n, dim) float64; a ragged batch raises (the embeddings
+            # table is fixed-dimension, FIXTURES.md), a NULL row's norm
+            # is NULL
+            E, valid = V._arrow_to_numpy(batch.column("embedding"))
+            l2 = np.sqrt((E**2).sum(axis=1))
             yield pa.RecordBatch.from_arrays(
-                [labels, pa.array(l2, type=pa.float64())], ["label", "l2_norm"]
+                [batch.column("label"), V._numpy_to_arrow(l2, "double", valid)],
+                ["label", "l2_norm"],
             )
 
     emb = load_table(spark, sf_dir, "embeddings").select("label", "embedding")
@@ -1113,10 +1112,11 @@ EMBEDDING_COVARIANCE_SQL = _cov_sql()
 # arrow_label_centroids — Spark 4 `applyInArrow` (grouped-map over
 # pyarrow Tables; the Arrow-native sibling of applyInPandas and of
 # mapInArrow above): per-label embedding centroid norm computed with
-# numpy on zero-copy Arrow buffers. Grouped-map semantics mean one
-# Table per label lands in Python after the hash shuffle — the pattern
-# for per-group native-code kernels (faiss, BLAS) without pandas
-# conversion overhead. Oracle: plain per-dimension SQL aggregation.
+# numpy on zero-copy Arrow buffers, read and written through
+# vectors.py's bridge, so no pandas is loaded. Grouped-map semantics
+# mean one Table per label lands in Python after the hash shuffle — the
+# pattern for per-group native-code kernels (faiss, BLAS) without
+# pandas. Oracle: plain per-dimension SQL aggregation.
 # ---------------------------------------------------------------------------
 
 
@@ -1126,16 +1126,15 @@ def arrow_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     def centroid(table: pa.Table) -> pa.Table:
         import numpy as np
 
-        embs = table.column("embedding")
-        flat = np.asarray(embs.combine_chunks().flatten(), dtype=np.float64)
-        n = table.num_rows
-        dim = flat.size // n if n else 0
-        mean = flat.reshape(n, dim).mean(axis=0) if n else flat
+        E, valid = V._arrow_to_numpy(table.column("embedding"))
+        labels, _ = V._arrow_to_numpy(table.column("label"))
+        mean = E[valid].mean(axis=0)
+        norm = round(float(np.sqrt((mean**2).sum())), 6)
         return pa.Table.from_arrays(
             [
-                pa.array([int(table.column("label")[0].as_py())], pa.int32()),
-                pa.array([n], pa.int64()),
-                pa.array([round(float(np.sqrt((mean**2).sum())), 6)], pa.float64()),
+                V._numpy_to_arrow(labels[:1], "int32"),
+                V._numpy_to_arrow(np.array([table.num_rows]), "int64"),
+                V._numpy_to_arrow(np.array([norm]), "double"),
             ],
             ["label", "n_vecs", "centroid_norm"],
         )
@@ -2082,7 +2081,7 @@ def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     # returned rows — the kernel's raw-cosine cutoff (kth_raw -
     # V.RAW_COS_MARGIN) guarantees no candidate that could rank top-k
     # after F.round(.,6) is dropped (see bucket_hard_negative_kernel).
-    cands = base.groupBy("bucket").applyInPandas(
+    cands = base.groupBy("bucket").applyInArrow(
         V.bucket_hard_negative_kernel(_HN_K),
         "anchor_id long, anchor_label int, neg_id long, "
         "neg_label int, cos_raw double",

@@ -1709,7 +1709,7 @@ def test_bucket_hard_negative_kernel_superset_property():
     Checked against a brute-force python miner on random buckets,
     including adversarial near-tie values via tiny vector perturbations."""
     import numpy as np
-    import pandas as pd
+    import pyarrow as pa
     from hypothesis import given, settings
     from hypothesis import strategies as st
 
@@ -1731,17 +1731,19 @@ def test_bucket_hard_negative_kernel_superset_property():
         # raw cosines collide within the rounding window
         for i in range(0, n - 1, 3):
             base[i + 1] = base[i] + rng.normal(scale=1e-9, size=dim)
-        pdf = pd.DataFrame(
+        labels = rng.integers(0, n_labels, n).astype("int32")
+        table = pa.table(
             {
                 "vec_id": np.arange(n, dtype="int64"),
-                "label": rng.integers(0, n_labels, n).astype("int32"),
+                "label": labels,
                 "embedding": [row for row in base],
             }
         )
-        out = bucket_hard_negative_kernel(K)(pdf)
-        returned = set(zip(out["anchor_id"], out["neg_id"]))
+        out = bucket_hard_negative_kernel(K)(table)
+        returned = set(
+            zip(out.column("anchor_id").to_pylist(), out.column("neg_id").to_pylist())
+        )
         # brute-force rounded top-k per anchor (the query's semantics)
-        labels = pdf["label"].to_numpy()
         nrm = np.sqrt(np.cumsum(base * base, axis=1)[:, -1])
         for a in range(n):
             cands = []

@@ -124,8 +124,9 @@ def test_ab_tool_reports_identical_rows_and_removes_its_worktree(tmp_path):
     line = next(x for x in r.stdout.splitlines() if x.startswith("tfidf_top_terms: "))
     assert line.endswith(", plan identical above an RDD scan"), line
     assert "won" in r.stdout
-    # each side's line: median total, then median construction time
-    side = re.compile(r": median [\d.]+s  build [\d.]+s  won ")
+    # each side's line: median total, median construction time, pairs
+    # won and the summed RSS of its Python workers
+    side = re.compile(r": median [\d.]+s  build [\d.]+s  won \d+/1  workers [\d.]+ MB  ")
     assert len([x for x in r.stdout.splitlines() if side.search(x)]) == 4, r.stdout
     assert _worktrees() == before
     assert not [p for p in os.listdir(tmp_path) if p.startswith("ab-")]

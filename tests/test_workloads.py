@@ -405,7 +405,7 @@ def test_grouped_kernels_bitwise_equal_fold(spark, sf_dir, name):
     got = (
         emb.selectExpr(*cols)
         .groupBy((F.col("vec_id") % 4).alias("g"))
-        .applyInPandas(kernel(), schema)
+        .applyInArrow(kernel(), schema)
         .select(F.col(a).alias("ia"), F.col(b).alias("ib"), "cos_raw")
     )
     ea = emb.select(F.col("vec_id").alias("ia"), F.col("embedding").alias("ea"))
@@ -423,21 +423,245 @@ def test_grouped_kernels_bitwise_equal_fold(spark, sf_dir, name):
 @pytest.mark.parametrize("name", sorted(_GROUPED_KERNELS))
 def test_grouped_kernels_reject_ragged_groups(name):
     """A ragged group has no JVM-identical vectorized answer: every
-    grouped kernel raises _stack_fixed_dim's error, like dot_arrow and
-    norm_arrow, instead of numpy's bare vstack error."""
-    import numpy as np
-    import pandas as pd
+    grouped kernel raises the bridge's fixed-dimension error, like
+    dot_arrow and norm_arrow, instead of numpy's bare reshape error."""
+    table = _group_table([[1.0] * 3, [1.0] * 4], [1, 2], [0, 1], [True, False])
+    with pytest.raises(ValueError, match="fixed-dimension"):
+        _GROUPED_KERNELS[name][0]()(table)
 
-    pdf = pd.DataFrame(
+
+def _group_table(rows, ids, labels, is_q):
+    """A grouped kernel's input: vec_id, label, embedding (list<float>,
+    None = NULL) and is_q, the union of the three kernels' columns."""
+    import pyarrow as pa
+
+    return pa.table(
         {
-            "vec_id": np.array([1, 2], dtype="int64"),
-            "label": np.array([0, 1], dtype="int32"),
-            "embedding": [np.ones(3, dtype=np.float32), np.ones(4, dtype=np.float32)],
-            "is_q": [True, False],
+            "vec_id": pa.array(ids, pa.int64()),
+            "label": pa.array(labels, pa.int32()),
+            "embedding": pa.array(rows, pa.list_(pa.float32())),
+            "is_q": pa.array(is_q, pa.bool_()),
         }
     )
-    with pytest.raises(ValueError, match="fixed-dimension"):
-        _GROUPED_KERNELS[name][0]()(pdf)
+
+
+def _fold_cos(a, b) -> float:
+    """V.dot(a, b) / (V.norm(a) * V.norm(b)) in Python floats: elements
+    widened to double, products added strictly left to right."""
+    import math
+
+    def fold(x, y):
+        acc = 0.0
+        for u, v in zip(x, y):
+            acc += float(u) * float(v)
+        return acc
+
+    return fold(a, b) / (math.sqrt(fold(a, a)) * math.sqrt(fold(b, b)))
+
+
+def _kernel_pairs(name, table) -> dict:
+    """{(id_a, id_b): cos_raw} a grouped kernel returns for ``table``."""
+    out = _GROUPED_KERNELS[name][0]()(table)
+    a, b = _GROUPED_KERNELS[name][3]
+    keys = zip(out.column(a).to_pylist(), out.column(b).to_pylist())
+    return dict(zip(keys, out.column("cos_raw").to_pylist()))
+
+
+def _fold_pairs(name, table) -> dict:
+    """The pairs a grouped kernel must return for ``table`` (rows with a
+    NULL embedding take part in none), with their fold cosines."""
+    rows = table.column("embedding").to_pylist()
+    ids = table.column("vec_id").to_pylist()
+    labels = table.column("label").to_pylist()
+    is_q = table.column("is_q").to_pylist()
+    live = [i for i, r in enumerate(rows) if r is not None]
+    keep = {
+        "bucket_pair_cos": lambda i, j: ids[i] < ids[j],
+        "group_query_cos": lambda i, j: is_q[i] and not is_q[j] and ids[i] != ids[j],
+        "bucket_hard_negative": lambda i, j: labels[i] != labels[j],
+    }[name]
+    return {
+        (ids[i], ids[j]): _fold_cos(rows[i], rows[j])
+        for i in live
+        for j in live
+        if keep(i, j)
+    }
+
+
+def _random_group(n=12, dim=8, null_rows=()):
+    import numpy as np
+
+    rng = np.random.default_rng(7)
+    rows = rng.normal(size=(n, dim)).astype(np.float32).tolist()
+    for i in null_rows:
+        rows[i] = None
+    ids = rng.permutation(n).tolist()
+    labels = (np.arange(n) % 3).tolist()
+    return _group_table(rows, ids, labels, [i % 4 == 0 for i in range(n)])
+
+
+@pytest.mark.parametrize("name", sorted(_GROUPED_KERNELS))
+def test_grouped_kernels_drop_null_embedding_rows(name):
+    """A NULL embedding has no cosine: its row is in no returned pair,
+    and every other pair is still scored, bit-equal to the fold."""
+    table = _random_group(null_rows=(1, 4))
+    got = _kernel_pairs(name, table)
+    dropped = {table.column("vec_id")[i].as_py() for i in (1, 4)}
+    assert got and not {x for pair in got for x in pair} & dropped
+    assert got == _fold_pairs(name, table)
+
+
+@pytest.mark.parametrize("name", sorted(_GROUPED_KERNELS))
+@pytest.mark.parametrize("shape", ["all_null", "zero_rows"])
+def test_grouped_kernels_empty_groups_keep_declared_schema(name, shape):
+    """A group with no non-NULL embedding (all NULL, or no rows at all)
+    returns zero rows typed exactly as the declared schema, which
+    applyInArrow checks column by column."""
+    import pyarrow as pa
+
+    table = _random_group(n=4, null_rows=range(4))
+    if shape == "zero_rows":
+        table = _random_group().slice(0, 0)
+    out = _GROUPED_KERNELS[name][0]()(table)
+    ddl = {"long": pa.int64(), "int": pa.int32(), "double": pa.float64()}
+    fields = (f.split() for f in _GROUPED_KERNELS[name][2].split(", "))
+    declared = pa.schema([(c, ddl[t]) for c, t in fields])
+    assert out.num_rows == 0
+    assert out.schema == declared
+
+
+@pytest.mark.parametrize("name", sorted(_GROUPED_KERNELS))
+def test_grouped_kernels_read_offset_batches(name):
+    """A batch whose list offsets do not start at 0 (a slice, as Arrow
+    hands out from a larger buffer) scores the same cosines as the
+    fold on the rows it holds."""
+    table = _random_group(n=16).slice(5)
+    assert table.column("embedding").chunk(0).offsets[0].as_py() == 5 * 8
+    got = _kernel_pairs(name, table)
+    assert got and got == _fold_pairs(name, table)
+
+
+# Run by test_vector_kernels_run_without_pandas in a fresh interpreter:
+# argv[1] "none" sets sys.modules["pandas"] = None, so any import of it
+# raises; "blocked" also records every attempt, including those that
+# pyarrow swallows (pa.array asks for pandas and carries on without it).
+# Inputs are built from buffers, since pa.array would ask for pandas too.
+_PANDAS_FREE_SCRIPT = r"""
+import math
+import sys
+
+attempts = []
+if sys.argv[1] == "none":
+    sys.modules["pandas"] = None
+else:
+    class _Block:
+        def find_spec(self, name, path=None, target=None):
+            if name.split(".")[0] == "pandas":
+                attempts.append(name)
+                raise ImportError(name)
+
+    sys.meta_path.insert(0, _Block())
+
+import numpy as np
+import pyarrow as pa
+
+from map_reduce_engine_cdps_spark.functions import vectors as V
+
+
+def prim(values, typ):
+    values = np.ascontiguousarray(values, {"int64": np.int64, "int32": np.int32}[typ])
+    return pa.Array.from_buffers(pa.type_for_alias(typ), len(values), [None, pa.py_buffer(values)])
+
+
+def flags(values):
+    bits = pa.py_buffer(np.packbits(np.asarray(values, bool), bitorder="little"))
+    return pa.Array.from_buffers(pa.bool_(), len(values), [None, bits])
+
+
+def lists(rows, large=False):
+    valid = np.array([r is not None for r in rows])
+    lens = [0 if r is None else len(r) for r in rows]
+    offsets = np.concatenate([[0], np.cumsum(lens)]).astype(np.int64 if large else np.int32)
+    flat = np.array([x for r in rows if r is not None for x in r], np.float32)
+    child = pa.Array.from_buffers(pa.float32(), len(flat), [None, pa.py_buffer(flat)])
+    typ = (pa.large_list if large else pa.list_)(pa.float32())
+    bitmap = pa.py_buffer(np.packbits(valid, bitorder="little"))
+    return pa.Array.from_buffers(typ, len(rows), [bitmap, pa.py_buffer(offsets)], children=[child])
+
+
+def fold(x, y):  # V.dot: widen to double, add left to right
+    acc = 0.0
+    for u, v in zip(x, y):
+        acc += float(u) * float(v)
+    return acc
+
+
+def bucket(x, planes=8):  # V.lsh_bucket: sign of each hyperplane projection
+    w = lambda h: [((h * 31 + j * 17) % 7) - 3 for j in range(len(x))]
+    return "".join("1" if fold(x, w(h)) > 0 else "0" for h in range(planes))
+
+
+rng = np.random.default_rng(3)
+A = rng.normal(size=(9, 5)).astype(np.float32).tolist()
+B = rng.normal(size=(9, 5)).astype(np.float32).tolist()
+A[1] = A[6] = None
+B[2] = None
+
+dot, norm, lsh = V.dot_arrow().func, V.norm_arrow().func, V.lsh_bucket_arrow(8).func
+for lo, hi in [(0, 9), (3, 9), (4, 4)]:  # whole, sliced (offset 3), zero rows
+    a, b = lists(A).slice(lo, hi - lo), lists(B).slice(lo, hi - lo)
+    rows = list(zip(A[lo:hi], B[lo:hi]))
+    assert dot(a, b).to_pylist() == [
+        None if x is None or y is None else fold(x, y) for x, y in rows
+    ]
+    want = [None if x is None else math.sqrt(fold(x, x)) for x in A[lo:hi]]
+    assert norm(a).to_pylist() == want
+    assert norm(lists(A, large=True).slice(lo, hi - lo)).to_pylist() == want
+    assert lsh(a).to_pylist() == [None if x is None else bucket(x) for x in A[lo:hi]]
+
+ids, labels, is_q = [5, 2, 7, 1, 3, 8, 0, 6, 4], [0, 1, 2] * 3, [i % 4 == 0 for i in range(9)]
+table = pa.Table.from_arrays(
+    [prim(ids, "int64"), prim(labels, "int32"), lists(A), flags(is_q)],
+    ["vec_id", "label", "embedding", "is_q"],
+)
+live = [i for i in range(9) if A[i] is not None]
+cos = lambda i, j: fold(A[i], A[j]) / (math.sqrt(fold(A[i], A[i])) * math.sqrt(fold(A[j], A[j])))
+for kernel, (ca, cb), keep in [
+    (V.bucket_pair_cos_kernel(-2.0), ("vec_a", "vec_b"), lambda i, j: ids[i] < ids[j]),
+    (V.group_query_cos_kernel(), ("query_id", "cand_id"),
+     lambda i, j: is_q[i] and not is_q[j] and i != j),
+    (V.bucket_hard_negative_kernel(10**6), ("anchor_id", "neg_id"),
+     lambda i, j: labels[i] != labels[j]),
+]:
+    out = kernel(table)
+    got = dict(zip(zip(out.column(ca).to_pylist(), out.column(cb).to_pylist()),
+                   out.column("cos_raw").to_pylist()))
+    assert got == {(ids[i], ids[j]): cos(i, j) for i in live for j in live if keep(i, j)}
+    assert kernel(table.slice(0, 0)).num_rows == 0
+
+assert not attempts, attempts
+print("pandas-free")
+"""
+
+
+@pytest.mark.parametrize("mode", ["none", "blocked"])
+def test_vector_kernels_run_without_pandas(mode):
+    """functions.vectors imports, and its scalar twins and grouped
+    kernels run, in an interpreter where pandas cannot be imported, with
+    the values of V.dot / V.norm / V.lsh_bucket: NULL rows, a zero-row
+    batch, a sliced array with a non-zero offset and 64-bit list
+    offsets included. A Python worker that runs only these kernels then
+    never loads pandas."""
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    r = subprocess.run(
+        [sys.executable, "-c", _PANDAS_FREE_SCRIPT, mode],
+        capture_output=True, text=True, cwd=repo, timeout=120,
+        env=dict(os.environ, PYTHONPATH=repo),
+    )
+    assert r.returncode == 0 and "pandas-free" in r.stdout, r.stderr[-3000:]
 
 
 def test_lsh_bucket_and_norm_arrow_bitwise_equal_fold(spark, sf_dir):

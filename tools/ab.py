@@ -10,7 +10,9 @@ the package cannot share one interpreter. For each query the sorted
 (construction + noop write) alternate which side goes first. Prints the
 per-side medians of the total and of construction alone (`build`, the
 query function's own time before the write starts), the raw totals and
-how many pairs each side won. Each query's line also says whether the
+how many pairs each side won, and the summed RSS of the side's
+`pyspark.daemon` processes (the daemon and the Python workers it forked)
+after its runs. Each query's line also says whether the
 two optimized logical plans are identical once `plan_inspect.normalize`
 has replaced expression ids (`#123`, `#123L`), lambda-variable numbers
 (`x_7#`) and the other session counters. When
@@ -42,6 +44,34 @@ import plan_inspect
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
+def daemon_rss_mb() -> float:
+    """Summed RSS of the `pyspark.daemon` processes below this one, MB:
+    the daemon and the Python workers it forked (they keep its command
+    line), which hold what the workers imported for the session."""
+    parent: dict[int, int] = {}
+    for pid in filter(str.isdigit, os.listdir("/proc")):
+        try:
+            with open(f"/proc/{pid}/stat", encoding="ascii", errors="replace") as fh:
+                parent[int(pid)] = int(fh.read().rsplit(")", 1)[1].split()[1])
+        except (OSError, IndexError, ValueError):
+            pass
+    below, frontier = set(), {os.getpid()}
+    while frontier:
+        frontier = {p for p, pp in parent.items() if pp in frontier} - below
+        below |= frontier
+    rss = 0
+    for pid in below:
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as fh:
+                if b"pyspark.daemon" not in fh.read():
+                    continue
+            with open(f"/proc/{pid}/statm", encoding="ascii") as fh:
+                rss += int(fh.read().split()[1]) * os.sysconf("SC_PAGE_SIZE")
+        except (OSError, IndexError, ValueError):
+            pass
+    return rss / 2**20
+
+
 def serve(sf_dir: str) -> None:
     """Worker loop: one JSON request per stdin line, one reply per line."""
     out = os.fdopen(os.dup(1), "w", buffering=1)
@@ -64,6 +94,9 @@ def serve(sf_dir: str) -> None:
     for line in sys.stdin:
         req = json.loads(line)
         try:
+            if req["op"] == "rss":
+                out.write(json.dumps({"daemon_mb": daemon_rss_mb()}) + "\n")
+                continue
             t0 = time.perf_counter()
             df = get_query(req["query"])(spark, sf_dir)
             if req["op"] == "rows":
@@ -134,6 +167,7 @@ def compare(query: str, sides: list[Side], pairs: int) -> bool:
             reply = s.ask("time", query)
             times[s.label].append(reply["seconds"])
             builds[s.label].append(reply["build"])
+    rss = {s.label: s.ask("rss", query)["daemon_mb"] for s in sides}
     won = {s.label: 0 for s in sides}
     for a, b in zip(*times.values()):
         if a != b:  # a tie counts for neither side
@@ -142,7 +176,8 @@ def compare(query: str, sides: list[Side], pairs: int) -> bool:
         t = times[s.label]
         print(f"  {s.label:>10}: median {statistics.median(t):.3f}s  "
               f"build {statistics.median(builds[s.label]):.3f}s  "
-              f"won {won[s.label]}/{pairs}  {[round(x, 3) for x in t]}")
+              f"won {won[s.label]}/{pairs}  workers {rss[s.label]:.1f} MB  "
+              f"{[round(x, 3) for x in t]}")
     return True
 
 

@@ -23,8 +23,8 @@ SF_DIR = "/root/testdata/sf0.01"
 # query → the one-paragraph scale argument the plan should evidence.
 SNAPSHOTS: dict[str, str] = {
     "pricing_summary": (
-        "Filter pushed into the parquet scan (`PushedFilters`), 4-column "
-        "`ReadSchema` out of 16 lineitem columns, partial `HashAggregate` "
+        "Filter pushed into the parquet scan (`PushedFilters`), 6-column "
+        "`ReadSchema` out of 11 lineitem columns, partial `HashAggregate` "
         "before the exchange, single shuffle on the group key. The "
         "reference ships every row to Python and aggregates post-shuffle "
         "(reference tasks/accident_analysis.py); this plan moves "
@@ -214,14 +214,15 @@ SNAPSHOTS: dict[str, str] = {
         "the 3-row aggregate, not data."
     ),
     "hard_negative_mining": (
-        "Bucketed hard-negative mining: the pair join is equi on the "
-        "tiered md5 bucket (bucket count grows with the corpus — "
-        "O(n x bucket_size), never a cross join), norms are computed "
-        "once per ROW below the join via the Arrow kernel, and the "
-        "per-anchor top-k window partitions on anchor_id. At 100 TB "
-        "the naive formulation (every anchor vs every cross-label "
-        "candidate) is quadratic; this plan's candidate set is bounded "
-        "by bucket occupancy."
+        "Bucketed hard-negative mining: one hash exchange on the tiered "
+        "md5 bucket (bucket count grows with the corpus — O(n x "
+        "bucket_size), never a cross join) feeds `FlatMapGroupsInArrow`, "
+        "which scores each bucket's cross-label pairs in numpy and "
+        "returns only a superset of every anchor's top-k; the rounding "
+        "and the per-anchor top-k window (partitioned on anchor_id) run "
+        "in the JVM on those rows. At 100 TB the naive formulation "
+        "(every anchor vs every cross-label candidate) is quadratic; "
+        "this plan's candidate set is bounded by bucket occupancy."
     ),
     "temporal_split_stats": (
         "No global sort and no window: the cutoff is two scalar "
