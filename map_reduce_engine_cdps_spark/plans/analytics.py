@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.functions import exact as EX
 from map_reduce_engine_cdps_spark.plans.relational import SESSION_GAP_S, sessionized
-from map_reduce_engine_cdps_spark.sources.readers import load_table
+from map_reduce_engine_cdps_spark.sources.readers import load_table, table_rows
 
 
 # ---------------------------------------------------------------------------
@@ -464,7 +464,7 @@ JOIN LATERAL (
 def freq_items_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     sketch_items = ev.stat.freqItems(["event_type"], 0.15).first()[0]
-    total = ev.count()
+    total = table_rows(spark, sf_dir, "events")
     exact = (
         ev.groupBy("event_type")
         .agg(F.count(F.lit(1)).alias("cnt"))
@@ -2937,7 +2937,7 @@ def segment_nation_mi(spark: SparkSession, sf_dir: str) -> DataFrame:
     cust = load_table(spark, sf_dir, "customer").select(
         "c_mktsegment", "c_nationkey"
     )
-    n = cust.count()
+    n = table_rows(spark, sf_dir, "customer")
     cells = cust.groupBy("c_mktsegment", "c_nationkey").agg(
         F.count(F.lit(1)).alias("c")
     )

@@ -22,7 +22,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.functions import exact as EX
 from map_reduce_engine_cdps_spark.functions import text as TX
-from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table
+from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table, table_rows
 
 # Stopword set shared by the Spark and DuckDB sides (tiny on purpose:
 # the synthetic corpus vocabulary is small; real deployments swap in a
@@ -1691,7 +1691,7 @@ def quantile_normalized_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id", "source", "n_chars"
     )
-    n_total = docs.count()
+    n_total = table_rows(spark, sf_dir, "documents")
     ws = W.partitionBy("source").orderBy("n_chars", "doc_id")
     ranked = docs.select(
         "doc_id",

@@ -17,7 +17,7 @@ from pyspark.storagelevel import StorageLevel
 
 from map_reduce_engine_cdps_spark.functions import text as TX
 from map_reduce_engine_cdps_spark.operators.state import fixpoint, memo, releasing
-from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table
+from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table, table_rows
 
 # Production MinHash/LSH constants — chosen from the measured tuning
 # tables, not convention (VERDICT r5 item 6; sf0.1, round-6 run):
@@ -67,14 +67,10 @@ def _with_minhash_bands(docs: DataFrame) -> DataFrame:
     MinHash width (collision probability 2^-32 per pair per component —
     negligible next to banding error).
 
-    The input is re-parallelized first when the scan yields fewer
-    partitions than cores: signature computation is the CPU-heavy stage
-    (interpreted higher-order functions), and a single small parquet
-    file would otherwise run it on one thread.
+    Callers pass a ``load_parallel`` frame: signature computation is
+    the CPU-heavy stage (interpreted higher-order functions), and a
+    single small parquet file would otherwise run it on one thread.
     """
-    par = docs.sparkSession.sparkContext.defaultParallelism
-    if docs.rdd.getNumPartitions() < par:
-        docs = docs.repartition(par)
     d = _with_shingles(docs)
     # NB: closures, not default-arg lambdas — F.transform treats a
     # two-parameter lambda as (element, index).
@@ -139,7 +135,7 @@ FROM documents GROUP BY md5(text)
 # ---------------------------------------------------------------------------
 
 def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_parallel(spark, sf_dir, "documents")
     d = _with_minhash_bands(docs)
     return d.select(
         "doc_id",
@@ -242,7 +238,7 @@ def _lsh_scored_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
       of banding); a corpus whose typical bucket approaches the cap
       means the banding parameters are mis-sized.
     """
-    docs = load_table(spark, sf_dir, "documents")
+    docs = load_parallel(spark, sf_dir, "documents")
     d = _with_minhash_bands(docs)
     n_bands = N_MINHASH // BAND_ROWS
     # Shingle sets cross the one exchange as 8-byte md5-derived 60-bit
@@ -1730,9 +1726,11 @@ def _tier_pct_sql(tiers) -> str:
     return f"(CASE {cases} ELSE {tiers[-1][1]} END)"
 
 
-def _sampled_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    pct = _tier_pct(docs.count(), _RECALL_SAMPLE_TIERS)
+def _sampled_docs(docs: DataFrame, sf_dir: str, tiers) -> DataFrame:
+    """The rows of ``docs`` (a frame of the ``documents`` table) in the
+    deterministic doc_id sample at the tier's rate for the table's
+    footer row count."""
+    pct = _tier_pct(table_rows(docs.sparkSession, sf_dir, "documents"), tiers)
     return docs.filter(F.pmod(F.col("doc_id") * 48271, F.lit(100)) < pct)
 
 
@@ -1759,7 +1757,9 @@ def _recall_truth_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-bucket pair expansion, one shuffle — not as a shingle
     self-join: the join formulation re-shuffles every (pair, shared-
     shingle) row and measured 45 s vs 14 s at sf1 for the same output."""
-    docs = _sampled_docs(spark, sf_dir)
+    docs = _sampled_docs(
+        load_table(spark, sf_dir, "documents"), sf_dir, _RECALL_SAMPLE_TIERS
+    )
     sh = docs.select(
         "doc_id",
         F.explode(TX.shingles(TX.tokens(F.col("text")), 3)).alias("shingle"),
@@ -2454,7 +2454,9 @@ _TUNE_THEORY_J = 0.7
 
 
 def lsh_band_tuning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = _sampled_docs(spark, sf_dir)
+    docs = _sampled_docs(
+        load_parallel(spark, sf_dir, "documents"), sf_dir, _RECALL_SAMPLE_TIERS
+    )
     d = (
         _with_minhash_bands(docs)
         .select("doc_id", *[f"mh{s}" for s in range(N_MINHASH)])
@@ -2744,12 +2746,6 @@ def _shingle_truth_pairs(docs: DataFrame, n: int) -> DataFrame:
     return tp.withColumn("j", j).filter(F.col("j") >= RECALL_TRUTH_J)
 
 
-def _shingle_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents")
-    pct = _tier_pct(docs.count(), _SHINGLE_TIERS)
-    return docs.filter(F.pmod(F.col("doc_id") * 48271, F.lit(100)) < pct)
-
-
 def shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Single-pass rework (round 6): the loop formulation ran one full
     # shingle self-join per width TWICE (median collect + count = 6
@@ -2759,7 +2755,7 @@ def shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (width, shingle), and the median windows partition by width so
     # one collect returns every row of the answer. The count comes
     # from the same window frame — no second action.
-    docs = _shingle_sample(spark, sf_dir)
+    docs = _sampled_docs(load_table(spark, sf_dir, "documents"), sf_dir, _SHINGLE_TIERS)
     toks = TX.tokens(F.col("text"))
     arr = docs.select(
         "doc_id",

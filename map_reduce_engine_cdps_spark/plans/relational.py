@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.functions import exact as EX
 from map_reduce_engine_cdps_spark.functions import expressions as X
-from map_reduce_engine_cdps_spark.sources.readers import load_table
+from map_reduce_engine_cdps_spark.sources.readers import load_table, table_rows
 from map_reduce_engine_cdps_spark.streaming.windows import windowed_aggregate
 
 
@@ -2841,7 +2841,7 @@ def zorder_layout_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     z = F.expr(z_interleave_sql("cb", "db", _Z_BITS, intdiv="div"))
     d = orders.withColumn("z", z)
-    n = d.count()
+    n = table_rows(spark, sf_dir, "orders")
     chunk_rows = max(n // _Z_CHUNKS, 1)
     wl = W.orderBy("db", "o_orderkey")
     wz = W.orderBy("z", "o_orderkey")

@@ -16,7 +16,9 @@ from pyspark.sql import functions as F
 from map_reduce_engine_cdps_spark.functions import vectors as V
 from map_reduce_engine_cdps_spark.operators.state import memo, releasing
 from map_reduce_engine_cdps_spark.plans.dedup import _tier_pct
-from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table
+from map_reduce_engine_cdps_spark.sources.readers import (
+    load_parallel, load_table, table_row_groups, table_rows
+)
 
 N_QUERIES = 10     # vec_id < N_QUERIES are the query vectors
 TOP_K = 3
@@ -77,18 +79,19 @@ def _top_k(sims: DataFrame, k: int) -> DataFrame:
 _GROUP_SIMS_SCHEMA = "query_id long, cand_id long, cos_raw double"
 
 
-def _ann_salt_groups(emb: DataFrame) -> int:
-    """Salt-group count for the grouped ANN kernel: max(cores, scan
-    splits). Locally that is defaultParallelism (full width); on a
-    cluster the scan-split count grows with the data (~128 MB splits),
-    so a group's members are bounded at ~one split of embeddings
-    regardless of scale — grouped-map materializes a whole group in
-    one Arrow table, so group size, not group count, is the memory
-    bound. Group COUNT stays low at toy SF, which matters the other
-    way: grouped-map pays a fixed per-group overhead (measured at ~ms
-    per group under applyInPandas, receipts in OPTIMIZATION_r13.md)."""
-    par = emb.sparkSession.sparkContext.defaultParallelism
-    return max(par, emb.rdd.getNumPartitions())
+def _ann_salt_groups(spark: SparkSession, sf_dir: str) -> int:
+    """Salt-group count for the grouped ANN kernel: max(cores, parquet
+    row groups of embeddings), both read without a Spark job (the row
+    groups from the table's footers). Locally that is
+    defaultParallelism (full width); a large table holds one row group
+    per ~128 MB, so a group's members are bounded at ~one row group of
+    embeddings regardless of scale — grouped-map materializes a whole
+    group in one Arrow table, so group size, not group count, is the
+    memory bound. Group COUNT stays low at toy SF, which matters the
+    other way: grouped-map pays a fixed per-group overhead (measured at
+    ~ms per group under applyInPandas, receipts in OPTIMIZATION_r13.md)."""
+    par = spark.sparkContext.defaultParallelism
+    return max(par, table_row_groups(spark, sf_dir, "embeddings"))
 
 
 def _query_group_sims(q: DataFrame, cand: DataFrame, n_groups: int) -> DataFrame:
@@ -113,18 +116,19 @@ def _query_group_sims(q: DataFrame, cand: DataFrame, n_groups: int) -> DataFrame
     )
 
 
-def _exact_topk(emb: DataFrame, n_queries: int, k: int) -> DataFrame:
+def _exact_topk(emb: DataFrame, sf_dir: str, n_queries: int, k: int) -> DataFrame:
     """Exact cosine top-k of the queries ``vec_id < n_queries`` over the
-    whole corpus: ranked (query_id, cand_id, cos_sim, rank)."""
+    whole corpus ``emb`` (the embeddings table of ``sf_dir``): ranked
+    (query_id, cand_id, cos_sim, rank)."""
     q = emb.filter(F.col("vec_id") < n_queries).select("vec_id", "embedding")
     sims = _query_group_sims(
-        q, emb.select("vec_id", "embedding"), _ann_salt_groups(emb)
+        q, emb.select("vec_id", "embedding"), _ann_salt_groups(emb.sparkSession, sf_dir)
     ).select("query_id", "cand_id", F.round("cos_raw", 6).alias("cos_sim"))
     return _top_k(sims, k).select("query_id", "cand_id", "cos_sim", "rank")
 
 
 def knn_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return _exact_topk(load_table(spark, sf_dir, "embeddings"), N_QUERIES, TOP_K)
+    return _exact_topk(load_table(spark, sf_dir, "embeddings"), sf_dir, N_QUERIES, TOP_K)
 
 
 _DUCK_COS = """
@@ -312,8 +316,9 @@ NEAR_DUP_COS = 0.3
 # ~800 vectors in the hottest bucket (3.7 M candidate pairs, 57 s);
 # two extra planes per 4× corpus growth keeps expected occupancy — and
 # therefore pair expansion per bucket — bounded. The tier table is the
-# shared contract: Spark picks from it via count(), the oracle via a
-# CASE on the same scalar count, so both engines band identically.
+# shared contract: Spark picks from it by the footer row count, the
+# oracle via a CASE on the same scalar count, so both engines band
+# identically.
 NEAR_DUP_MAX_PLANES = 14
 NEAR_DUP_TIERS = ((4096, 8), (16384, 10), (65536, 12), (None, NEAR_DUP_MAX_PLANES))
 
@@ -338,7 +343,7 @@ def embedding_near_dup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 2 cores. On a real cluster the 128 MB scan splits provide this
     # width for free.
     emb = load_parallel(spark, sf_dir, "embeddings")
-    planes = _tier_pct(emb.count(), NEAR_DUP_TIERS)
+    planes = _tier_pct(table_rows(spark, sf_dir, "embeddings"), NEAR_DUP_TIERS)
     d = emb.withColumn("bucket", V.lsh_bucket_arrow(planes)(F.col("embedding")))
     # NULL bucket = NULL embedding; the former join-on-bucket shape
     # could never pair them (NULL != NULL), so the grouped shape must
@@ -1189,16 +1194,17 @@ _NEG_MAX_CHARS = 3
 _NEG_BUCKET_TIERS = ((4096, 1), (65536, 2), (None, _NEG_MAX_CHARS))
 
 
-def _neg_bucket(emb: DataFrame) -> Column:
+def _neg_bucket(spark: SparkSession, sf_dir: str) -> Column:
     """Tiered md5 bucket of vec_id: the first _NEG_BUCKET_TIERS hex
-    chars for the corpus count (shared with hard_negative_mining)."""
-    chars = _tier_pct(emb.count(), _NEG_BUCKET_TIERS)
+    chars for the embeddings row count (shared with
+    hard_negative_mining)."""
+    chars = _tier_pct(table_rows(spark, sf_dir, "embeddings"), _NEG_BUCKET_TIERS)
     return F.substring(F.md5(F.col("vec_id").cast("string")), 1, chars)
 
 
 def negative_sampling_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "label")
-    bucket = _neg_bucket(emb)
+    bucket = _neg_bucket(spark, sf_dir)
     anchors = emb.select(
         F.col("vec_id").alias("anchor_id"),
         F.col("label").alias("anchor_label"),
@@ -1969,7 +1975,7 @@ def knn_hubness_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     or candidate with a NULL embedding has no cosine and is skipped
     there, so it contributes no edge (the fixtures contain none)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    edges = _exact_topk(emb, HUB_QUERIES, HUB_K)
+    edges = _exact_topk(emb, sf_dir, HUB_QUERIES, HUB_K)
     indeg = edges.groupBy("cand_id").agg(F.count(F.lit(1)).alias("indeg"))
     n_row = emb.agg(F.count(F.lit(1)).alias("n"))
     # one aggregate over the in-degree table, so the kNN front runs once;
@@ -2070,7 +2076,7 @@ _HN_K = 2
 def hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     base = emb.select(
-        "vec_id", "label", "embedding", _neg_bucket(emb).alias("bucket")
+        "vec_id", "label", "embedding", _neg_bucket(spark, sf_dir).alias("bucket")
     ).filter(F.col("embedding").isNotNull())
     # Grouped bucket kernel (the embedding_near_dup pattern): the
     # join+dot formulation materialized every cross-label candidate

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 from map_reduce_engine_cdps_spark.functions import text as TX
 from map_reduce_engine_cdps_spark.functions import vectors as V
 from map_reduce_engine_cdps_spark.operators.state import memo
-from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table
+from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table, table_rows
 
 
 # ---------------------------------------------------------------------------
@@ -1988,7 +1988,7 @@ def _wand_contrib_scores(
     # is the (doc, term, tf) posting list — the object an inverted
     # index build materializes anyway.
     tf = _tf(_words(docs, "doc_id")).localCheckpoint(eager=True)
-    n_docs = docs.count()
+    n_docs = table_rows(spark, sf_dir, "documents")
     dfreq = _df(tf)
     query = _top_words(
         tf.groupBy("word").agg(F.sum("tf").alias("cnt")), 3
@@ -2108,7 +2108,7 @@ GROUP BY s_k, topk_mass
 
 def term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_parallel(spark, sf_dir, "documents")
-    n_docs = docs.count()
+    n_docs = table_rows(spark, sf_dir, "documents")
     tf = _tf(docs.select("doc_id", F.explode(TX.tokens(F.col("text"))).alias("word")))
     stats = tf.groupBy("word").agg(
         F.count(F.lit(1)).alias("df"),
@@ -2166,7 +2166,7 @@ _QE_MIN_DF = 5
 
 def query_expansion_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_parallel(spark, sf_dir, "documents")
-    n_docs = docs.count()
+    n_docs = table_rows(spark, sf_dir, "documents")
     # Eager-checkpoint the distinct doc-term frame: FOUR consumers
     # (dfreq, the query-term probe, and both sides of the co-occurrence
     # join) otherwise re-plan the tokenize+distinct subtree each.

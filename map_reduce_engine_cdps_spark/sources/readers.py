@@ -56,6 +56,11 @@ def events_ts(df: DataFrame) -> DataFrame:
     return df
 
 
+def _pin_confs(spark: SparkSession) -> None:
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    spark.conf.set("spark.sql.session.timeZone", "UTC")
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Parquet table from a test-data scale-factor directory.
 
@@ -66,14 +71,24 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     starts) must match the tz-naive oracle regardless of which layout
     generated events.parquet and of the JVM default tz.
     """
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
+    _pin_confs(spark)
     path = f"{sf_dir}/{name}.parquet"
     if os.path.isfile(path):
-        df = spark.read.schema(_footer_schema(spark, path, _stamp(sf_dir, (name,)))).parquet(path)
+        ((schema, _, _),) = _footers(spark, sf_dir, name)
+        df = spark.read.schema(schema).parquet(path)
     else:  # a directory layout: Spark infers schema and partitions
         df = spark.read.parquet(path)
     return events_ts(df) if name == "events" else df
+
+
+def table_rows(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """The table's ``count(*)`` from its parquet footers: no Spark job."""
+    return sum(rows for _, rows, _ in _footers(spark, sf_dir, name))
+
+
+def table_row_groups(spark: SparkSession, sf_dir: str, name: str) -> int:
+    """The table's parquet row groups from its footers: no Spark job."""
+    return sum(groups for _, _, groups in _footers(spark, sf_dir, name))
 
 
 # Session confs ParquetToSparkSchemaConverter reads.
@@ -84,49 +99,68 @@ _CONVERTER_CONFS = (
     "spark.sql.parquet.inferTimestampNTZ.enabled",
     "spark.sql.legacy.parquet.nanosAsLong",
 )
-# (path, file stamp, converter confs) -> StructType
-_SCHEMAS: dict = {}
+# (path, table stamp, converter confs) -> (schema, rows, row groups)
+_FOOTERS: dict = {}
 
 
-def _footer_schema(spark: SparkSession, path: str, stamp: tuple) -> T.StructType:
-    """The Spark schema of one parquet file, read on the driver from its
-    footer through the converter Spark's own inference uses — no
-    schema-inference job. Memoized per file stamp and converter confs,
-    so a rewritten file is read again."""
+def _footers(spark: SparkSession, sf_dir: str, name: str) -> list[tuple]:
+    """(Spark schema, rows, row groups) of each parquet file of a table:
+    the one file, or a directory layout's part files (not the names
+    starting with ``_`` or ``.``, which Spark skips too). Read on the
+    driver from the footer, the schema through the converter Spark's
+    own inference uses: no Spark job. Memoized per table stamp and
+    converter confs, so a rewritten file is read again."""
+    _pin_confs(spark)  # the converter reads nanosAsLong
+    stamp = _stamp(sf_dir, (name,))
     confs = tuple(spark.conf.get(k) for k in _CONVERTER_CONFS)
-    key = (path, stamp, confs)
-    if key not in _SCHEMAS:
-        jvm, jss = spark._jvm, spark._jsparkSession
-        pq = jvm.org.apache.spark.sql.execution.datasources.parquet
-        hpath = jvm.org.apache.hadoop.fs.Path(path)
-        meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
-            jss.sessionState().newHadoopConf(),
-            hpath,
-            jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.SKIP_ROW_GROUPS,
-        )
-        schema = pq.ParquetFileFormat.readSchemaFromFooter(
-            jvm.org.apache.parquet.hadoop.Footer(hpath, meta),
-            pq.ParquetToSparkSchemaConverter(jss.sessionState().conf()),
-        )
-        _SCHEMAS[key] = T.StructType.fromJson(json.loads(schema.json()))
-    return _SCHEMAS[key]
+    jvm, jss = spark._jvm, spark._jsparkSession
+    out = []
+    for path, _, _ in stamp:
+        if os.path.basename(path).startswith(("_", ".")):
+            continue
+        key = (path, stamp, confs)
+        if key not in _FOOTERS:
+            hpath = jvm.org.apache.hadoop.fs.Path(path)
+            meta = jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(
+                jss.sessionState().newHadoopConf(),
+                hpath,
+                jvm.org.apache.parquet.format.converter.ParquetMetadataConverter.NO_FILTER,
+            )
+            pq = jvm.org.apache.spark.sql.execution.datasources.parquet
+            schema = pq.ParquetFileFormat.readSchemaFromFooter(
+                jvm.org.apache.parquet.hadoop.Footer(hpath, meta),
+                pq.ParquetToSparkSchemaConverter(jss.sessionState().conf()),
+            )
+            blocks = meta.getBlocks()
+            _FOOTERS[key] = (
+                T.StructType.fromJson(json.loads(schema.json())),
+                sum(blocks.get(i).getRowCount() for i in range(blocks.size())),
+                blocks.size(),
+            )
+        out.append(_FOOTERS[key])
+    if not out:
+        raise FileNotFoundError(f"{sf_dir}/{name}.parquet")
+    return out
 
 
 def load_parallel(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """load_table + re-parallelize when the scan yields fewer partitions
-    than cores.
+    """load_table + re-parallelize when the table has fewer parquet row
+    groups than cores.
 
     For queries whose map stage does CPU-heavy per-row work
     (tokenization, interpreted higher-order lambdas, Arrow/UDTF
     crossings), a single small parquet file pins that stage to one
     thread; one cheap row-exchange up front buys full-width execution.
+    A row group is the unit a scan cannot split: a file cut into more
+    splits than it has row groups still reads each group in one task,
+    so the rule counts row groups (from the footers), not splits.
     Scan-light relational queries should NOT use this — the exchange
-    would cost more than it saves, and on a real cluster the scan
-    already yields one partition per ~128 MB split.
+    would cost more than it saves, and on a real cluster a large table
+    already holds one row group per ~128 MB.
     """
     df = load_table(spark, sf_dir, name)
     par = spark.sparkContext.defaultParallelism
-    if df.rdd.getNumPartitions() < par:
+    if table_row_groups(spark, sf_dir, name) < par:
         df = df.repartition(par)
     return df
 

@@ -337,18 +337,76 @@ def test_knn_hubness_front_is_in_the_plan(spark):
 
 
 
-def test_load_table_runs_no_spark_job(spark, tmp_path):
-    """load_table reads the parquet schema on the driver: building a
-    table's DataFrame runs no schema-inference job, on the first read of
-    a file (a fresh copy) or a later one."""
+@pytest.mark.parametrize("read", ["load_table", "table_rows"])
+def test_load_table_runs_no_spark_job(spark, tmp_path, read):
+    """load_table reads the parquet schema, and table_rows the row count,
+    on the driver from the footer: building a table's DataFrame runs no
+    schema-inference job and counting its rows no count job, on the
+    first read of a file (a fresh copy) or a later one. The footer
+    count equals count()."""
     import shutil
 
-    from map_reduce_engine_cdps_spark.sources.readers import TABLES, load_table
+    from map_reduce_engine_cdps_spark.sources import readers
 
     sf = str(tmp_path / "sf")
     shutil.copytree(SF_DIR, sf)
-    for name in TABLES + TABLES:
-        assert _jobs_run_by(spark, lambda: load_table(spark, sf, name)) == 0, name
+    fn = getattr(readers, read)
+    for name in readers.TABLES + readers.TABLES:
+        assert _jobs_run_by(spark, lambda: fn(spark, sf, name)) == 0, name
+    if read == "table_rows":
+        for name in readers.TABLES:
+            assert fn(spark, sf, name) == readers.load_table(spark, sf, name).count(), name
+
+
+def test_load_parallel_widens_by_row_groups_not_splits(spark):
+    """load_parallel repartitions a table with fewer parquet row groups
+    than cores, even when small split sizes cut its one row group into
+    at least as many scan splits as there are cores (a split without
+    the row group's start reads no rows)."""
+    from map_reduce_engine_cdps_spark.sources.readers import (
+        load_parallel,
+        load_table,
+        table_row_groups,
+    )
+
+    par = spark.sparkContext.defaultParallelism
+    assert table_row_groups(spark, SF_DIR, "lineitem") == 1 < par
+    small = {"spark.sql.files.maxPartitionBytes": "4096",
+             "spark.sql.files.openCostInBytes": "1024"}
+    with P.conf(spark, small):
+        assert load_table(spark, SF_DIR, "lineitem").rdd.getNumPartitions() >= par
+        plan = P.executed(load_parallel(spark, SF_DIR, "lineitem"))
+    assert f"RoundRobinPartitioning({par})" in plan, plan[:2000]
+
+
+# Spark jobs of a warm build (memos already filled) of each query that
+# sizes a tier or constant by the row count of an unfiltered table,
+# which table_rows reads from the footers without a job; the jobs left
+# are the queries' own checkpoints and filtered counts.
+COUNT_SITE_BUILD_JOBS = {
+    ("textops", "wand_pruned_retrieval"): 10,
+    ("textops", "term_burstiness"): 0,
+    ("textops", "query_expansion_pmi"): 3,
+    ("dedup", "lsh_band_tuning_eval"): 9,
+    ("dedup", "shingle_size_sensitivity"): 4,
+    ("analytics", "freq_items_check"): 2,
+    ("analytics", "segment_nation_mi"): 6,
+    ("curation", "quantile_normalized_quality"): 0,
+    ("similarity", "embedding_near_dup"): 0,  # the uncached builder
+    ("similarity", "negative_sampling_pairs"): 0,
+    ("relational", "zorder_layout_stats"): 0,
+}
+
+
+@pytest.mark.parametrize("module,name", sorted(COUNT_SITE_BUILD_JOBS))
+def test_count_site_build_jobs(spark, module, name):
+    """Building a query that reads a table's row count runs no count job."""
+    import importlib
+
+    query = getattr(importlib.import_module(f"map_reduce_engine_cdps_spark.plans.{module}"), name)
+    query(spark, SF_DIR)  # fills the session memos the query reads
+    assert _jobs_run_by(spark, lambda: query(spark, SF_DIR)) == COUNT_SITE_BUILD_JOBS[module, name]
+
 
 MULTIMODAL_FAMILY = [
     # every registry query whose input is the binary media column
@@ -393,8 +451,11 @@ def test_eval_global_windows_are_row_bounded(spark):
     the margin factor keeps headroom so growth trends trip the gate
     before production scale does."""
     from map_reduce_engine_cdps_spark.plans import dedup, textops
+    from map_reduce_engine_cdps_spark.sources.readers import load_table
 
-    docs = dedup._shingle_sample(spark, SF_DIR)
+    docs = dedup._sampled_docs(
+        load_table(spark, SF_DIR, "documents"), SF_DIR, dedup._SHINGLE_TIERS
+    )
     n_sampled = docs.count()
     for n in dedup._SHINGLE_SIZES:
         rows = dedup._shingle_truth_pairs(docs, n).count()

@@ -25,6 +25,7 @@ from map_reduce_engine_cdps_spark.sources.readers import (
     read_csv_dir,
     read_image_dir,
     read_text_dir,
+    table_rows,
 )
 from map_reduce_engine_cdps_spark.sources.writers import (
     filter_rewrite_csv,
@@ -66,6 +67,10 @@ def test_load_table_rereads_a_rewritten_schema(spark, tmp_path):
     pq.write_table(pa.table({"r_regionkey": [0, 1], "r_name": ["A", "B"]}), path)
     df = load_table(spark, str(tmp_path), "region")
     assert sorted(df.collect()) == [(0, "A"), (1, "B")]
+    # the footer row count is read again too
+    assert table_rows(spark, str(tmp_path), "region") == 2
+    pq.write_table(pa.table({"r_regionkey": [0, 1, 2]}), path)
+    assert table_rows(spark, str(tmp_path), "region") == 3
 
 
 @pytest.mark.parametrize(
@@ -242,24 +247,14 @@ def test_zorder_layout_gives_both_columns_locality(spark, tmp_path):
     per-file span stays ~the full domain."""
     from pyspark.sql import functions as F
 
-    from map_reduce_engine_cdps_spark.functions.layout import (
-        scale_to_int,
-        zorder_key,
-    )
+    from map_reduce_engine_cdps_spark.sources.writers import z_interleave_sql
 
     n, files = 1 << 16, 16
     df = spark.range(n).select(
         (F.col("id") % 256).alias("x"),
         ((F.col("id") * 2654435761) % 256).alias("y"),  # decorrelated
     )
-    zed = df.withColumn(
-        "zkey",
-        zorder_key(
-            scale_to_int(F.col("x"), 0, 255, 8),
-            scale_to_int(F.col("y"), 0, 255, 8),
-            8,
-        ),
-    )
+    zed = df.withColumn("zkey", F.expr(z_interleave_sql("x", "y", 8, intdiv="div")))
 
     def mean_span(src, col):
         per_file = (
@@ -288,13 +283,13 @@ def test_zorder_key_is_bijective(spark):
     Exhaustive over the full 6-bit × 6-bit domain."""
     from pyspark.sql import functions as F
 
-    from map_reduce_engine_cdps_spark.functions.layout import zorder_key
+    from map_reduce_engine_cdps_spark.sources.writers import z_interleave_sql
 
     n = 64
     df = (
         spark.range(n * n)
         .select((F.col("id") % n).alias("x"), (F.col("id") / n).cast("long").alias("y"))
-        .withColumn("z", zorder_key(F.col("x"), F.col("y"), 6))
+        .withColumn("z", F.expr(z_interleave_sql("x", "y", 6, intdiv="div")))
     )
     assert df.select("z").distinct().count() == n * n
     # and the key stays within 2*bits bits

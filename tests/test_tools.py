@@ -124,9 +124,10 @@ def test_ab_tool_reports_identical_rows_and_removes_its_worktree(tmp_path):
     line = next(x for x in r.stdout.splitlines() if x.startswith("tfidf_top_terms: "))
     assert line.endswith(", plan identical above an RDD scan"), line
     assert "won" in r.stdout
-    # each side's line: median total, median construction time, pairs
-    # won and the summed RSS of its Python workers
-    side = re.compile(r": median [\d.]+s  build [\d.]+s  won \d+/1  workers [\d.]+ MB  ")
+    # each side's line: median total, median construction time and
+    # construction jobs, pairs won and the summed RSS of its Python workers
+    side = re.compile(
+        r": median [\d.]+s  build [\d.]+s  jobs [\d.]+  won \d+/1  workers [\d.]+ MB  ")
     assert len([x for x in r.stdout.splitlines() if side.search(x)]) == 4, r.stdout
     assert _worktrees() == before
     assert not [p for p in os.listdir(tmp_path) if p.startswith("ab-")]
@@ -178,6 +179,14 @@ def test_plan_inspector_census_and_normalized_plans(spark, tmp_path):
     assert (scan["table"], scan["width"]) == ("facts", 2) and "GreaterThan(id,10)" in scan["pushed"]
     assert (c["joins"], c["python"], c["rdd_scans"]) == (["BroadcastHashJoin"], ["ArrowEvalPython"], 1)
     assert c["exchanges"] == [("BroadcastExchange", "k", "bigint")]
+
+    # a scan location under the SparkFiles root reads the same whatever
+    # the local dir (SPARK_LOCAL_DIRS, else java.io.tmpdir) it lies in
+    uid = "0123abcd-4567-89ab-cdef-0123456789ab"
+    loc = ("Location: InMemoryFileIndex [file:{}/spark-" + uid + "/userFiles-" + uid
+           + "/bucketed_join_{}/bucketed_lineitem]")
+    assert P.normalize(loc.format("/tmp", "k3j_x9q1")) == P.normalize(
+        loc.format("/tmp/spark-local", "a0b1c2d3"))
 
     a, b = (get_query("bucketed_join_stats")(spark, SF_DIR) for _ in range(2))
     assert P.formatted(a) == P.formatted(b)

@@ -8,8 +8,9 @@ worker process whose PYTHONPATH is its own tree, because two versions of
 the package cannot share one interpreter. For each query the sorted
 `collect()` of both sides is compared first; then N pairs of timed runs
 (construction + noop write) alternate which side goes first. Prints the
-per-side medians of the total and of construction alone (`build`, the
-query function's own time before the write starts), the raw totals and
+per-side medians of the total, of construction alone (`build`, the
+query function's own time before the write starts) and of the Spark
+jobs construction ran (`jobs`: eager counts, checkpoints), the raw totals and
 how many pairs each side won, and the summed RSS of the side's
 `pyspark.daemon` processes (the daemon and the Python workers it forked)
 after its runs. Each query's line also says whether the
@@ -81,6 +82,11 @@ def serve(sf_dir: str) -> None:
     from map_reduce_engine_cdps_spark.session import get_spark
 
     spark = get_spark(app_name="ab")
+    sc = spark.sparkContext
+
+    def job_ids() -> set:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # job events are async
+        return set(sc.statusTracker().getJobIdsForGroup())
 
     def imported(_):
         import map_reduce_engine_cdps_spark as p
@@ -97,17 +103,21 @@ def serve(sf_dir: str) -> None:
             if req["op"] == "rss":
                 out.write(json.dumps({"daemon_mb": daemon_rss_mb()}) + "\n")
                 continue
+            before = job_ids()
             t0 = time.perf_counter()
             df = get_query(req["query"])(spark, sf_dir)
+            build = time.perf_counter() - t0
             if req["op"] == "rows":
                 rows = sorted(repr(tuple(r)) for r in df.collect())
                 digest = hashlib.sha256("\n".join(rows).encode()).hexdigest()
                 plan, rdd = plan_inspect.digest(df)
                 reply = {"rows": len(rows), "digest": digest, "plan": plan, "rdd": rdd}
             else:
-                built = time.perf_counter()
+                jobs = len(job_ids() - before)
+                t1 = time.perf_counter()
                 df.write.format("noop").mode("overwrite").save()
-                reply = {"build": built - t0, "seconds": time.perf_counter() - t0}
+                reply = {"build": build, "jobs": jobs,
+                         "seconds": build + time.perf_counter() - t1}
         except Exception:  # noqa: BLE001 - reported to the parent
             reply = {"error": traceback.format_exc()}
         out.write(json.dumps(reply) + "\n")
@@ -162,11 +172,13 @@ def compare(query: str, sides: list[Side], pairs: int) -> bool:
           f" {plan}")
     times: dict[str, list[float]] = {s.label: [] for s in sides}
     builds: dict[str, list[float]] = {s.label: [] for s in sides}
+    jobs: dict[str, list[int]] = {s.label: [] for s in sides}
     for i in range(pairs):
         for s in sides if i % 2 == 0 else sides[::-1]:
             reply = s.ask("time", query)
             times[s.label].append(reply["seconds"])
             builds[s.label].append(reply["build"])
+            jobs[s.label].append(reply["jobs"])
     rss = {s.label: s.ask("rss", query)["daemon_mb"] for s in sides}
     won = {s.label: 0 for s in sides}
     for a, b in zip(*times.values()):
@@ -176,6 +188,7 @@ def compare(query: str, sides: list[Side], pairs: int) -> bool:
         t = times[s.label]
         print(f"  {s.label:>10}: median {statistics.median(t):.3f}s  "
               f"build {statistics.median(builds[s.label]):.3f}s  "
+              f"jobs {statistics.median(jobs[s.label]):g}  "
               f"won {won[s.label]}/{pairs}  workers {rss[s.label]:.1f} MB  "
               f"{[round(x, 3) for x in t]}")
     return True

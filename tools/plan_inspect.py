@@ -23,9 +23,11 @@ _NOISE = (
     (re.compile(r"#\d+L?"), "#"),  # expression ids, `[id=#12]`
     (re.compile(r"\b(lambda \w+?)_\d+#"), r"\1_#"),  # lambda variables
     (re.compile(r"plan_id=\d+"), "plan_id=#"),
-    # a scratch dir under the driver's SparkFiles root (tempfile.mkdtemp)
-    (re.compile(r"spark-[0-9a-f-]{36}/userFiles-[0-9a-f-]{36}/(\w+?_)[a-z0-9_]{8}\b"),
-     r"spark-*/userFiles-*/\1*"),
+    # a scratch dir under the driver's SparkFiles root (tempfile.mkdtemp),
+    # which lies in the local dir (SPARK_LOCAL_DIRS, else java.io.tmpdir)
+    (re.compile(r"(?:/[^/\s\[\],]+)*/spark-[0-9a-f-]{36}/userFiles-[0-9a-f-]{36}/"
+                r"(\w+?_)[a-z0-9_]{8}\b"),
+     r"*/spark-*/userFiles-*/\1*"),
 )
 
 
