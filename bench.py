@@ -122,8 +122,8 @@ def measure_memo_builds(spark, sf_dir: str) -> dict[str, float]:
 
     The two builds nest: the pair memo is a cheap filter+checkpoint
     over the scored front, so its line measures only that increment
-    when run second. CC labels are write-through (measured fresh inside
-    near_dup_clusters every pass) and need no line here.
+    when run second. CC labels are not memoized (near_dup_clusters
+    runs its loop every pass) and need no line here.
     """
     from map_reduce_engine_cdps_spark.plans.dedup import (
         _lsh_pairs_cached,

@@ -14,8 +14,7 @@ import os
 from collections.abc import Callable, Hashable, Iterator
 from contextlib import contextmanager
 
-from pyspark.sql import DataFrame, SparkSession
-from pyspark.storagelevel import StorageLevel
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
 # (app id, build, sf_dir, args) -> (input stamp, checkpoint, its RDD id)
 _MEMOS: dict = {}
@@ -66,20 +65,17 @@ def memo(
 
     A hit rebuilds when the files of ``tables`` under ``sf_dir`` changed
     size or mtime, or when the checkpoint's blocks were dropped (its RDD
-    is no longer registered as persistent). ``refresh=True`` rebuilds
-    unconditionally (write-through). A replaced checkpoint is left to
-    the ContextCleaner, so DataFrames derived from it stay readable.
+    is no longer registered as persistent). A replaced checkpoint is
+    left to the ContextCleaner, so DataFrames derived from it stay
+    readable.
     """
 
-    def cached(
-        spark: SparkSession, sf_dir: str, *args: Hashable, refresh: bool = False
-    ) -> DataFrame:
+    def cached(spark: SparkSession, sf_dir: str, *args: Hashable) -> DataFrame:
         key = (spark.sparkContext.applicationId, build, sf_dir, args)
         stamp = _stamp(sf_dir, tables)
         hit = _MEMOS.get(key)
         if (
             hit is not None
-            and not refresh
             and hit[0] == stamp
             and spark.sparkContext._jsc.sc().getPersistentRDDs().contains(hit[2])
         ):
@@ -93,36 +89,57 @@ def memo(
     return cached
 
 
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """``df.localCheckpoint(eager=True)``. The checkpoint's RDD is
+    registered as persistent before its job runs; when the job fails,
+    every RDD the call left registered is unpersisted before the error
+    propagates."""
+    jsc = df.sparkSession.sparkContext._jsc
+    first = jsc.sc().newRddId()  # RDD ids only grow
+    try:
+        return df.localCheckpoint(eager=True)
+    except BaseException:
+        for rdd_id, rdd in jsc.getPersistentRDDs().items():
+            if rdd_id > first:
+                rdd.unpersist(False)
+        raise
+
+
 def fixpoint(
     state0: DataFrame,
     step: Callable[[DataFrame], DataFrame],
-    signature: Callable[[DataFrame], Hashable] | None,
+    signature: tuple[Column, ...],
     max_rounds: int,
-    checkpoint_every: int | None = None,
 ) -> tuple[DataFrame, bool]:
-    """``state = step(state)`` until ``signature(state)`` repeats or
-    ``max_rounds`` rounds ran; returns ``(state, converged)``.
+    """``state = step(state)`` until the aggregates ``signature`` read
+    the same on two consecutive states, or ``max_rounds`` rounds ran;
+    returns ``(state, converged)``. An empty ``signature`` runs exactly
+    ``max_rounds`` rounds.
 
-    Round r's state is localCheckpointed when ``checkpoint_every``
-    divides r, else persisted MEMORY_AND_DISK, and is materialized (by
-    the checkpoint or the ``signature`` action) before the previous
-    state is released. ``signature=None`` runs all ``max_rounds`` rounds
-    and needs ``checkpoint_every=1``. The loop owns ``state0`` and, on
-    an exception, every state it holds; the caller owns the returned
-    state.
+    Every round is one job: the step's output, with ``signature``
+    attached as an ``Observation``, is localCheckpointed eagerly, and
+    the checkpoint's own job delivers the observed values. The previous
+    state is released once its successor exists. With a signature,
+    ``state0`` is checkpointed the same way first. The loop owns
+    ``state0`` and, on an exception, every state it holds; the caller
+    owns the returned state.
     """
-    if signature is None and checkpoint_every != 1:
-        raise ValueError("rounds without a signature must checkpoint every round")
+
+    def _observed(df: DataFrame) -> tuple[DataFrame, dict | None]:
+        if not signature:
+            return _checkpoint(df), None
+        obs = Observation()
+        return _checkpoint(df.observe(obs, *signature)), obs.get
+
     state, nxt = state0, None
     try:
-        prev = signature(state) if signature else None
-        for rnd in range(1, max_rounds + 1):
-            nxt = step(state)
-            if checkpoint_every and rnd % checkpoint_every == 0:
-                nxt = nxt.localCheckpoint(eager=True)
-            else:
-                nxt = nxt.persist(StorageLevel.MEMORY_AND_DISK)
-            sig = signature(nxt) if signature else None
+        prev = None
+        if signature:
+            nxt, prev = _observed(state)
+            _release(state)
+            state, nxt = nxt, None
+        for _ in range(max_rounds):
+            nxt, sig = _observed(step(state))
             _release(state)
             state, nxt = nxt, None
             if signature and sig == prev:

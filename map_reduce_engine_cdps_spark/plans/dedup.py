@@ -675,11 +675,15 @@ SELECT doc_a, doc_b AS nearest_doc, jaccard FROM ranked WHERE rn = 1
 # durable storage; the dataflow shape per round is identical.
 # ---------------------------------------------------------------------------
 
-# Truncate CC lineage every N rounds (checkpoint); persist in between.
-# Small enough that planning depth stays trivial (sf10 probe, round 5:
-# a checkpoint per round pinned enough storage across repeated
-# invocations that a later broadcast build OOM'd).
-_CC_CHECKPOINT_EVERY = 5
+def undirected_edges(pairs: DataFrame) -> DataFrame:
+    """(src, dst) in both directions of every (doc_a, doc_b) pair,
+    partitioned by src, the key on which the per-round joins of
+    connected_components, kcore_subgraph and bfs_hops probe it."""
+    return (
+        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
+        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
+        .repartition(F.col("src"))
+    )
 
 
 def connected_components(
@@ -695,19 +699,11 @@ def connected_components(
     ``max_rounds`` rounds. Factored out of near_dup_clusters so the
     convergence semantics are unit-testable on hand-built graphs.
     """
-    # Undirected: propagate both ways. Materialize once, partitioned by
-    # src: the per-round join probes edges on src, so the edge list is
-    # never re-shuffled — each round moves only the O(vertices) labels,
-    # not the O(edges) graph (at sf10: 0.5 M labels vs 53 M edge rows).
-    edges = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .repartition(F.col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
-    labels0 = vertices.select(
-        "doc_id", F.col("doc_id").alias("comp")
-    ).persist(StorageLevel.MEMORY_AND_DISK)
+    # Undirected: propagate both ways. Materialized once, so each round
+    # moves only the O(vertices) labels, not the O(edges) graph (at
+    # sf10: 0.5 M labels vs 53 M edge rows).
+    edges = undirected_edges(pairs).persist(StorageLevel.MEMORY_AND_DISK)
+    labels0 = vertices.select("doc_id", F.col("doc_id").alias("comp"))
 
     def _round(labels: DataFrame) -> DataFrame:
         # labels is O(vertices) — corpus-sized, so it must NEVER ride a
@@ -730,21 +726,19 @@ def connected_components(
         )
 
     # Min-propagation only ever lowers labels, so sum(comp) decreases
-    # strictly until the fixpoint: convergence is one scalar aggregate
-    # per round. The result is re-pinned as a checkpoint and every loop
-    # state released (kept states once degraded repeated sf10 runs
-    # 11.5 s → 28.6 s).
+    # strictly until the fixpoint: convergence is one scalar aggregate,
+    # observed in each round's own checkpoint job. The last round's
+    # checkpoint is the result; every earlier one is released as soon
+    # as its successor exists (kept states once degraded repeated sf10
+    # runs 11.5 s → 28.6 s).
     with releasing(edges):
-        labels, converged = fixpoint(
-            labels0, _round, lambda df: df.agg(F.sum("comp")).first()[0],
-            max_rounds, checkpoint_every=_CC_CHECKPOINT_EVERY,
-        )
+        labels, converged = fixpoint(labels0, _round, (F.sum("comp"),), max_rounds)
+    if not converged:
         with releasing(labels):
-            if not converged:
-                raise RuntimeError(
-                    f"connected_components: no fixpoint in max_rounds={max_rounds}"
-                )
-            return labels.localCheckpoint(eager=True)
+            raise RuntimeError(
+                f"connected_components: no fixpoint in max_rounds={max_rounds}"
+            )
+    return labels
 
 
 def connected_components_star(
@@ -780,15 +774,12 @@ def connected_components_star(
         )
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .persist(StorageLevel.MEMORY_AND_DISK)
     )
-
-    def _sig(df: DataFrame) -> tuple:
-        r = df.agg(
-            F.count(F.lit(1)), F.coalesce(F.sum("src"), F.lit(0)),
-            F.coalesce(F.sum("dst"), F.lit(0)),
-        ).first()
-        return tuple(r)
+    signature = (
+        F.count(F.lit(1)),
+        F.coalesce(F.sum("src"), F.lit(0)),
+        F.coalesce(F.sum("dst"), F.lit(0)),
+    )
 
     def _round(e: DataFrame) -> DataFrame:
         # large-star over the symmetric view: m(u) = min(Γ(u) ∪ {u});
@@ -830,11 +821,10 @@ def connected_components_star(
             .distinct()
         )
 
-    # Checkpoint every round: a star round stacks a union + two joins +
-    # an explode on the previous plan (~6x lineage growth per round), so
-    # persisted rounds blow past Spark's plan-size limits within a few
-    # rounds, and _sig() materializes each round anyway.
-    e, converged = fixpoint(e0, _round, _sig, max_rounds, checkpoint_every=1)
+    # A star round stacks a union + two joins + an explode on the
+    # previous plan (~6x lineage growth per round); fixpoint's per-round
+    # checkpoint keeps every round's plan one round deep.
+    e, converged = fixpoint(e0, _round, signature, max_rounds)
     # star forest: every node's comp is its (unique) smaller neighbor;
     # vertices without edges are their own component
     with releasing(e):
@@ -852,38 +842,12 @@ def connected_components_star(
         )
 
 
-# The CC label table is itself a multi-consumer front (near_dup_clusters'
-# own registry entry + near_dup_prune's keep-best pass), so it is
-# memoized like the pair fronts — the labels come out of
-# connected_components already eagerly localCheckpointed, so the memo
-# reuses that materialization instead of re-running the loop.
-# WRITE-THROUGH semantics: near_dup_clusters always computes fresh and
-# refreshes the memo (it is in bench.py's frozen HEADLINE set, and a
-# read-through memo would collapse its timed passes to cache reads —
-# the artifact must keep measuring the CC loop); downstream consumers
-# (near_dup_prune) read the memo and pay only their own incremental
-# work when the labels were already built this session.
-def _cc_labels_build(
-    spark: SparkSession, sf_dir: str, max_rounds: int
-) -> DataFrame:
-    docs = load_table(spark, sf_dir, "documents").select("doc_id")
-    pairs = _lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
-    return connected_components(docs, pairs, max_rounds=max_rounds)
-
-
-_cc_labels_memo = memo(_cc_labels_build, _DOCS)
-
-
-def _cc_labels_cached(
-    spark: SparkSession, sf_dir: str, max_rounds: int = 25
-) -> DataFrame:
-    return _cc_labels_memo(spark, sf_dir, max_rounds)
-
-
 def near_dup_clusters(
     spark: SparkSession, sf_dir: str, max_rounds: int = 25
 ) -> DataFrame:
-    labels = _cc_labels_memo(spark, sf_dir, max_rounds, refresh=True)
+    docs = load_table(spark, sf_dir, "documents").select("doc_id")
+    pairs = _lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
+    labels = connected_components(docs, pairs, max_rounds=max_rounds)
     return labels.select(
         "doc_id",
         F.col("comp").alias("cluster_id"),

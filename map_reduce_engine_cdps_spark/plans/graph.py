@@ -240,7 +240,7 @@ LEFT JOIN selfm USING (n_name)
 #
 # Scale shape per round: one degree aggregate (map-side combined) +
 # one semi-join filter of the edge list against survivors — the same
-# join primitives, fixpoint loop (persisting every round), and O(|V|)
+# join primitives, fixpoint loop (one checkpoint per round), and O(|V|)
 # iteration state as connected_components (plans/dedup.py). Rounds are
 # capped at _KCORE_ROUNDS with a fixpoint early-exit; because every
 # round past the fixpoint is a no-op, the capped loop computes EXACTLY
@@ -262,12 +262,7 @@ def kcore_subgraph(pairs: DataFrame, k: int, max_rounds: int = _KCORE_ROUNDS):
     (doc_id, core_degree); converged is False if the round cap hit
     before the fixpoint. Factored out for unit tests on hand-built
     graphs (mirrors connected_components' factoring)."""
-    edges0 = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .repartition(F.col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    from map_reduce_engine_cdps_spark.plans.dedup import undirected_edges
 
     def _peel(edges: DataFrame) -> DataFrame:
         deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
@@ -283,7 +278,9 @@ def kcore_subgraph(pairs: DataFrame, k: int, max_rounds: int = _KCORE_ROUNDS):
             .repartition(F.col("src"))
         )
 
-    edges, converged = fixpoint(edges0, _peel, DataFrame.count, max_rounds)
+    edges, converged = fixpoint(
+        undirected_edges(pairs), _peel, (F.count(F.lit(1)),), max_rounds
+    )
     with releasing(edges):
         survivors = (
             edges.groupBy(F.col("src").alias("doc_id"))
@@ -572,10 +569,7 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
         e.select(F.col("src").alias("v")).distinct().withColumn("lbl", F.col("v"))
     )
     with releasing(e):
-        labels, _ = fixpoint(
-            labels0, lambda lb: _lpa_round(e, lb), None, _LPA_ROUNDS,
-            checkpoint_every=1,
-        )
+        labels, _ = fixpoint(labels0, lambda lb: _lpa_round(e, lb), (), _LPA_ROUNDS)
     return labels.groupBy(F.col("lbl").alias("community")).agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min("v").alias("min_member"),
@@ -633,8 +627,8 @@ LABEL_PROPAGATION_COMMUNITIES_SQL = _lpa_sql
 #
 # Scale: support counting is one wedge join per round over the
 # SHRINKING edge set (bucket-cap-bounded degrees); edge state is
-# persisted per round and each round's predecessor freed once its
-# successor is counted (see ktruss_edges).
+# checkpointed per round and each round's predecessor freed once its
+# successor exists (see ktruss_edges).
 # ---------------------------------------------------------------------------
 
 KTRUSS_K = 3
@@ -678,16 +672,11 @@ def ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-truss via iterative support-prune over the LSH dup-graph."""
     from map_reduce_engine_cdps_spark.plans.dedup import _lsh_pairs_cached
 
-    # Persisted MEMORY_AND_DISK rounds (round 10, measured): the r7 OOM
-    # came from per-round checkpoint blocks waiting on GC; fixpoint frees
-    # each edge set once its successor is counted. Isolated sf10 A/B at
-    # 48g: MEMORY_AND_DISK [206, 154, 154] s vs DISK_ONLY [635 cold, 196,
-    # 273] s — ~25% faster warm and far tighter; the probe's 689 s worst
-    # case was the DISK_ONLY cold first touch, not co-scheduling.
-    edges0 = (
-        _lsh_pairs_cached(spark, sf_dir)
-        .select(F.col("doc_a").alias("a"), F.col("doc_b").alias("b"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
+    # One checkpoint per round, each freed as soon as its successor
+    # exists: the old sf10 OOM came from per-round checkpoint blocks
+    # left waiting on GC, not from checkpointing itself.
+    edges0 = _lsh_pairs_cached(spark, sf_dir).select(
+        F.col("doc_a").alias("a"), F.col("doc_b").alias("b")
     )
     need = KTRUSS_K - 2
 
@@ -699,8 +688,8 @@ def ktruss_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select("a", "b")
         )
 
-    # the final edge set stays persisted: the returned plan reads it
-    edges, _ = fixpoint(edges0, _prune, DataFrame.count, _KTRUSS_ROUNDS)
+    # the final edge set's checkpoint stays: the returned plan reads it
+    edges, _ = fixpoint(edges0, _prune, (F.count(F.lit(1)),), _KTRUSS_ROUNDS)
     return edges.join(
         _edge_support(edges).hint("shuffle_hash"), ["a", "b"]
     ).select(
@@ -887,26 +876,23 @@ def bfs_layers(
             ).alias("d"))
         )
 
-    # Eager localCheckpoint EVERY round, not persist/rotate: a BFS round
-    # stacks a join + full-outer join on the previous round's plan, and
-    # persist caches rows while Catalyst still re-walks the whole logical
-    # tree — measured 1.2 → 14.3 s/round growth by round 8 at sf0.001
-    # with persist-only rotation, flat ~0.5 s/round checkpointed (the
-    # dbscan/star-loop plan-growth rule).
-    labels, _ = fixpoint(labels0, _relax, None, max_hops, checkpoint_every=1)
+    # A BFS round stacks a join + full-outer join on the previous
+    # round's plan. fixpoint's per-round checkpoint keeps that flat
+    # (~0.5 s/round at sf0.001); persist-only rotation, which caches
+    # rows while Catalyst still re-walks the whole logical tree, was
+    # measured growing 1.2 → 14.3 s/round by round 8.
+    labels, _ = fixpoint(labels0, _relax, (), max_hops)
     return labels
 
 
 def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from map_reduce_engine_cdps_spark.plans.dedup import _lsh_pairs_cached
+    from map_reduce_engine_cdps_spark.plans.dedup import (
+        _lsh_pairs_cached,
+        undirected_edges,
+    )
 
     pairs = _lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
-    e = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .union(pairs.select(F.col("doc_b"), F.col("doc_a")))
-        .repartition(F.col("src"))
-        .persist(StorageLevel.MEMORY_AND_DISK)
-    )
+    e = undirected_edges(pairs).persist(StorageLevel.MEMORY_AND_DISK)
     verts = e.select(F.col("src").alias("v")).distinct().localCheckpoint(
         eager=True
     )

@@ -129,11 +129,10 @@ def test_window_hashes_edges(spark):
 
 
 def test_connected_components_deep_chain_crosses_checkpoint_boundary(spark):
-    """A path graph of diameter 14 needs ~14 propagation rounds — the
-    loop crosses the every-5th-round localCheckpoint boundary (and the
-    persist/unpersist rotation in between) twice. Regression test for
-    the round-5 state-management rework: every vertex must still
-    converge to the chain's minimum label."""
+    """A path graph of diameter 14 needs ~14 propagation rounds, each
+    one localCheckpoint that releases its predecessor. Regression test
+    for the loop's state management: every vertex must still converge
+    to the chain's minimum label."""
     from map_reduce_engine_cdps_spark.plans.dedup import connected_components
 
     n = 15
@@ -343,7 +342,7 @@ def test_kcore_matches_reference_peeling(spark):
 
 def test_kcore_cascade_needs_multiple_rounds(spark):
     """A long pendant path off a clique peels one vertex per round —
-    exercises the loop's persist rotation across ≥4 rounds."""
+    exercises the loop's per-round checkpoints across ≥4 rounds."""
     from map_reduce_engine_cdps_spark.plans.graph import kcore_subgraph
 
     clique = [(a, b) for a in range(4) for b in range(a + 1, 4)]
@@ -1460,38 +1459,6 @@ def test_temporal_split_partitions_and_bounds(spark, sf_dir):
     assert r["n_train"] > 0 and r["n_test"] > 0
     assert r["n_overlap_users"] <= min(r["n_train_users"], r["n_test_users"])
     assert 0.0 <= r["test_user_leak_ratio"] <= 1.0
-
-
-def test_cc_label_memo_semantics(spark, sf_dir):
-    """Pins the write-through rule (SCALE.md round 8): near_dup_clusters
-    must recompute (and refresh the memo) on every call — a read-through
-    memo here would collapse its bench timings to cache reads — while
-    near_dup_prune reads the memo; and distinct max_rounds keys must
-    not cross-contaminate."""
-    from map_reduce_engine_cdps_spark.operators.state import _MEMOS
-    from map_reduce_engine_cdps_spark.plans import dedup as D
-
-    def entry(max_rounds):
-        key = (spark.sparkContext.applicationId, D._cc_labels_build, sf_dir,
-               (max_rounds,))
-        return _MEMOS[key][1] if key in _MEMOS else None
-
-    _MEMOS.pop(
-        (spark.sparkContext.applicationId, D._cc_labels_build, sf_dir, (25,)),
-        None,
-    )
-    D.near_dup_clusters(spark, sf_dir).count()
-    first = entry(25)
-    assert first is not None  # write-through populated the memo
-    D.near_dup_clusters(spark, sf_dir).count()
-    second = entry(25)
-    assert second is not first  # recomputed + refreshed, not served from
-    # consumers read the refreshed entry
-    assert D._cc_labels_cached(spark, sf_dir) is second
-    # a different max_rounds is a different cache line
-    other = D._cc_labels_cached(spark, sf_dir, max_rounds=24)
-    assert other is not second
-    assert entry(24) is other
 
 
 def test_span_sample_error_within_binomial_noise(spark, sf_dir):

@@ -46,11 +46,12 @@ def test_graph_loops_keep_at_most_one_persisted_rdd_per_call(spark, sf_dir):
             assert _n_persisted(spark) - before <= bound, fn.__name__
 
 
-@pytest.mark.parametrize("checkpoint_every", [None, 1])
 @pytest.mark.parametrize("fail_in", ["step", "signature"])
-def test_fixpoint_releases_state_when_round_two_raises(
-    spark, checkpoint_every, fail_in
-):
+def test_fixpoint_releases_state_when_round_two_raises(spark, fail_in):
+    """Round 2 fails either in ``step`` (before any job) or in an
+    observed signature column inside the round's own checkpoint job;
+    either way every state the loop made is released, including the
+    checkpoint RDD the failed job had already registered."""
     from map_reduce_engine_cdps_spark.operators.state import fixpoint
 
     rounds = []
@@ -61,17 +62,35 @@ def test_fixpoint_releases_state_when_round_two_raises(
             raise RuntimeError("step failed")
         return df.withColumn("x", F.col("x") + 1)
 
-    def signature(df):
-        if fail_in == "signature" and len(rounds) == 2:
-            raise RuntimeError("signature failed")
-        return df.agg(F.sum("x")).first()[0]
-
+    # state0 sums to 189 and round 1 to 253; round 2 reaches 317
+    x_sum = F.sum("x")
+    if fail_in == "signature":
+        x_sum = F.sum(F.when(F.col("x") < 8, F.col("x")).otherwise(
+            F.raise_error(F.lit("signature failed"))))
     state0 = spark.range(64).withColumn("x", F.col("id") % 7)
     before = _n_persisted(spark)
-    with pytest.raises(RuntimeError):
-        fixpoint(state0, step, signature, 5, checkpoint_every)
+    with pytest.raises(Exception, match=f"{fail_in} failed"):
+        fixpoint(state0, step, (x_sum,), 5)
     assert len(rounds) == 2
     assert _n_persisted(spark) == before
+
+
+@pytest.mark.parametrize("loop", ["connected_components", "connected_components_star",
+                                  "kcore_subgraph"])
+def test_loops_converge_on_an_empty_edge_list(spark, loop):
+    """An Observation over zero rows still delivers its aggregates, so a
+    loop over no edges converges in its first round: every vertex is
+    its own component, and the k-core is empty."""
+    vertices = spark.createDataFrame([(i,) for i in range(4)], "doc_id long")
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long")
+    before = _n_persisted(spark)
+    if loop == "kcore_subgraph":
+        survivors, converged = G.kcore_subgraph(pairs, 2, max_rounds=1)
+        assert converged and survivors.count() == 0
+    else:
+        labels = getattr(D, loop)(vertices, pairs, max_rounds=1)
+        assert sorted(labels.collect()) == [(i, i) for i in range(4)]
+    assert _n_persisted(spark) - before <= 1
 
 
 def _pairs(df) -> set:

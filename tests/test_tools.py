@@ -187,6 +187,10 @@ def test_plan_inspector_census_and_normalized_plans(spark, tmp_path):
            + "/bucketed_join_{}/bucketed_lineitem]")
     assert P.normalize(loc.format("/tmp", "k3j_x9q1")) == P.normalize(
         loc.format("/tmp/spark-local", "a0b1c2d3"))
+    scan = "[doc_id#1L, comp#2L], MapPartitionsRDD[{}] at localCheckpoint at {}:0, ExistingRDD"
+    assert P.normalize(scan.format(38, "NativeMethodAccessorImpl.java")) == P.normalize(
+        scan.format(126, "<unknown>")) == (
+        "[doc_id#, comp#], MapPartitionsRDD[#] at localCheckpoint at *, ExistingRDD")
 
     a, b = (get_query("bucketed_join_stats")(spark, SF_DIR) for _ in range(2))
     assert P.formatted(a) == P.formatted(b)

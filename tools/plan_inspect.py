@@ -23,6 +23,10 @@ _NOISE = (
     (re.compile(r"#\d+L?"), "#"),  # expression ids, `[id=#12]`
     (re.compile(r"\b(lambda \w+?)_\d+#"), r"\1_#"),  # lambda variables
     (re.compile(r"plan_id=\d+"), "plan_id=#"),
+    # `MapPartitionsRDD[38] at localCheckpoint at NativeMethodAccessorImpl.java:0`:
+    # the RDD id and the JVM frame that called the method both depend on
+    # how many RDDs and reflective calls the session made before
+    (re.compile(r"RDD\[\d+\] at (\w+) at \S+?:\d+"), r"RDD[#] at \1 at *"),
     # a scratch dir under the driver's SparkFiles root (tempfile.mkdtemp),
     # which lies in the local dir (SPARK_LOCAL_DIRS, else java.io.tmpdir)
     (re.compile(r"(?:/[^/\s\[\],]+)*/spark-[0-9a-f-]{36}/userFiles-[0-9a-f-]{36}/"

@@ -178,9 +178,10 @@ SNAPSHOTS: dict[str, str] = {
     "near_dup_prune": (
         "The fuzzy-dedup selection step rides a front that is already "
         "materialized: the CC label table enters as a `Scan ExistingRDD` "
-        "leaf (the eager localCheckpoint — the LSH pair graph and the "
-        "CC loop are NOT re-derived in this plan) and broadcasts onto "
-        "the 3-column documents projection; the only wide operation on "
+        "leaf (the CC loop's last eager localCheckpoint — the LSH pair "
+        "graph and the CC loop are NOT re-derived in this plan) and meets "
+        "the 3-column documents projection in one broadcast hash join; "
+        "the only wide operation on "
         "corpus-sized data is the window partitioned by cluster_id — "
         "and window partitions are dup-group-sized, never corpus-sized."
     ),
