@@ -46,12 +46,16 @@ def test_graph_loops_keep_at_most_one_persisted_rdd_per_call(spark, sf_dir):
             assert _n_persisted(spark) - before <= bound, fn.__name__
 
 
+@pytest.mark.parametrize("num_partitions", [None, 1])
 @pytest.mark.parametrize("fail_in", ["step", "signature"])
-def test_fixpoint_releases_state_when_round_two_raises(spark, fail_in):
+def test_fixpoint_releases_state_when_round_two_raises(spark, fail_in, num_partitions):
     """Round 2 fails either in ``step`` (before any job) or in an
     observed signature column inside the round's own checkpoint job;
     either way every state the loop made is released, including the
-    checkpoint RDD the failed job had already registered."""
+    checkpoint RDD the failed job had already registered. Only rows
+    with ``id >= 48`` fail, so with the default partitioning the
+    checkpoint job's other tasks succeed and may store their blocks
+    before the job aborts; with one partition the only task fails."""
     from map_reduce_engine_cdps_spark.operators.state import fixpoint
 
     rounds = []
@@ -65,9 +69,10 @@ def test_fixpoint_releases_state_when_round_two_raises(spark, fail_in):
     # state0 sums to 189 and round 1 to 253; round 2 reaches 317
     x_sum = F.sum("x")
     if fail_in == "signature":
-        x_sum = F.sum(F.when(F.col("x") < 8, F.col("x")).otherwise(
-            F.raise_error(F.lit("signature failed"))))
-    state0 = spark.range(64).withColumn("x", F.col("id") % 7)
+        x_sum = F.sum(F.when((F.col("x") < 8) | (F.col("id") < 48), F.col("x"))
+                      .otherwise(F.raise_error(F.lit("signature failed"))))
+    state0 = spark.range(0, 64, numPartitions=num_partitions).withColumn(
+        "x", F.col("id") % 7)
     before = _n_persisted(spark)
     with pytest.raises(Exception, match=f"{fail_in} failed"):
         fixpoint(state0, step, (x_sum,), 5)
