@@ -95,13 +95,6 @@ def _pillow_decode(payload: bytes, size: tuple = (224, 224)) -> np.ndarray:
         return np.asarray(img, dtype=np.float32)
 
 
-def ppm_encode(arr: np.ndarray) -> bytes:
-    """(H, W, 3) uint8-valued array → binary PPM (P6) payload. The
-    fixture-side inverse of :func:`_ppm_decode` for tests/demos."""
-    h, w = arr.shape[0], arr.shape[1]
-    return b"P6\n%d %d\n255\n" % (w, h) + arr.astype(np.uint8).tobytes()
-
-
 def _ppm_header(payload: bytes, pos: int) -> tuple:
     """Parse one P6 header starting at ``pos`` (magic, width, height,
     maxval, with whitespace/comment handling) → (w, h, data_start)."""

@@ -16,8 +16,12 @@ from contextlib import contextmanager
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 
-# (app id, build, sf_dir, args) -> (input stamp, checkpoint, its RDD id)
+# (app id, build, sf_dir, args, plan confs) -> (input stamp, checkpoint, its RDD id)
 _MEMOS: dict = {}
+
+# confs a memo's physical shape depends on: a memo built with adaptive
+# execution off keeps every shuffle partition of its plan
+_PLAN_CONFS = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
 
 
 def _checkpoint_rdd(df: DataFrame):
@@ -59,9 +63,9 @@ def _stamp(sf_dir: str, tables: tuple[str, ...]) -> tuple:
 def memo(
     build: Callable[..., DataFrame], tables: tuple[str, ...]
 ) -> Callable[..., DataFrame]:
-    """``build(spark, sf_dir, *args)`` as a memo: localCheckpointed once
-    per Spark application, ``sf_dir`` and ``args``, and shared by every
-    later call.
+    """``build(spark, sf_dir, *args)`` as a memo: checkpointed once per
+    Spark application, value of the ``_PLAN_CONFS``, ``sf_dir`` and
+    ``args``, and shared by every later call.
 
     A hit rebuilds when the files of ``tables`` under ``sf_dir`` changed
     size or mtime, or when the checkpoint's blocks were dropped (its RDD
@@ -71,7 +75,8 @@ def memo(
     """
 
     def cached(spark: SparkSession, sf_dir: str, *args: Hashable) -> DataFrame:
-        key = (spark.sparkContext.applicationId, build, sf_dir, args)
+        confs = tuple(spark.conf.get(k) for k in _PLAN_CONFS)
+        key = (spark.sparkContext.applicationId, build, sf_dir, args, confs)
         stamp = _stamp(sf_dir, tables)
         hit = _MEMOS.get(key)
         if (
@@ -82,7 +87,7 @@ def memo(
             return hit[1]
         df = build(spark, sf_dir, *args)
         if _checkpoint_rdd(df) is None:
-            df = df.localCheckpoint(eager=True)
+            df = _checkpoint(df)
         _MEMOS[key] = (stamp, df, _checkpoint_rdd(df).id())
         return df
 

@@ -22,6 +22,7 @@ from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.functions import exact as EX
 from map_reduce_engine_cdps_spark.functions import text as TX
+from map_reduce_engine_cdps_spark.operators.state import _checkpoint
 from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table, table_rows
 
 # Stopword set shared by the Spark and DuckDB sides (tiny on purpose:
@@ -1505,26 +1506,16 @@ def cdc_chunk_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                           element_at(bnd, i) - element_at(bnd, i - 1)),
                     ' ')))"""
     )
-    # Materialize the chunked table ONCE before fan-out: two consumers
-    # (slots + the distinct explode) read it, and Spark's Generate path
-    # re-evaluates an inlined HOF chain per exploded element — measured
-    # 36.6 s vs 1.5 s at sf0.1 for the distinct branch alone. At
-    # cluster scale this is the chunk table you'd persist to storage
-    # anyway (it IS the dedup index).
-    d = d.withColumn("hashes", hashes).select(
-        "source", "n", F.size("bnd").alias("nb"), "hashes"
-    ).localCheckpoint(eager=True)
-    slots = d.groupBy("source").agg(
-        F.count(F.lit(1)).alias("n_docs"),
-        F.sum("n").alias("total_tokens"),
-        F.sum(F.col("nb") - 1).alias("n_chunks"),
-    )
-    dist = (
-        d.select("source", F.explode("hashes").alias("h"))
-        .groupBy("source")
-        .agg(F.countDistinct("h").alias("n_distinct_chunks"))
-    )
-    return slots.join(dist, "source").select(
+    # One row per chunk (every doc has at least one); the doc's own
+    # counts ride on its first chunk
+    first = F.col("pos") == 0
+    chunks = d.select("source", "n", F.posexplode(hashes).alias("pos", "h"))
+    return chunks.groupBy("source").agg(
+        F.count(F.when(first, 1)).alias("n_docs"),
+        F.sum(F.when(first, F.col("n"))).alias("total_tokens"),
+        F.count(F.lit(1)).alias("n_chunks"),
+        F.countDistinct("h").alias("n_distinct_chunks"),
+    ).select(
         "source",
         "n_docs",
         "n_chunks",
@@ -1767,7 +1758,7 @@ def _doc_trigram_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def submodular_coverage_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    tri = _doc_trigram_hashes(spark, sf_dir).localCheckpoint(eager=True)
+    tri = _checkpoint(_doc_trigram_hashes(spark, sf_dir))
     covered = None
     picks = []
     for rnd in range(SUBMOD_K):
@@ -1781,11 +1772,9 @@ def submodular_coverage_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         pick = top[0]
         picks.append((rnd, int(pick["doc_id"]), int(pick["gain"])))
         newly = tri.filter(F.col("doc_id") == pick["doc_id"]).select("gh")
-        covered = (
-            newly
-            if covered is None
-            else covered.union(newly).distinct()
-        ).localCheckpoint(eager=True)
+        covered = _checkpoint(
+            newly if covered is None else covered.union(newly).distinct()
+        )
     return spark.createDataFrame(
         picks, "sel_round int, doc_id long, marginal_gain long"
     )

@@ -16,7 +16,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from map_reduce_engine_cdps_spark.functions import text as TX
-from map_reduce_engine_cdps_spark.operators.state import fixpoint, memo, releasing
+from map_reduce_engine_cdps_spark.operators.state import _checkpoint, fixpoint, memo, releasing
 from map_reduce_engine_cdps_spark.sources.readers import load_parallel, load_table, table_rows
 
 # Production MinHash/LSH constants — chosen from the measured tuning
@@ -835,10 +835,9 @@ def connected_components_star(
         roots = e.groupBy("src").agg(F.min("dst").alias("comp")).select(
             F.col("src").alias("doc_id"), "comp"
         )
-        return (
+        return _checkpoint(
             vertices.join(roots.hint("shuffle_hash"), "doc_id", "left")
             .select("doc_id", F.coalesce("comp", "doc_id").alias("comp"))
-            .localCheckpoint(eager=True)
         )
 
 
@@ -2421,77 +2420,73 @@ def lsh_band_tuning_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = _sampled_docs(
         load_parallel(spark, sf_dir, "documents"), sf_dir, _RECALL_SAMPLE_TIERS
     )
-    d = (
-        _with_minhash_bands(docs)
-        .select("doc_id", *[f"mh{s}" for s in range(N_MINHASH)])
-        .localCheckpoint(eager=True)
-    )
     # Truth front shared with lsh_pair_recall_eval (identical sample /
-    # width / threshold) — built once per (app, sf_dir), bucket-locally
-    # (45 s → amortized-zero at sf1; round-6 rework).
+    # width / threshold), built once per (app, sf_dir).
     truth = _recall_truth_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    n_truth = truth.count()
-    # Single-pass rework (round 6): the nested loop ran one bucket
-    # self-join per (config, band) — 15 joins, each with its own
-    # union/distinct/checkpoint/count/semi-join chain (49.7 s at sf1).
-    # All 15 band keys now land in ONE frame (the band index is folded
-    # into the key so only same-band buckets collide), the self-join
-    # runs once, and candidate/recall counts group by config.
-    kd = None
-    for ci, (nb, r) in enumerate(_TUNE_CONFIGS):
-        for i in range(nb):
-            parts = [F.col(f"mh{i * r + k}") for k in range(r)]
-            x = d.select(
-                F.lit(ci).alias("cfg"),
-                "doc_id",
-                F.md5(F.concat_ws("|", F.lit(f"{ci}:{i}"), *parts)).alias("bk"),
-            )
-            kd = x if kd is None else kd.unionAll(x)
-    xa = kd.select("cfg", F.col("doc_id").alias("doc_a"), "bk")
-    yb = kd.select("cfg", F.col("doc_id").alias("doc_b"), "bk")
+    # All 15 band keys of the four configs in one frame (the band index
+    # is folded into the key so only same-band buckets collide): one
+    # self-join, and candidate/recall counts grouped by config.
+    keys = [
+        F.struct(
+            F.lit(ci).alias("cfg"),
+            F.md5(
+                F.concat_ws(
+                    "|", F.lit(f"{ci}:{i}"), *[F.col(f"mh{i * r + k}") for k in range(r)]
+                )
+            ).alias("bk"),
+        )
+        for ci, (nb, r) in enumerate(_TUNE_CONFIGS)
+        for i in range(nb)
+    ]
+    kd = _with_minhash_bands(docs).select("doc_id", F.inline(F.array(*keys)))
+    x, y = kd.alias("x"), kd.alias("y")
     cand = (
-        xa.join(yb, ["cfg", "bk"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("cfg", "doc_a", "doc_b")
+        x.join(y, ["cfg", "bk"])
+        .filter(F.col("x.doc_id") < F.col("y.doc_id"))
+        .select("cfg", F.col("x.doc_id").alias("doc_a"), F.col("y.doc_id").alias("doc_b"))
         .distinct()
     )
-    # One action for BOTH counts (round 9; was checkpoint + two
-    # collects): tag each candidate with truth membership via a left
-    # join and aggregate count + sum(tag) per config in a single job —
-    # the candidate front is computed once and never materialized.
-    stats = {
-        r_["cfg"]: (r_["n"], r_["caught"])
-        for r_ in cand.join(
-            truth.withColumn("is_true", F.lit(1)), ["doc_a", "doc_b"], "left"
-        )
+    stats = (
+        cand.join(truth.withColumn("is_true", F.lit(1)), ["doc_a", "doc_b"], "left")
         .groupBy("cfg")
         .agg(
             F.count(F.lit(1)).alias("n"),
             F.sum(F.coalesce("is_true", F.lit(0))).alias("caught"),
         )
-        .collect()
-    }
-    n_cand = {cfg: n for cfg, (n, _) in stats.items()}
-    n_caught = {cfg: c for cfg, (_, c) in stats.items()}
-    out = []
-    for ci, (nb, r) in enumerate(_TUNE_CONFIGS):
-        caught = n_caught.get(ci, 0)
-        theory = round(1 - (1 - _TUNE_THEORY_J**r) ** nb, 4)
-        out.append(
-            (
-                nb,
-                r,
-                n_cand.get(ci, 0),
-                n_truth,
-                caught,
-                round(caught / max(n_truth, 1), 4),
-                theory,
+    )
+    configs = spark.range(1).select(
+        F.inline(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(ci).alias("cfg"),
+                        F.lit(nb).alias("bands"),
+                        F.lit(r).alias("rows_per_band"),
+                        F.lit(round(1 - (1 - _TUNE_THEORY_J**r) ** nb, 4)).alias(
+                            "capture_at_j07"
+                        ),
+                    )
+                    for ci, (nb, r) in enumerate(_TUNE_CONFIGS)
+                ]
             )
         )
-    return spark.createDataFrame(
-        out,
-        "bands int, rows_per_band int, n_candidates long, n_truth long,"
-        " n_caught long, recall double, capture_at_j07 double",
+    )
+    n_truth = truth.agg(F.count(F.lit(1)).alias("n_truth"))
+    caught = F.coalesce("caught", F.lit(0)).cast("long")
+    return (
+        configs.join(stats, "cfg", "left")
+        .crossJoin(F.broadcast(n_truth))
+        .select(
+            "bands",
+            "rows_per_band",
+            F.coalesce("n", F.lit(0)).cast("long").alias("n_candidates"),
+            "n_truth",
+            caught.alias("n_caught"),
+            F.round(caught / F.greatest("n_truth", F.lit(1)).cast("double"), 4).alias(
+                "recall"
+            ),
+            "capture_at_j07",
+        )
     )
 
 
@@ -2711,29 +2706,25 @@ def _shingle_truth_pairs(docs: DataFrame, n: int) -> DataFrame:
 
 
 def shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Single-pass rework (round 6): the loop formulation ran one full
-    # shingle self-join per width TWICE (median collect + count = 6
-    # quadratic joins; 55.6 s at sf1). Now all three width shingle
-    # sets come out of ONE scan, materialized once (never explode a
-    # HOF-derived array — the cdc rule), the self-join runs once on
-    # (width, shingle), and the median windows partition by width so
-    # one collect returns every row of the answer. The count comes
-    # from the same window frame — no second action.
+    # All three widths' shingle sets come out of one scan, the bucket
+    # grouping runs once on (width, shingle), and the median windows
+    # partition by width; the pair count comes from the same window.
     docs = _sampled_docs(load_table(spark, sf_dir, "documents"), sf_dir, _SHINGLE_TIERS)
     toks = TX.tokens(F.col("text"))
     arr = docs.select(
         "doc_id",
-        *[TX.shingles(toks, n).alias(f"sh{n}") for n in _SHINGLE_SIZES],
-    ).localCheckpoint(eager=True)
-    e = None
-    for n in _SHINGLE_SIZES:
-        x = arr.filter(F.size(f"sh{n}") > 0).select(
-            F.lit(n).alias("w"),
-            "doc_id",
-            F.size(f"sh{n}").alias("ns"),
-            F.explode(f"sh{n}").alias("s"),
-        )
-        e = x if e is None else e.unionAll(x)
+        F.inline(
+            F.array(
+                *[
+                    F.struct(F.lit(n).alias("w"), TX.shingles(toks, n).alias("sh"))
+                    for n in _SHINGLE_SIZES
+                ]
+            )
+        ),
+    )
+    e = arr.filter(F.size("sh") > 0).select(
+        "w", "doc_id", F.size("sh").alias("ns"), F.explode("sh").alias("s")
+    )
     buckets = (
         e.groupBy("w", "s")
         .agg(F.sort_array(F.collect_list(F.struct("doc_id", "ns"))).alias("members"))
@@ -2760,16 +2751,14 @@ def shingle_size_sensitivity(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.row_number().over(W.partitionBy("w").orderBy("j")).alias("rn"),
         F.count(F.lit(1)).over(W.partitionBy("w")).alias("c"),
     )
-    med = {
-        r["w"]: (int(r["c"]), float(r["j"]))
-        for r in ranked.filter(F.expr("rn = (c + 1) div 2")).collect()
-    }
-    out = [
-        (n, med[n][0] if n in med else 0, med[n][1] if n in med else None)
-        for n in _SHINGLE_SIZES
-    ]
-    return spark.createDataFrame(
-        out, "shingle_n int, n_pairs long, median_j double"
+    med = ranked.filter(F.expr("rn = (c + 1) div 2"))
+    widths = spark.range(1).select(
+        F.explode(F.array(*[F.lit(n) for n in _SHINGLE_SIZES])).alias("w")
+    )
+    return widths.join(med, "w", "left").select(
+        F.col("w").alias("shingle_n"),
+        F.coalesce("c", F.lit(0)).cast("long").alias("n_pairs"),
+        F.col("j").cast("double").alias("median_j"),
     )
 
 

@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 from pyspark.storagelevel import StorageLevel
 
-from map_reduce_engine_cdps_spark.operators.state import fixpoint, releasing
+from map_reduce_engine_cdps_spark.operators.state import _checkpoint, fixpoint, releasing
 from map_reduce_engine_cdps_spark.sources.readers import load_table
 
 _DAMPING = 0.85
@@ -282,10 +282,9 @@ def kcore_subgraph(pairs: DataFrame, k: int, max_rounds: int = _KCORE_ROUNDS):
         undirected_edges(pairs), _peel, (F.count(F.lit(1)),), max_rounds
     )
     with releasing(edges):
-        survivors = (
+        survivors = _checkpoint(
             edges.groupBy(F.col("src").alias("doc_id"))
             .agg(F.count(F.lit(1)).alias("core_degree"))
-            .localCheckpoint(eager=True)
         )
     return survivors, converged
 
@@ -564,12 +563,11 @@ def label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFrame
     pairs = _lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
     e = pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst")).union(
         pairs.select(F.col("doc_b"), F.col("doc_a"))
-    ).localCheckpoint(eager=True)
+    )
     labels0 = (
         e.select(F.col("src").alias("v")).distinct().withColumn("lbl", F.col("v"))
     )
-    with releasing(e):
-        labels, _ = fixpoint(labels0, lambda lb: _lpa_round(e, lb), (), _LPA_ROUNDS)
+    labels, _ = fixpoint(labels0, lambda lb: _lpa_round(e, lb), (), _LPA_ROUNDS)
     return labels.groupBy(F.col("lbl").alias("community")).agg(
         F.count(F.lit(1)).alias("n_members"),
         F.min("v").alias("min_member"),
@@ -857,9 +855,7 @@ def bfs_layers(
     Factored out of bfs_hops so convergence semantics are
     unit-testable on hand-built graphs (paths, cycles, disconnected
     pieces) — the connected_components treatment."""
-    labels0 = seeds.select("v", F.lit(0).cast("long").alias("d")).localCheckpoint(
-        eager=True
-    )
+    labels0 = _checkpoint(seeds.select("v", F.lit(0).cast("long").alias("d")))
 
     def _relax(labels: DataFrame) -> DataFrame:
         nbr = (
@@ -893,19 +889,16 @@ def bfs_hops(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pairs = _lsh_pairs_cached(spark, sf_dir).select("doc_a", "doc_b")
     e = undirected_edges(pairs).persist(StorageLevel.MEMORY_AND_DISK)
-    verts = e.select(F.col("src").alias("v")).distinct().localCheckpoint(
-        eager=True
-    )
+    verts = _checkpoint(e.select(F.col("src").alias("v")).distinct())
     seeds = verts.orderBy("v").limit(BFS_SEEDS)
     with releasing(e, verts):
         labels = bfs_layers(e, seeds, BFS_MAX_HOPS)
         with releasing(labels):
-            return (
+            return _checkpoint(
                 verts.join(labels.hint("shuffle_hash"), "v", "left")
                 .select(F.coalesce("d", F.lit(-1)).alias("hops"))
                 .groupBy("hops")
                 .agg(F.count(F.lit(1)).alias("n_docs"))
-                .localCheckpoint(eager=True)
             )
 
 

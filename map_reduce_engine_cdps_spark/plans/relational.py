@@ -2661,8 +2661,8 @@ SELECT source, doc_id, rank, n_chars FROM (
 # into large joins): at 100 TB the filter build is one distinct-key
 # aggregate and the probe is a broadcast-bitset map — here both sides
 # are expressed relationally so the FPR claim is oracle-checkable.
-# Probe passes = all k positions present: a groupBy counting distinct
-# matched positions, never a bitset UDF.
+# Probe passes = all k positions present: a grouped min over the key's
+# positions, never a bitset UDF.
 # ---------------------------------------------------------------------------
 
 _BLOOM_BITS = 1 << 16
@@ -2678,69 +2678,42 @@ def _bloom_positions(col, prefix: int):
 
 
 def bloom_fpr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Single-action rework (round 8 continuation): the first version ran
-    # FIVE driver count() jobs (n_keys / n_true / n_pass / n_fp / bits)
-    # with the orders-distinct and md5-probe subtrees recomputed per job
-    # — 8.2 s at sf1 and 4.8 s even at sf0.1, pure fixed job overhead ×
-    # recompute. Now: the distinct order-key set and the ≤ 2^16-row bit
-    # set are checkpointed once (two tiny jobs), every per-customer flag
-    # (own positions, hit positions, true membership, pass) is computed
-    # in ONE plan, and all five counts plus both FPRs come out of a
-    # single 1-row aggregate — driver-side math moved into the frame
-    # (F.exp/F.pow), so nothing is collected to recompose. At 100 TB
-    # this is the difference between five full probe-table scans and
-    # one.
-    ok = (
-        load_table(spark, sf_dir, "orders")
-        .select("o_custkey")
-        .distinct()
-        .localCheckpoint(eager=True)
+    # One pass over the customer keys and the distinct order keys, each
+    # expanded to its k positions. A position is set when an order key
+    # has it; a customer passes when every one of its positions is set
+    # (self-collisions included) and is a true member when it is an
+    # order key too. Each set position is counted on its first row.
+    cust = load_table(spark, sf_dir, "customer").select(
+        F.col("c_custkey").alias("key"), F.lit(0).alias("is_ord")
     )
-    cust = load_table(spark, sf_dir, "customer").select("c_custkey")
-    bits = None
-    for j in range(_BLOOM_K):
-        p = ok.select(_bloom_positions(F.col("o_custkey"), j).alias("pos"))
-        bits = p if bits is None else bits.union(p)
-    # ≤ 2^16 rows; used twice below (probe join + n_bits_set count)
-    bits = bits.distinct().localCheckpoint(eager=True)
-    probe = None
-    for j in range(_BLOOM_K):
-        p = cust.select(
-            "c_custkey", _bloom_positions(F.col("c_custkey"), j).alias("pos")
-        )
-        probe = p if probe is None else probe.union(p)
-    # distinct positions per key may be < k on self-collision: pass =
-    # every one of ITS OWN distinct positions present, so both distinct
-    # counts come from the same grouped pass
-    per_key = (
-        probe.join(F.broadcast(bits.withColumn("hit", F.lit(1))), "pos", "left")
-        .groupBy("c_custkey")
-        .agg(
-            F.countDistinct("pos").alias("k_own"),
-            F.countDistinct(
-                F.when(F.col("hit").isNotNull(), F.col("pos"))
-            ).alias("k_hit"),
-        )
+    ok = load_table(spark, sf_dir, "orders").select(
+        F.col("o_custkey").alias("key"), F.lit(1).alias("is_ord")
+    ).distinct()
+    by_pos = W.partitionBy("pos")
+    positions = F.array(*[_bloom_positions(F.col("key"), j) for j in range(_BLOOM_K)])
+    marked = (
+        cust.unionByName(ok)
+        .select("key", "is_ord", F.explode(positions).alias("pos"))
+        .withColumn("set", F.max("is_ord").over(by_pos))
+        .withColumn("first", F.row_number().over(by_pos.orderBy("key", "is_ord")) == 1)
     )
-    flagged = per_key.join(
-        ok.select(F.col("o_custkey").alias("c_custkey")).withColumn(
-            "is_true", F.lit(1)
-        ),
-        "c_custkey",
-        "left",
+    per_key = marked.groupBy("key").agg(
+        (F.min("is_ord") == 0).alias("is_cust"),
+        (F.max("is_ord") == 1).alias("is_true"),
+        (F.min("set") == 1).alias("passed"),
+        F.count(F.when(F.col("first") & (F.col("set") == 1), 1)).alias("new_bits"),
     )
-    is_pass = F.col("k_hit") == F.col("k_own")
-    counts = flagged.agg(
-        F.count(F.lit(1)).alias("n_probe_keys"),
-        F.sum(F.when(F.col("is_true").isNotNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_true_members"),
-        F.sum(F.when(is_pass, 1).otherwise(0)).cast("long").alias("n_passed"),
-        F.sum(F.when(is_pass & F.col("is_true").isNull(), 1).otherwise(0))
-        .cast("long")
-        .alias("n_false_pos"),
+
+    def n_cust(cond):
+        return F.sum(F.when(F.col("is_cust"), F.when(cond, 1).otherwise(0))).cast("long")
+
+    counts = per_key.agg(
+        F.count(F.when(F.col("is_cust"), 1)).alias("n_probe_keys"),
+        n_cust(F.col("is_true")).alias("n_true_members"),
+        n_cust(F.col("passed")).alias("n_passed"),
+        n_cust(F.col("passed") & ~F.col("is_true")).alias("n_false_pos"),
+        F.coalesce(F.sum("new_bits"), F.lit(0)).alias("n_bits_set"),
     )
-    n_bits = bits.agg(F.count(F.lit(1)).alias("n_bits_set"))
     theory = F.pow(
         F.lit(1.0)
         - F.exp(
@@ -2750,7 +2723,7 @@ def bloom_fpr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
         F.lit(float(_BLOOM_K)),
     )
-    return counts.crossJoin(F.broadcast(n_bits)).select(
+    return counts.select(
         "n_probe_keys",
         "n_true_members",
         "n_passed",
@@ -3241,36 +3214,37 @@ def _session_intervals(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def max_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # The interval frame feeds five consumers (two delta arms, the
-    # offsets, the peak scan, the census); left lazy, Catalyst
-    # re-derives the events-window sessionization per consumer — 9
-    # scans of the big table. Materialize the O(sessions) frame once.
-    iv = _session_intervals(spark, sf_dir).localCheckpoint(eager=True)
-    deltas = iv.select(
-        F.col("start_ts").alias("t"), F.lit(1).alias("d"), "user_id", "session_idx"
-    ).unionAll(
-        iv.select(
-            F.col("end_ts").alias("t"),
-            F.lit(-1).alias("d"),
-            "user_id",
-            "session_idx",
-        )
+    # Each session is read once, as its two deltas; both levels below
+    # read the deltas, and share the sessions' aggregate exchange.
+    deltas = _session_intervals(spark, sf_dir).select(
+        "user_id",
+        "session_idx",
+        F.inline(
+            F.array(
+                F.struct(F.col("start_ts").alias("t"), F.lit(1).alias("d")),
+                F.struct(F.col("end_ts").alias("t"), F.lit(-1).alias("d")),
+            )
+        ),
     )
     deltas = deltas.withColumn("day", F.to_date("t"))
-    # level 1: per-day totals -> day-start offsets (O(days) window)
+    # level 1: per-day totals -> day-start offsets (O(days) window); the
+    # session count rides along as the total of the starts
     day_offsets = (
         deltas.groupBy("day")
-        .agg(F.sum("d").alias("day_sum"))
-        .withColumn(
-            "offset",
+        .agg(
+            F.sum("d").alias("day_sum"),
+            F.count(F.when(F.col("d") == 1, 1)).alias("day_starts"),
+        )
+        .select(
+            "day",
             F.coalesce(
                 F.sum("day_sum").over(
                     W.orderBy("day").rowsBetween(W.unboundedPreceding, -1)
                 ),
                 F.lit(0),
-            ),
+            ).alias("offset"),
+            F.sum("day_starts").over(W.partitionBy()).alias("n_sessions"),
         )
-        .select("day", "offset")
     )
     # level 2: within-day running sum, starts before ends at equal t
     wday = W.partitionBy("day").orderBy(
@@ -3284,16 +3258,15 @@ def max_concurrent_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
             + F.sum("d").over(wday.rowsBetween(W.unboundedPreceding, 0)),
         )
     )
-    mc = runs.agg(F.max("run").alias("mc"))
-    peak = (
-        runs.join(F.broadcast(mc), F.col("run") == F.col("mc"))
-        .agg(F.min("t").alias("peak_t"), F.max("mc").alias("max_concurrent"))
+    # the highest run, and the earliest instant it is reached
+    peak = runs.agg(
+        F.max(F.struct("run", (-F.unix_micros("t")).alias("neg_t"))).alias("p"),
+        F.max("n_sessions").alias("n_sessions"),
     )
-    n = iv.agg(F.count(F.lit(1)).alias("n_sessions"))
-    return n.crossJoin(F.broadcast(peak)).select(
-        "n_sessions",
-        "max_concurrent",
-        F.unix_timestamp(F.col("peak_t")).alias("peak_epoch"),
+    return peak.select(
+        F.coalesce("n_sessions", F.lit(0)).alias("n_sessions"),
+        F.col("p.run").alias("max_concurrent"),
+        F.unix_timestamp(F.timestamp_micros(-F.col("p.neg_t"))).alias("peak_epoch"),
     )
 
 

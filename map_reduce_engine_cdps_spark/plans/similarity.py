@@ -14,7 +14,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from map_reduce_engine_cdps_spark.functions import vectors as V
-from map_reduce_engine_cdps_spark.operators.state import memo, releasing
+from map_reduce_engine_cdps_spark.operators.state import _checkpoint, memo, releasing
 from map_reduce_engine_cdps_spark.plans.dedup import _tier_pct
 from map_reduce_engine_cdps_spark.sources.readers import (
     load_parallel, load_table, table_row_groups, table_rows
@@ -735,11 +735,7 @@ def kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     # partitioning IS the scan partitioning — a 2-file scan would pin
     # every Lloyd round to 2 cores (slope sweep: 7.6-8.2 s at sf1
     # before, 3.3 s after).
-    emb = (
-        load_parallel(spark, sf_dir, "embeddings")
-        .select("vec_id", "embedding")
-        .localCheckpoint(eager=True)
-    )
+    emb = _checkpoint(load_parallel(spark, sf_dir, "embeddings").select("vec_id", "embedding"))
     seeds = emb.filter(F.col("vec_id") < KMEANS_K).orderBy("vec_id").collect()
     cents = [[float(x) for x in r.embedding] for r in seeds]
     for _ in range(KMEANS_ITERS):
@@ -1779,16 +1775,11 @@ def dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # plan-growth blowup by round 4 at sf0.1 without this, 0.3 s/round
     # with it (the checkpoint-cadence lesson from the CC rework, applied
     # caller-side: truncate BEFORE the loop when the base plan is deep).
-    core = (
-        deg.filter(F.col("c") >= DBSCAN_MIN_PTS)
-        .select("v")
-        .localCheckpoint(eager=True)
-    )
-    ce = (
+    core = _checkpoint(deg.filter(F.col("c") >= DBSCAN_MIN_PTS).select("v"))
+    ce = _checkpoint(
         pairs.join(core.withColumnRenamed("v", "vec_a"), "vec_a", "left_semi")
         .join(core.withColumnRenamed("v", "vec_b"), "vec_b", "left_semi")
         .select(F.col("vec_a").alias("doc_a"), F.col("vec_b").alias("doc_b"))
-        .localCheckpoint(eager=True)
     )
     # Star CC, not min-label propagation: the embedding core graph
     # chains (replica ladders of near-identical vectors link A~B~C

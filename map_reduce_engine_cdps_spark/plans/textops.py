@@ -1858,28 +1858,22 @@ RRF_K = 60
 def rrf_fusion_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from map_reduce_engine_cdps_spark.multimodal.binary import text_embedder_udf
 
-    lex = bm25_scores(spark, sf_dir)
+    embed = text_embedder_udf()
     wl = W.orderBy(F.desc("bm25"), F.asc("doc_id"))
-    # lex_r has two consumers (the seed-doc collect and the fusion
-    # join) — without the eager localCheckpoint Catalyst re-derives the
-    # whole BM25 plan per consumer (multi-consumer rule, SCALE.md r6
-    # rule 8). The frame is O(matching docs) of (id, int rank).
-    lex_r = lex.select(
+    lex_r = bm25_scores(spark, sf_dir).select(
         "doc_id", F.row_number().over(wl).alias("r_lex")
-    ).localCheckpoint(eager=True)
-    seed_id = lex_r.filter(F.col("r_lex") == 1).collect()[0]["doc_id"]
-    docs = load_parallel(spark, sf_dir, "documents")
-    emb = docs.select(
-        "doc_id", text_embedder_udf()(F.col("text")).alias("e")
     )
-    seed = emb.filter(F.col("doc_id") == seed_id).collect()[0]["e"]
-    sarr = F.array(*[F.lit(float(v)) for v in seed])
-    snrm = float(sum(float(v) * float(v) for v in seed))
-    cos = V.dot(F.col("e"), sarr) / (V.norm(F.col("e")) * F.sqrt(F.lit(snrm)))
+    docs = load_parallel(spark, sf_dir, "documents")
+    # one row: the embedding of the lexical rank-1 doc, embedded alone
+    seed = docs.join(F.broadcast(lex_r.filter(F.col("r_lex") == 1)), "doc_id").select(
+        embed(F.col("text")).alias("s")
+    )
+    cos = V.dot(F.col("e"), F.col("s")) / (V.norm(F.col("e")) * V.norm(F.col("s")))
     ws = W.orderBy(F.desc("cos"), F.asc("doc_id"))
     sem_r = (
-        emb.withColumn("cos", cos)
-        .select("doc_id", "cos")
+        docs.select("doc_id", embed(F.col("text")).alias("e"))
+        .crossJoin(F.broadcast(seed))
+        .select("doc_id", cos.alias("cos"))
         .withColumn("r_sem", F.row_number().over(ws))
         .filter(F.col("r_sem") <= 20)
         .select("doc_id", "r_sem")
@@ -1973,80 +1967,54 @@ _WAND_K = 10
 WAND_WINDOW_ROW_CAP = 100_000
 
 
-def _wand_contrib_scores(
-    spark: SparkSession, sf_dir: str
-) -> tuple[DataFrame, DataFrame]:
-    """(per-(doc, term) contributions, per-doc scores) for the WAND
-    eval — `scores` is the frame the k-th-score global window ranks."""
+def _wand_doc_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """(doc_id, score, doc_ub) per candidate doc of the WAND eval: its
+    exact tf-idf score over the query terms it contains and the sum of
+    those terms' upper bounds. This is the frame the k-th-score global
+    window ranks."""
     docs = load_parallel(spark, sf_dir, "documents")
-    # One tokenize+groupBy pass feeds EVERYTHING downstream: df, cf and
-    # the query terms all derive from tf (cf == Σ tf per word — no
-    # second corpus tokenize), and tf is eager-localCheckpointed
-    # because it has three consumers (query, dfreq, contrib) that
-    # Catalyst would otherwise each re-derive from the raw text
-    # (multi-consumer rule, SCALE.md r6 rule 8). The materialized frame
-    # is the (doc, term, tf) posting list — the object an inverted
-    # index build materializes anyway.
-    tf = _tf(_words(docs, "doc_id")).localCheckpoint(eager=True)
+    # cf == Σ tf per word, so the query terms come from the same tf
+    # aggregate as the postings, whose exchange both consumers reuse
+    tf = _tf(_words(docs, "doc_id"))
     n_docs = table_rows(spark, sf_dir, "documents")
-    dfreq = _df(tf)
     query = _top_words(
         tf.groupBy("word").agg(F.sum("tf").alias("cnt")), 3
     ).select("word")
-    contrib = (
-        tf.join(F.broadcast(query), "word")
-        .join(F.broadcast(dfreq.join(F.broadcast(query), "word")), "word")
-        .select(
-            "doc_id",
-            "word",
-            (
-                F.col("tf")
-                * F.log(F.lit(float(n_docs)) / F.col("df"))
-            ).alias("c"),
-        )
-        # bounded: candidate docs × 3 query terms; consumed by ub,
-        # doc_ub AND scores below — checkpoint once
-        .localCheckpoint(eager=True)
+    by_word = W.partitionBy("word")
+    contrib = tf.join(F.broadcast(query), "word").select(
+        "doc_id",
+        (
+            F.col("tf")
+            * F.log(F.lit(float(n_docs)) / F.count(F.lit(1)).over(by_word))
+        ).alias("c"),
+        "word",
     )
-    scores = contrib.groupBy("doc_id").agg(F.sum("c").alias("score"))
-    return contrib, scores
+    return (
+        contrib.withColumn("ub", F.max("c").over(by_word))
+        .groupBy("doc_id")
+        .agg(F.sum("c").alias("score"), F.sum("ub").alias("doc_ub"))
+    )
 
 
 def wand_pruned_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    contrib, scores = _wand_contrib_scores(spark, sf_dir)
     wk = W.orderBy(F.desc("score"), F.asc("doc_id"))
-    # one driver round-trip for both the k-th score and the top-k mass
-    # (was two separate collects each re-ranking the scores frame);
-    # score4 is rounded JVM-side so the mass matches the oracle's
-    # engine-side rounding, and the Python sum's order sensitivity is
-    # absorbed by the final F.round at 4 decimals
-    topk_rows = (
-        scores.select("score", F.row_number().over(wk).alias("rn"))
-        .filter(F.col("rn") <= _WAND_K)
-        .select("rn", "score", F.round(F.col("score"), 4).alias("score4"))
-        .collect()
+    ranked = _wand_doc_scores(spark, sf_dir).withColumn(
+        "rn", F.row_number().over(wk)
     )
-    s_k = next(
-        (float(r["score"]) for r in topk_rows if r["rn"] == _WAND_K), 0.0
+    # the k-th best score (0 below k candidates) beside every candidate
+    s_k = F.max(F.when(F.col("rn") == _WAND_K, F.col("score"))).over(
+        W.partitionBy()
     )
-    topk_mass = float(sum(r["score4"] for r in topk_rows))
-    ub = contrib.groupBy("word").agg(F.max("c").alias("ub"))
-    doc_ub = (
-        contrib.join(F.broadcast(ub), "word")
-        .groupBy("doc_id")
-        .agg(F.sum("ub").alias("doc_ub"))
-    )
-    return doc_ub.agg(
+    skip = F.when(F.col("doc_ub") < F.col("s_k"), 1).otherwise(0)
+    # each top-k score rounded before the sum, as the oracle does
+    score4 = F.when(F.col("rn") <= _WAND_K, F.round(F.col("score"), 4))
+    return ranked.withColumn("s_k", F.coalesce(s_k, F.lit(0.0))).agg(
         F.count(F.lit(1)).alias("n_candidates"),
-        F.sum(F.when(F.col("doc_ub") < s_k, 1).otherwise(0))
-        .cast("long")
-        .alias("n_skippable"),
-        F.round(
-            F.sum(F.when(F.col("doc_ub") < s_k, 1).otherwise(0))
-            / F.count(F.lit(1)).cast("double"),
-            4,
-        ).alias("prune_rate"),
-        F.round(F.lit(topk_mass), 4).alias("topk_mass"),
+        F.sum(skip).cast("long").alias("n_skippable"),
+        F.round(F.sum(skip) / F.count(F.lit(1)).cast("double"), 4).alias(
+            "prune_rate"
+        ),
+        F.round(F.coalesce(F.sum(score4), F.lit(0.0)), 4).alias("topk_mass"),
     )
 
 
@@ -2167,17 +2135,24 @@ _QE_MIN_DF = 5
 def query_expansion_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_parallel(spark, sf_dir, "documents")
     n_docs = table_rows(spark, sf_dir, "documents")
-    # Eager-checkpoint the distinct doc-term frame: FOUR consumers
-    # (dfreq, the query-term probe, and both sides of the co-occurrence
-    # join) otherwise re-plan the tokenize+distinct subtree each.
-    dt = _words(docs, "doc_id").distinct().localCheckpoint(eager=True)
+    # The distinct doc-term frame has four consumers, which share its
+    # exchange only while their plans below it are identical: its keys
+    # are filtered non-null here, so no join pushes its own inferred
+    # filter into one consumer's copy.
+    dt = (
+        _words(docs, "doc_id")
+        .filter(F.col("doc_id").isNotNull() & F.col("word").isNotNull())
+        .distinct()
+    )
     dfreq = _df(dt)
     query = _top_words(_word_counts(_words(docs)), 3).select(F.col("word").alias("q"))
     qd = dt.join(F.broadcast(query), dt.word == F.col("q")).select(
         "doc_id", "q"
     )
+    # dt is corpus-sized: adaptive execution would broadcast it once its
+    # exchange reads small
     co = (
-        qd.join(dt, "doc_id")
+        qd.join(dt.hint("shuffle_hash"), "doc_id")
         .filter(F.col("word") != F.col("q"))
         .groupBy("q", "word")
         .agg(F.count(F.lit(1)).alias("co"))
@@ -2541,45 +2516,36 @@ _NDCG_K = 10
 
 
 def retrieval_ndcg_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # Eager-checkpoint the scored candidate frame: three consumers
-    # (DCG ranking, IDCG ranking, candidate count) would otherwise each
-    # re-plan the tokenize+join subtree — measured 5.7 → 4.7 s warm at
-    # sf1 for the one materialization (O(candidates) rows; the single
-    # spine evaluation is the remaining floor, cf. bm25_scores 3.9 s).
-    scored = (
-        _bm25_scored(spark, sf_dir)
-        .withColumnRenamed("n_query_terms_hit", "rel")
-        .localCheckpoint(eager=True)
-    )
-    gain = F.expr("shiftleft(1, cast(rel AS int))") - 1
-
-    def _dcg_micros(ranked_by, alias):
-        top = scored.orderBy(*ranked_by).limit(_NDCG_K)
-        rn = F.row_number().over(W.orderBy(*ranked_by))
-        return (
-            top.withColumn("rn", rn)
-            .select(
-                F.round(
-                    gain.cast("double") / F.log(F.col("rn") + 1.0) * 1e6
-                ).cast("long").alias("tm")
+    scored = _bm25_scored(spark, sf_dir).withColumnRenamed("n_query_terms_hit", "rel")
+    # Each candidate twice, ranked by bm25 for the DCG and by rel for the
+    # IDCG: both top-k cuts are one windowed pass, and the candidate
+    # count rides on the DCG rows.
+    views = scored.select(
+        "doc_id",
+        "rel",
+        F.inline(
+            F.array(
+                F.struct(F.lit(False).alias("ideal"), F.col("bm25").alias("key")),
+                F.struct(F.lit(True).alias("ideal"), F.col("rel").cast("double").alias("key")),
             )
-            .agg(F.sum("tm").alias(alias))
-        )
-
-    dcg = _dcg_micros([F.desc("bm25"), F.asc("doc_id")], "dcg_micros")
-    idcg = _dcg_micros([F.desc("rel"), F.asc("doc_id")], "idcg_micros")
-    nr = scored.agg(F.count(F.lit(1)).alias("n_candidates"))
-    return (
-        dcg.crossJoin(F.broadcast(idcg))
-        .crossJoin(F.broadcast(nr))
-        .select(
-            "n_candidates",
-            "dcg_micros",
-            "idcg_micros",
-            F.round(
-                F.col("dcg_micros") / F.col("idcg_micros").cast("double"), 6
-            ).alias("ndcg_at_10"),
-        )
+        ),
+    )
+    rn = F.row_number().over(W.partitionBy("ideal").orderBy(F.desc("key"), F.asc("doc_id")))
+    gain = F.expr("shiftleft(1, cast(rel AS int))") - 1
+    tm = F.round(gain.cast("double") / F.log(F.col("rn") + 1.0) * 1e6).cast("long")
+    top = views.withColumn("rn", rn).filter(F.col("rn") <= _NDCG_K).withColumn("tm", tm)
+    n = views.agg(F.count(F.when(~F.col("ideal"), 1)).alias("n_candidates"))
+    sums = top.agg(
+        F.sum(F.when(~F.col("ideal"), F.col("tm"))).alias("dcg_micros"),
+        F.sum(F.when(F.col("ideal"), F.col("tm"))).alias("idcg_micros"),
+    )
+    return n.crossJoin(sums).select(
+        "n_candidates",
+        "dcg_micros",
+        "idcg_micros",
+        F.round(F.col("dcg_micros") / F.col("idcg_micros").cast("double"), 6).alias(
+            "ndcg_at_10"
+        ),
     )
 
 

@@ -24,6 +24,13 @@ from map_reduce_engine_cdps_spark.streaming.windows import (
 )
 
 
+def ppm_encode(arr) -> bytes:
+    """(H, W, 3) uint8-valued array → binary PPM (P6) payload: the
+    fixture-side inverse of `multimodal.binary._ppm_decode`."""
+    h, w = arr.shape[0], arr.shape[1]
+    return b"P6\n%d %d\n255\n" % (w, h) + arr.astype("uint8").tobytes()
+
+
 def test_media_feature_extraction_plumbing(spark):
     media = synth_media_df(spark, n=32, partitions=4)
     feats = extract_features(media, decode="fake")
@@ -321,80 +328,6 @@ def test_streaming_checkpoint_incremental_restart(spark, sf_dir, tmp_path):
     assert got2 == exp2
 
 
-def test_foreach_batch_upsert_exactly_once(spark, sf_dir, tmp_path):
-    """foreachBatch epoch-log sink: (a) the streamed store resolves to
-    the same latest-row-per-key table a batch query computes, (b) a
-    redelivered epoch (simulated retry with the same epoch_id)
-    overwrites its own directory instead of duplicating rows."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.window import Window
-
-    from map_reduce_engine_cdps_spark.sources.readers import load_table
-    from map_reduce_engine_cdps_spark.streaming.sinks import (
-        epoch_log_upsert_sink,
-        read_latest,
-    )
-
-    ev = load_table(spark, sf_dir, "events").select(
-        "user_id", "ts", "event_type", "value"
-    )
-    src = str(tmp_path / "src")
-    ev.repartition(24).write.mode("overwrite").parquet(src)
-    schema = spark.read.parquet(src).schema
-
-    store = str(tmp_path / "store")
-    sink = epoch_log_upsert_sink(store)
-    q = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "8")  # force multiple epochs
-        .parquet(src)
-        .writeStream.foreachBatch(sink)
-        .option("checkpointLocation", str(tmp_path / "ckpt"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    latest = read_latest(spark, store, ["user_id"], "ts")
-    w_expect = (
-        ev.withColumn(
-            "_rn",
-            F.row_number().over(
-                Window.partitionBy("user_id").orderBy(F.desc("ts"))
-            ),
-        )
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-    got = sorted(tuple(r) for r in latest.collect())
-    exp = sorted(tuple(r) for r in w_expect.collect())
-    assert got == exp
-
-    # simulated at-least-once redelivery: re-deliver epoch 0's exact
-    # content with the same epoch_id — the store must be unchanged
-    # (overwritten, not appended)
-    epochs = sorted(
-        int(p.name.split("=")[1]) for p in (tmp_path / "store").glob("epoch=*")
-    )
-    assert len(epochs) > 1, "maxFilesPerTrigger should force several epochs"
-    n_before = spark.read.option("basePath", store).parquet(
-        store + "/epoch=*"
-    ).count()
-    # materialize before redelivering — can't overwrite a path while
-    # lazily reading from it
-    src0 = spark.read.parquet(f"{store}/epoch={epochs[0]}")
-    epoch0 = spark.createDataFrame(src0.collect(), src0.schema)
-    sink(epoch0, epochs[0])
-    n_after = spark.read.option("basePath", store).parquet(
-        store + "/epoch=*"
-    ).count()
-    assert n_after == n_before
-    again = sorted(tuple(r) for r in read_latest(
-        spark, store, ["user_id"], "ts"
-    ).collect())
-    assert again == exp
-
-
 def test_image_dims_header_parsing(spark):
     """Real (not stubbed) metadata decode: PNG / GIF / JPEG dimensions
     parsed from genuine header bytes via the Arrow-batched UDF; garbage
@@ -567,7 +500,6 @@ def test_ppm_decode_roundtrip_exact():
 
     from map_reduce_engine_cdps_spark.multimodal.binary import (
         _ppm_decode,
-        ppm_encode,
     )
 
     y, x = np.mgrid[0:224, 0:224]
@@ -585,7 +517,6 @@ def test_ppm_decode_pads_nonsquare_on_white():
 
     from map_reduce_engine_cdps_spark.multimodal.binary import (
         _ppm_decode,
-        ppm_encode,
     )
 
     v = 40
@@ -616,7 +547,6 @@ def test_ppm_spark_pipeline_matches_local_decode(spark):
         _pixel_grid_features,
         _ppm_decode,
         extract_features,
-        ppm_encode,
     )
 
     rng_imgs = []
@@ -691,7 +621,6 @@ def test_cnn_spark_pipeline_matches_local_forward(spark):
         _cnn_forward,
         _ppm_decode,
         cnn_embeddings,
-        ppm_encode,
     )
 
     rng = np.random.default_rng(11)
@@ -722,7 +651,6 @@ def test_ppm_split_varied_frame_sizes_and_sampling(spark):
         _pixel_grid_features,
         _ppm_decode,
         _ppm_split,
-        ppm_encode,
         sample_frames,
     )
 
@@ -820,7 +748,6 @@ def test_ppm_roundtrip_property():
 
     from map_reduce_engine_cdps_spark.multimodal.binary import (
         _ppm_decode,
-        ppm_encode,
     )
 
     @settings(max_examples=50, deadline=None)
@@ -1010,8 +937,8 @@ def _payload_cases():
 
     from map_reduce_engine_cdps_spark.multimodal import binary as B
 
-    image = B.ppm_encode(np.arange(72).reshape(4, 6, 3) * 3)
-    video = b"".join(B.ppm_encode(np.full((4, 4, 3), v)) for v in (10, 10, 90))
+    image = ppm_encode(np.arange(72).reshape(4, 6, 3) * 3)
+    video = b"".join(ppm_encode(np.full((4, 4, 3), v)) for v in (10, 10, 90))
     audio = _wav_payload([5] * 40 + [3000] * 20 + [5] * 40)
     raw = bytes(range(150))
     bad_ppm, bad_wav = "not a binary PPM", "not a RIFF/WAVE"

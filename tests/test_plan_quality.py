@@ -14,7 +14,6 @@ before execution (`count()` runs a separate aggregate).
 from __future__ import annotations
 
 import re
-import shutil
 
 import pytest
 
@@ -382,31 +381,40 @@ def test_load_parallel_widens_by_row_groups_not_splits(spark):
 
 # Spark jobs of a warm build (memos already filled) of each query that
 # sizes a tier or constant by the row count of an unfiltered table,
-# which table_rows reads from the footers without a job; the jobs left
-# are the queries' own checkpoints and filtered counts.
+# which table_rows reads from the footers without a job, or that
+# returns its shared fronts and scalars as plan instead of checkpoints
+# and collected literals. The jobs left are filtered counts and
+# label_propagation_communities' three loop rounds, each a checkpoint
+# whose adaptive plan runs its stages as jobs.
 COUNT_SITE_BUILD_JOBS = {
-    ("textops", "wand_pruned_retrieval"): 10,
+    ("textops", "wand_pruned_retrieval"): 0,
     ("textops", "term_burstiness"): 0,
-    ("textops", "query_expansion_pmi"): 3,
-    ("dedup", "lsh_band_tuning_eval"): 9,
-    ("dedup", "shingle_size_sensitivity"): 4,
+    ("textops", "query_expansion_pmi"): 0,
+    ("textops", "rrf_fusion_topk"): 0,
+    ("textops", "retrieval_ndcg_eval"): 0,
+    ("dedup", "lsh_band_tuning_eval"): 0,
+    ("dedup", "shingle_size_sensitivity"): 0,
     ("analytics", "freq_items_check"): 2,
     ("analytics", "segment_nation_mi"): 6,
     ("curation", "quantile_normalized_quality"): 0,
+    ("curation", "cdc_chunk_stats"): 0,
     ("similarity", "embedding_near_dup"): 0,  # the uncached builder
     ("similarity", "negative_sampling_pairs"): 0,
     ("relational", "zorder_layout_stats"): 0,
+    ("relational", "bloom_fpr_eval"): 0,
+    ("relational", "max_concurrent_sessions"): 0,
+    ("graph", "label_propagation_communities"): 14,
 }
 
 
-def _warm_build_jobs(spark, module: str, name: str, sf_dir: str = SF_DIR) -> int:
+def _warm_build_jobs(spark, module: str, name: str) -> int:
     """Spark jobs of a second build of `plans.<module>.<name>`; the first
     fills the session memos the query reads."""
     import importlib
 
     query = getattr(importlib.import_module(f"map_reduce_engine_cdps_spark.plans.{module}"), name)
-    query(spark, sf_dir)
-    return _jobs_run_by(spark, lambda: query(spark, sf_dir))
+    query(spark, SF_DIR)
+    return _jobs_run_by(spark, lambda: query(spark, SF_DIR))
 
 
 @pytest.mark.parametrize("module,name", sorted(COUNT_SITE_BUILD_JOBS))
@@ -415,13 +423,36 @@ def test_count_site_build_jobs(spark, module, name):
     assert _warm_build_jobs(spark, module, name) == COUNT_SITE_BUILD_JOBS[module, name]
 
 
+# Queries whose build runs no job and whose plan holds their whole
+# front: no RDD scan (a checkpoint, or rows made in Python) hides part
+# of it from the plan gates and the A/B digest. Both RDD scans of
+# lsh_band_tuning_eval read the session memo of its truth pairs.
+PLAN_RDD_SCANS = {
+    "rrf_fusion_topk": 0,
+    "wand_pruned_retrieval": 0,
+    "query_expansion_pmi": 0,
+    "retrieval_ndcg_eval": 0,
+    "bloom_fpr_eval": 0,
+    "max_concurrent_sessions": 0,
+    "shingle_size_sensitivity": 0,
+    "cdc_chunk_stats": 0,
+    "lsh_band_tuning_eval": 2,
+}
+
+
+@pytest.mark.parametrize("name", sorted(PLAN_RDD_SCANS))
+def test_lazy_queries_keep_their_front_in_the_plan(spark, name):
+    df = _REGISTRY[name][0](spark, SF_DIR)
+    assert P.digest(df)[1] is (PLAN_RDD_SCANS[name] > 0)
+    assert P.census(df)["rdd_scans"] == PLAN_RDD_SCANS[name]
+
+
 # Spark jobs of a warm build of each query that runs a fixpoint loop
 # with a convergence signature: one checkpoint per round (the signature
 # is observed in its job) plus the query's own jobs around the loop.
-# The count depends on the partitioning of the memos the loop reads,
-# which depends on the confs they were built under (a memo first built
-# inside `P.aqe_off` keeps every shuffle partition), so each query
-# builds its own memos over a fresh copy of the tables.
+# The count depends on the partitioning of the memos the loop reads;
+# memos are keyed on the confs that shape it, so one built inside
+# `P.aqe_off` by another test is not the one read here.
 LOOP_BUILD_JOBS = {
     ("dedup", "near_dup_clusters"): 9,
     ("dedup", "near_dup_clusters_star"): 19,
@@ -433,10 +464,9 @@ LOOP_BUILD_JOBS = {
 
 
 @pytest.mark.parametrize("module,name", sorted(LOOP_BUILD_JOBS))
-def test_loop_build_jobs(spark, tmp_path, module, name):
+def test_loop_build_jobs(spark, module, name):
     """A loop round runs no Spark job besides its own checkpoint."""
-    sf_dir = shutil.copytree(SF_DIR, tmp_path / "sf", copy_function=shutil.copyfile)
-    assert _warm_build_jobs(spark, module, name, str(sf_dir)) == LOOP_BUILD_JOBS[module, name]
+    assert _warm_build_jobs(spark, module, name) == LOOP_BUILD_JOBS[module, name]
 
 
 MULTIMODAL_FAMILY = [
@@ -503,7 +533,7 @@ def test_eval_global_windows_are_row_bounded(spark):
             "toward all-pairs"
         )
 
-    _, scores = textops._wand_contrib_scores(spark, SF_DIR)
+    scores = textops._wand_doc_scores(spark, SF_DIR)
     rows = scores.count()
     assert rows <= textops.WAND_WINDOW_ROW_CAP, (
         f"wand k-th-score window input {rows} exceeds cap "

@@ -1771,7 +1771,7 @@ def test_cross_dup_source_matrix_sound(spark, sf_dir):
 def test_scored_pair_memo_shared(spark, sf_dir):
     """minhash_lsh_pairs and the precision eval resolve to the SAME
     checkpointed scored front (one signature pass per app+sf)."""
-    from map_reduce_engine_cdps_spark.operators.state import _MEMOS
+    from map_reduce_engine_cdps_spark.operators.state import _MEMOS, _PLAN_CONFS
     from map_reduce_engine_cdps_spark.plans.dedup import (
         _lsh_scored_pairs,
         _lsh_scored_pairs_cached,
@@ -1779,7 +1779,8 @@ def test_scored_pair_memo_shared(spark, sf_dir):
     )
 
     minhash_lsh_pairs(spark, sf_dir).count()
-    key = (spark.sparkContext.applicationId, _lsh_scored_pairs, sf_dir, ())
+    confs = tuple(spark.conf.get(k) for k in _PLAN_CONFS)
+    key = (spark.sparkContext.applicationId, _lsh_scored_pairs, sf_dir, (), confs)
     assert key in _MEMOS
     assert _lsh_scored_pairs_cached(spark, sf_dir) is _MEMOS[key][1]
 

@@ -178,3 +178,65 @@ def test_memo_rebuilds_after_checkpoint_blocks_dropped(spark, sf_dir):
     assert rebuilt is not pairs
     assert _pairs(rebuilt) == expected
     assert D._lsh_pairs_cached(spark, sf_dir) is rebuilt
+
+
+@pytest.mark.parametrize("num_partitions", [None, 1])
+def test_memo_whose_checkpoint_fails_leaves_no_rdd_registered(spark, tmp_path, num_partitions):
+    """A memo build whose checkpoint job fails leaves the session's
+    persistent RDDs as they were, and the next call builds again."""
+    from map_reduce_engine_cdps_spark.operators.state import memo
+
+    def build(spark, sf_dir, fail):
+        df = spark.range(0, 64, numPartitions=num_partitions)
+        if fail:
+            df = df.withColumn("x", F.when(F.col("id") < 48, F.col("id"))
+                               .otherwise(F.raise_error(F.lit("build failed"))))
+        return df
+
+    cached = memo(build, ())
+    before = _n_persisted(spark)
+    with pytest.raises(Exception, match="build failed"):
+        cached(spark, str(tmp_path), True)
+    assert _n_persisted(spark) == before
+    assert cached(spark, str(tmp_path), False).count() == 64
+
+
+def test_memo_is_keyed_on_plan_shaping_confs(spark, tmp_path):
+    """A memo first built with adaptive execution off, or with another
+    shuffle partition count, is not served to callers under the
+    session's own confs, whose plan would be shaped differently."""
+    from map_reduce_engine_cdps_spark.operators.state import memo
+    from tools import plan_inspect as P
+
+    def build(spark, sf_dir):
+        return spark.range(0, 64).groupBy((F.col("id") % 5).alias("k")).count()
+
+    cached = memo(build, ())
+    sf_dir = str(tmp_path)
+    with P.aqe_off(spark):
+        off = cached(spark, sf_dir)
+    with P.conf(spark, {"spark.sql.shuffle.partitions": "3"}):
+        three = cached(spark, sf_dir)
+    on = cached(spark, sf_dir)
+    assert len({id(off), id(three), id(on)}) == 3
+    assert cached(spark, sf_dir) is on
+    with P.aqe_off(spark):
+        assert cached(spark, sf_dir) is off
+
+
+def test_eager_checkpoints_go_through_one_primitive():
+    """Every eager checkpoint in the package is `state._checkpoint`,
+    which unregisters the checkpoint's RDD when its job fails."""
+    import pathlib
+    import re
+
+    from map_reduce_engine_cdps_spark.operators import state
+
+    pkg = pathlib.Path(state.__file__).parents[1]
+    eager = re.compile(r"localCheckpoint\(\s*eager\s*=\s*True")
+    hits = sorted(
+        p.relative_to(pkg).as_posix()
+        for p in pkg.rglob("*.py")
+        if eager.search(p.read_text(encoding="utf-8"))
+    )
+    assert hits == ["operators/state.py"]

@@ -197,3 +197,21 @@ def test_plan_inspector_census_and_normalized_plans(spark, tmp_path):
     assert "userFiles-*/bucketed_join_*/" in P.formatted(a)
     assert not re.search(r"#\d|plan_id=\d", P.formatted(a))
     assert P.digest(a) == P.digest(b)
+
+
+def test_plan_canonical_ignores_distinct_group_order():
+    """Two optimized plans that differ only in the order Spark's
+    distinct-aggregate rewrite gave its Expand projections, and so in
+    the `gid` each aggregate filters on, read as one canonical plan;
+    a plan whose projections differ does not."""
+    from tools import plan_inspect as P
+
+    plan = ("Aggregate [count(a#) FILTER (WHERE (gid# = {})) AS x#, "
+            "count(b#) FILTER (WHERE (gid# = {})) AS y#]\n"
+            "+- Aggregate [a#, b#, gid#], [a#, b#, gid#]\n"
+            "   +- Expand [[null, null, 0], {}], [a#, b#, gid#]")
+    one = plan.format(1, 2, "[a#, null, 1], [null, b#, 2]")
+    other = plan.format(2, 1, "[null, b#, 1], [a#, null, 2]")
+    assert one != other
+    assert P.canonical(one) == P.canonical(other)
+    assert P.canonical(one) != P.canonical(plan.format(1, 2, "[a#, null, 1], [null, c#, 2]"))

@@ -43,10 +43,30 @@ def normalize(text: str) -> str:
     return text
 
 
+# Spark's distinct-aggregate rewrite numbers its Expand projections (the
+# `gid` literal each ends in, which the aggregates above filter on) in
+# an order that can change between two builds of one plan
+_EXPAND = re.compile(r"Expand \[((?:\[[^\[\]]*\](?:, )?)+)\]")
+_GID_FILTER = re.compile(r"\(gid# = \d+\)")
+
+
+def _canonical_expand(match: re.Match) -> str:
+    projections = re.findall(r"\[[^\[\]]*\]", match.group(1))
+    return "Expand [" + ", ".join(
+        sorted(re.sub(r", \d+\]$", ", gid]", p) for p in projections)) + "]"
+
+
+def canonical(plan: str) -> str:
+    """A normalized plan string with the order of every distinct-aggregate
+    Expand's projections, and the `gid` numbers that order assigns,
+    taken out."""
+    return _GID_FILTER.sub("(gid# = *)", _EXPAND.sub(_canonical_expand, plan))
+
+
 def digest(df) -> tuple[str, bool]:
-    """sha256 of the normalized optimized logical plan, and whether the
-    plan has a LogicalRDD leaf, whose lineage it hides."""
-    plan = normalize(df._jdf.queryExecution().optimizedPlan().toString())
+    """sha256 of the canonical normalized optimized logical plan, and
+    whether the plan has a LogicalRDD leaf, whose lineage it hides."""
+    plan = canonical(normalize(df._jdf.queryExecution().optimizedPlan().toString()))
     return hashlib.sha256(plan.encode()).hexdigest(), "LogicalRDD" in plan
 
 

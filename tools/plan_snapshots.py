@@ -255,10 +255,14 @@ SNAPSHOTS: dict[str, str] = {
     "retrieval_ndcg_eval": (
         "Identical scale spine to bm25_scores: the only wide exchange "
         "is the (doc_id, word) tf aggregate; query terms, document "
-        "frequencies, avgdl, and N all `BroadcastExchange`. The two "
-        "rank windows run AFTER `TakeOrderedAndProject(10)` on the "
-        "rounded score, so the single-partition `Window` sees 10 "
-        "rows, never the candidate universe."
+        "frequencies, avgdl, and N all `BroadcastExchange`. Each "
+        "candidate appears twice, keyed by its rounded score and by "
+        "its relevance, and one `Window` partitioned by the two keys "
+        "ranks both after a partial `WindowGroupLimit` of 10, so the "
+        "window sorts at most 10 rows per key per partition, never the "
+        "candidate universe. The candidate count reads the same scored "
+        "aggregate: the snapshot, taken before execution, prints the "
+        "spine under both consumers, and the run reuses its exchanges."
     ),
     "ivf_nprobe_sweep_eval": (
         "The knob-sweep costs one scored front, not one per "
